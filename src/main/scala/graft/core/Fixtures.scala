@@ -61,21 +61,23 @@ object Fixtures {
     java.lang.Long.toHexString(h)
   }
 
+  /** Delete a file or directory tree; a missing path is a no-op. */
+  def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
+  }
+
   def buildAtomic(sfDir: String, name: String)(body: String => Unit): Unit = {
     if (exists(sfDir, name)) return
     val fin = new java.io.File(path(sfDir, name))
     val pid = ProcessHandle.current().pid()
     val tmp = new java.io.File(fin.getParentFile, s"${fin.getName}.build.$pid")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(tmp)
-    rm(fin) // a final dir without _SUCCESS is itself a crashed partial
+    rmTree(tmp)
+    rmTree(fin) // a final dir without _SUCCESS is itself a crashed partial
     tmp.getParentFile.mkdirs()
     body(tmp.getPath)
     if (!tmp.renameTo(fin)) {
-      if (exists(sfDir, name)) { rm(tmp); return } // someone else won
+      if (exists(sfDir, name)) { rmTree(tmp); return } // someone else won
       throw new IllegalStateException(s"fixture rename failed: $tmp -> $fin")
     }
   }

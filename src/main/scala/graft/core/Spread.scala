@@ -46,8 +46,11 @@ object Spread {
 
   /** Keyed spread: hash-partition on `keys` instead of round-robin.
     * `keys` must be high-cardinality relative to the core count
-    * (guide §2.5: 20-100× more distinct values than partitions) —
-    * every shipped call site keys on a row-unique id. */
+    * (guide §2.5: 20-100× more distinct values than partitions). Most
+    * shipped call sites key on a row-unique id; `sink_partitioned`
+    * keys on `l_orderkey`, which repeats once per line of an order
+    * (about 4 rows per key) and still has far more values than
+    * partitions. */
   def cpuBound(spark: SparkSession, df: DataFrame, keys: Column*): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < cores) df.repartition(cores, keys: _*)

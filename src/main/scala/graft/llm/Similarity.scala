@@ -1,10 +1,10 @@
 package graft.llm
 
 import graft.core.Lineage.LineageCutOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 import graft.core.{Q, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
@@ -321,7 +321,7 @@ object Similarity {
     scoreTopK(spark, dir,
       simsearchCandidates(spark, dir, multiProbe).select(col("probe_id"), col("vec_id")))
 
-  private val IvfK = 16      // coarse centroids (≈ √n at this scale)
+  private[graft] val IvfK = 16      // coarse centroids (≈ √n at this scale)
   private val IvfProbes = 4  // clusters probed per query (recall knob)
   private val IvfIters = 3   // Lloyd iterations (fixed → deterministic)
 
@@ -535,11 +535,18 @@ object Similarity {
         .map(_.getSeq[Double](1).toArray)
     })
 
+  /** The schema [[ensureIvfIndex]] writes for the cell-assigned corpus:
+    * the embeddings columns, then `nrm`, then the partition column
+    * `cid`. Reading with it skips the per-query schema-inference job;
+    * LlmSpec pins it equal to the schema Spark infers from the index. */
+  private[graft] val IndexedCellsSchema =
+    Tables.embeddings.add("nrm", DoubleType).add("cid", IntegerType)
+
   /** The persisted cell-assigned corpus (vec_id, embedding, nrm, cid). */
   private def indexedCells(
       spark: SparkSession, dir: String, k: Int = IvfK): DataFrame = {
     ensureIvfIndex(spark, dir, k)
-    spark.read.parquet(cellsPath(dir, k))
+    spark.read.schema(IndexedCellsSchema).parquet(cellsPath(dir, k))
   }
 
   /** Argmax-dot cluster assignment against unit centroids (|v| is
@@ -1544,7 +1551,7 @@ object Similarity {
        |FROM exact WHERE rn <= 5
        |${O.OrderAll}"""
 
-  private val KnnK = 3
+  private[graft] val KnnK = 3
   /** 12 probed cells of the adaptive-K index: a k-NN GRAPH build
     * probes deeper than online search (`llm_simsearch_ivf`'s 4 of 16)
     * — batch recall is worth more than per-query latency, and this
@@ -1554,7 +1561,7 @@ object Similarity {
     * candidate fraction FALLING 0.37 → 0.19 as K tracks √n; real
     * clustered embedding corpora buy the same recall far cheaper. */
   private[graft] val KnnProbes = 12
-  private val KnnSliceN = 100
+  private[graft] val KnnSliceN = 100
   private val KnnRecallBound = 0.7
 
   /** Ceiling of the adaptive cell count: 4096 cells keeps K = √n
@@ -1637,15 +1644,19 @@ object Similarity {
   }
 
   /** The approximate k-NN graph itself (q_id, vec_id, score, rn ≤ k):
-    * exact cosine over the IVF candidates, per-query top-k window. */
+    * exact cosine over the IVF candidates, per-query top-k window.
+    * `candidatesObs`, if given, counts the candidate rows (metric `n`)
+    * in whichever job computes the edges. */
   private[graft] def knnJoinEdges(
       spark: SparkSession, dir: String, nProbe: Int = KnnProbes,
       kOpt: Option[Int] = None,
-      indexedOpt: Option[DataFrame] = None): DataFrame = {
-    val scored = (kOpt match {
+      indexedOpt: Option[DataFrame] = None,
+      candidatesObs: Option[Observation] = None): DataFrame = {
+    val cands = kOpt match {
       case Some(k) => knnJoinCandidatesAt(spark, dir, nProbe, k, indexedOpt)
       case None => knnJoinCandidates(spark, dir, nProbe, kOpt)
-    })
+    }
+    val scored = candidatesObs.fold(cands)(o => cands.observe(o, count(lit(1)).as("n")))
       .withColumn("score",
         round6(dot("q_emb", "embedding") / (col("q_nrm") * col("nrm"))))
     val w = Window.partitionBy(col("q_id"))
@@ -1655,29 +1666,14 @@ object Similarity {
       .select(col("q_id"), col("vec_id"), col("score"), col("rn"))
   }
 
-  /** k-NN JOIN — every vector's top-[[KnnK]] neighbours in one pass,
-    * the batch operator under retrieval-corpus construction, semantic
-    * clustering prep, and graph-based ANN index builds (`llm_simsearch`
-    * answers 10 probes; THIS answers all n at once). Architecture:
-    * probe side explodes to its [[IvfProbes]] nearest IVF cells, the
-    * stored-cell side is read from the build-once index, candidates
-    * come from the cid equi-join ([[knnJoinCandidates]]) and only they
-    * are scored — at 100 TB the join is cell-partitioned on both sides
-    * (the index IS cid-partitioned parquet), so each cell's work ships
-    * to one executor and the brute n² never materializes anywhere.
-    * Keyed output is the audit row the oracle can replay: exact counts
-    * plus three pinned invariants — every vector found all k
-    * neighbours, recall ≥ [[KnnRecallBound]] against the BRUTE graph
-    * on the deterministic lowest-id [[KnnSliceN]] slice (the
-    * `llm_cosine_dedup` capped-ground-truth convention: the audit
-    * stays O(slice·n) at any scale), and scored candidates ≤
-    * [[KnnScoredFracBound]]·n² (the pruning actually pruned). */
   /** Exact candidate count WITHOUT re-running the candidate join:
     * every (query, probed cell) contributes |cell| rows minus the one
     * self-match when the probed cell is the query's own — so the count
     * is one O(n·P) aggregate against the broadcast K-row cell-size
-    * table. At sf10 this replaced a second pass over the ~1G-row
-    * candidate join (the audit was costing as much as the graph). */
+    * table. [[knnJoin]] does not call it: its audit observes the
+    * candidate rows inside the edge job. ScaleStats measures
+    * candidate growth with it, and LlmSpec pins it equal to both the
+    * candidate join's count and [[knnJoin]]'s observed count. */
   private[graft] def knnCandidateCount(
       spark: SparkSession, dir: String, k: Int,
       indexedOpt: Option[DataFrame] = None): Long = {
@@ -1718,29 +1714,68 @@ object Similarity {
     (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))
   }
 
+  /** k-NN JOIN — every vector's top-[[KnnK]] neighbours in one pass,
+    * the batch operator under retrieval-corpus construction, semantic
+    * clustering prep, and graph-based ANN index builds (`llm_simsearch`
+    * answers 10 probes; THIS answers all n at once). Architecture:
+    * probe side explodes to its [[IvfProbes]] nearest IVF cells, the
+    * stored-cell side is read from the build-once index, candidates
+    * come from the cid equi-join ([[knnJoinCandidates]]) and only they
+    * are scored — at 100 TB the join is cell-partitioned on both sides
+    * (the index IS cid-partitioned parquet), so each cell's work ships
+    * to one executor and the brute n² never materializes anywhere.
+    * Keyed output is the audit row the oracle can replay: exact counts
+    * plus three pinned invariants — every vector found all k
+    * neighbours, recall ≥ [[KnnRecallBound]] against the BRUTE graph
+    * on the deterministic lowest-id [[KnnSliceN]] slice (the
+    * `llm_cosine_dedup` capped-ground-truth convention: the audit
+    * stays O(slice·n) at any scale), and scored candidates ≤
+    * `knnScoredFracBound`·n² (the pruning actually pruned). The edge
+    * and candidate counts behind the first and last invariants are
+    * `Dataset.observe` metrics of the one job that builds and
+    * lineage-cuts the edges; no second pass counts them. */
   def knnJoin(spark: SparkSession, dir: String): DataFrame = {
+    val (audit, _, _) = knnJoinAudited(spark, dir)
+    audit
+  }
+
+  /** [[knnJoin]]'s audit row plus the candidate and edge counts it was
+    * decided on, so LlmSpec can pin the observed counts against
+    * [[knnCandidateCount]] and the edge frame's own count. */
+  private[graft] def knnJoinAudited(
+      spark: SparkSession, dir: String): (DataFrame, Long, Long) = {
     DotProduct.register(spark)
     val e = emb(spark, dir).withColumn("nrm", norm("embedding"))
-    // memoized metadata count (r14 — the r8 advice already routed the
-    // OTHER n-derivations through embCount; this was the last direct
-    // full-scan count of the embeddings table in this key)
     val n = embCount(spark, dir)
     val k = knnKFor(n)
-    // one cell scan shared by the audit count and the edge build: the
-    // cid-partitioned index fixture is listed once per query, not once
-    // per read (r14 — JobProf showed two 64-path listing jobs per pass)
+    // one cell scan shared by the edge build and the slice check
     val indexed = indexedCells(spark, dir, k)
-    val nCand = knnCandidateCount(spark, dir, k, Some(indexed))
-    val knn = knnJoinEdges(spark, dir, KnnProbes, Some(k), Some(indexed))
+    // Both audit counts are observed inside the lineage-cut job that
+    // builds the edges, so no other job scans for them. The candidate
+    // count lands in a shuffle-map stage, so a retried map task could
+    // over-count it; that can only flip scored_frac_le_bound to false,
+    // which the oracle's pinned TRUE shows. Observations are
+    // single-use: fresh ones per call.
+    val candObs = Observation("knn_candidates")
+    val edgeObs = Observation("knn_edges")
+    val knn = knnJoinEdges(spark, dir, KnnProbes, Some(k), Some(indexed),
+      Some(candObs))
+      .observe(edgeObs, count(lit(1)).as("n"))
       .lineageCut()
-    val nEdges = knn.count()
-    val slice = e.orderBy(col("vec_id")).limit(KnnSliceN)
+    val nCand = candObs.get("n").asInstanceOf[Long]
+    val nEdges = edgeObs.get("n").asInstanceOf[Long]
+    // the lowest-id slice, collected once: the brute audit broadcasts
+    // it as a local relation and the IVF check filters by its ids
+    val sliceQ = e.orderBy(col("vec_id")).limit(KnnSliceN)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
-    // parallelism floor on the brute audit (r14, Spread's documented
+    val sliceRows = sliceQ.collect()
+    val slice = spark.createDataFrame(
+      java.util.Arrays.asList(sliceRows: _*), sliceQ.schema)
+    // parallelism floor on the brute audit (Spread's documented
     // purpose): the embeddings scan is 1–2 splits at small SF, so the
-    // slice×corpus exact pass ran on one core (JobProf: 0.5 s single
-    // task); no-op at scale where the scan already splits ≥ cores
+    // slice×corpus exact pass would run on one core; no-op at scale
+    // where the scan already splits ≥ cores
     val exScored = graft.core.Spread.cpuBound(spark, e, col("vec_id"))
       .join(broadcast(slice), col("vec_id") =!= col("q_id"))
       .withColumn("score",
@@ -1752,18 +1787,19 @@ object Similarity {
       .select(col("q_id"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivfSlice = knn
-      .join(broadcast(slice.select(col("q_id"))), Seq("q_id"))
+      .filter(col("q_id").isin(sliceRows.map(_.getLong(0)): _*))
       .select(col("q_id"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & ivfSlice).size.toDouble / exact.size
     val fracBound = knnScoredFracBound(k)
-    spark.range(1).select(
+    val audit = spark.range(1).select(
       lit(n).as("n_vectors"), lit(KnnK.toLong).as("k"),
       lit(exact.size.toLong).as("n_exact_slice_pairs"),
       lit(nEdges == n * KnnK).as("edges_complete"),
       lit(recall >= KnnRecallBound).as("recall_ge_bound"),
       lit(nCand.toDouble / (n.toDouble * n.toDouble) <= fracBound)
         .as("scored_frac_le_bound"))
+    (audit, nCand, nEdges)
   }
 
   private val knnJoinSql =

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.Lineage.LineageCutOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.core.Determinism._
@@ -36,11 +36,11 @@ object Graph {
     * against the static out-share edge list + ONE hash re-aggregation
     * on dst — the exact per-round shape of `llm_dup_clusters`'
     * connected components. The edge list is materialized once
-    * (localCheckpoint) and reused by all rounds; ranks are
-    * checkpointed per round so the plan stays one-join deep instead of
+    * (lineage cut) and reused by all rounds; ranks are cut every
+    * second round so the plan stays at most two joins deep instead of
     * growing an 8-join lineage (driver OOM + re-execution risk at
-    * scale). Node count n is the single driver-side scalar (one-row
-    * aggregate — same discipline as the JDBC partition bounds). */
+    * scale). Node count n is the single driver-side scalar, observed
+    * by the job that materializes the edge list. */
   private[graft] val Scale = 1000000000000000L // 10^15
 
   /** The iteration core over any symmetric (src, dst) edge list — also
@@ -48,8 +48,13 @@ object Graph {
     * scaled-long ranks after `iters` damped rounds. */
   private[graft] def pageRankIterations(e: DataFrame, iters: Int): DataFrame = {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val n = deg.count() // scalar: number of nodes
-    val base = (Scale * 15L / 100L) / n // (1-d)/n, scaled, exact
+    // n, the node count, is observed on deg inside the ed cut job
+    // below, so no job of its own counts it. deg's final aggregate
+    // runs in that job's result stage (or in the broadcast job's, if
+    // deg is the broadcast side), whose accumulator updates Spark
+    // applies once per partition: a retried map stage cannot
+    // double-count n, which would silently shift every rank.
+    val nodes = Observation("pagerank_nodes")
     // static out-share side: every edge with its source's out-degree.
     // (r14 note: an attempt to keep a HashPartitioning(src) layout on
     // ed across rounds — repartition+persist, so the per-round join
@@ -60,7 +65,10 @@ object Graph {
     // exchange of the static side stands as the known cost; at a real
     // 100 TB rung the right fix is a pre-bucketed edge table, which is
     // a storage-layout decision, not a query change.)
-    val ed = e.join(deg, "src").lineageCut()
+    val ed = e.join(deg.observe(nodes, count(lit(1)).as("n")), "src")
+      .lineageCut()
+    val n = nodes.get("n").asInstanceOf[Long]
+    val base = (Scale * 15L / 100L) / n // (1-d)/n, scaled, exact
     var r = deg.select(col("src").as("v"), lit(Scale / n).as("r"))
     for (i <- 1 to iters) {
       r = ed.join(r, ed("src") === r("v"))
@@ -69,11 +77,12 @@ object Graph {
         .agg(sum(col("c")).as("sc"))
         .select(col("dst").as("v"),
           (lit(base) + expr("(85 * sc) div 100")).as("r"))
-      // cut every SECOND round (r15): one cut per round made each
-      // round its own job round-trip; a 2-round lineage is still a
-      // bounded plan (2 joins deep) and halves the eager-materialize
-      // latency of the loop. Ranks are exact integers either way.
-      if (i % 2 == 0 || i == iters) r = r.lineageCut()
+      // cut every SECOND round: one cut per round made each round its
+      // own job round-trip; a 2-round lineage is still a bounded plan
+      // (2 joins deep) and halves the eager-materialize latency of the
+      // loop. No cut after the last round: the caller's result query
+      // reads it once. Ranks are exact integers either way.
+      if (i % 2 == 0 && i < iters) r = r.lineageCut()
     }
     r
   }

@@ -130,8 +130,8 @@ case object UpdateInsertDialect extends MergeDialect {
   * `numPartitions` bound parallel connections against the RDBMS —
   * "parallel processing" (README.md:8) has to be capped at what the
   * target server tolerates, not at Spark's parallelism. */
-/** Not final: JdbcRetrySpec subclasses [[stageLoad]] to inject a
-  * duplicated task commit. */
+/** Not final: IngestSpec subclasses [[stageLoad]] to inject duplicated
+  * and lost task commits. */
 class JdbcSink(
     url: String,
     user: String,
@@ -152,6 +152,29 @@ class JdbcSink(
 
   override def write(df: DataFrame, table: String, mode: SaveMode): Unit =
     df.write.format("jdbc").options(options(table)).mode(mode).save()
+
+  /** Staging load, used for the first load and for the one reload, and
+    * factored out so IngestSpec can inject faulty task commits: a task
+    * that committed its transaction but failed to REPORT is re-run by
+    * Spark and commits again (the one JDBC hazard local-mode
+    * single-threading hides; see [[graft.core.Sessions]]). */
+  protected def stageLoad(df: DataFrame, staging: String): Unit =
+    write(df, staging, SaveMode.Overwrite)
+
+  /** Row count and distinct-key count of `table`, read in one query. */
+  private def rowAndKeyCounts(table: String, keyCols: Seq[String]): (Long, Long) = {
+    val keys = keyCols.map(k => "\"" + k + "\"").mkString(", ")
+    val conn = java.sql.DriverManager.getConnection(url, user, password)
+    try {
+      val st = conn.createStatement()
+      try {
+        val rs = st.executeQuery(
+          s"SELECT r.n, k.n FROM (SELECT COUNT(*) AS n FROM $table) r, " +
+            s"(SELECT COUNT(*) AS n FROM (SELECT DISTINCT $keys FROM $table) d) k")
+        rs.next(); (rs.getLong(1), rs.getLong(2))
+      } finally st.close()
+    } finally conn.close()
+  }
 
   /** Idempotent keyed upsert — the load semantics a production RDBMS
     * target actually wants (reference README.md:10 "load it into SQL
@@ -176,26 +199,6 @@ class JdbcSink(
     * order-dependent — so a duplicate-key batch fails HERE, loudly,
     * before any row lands. Producers that can emit duplicates
     * pre-aggregate latest-wins first (see `etl_cdc_apply`). */
-  /** Staging load, factored out so the retry spec can inject a
-    * duplicated task commit (a task that committed its transaction but
-    * failed to REPORT is re-run by Spark and commits again — the one
-    * JDBC hazard local-mode single-threading hides; see
-    * [[graft.core.Sessions]]). */
-  protected def stageLoad(df: DataFrame, staging: String): Unit =
-    write(df, staging, SaveMode.Overwrite)
-
-  /** One scalar off the target database. */
-  private def jdbcCount(table: String): Long = {
-    val conn = java.sql.DriverManager.getConnection(url, user, password)
-    try {
-      val st = conn.createStatement()
-      try {
-        val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table")
-        rs.next(); rs.getLong(1)
-      } finally st.close()
-    } finally conn.close()
-  }
-
   def upsert(df: DataFrame, table: String, keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     import org.apache.spark.sql.functions.{col, count, lit, max, sum}
@@ -211,24 +214,26 @@ class JdbcSink(
       s"upsert batch has duplicate rows per key (${keyCols.mkString(", ")}); " +
         "MERGE semantics are undefined — pre-aggregate latest-wins first")
     val staging = table + "_stage"
-    // Stage + verify + MERGE (r15, r13 advice #4): the staging load
-    // commits one transaction per task, so a task retry AFTER its
-    // commit (commit landed, report lost) duplicates that partition's
-    // rows in staging — and a duplicated staging makes the MERGE
-    // undefined (two source rows per target key). The staged count is
-    // compared against the batch size; a mismatch truncates and
-    // reloads once (Overwrite recreates the table) and re-verifies, so
-    // the MERGE only ever runs against a staging that provably equals
-    // the batch. JdbcRetrySpec injects exactly this duplicated commit
-    // and pins both the heal and the refuse-on-unhealed paths.
+    // Stage + verify + MERGE: the staging load commits one transaction
+    // per task, so a task retry AFTER its commit (commit landed, report
+    // lost) duplicates that partition's rows in staging, and a
+    // duplicated staging makes the MERGE undefined (two source rows
+    // per target key). A row count alone cannot see one duplicated
+    // commit plus one lost commit of the same size, so staging must
+    // hold exactly `expected` rows AND `expected` distinct keys. The
+    // batch is key-unique (checked above), so together these mean
+    // staging holds each batch key exactly once. A mismatch reloads
+    // once (Overwrite recreates the table) and re-verifies, so the
+    // MERGE only ever runs against a staging that equals the batch.
+    // IngestSpec injects both faults.
     stageLoad(df, staging)
-    if (jdbcCount(staging) != expected) {
-      write(df, staging, SaveMode.Overwrite)
-      val staged = jdbcCount(staging)
-      require(staged == expected,
-        s"staging $staging holds $staged rows after reload, batch has " +
-          s"$expected — refusing to MERGE from a staging that does not " +
-          "equal the batch")
+    if (rowAndKeyCounts(staging, keyCols) != ((expected, expected))) {
+      stageLoad(df, staging)
+      val (rows, keys) = rowAndKeyCounts(staging, keyCols)
+      require(rows == expected && keys == expected,
+        s"staging $staging holds $rows rows and $keys distinct keys after " +
+          s"reload, batch has $expected — refusing to MERGE from a staging " +
+          "that does not equal the batch")
     }
     val stmts = dialect.upsertStatements(table, staging, df.columns.toSeq, keyCols)
     val conn = java.sql.DriverManager.getConnection(url, user, password)

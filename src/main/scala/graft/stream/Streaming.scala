@@ -3,7 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
-import graft.core.{Q, Tables}
+import graft.core.{Fixtures, Q, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
 
@@ -219,7 +219,7 @@ object Streaming {
     * `SPARK_GRAFT_STREAM_CKPT=<dir>` reroutes (e.g. at a big rung
     * whose state outgrows tmpfs); unset and no writable /dev/shm →
     * Spark's own temp-dir behavior, as before. */
-  private lazy val streamCkptBase: Option[String] =
+  private[graft] lazy val streamCkptBase: Option[String] =
     sys.env.get("SPARK_GRAFT_STREAM_CKPT").filter(_.nonEmpty)
       .orElse {
         val shm = new java.io.File("/dev/shm")
@@ -228,23 +228,24 @@ object Streaming {
         else None
       }
 
+  /** A name no other query run uses, in this JVM or an earlier one:
+    * result tables and scratch checkpoints are named with it. */
+  private def runName(prefix: String): String =
+    s"${prefix}_${ctr.incrementAndGet()}_${System.nanoTime()}"
+
   /** Run `body` with a per-query scratch checkpoint dir (or None →
-    * Spark's default temp checkpoint), deleting the dir afterwards. */
-  private def withScratchCkpt[A](name: String)(
+    * Spark's default temp checkpoint), deleting the dir before and
+    * after. A run killed before its cleanup leaves its checkpoint
+    * behind, and a query started on that checkpoint resumes it: it
+    * reads zero batches and returns an empty result. Callers therefore
+    * pass a [[runName]], and the delete before use covers a name that
+    * repeats anyway. StreamingSpec plants such a checkpoint. */
+  private[graft] def withScratchCkpt[A](name: String)(
       body: Option[String] => A): A = {
-    val dir = streamCkptBase.map { base =>
-      val d = new java.io.File(base, name)
-      d.mkdirs()
-      d.getAbsolutePath
-    }
-    try body(dir)
-    finally dir.foreach { d =>
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(d))
-    }
+    val dir = streamCkptBase.map(new java.io.File(_, name))
+    dir.foreach { d => Fixtures.rmTree(d); d.mkdirs() }
+    try body(dir.map(_.getAbsolutePath))
+    finally dir.foreach(Fixtures.rmTree)
   }
 
   private val liveSinkDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -254,15 +255,10 @@ object Streaming {
     // the next streaming query runs, earlier results are consumed —
     // keep only the most recent dir so sf100 runs don't accumulate
     // result sets on disk across 19 streaming keys × passes
-    while (liveSinkDirs.size() > 1) {
-      val stale = new java.io.File(liveSinkDirs.poll())
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(stale)
-    }
-    val path = s"target/stream_sink/graft_ps_${ctr.incrementAndGet()}_${System.nanoTime()}"
+    while (liveSinkDirs.size() > 1)
+      Fixtures.rmTree(new java.io.File(liveSinkDirs.poll()))
+    val name = runName("graft_ps")
+    val path = s"target/stream_sink/$name"
     liveSinkDirs.add(path)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -275,7 +271,7 @@ object Streaming {
     // mode=overwrite (a replay rewrites the same dir, byte-for-byte
     // idempotent). Complete mode re-emits whole state, so a full-path
     // overwrite is already replay-safe there.
-    withScratchCkpt(s"pq_${ctr.get()}") { ckptDir =>
+    withScratchCkpt(name) { ckptDir =>
     val q =
       try withStateStore(spark) {
         val w = sdf.writeStream
@@ -345,7 +341,7 @@ object Streaming {
     // driver memory across a long bench session.
     while (liveSinks.size() > 1)
       spark.catalog.dropTempView(liveSinks.poll())
-    val name = s"graft_ms_${ctr.incrementAndGet()}_${System.nanoTime()}"
+    val name = runName("graft_ms")
     liveSinks.add(name)
     // Every stateful operator keeps one state store PER SHUFFLE
     // PARTITION (a stream-stream join keeps four), and each store pays
@@ -709,17 +705,13 @@ object Streaming {
     * shuffle-partitioned like any batch job. */
   def foreachBatchSink(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.core.Fixtures.path(dir, "stream_feb_out")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
     // append across BATCHES is the point; append across RUNS would
     // double-count — start from a clean target every run
-    rm(new java.io.File(out))
+    Fixtures.rmTree(new java.io.File(out))
     val src = eventsStreamMultiBatch(spark, dir)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    withScratchCkpt("feb") { ckptDir =>
+    withScratchCkpt(runName("feb")) { ckptDir =>
     val q =
       try {
         val w = src.writeStream
@@ -772,11 +764,7 @@ object Streaming {
     val tgt = graft.core.Fixtures.path(dir, "stream_resume_tgt")
     val marker = new java.io.File(src, "_RESUME_DONE")
     if (!marker.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      Seq(src, ckpt, tgt).foreach(p => rm(new java.io.File(p)))
+      Seq(src, ckpt, tgt).foreach(p => Fixtures.rmTree(new java.io.File(p)))
       new java.io.File(src).mkdirs()
       val slices = new java.io.File(mbPath).listFiles()
         .filter(_.getName.startsWith("part-")).sortBy(_.lastModified())

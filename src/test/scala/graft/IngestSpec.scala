@@ -80,29 +80,40 @@ class IngestSpec extends AnyFunSuite {
     assert(err.getMessage.contains("duplicate"))
   }
 
-  test("jdbc upsert: a duplicated staging commit (task retry after commit) is healed before MERGE") {
-    // The one JDBC hazard local mode hides (Sessions.scala scaladoc,
-    // r13 advice #4): the staging load commits one transaction per
-    // task, and a task whose commit LANDED but whose report was lost
-    // is re-run by Spark — its partition lands twice in staging. An
-    // unverified MERGE from that staging is undefined (two source rows
-    // per target key). The sink now compares the staged count against
-    // the batch size and truncate-reloads once before merging; this
-    // spec injects exactly that duplicated commit and pins the healed
-    // result. Delete the verify-and-reload in upsert() and this test
-    // fails with a doubled/undefined merge.
+  // The one JDBC hazard local mode hides (Sessions.scala scaladoc): the
+  // staging load commits one transaction per task, and a task whose
+  // commit LANDED but whose report was lost is re-run by Spark — its
+  // partition lands twice in staging. An unverified MERGE from that
+  // staging is undefined (two source rows per target key). The sink
+  // checks staging's row count AND distinct-key count against the
+  // batch size and reloads once through stageLoad before merging. Each
+  // case injects one fault into the first load and pins the healed
+  // result. The second case keeps the row count right (one row lost,
+  // another doubled), so a row-count-only check merges from it.
+  private def dropStagedKey(url: String, staging: String, k: Long): Unit = {
+    val conn = java.sql.DriverManager.getConnection(url, "u", "p")
+    try conn.createStatement().executeUpdate(s"""DELETE FROM $staging WHERE "k" = $k""")
+    finally conn.close()
+  }
+  for ((fault, lost) <- Seq(
+      "a duplicated staging commit (task retry after commit)" -> None,
+      "a duplicated plus a lost staging commit (row count unchanged)" -> Some(4L)))
+  test(s"jdbc upsert: $fault is healed before MERGE") {
     val dir = java.nio.file.Files.createTempDirectory("graft_retry").toString
     System.setProperty("derby.stream.error.file", s"$dir/derby.log")
     val url = s"jdbc:derby:$dir/db;create=true"
     class RetrySink extends sinks.JdbcSink(url, "u", "p", numPartitions = 1) {
-      @volatile var injected = false
+      @volatile var loads = 0
       override protected def stageLoad(
           df: org.apache.spark.sql.DataFrame, staging: String): Unit = {
         super.stageLoad(df, staging)
-        if (!injected) {
-          injected = true
+        loads += 1
+        if (loads == 1) {
+          // the lost commit: one partition's rows never land
+          lost.foreach(dropStagedKey(url, staging, _))
           // the duplicated commit: one partition's rows land a 2nd time
-          write(df.limit(1), staging, org.apache.spark.sql.SaveMode.Append)
+          write(df.filter(col("k") =!= lost.getOrElse(-1L)).limit(1), staging,
+            org.apache.spark.sql.SaveMode.Append)
         }
       }
     }
@@ -111,12 +122,12 @@ class IngestSpec extends AnyFunSuite {
     sink.write(base, "t", org.apache.spark.sql.SaveMode.Overwrite)
     val delta = Seq((2L, "b2", 25.0), (4L, "d", 40.0)).toDF("k", "name", "bal")
     sink.upsert(delta, "t", Seq("k"))
-    assert(sink.injected, "the corrupted staging load must have run")
+    assert(sink.loads == 2, "the faulty staging must be reloaded through stageLoad")
     val out = new sources.JdbcSource(url, "u", "p").read(spark, "t")
       .orderBy("k").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
     assert(out === Seq((1L, "a", 10.0), (2L, "b2", 25.0), (4L, "d", 40.0)),
-      "upsert over a retry-duplicated staging must equal the clean upsert")
+      "upsert over a faulty staging must equal the clean upsert")
   }
 
   test("jdbc scale knobs: partitioned read fans out, fetchsize + writer cap set") {

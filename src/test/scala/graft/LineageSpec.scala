@@ -53,6 +53,17 @@ class LineageSpec extends AnyFunSuite {
     assert(local == reliable)
   }
 
+  test("reliable checkpoint knob: pagerank iterations equal the reference on generated graphs") {
+    import org.scalacheck.{Test => SCTest}
+    val res = withReliable(SCTest.check(
+      SCTest.Parameters.default
+        .withMinSuccessfulTests(8)
+        .withInitialSeed(org.scalacheck.rng.Seed(7L))
+        .withWorkers(1),
+      PageRankReference.agrees(spark)))
+    assert(res.passed, s"pagerank-reference (reliable): ${res.status}")
+  }
+
   test("reliable checkpoint knob: connected components bit-identical") {
     val local = rows(ops.Graph.connectedComponents(spark, Sf))
     val reliable = withReliable(rows(ops.Graph.connectedComponents(spark, Sf)))

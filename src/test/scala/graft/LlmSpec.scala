@@ -787,6 +787,34 @@ class LlmSpec extends AnyFunSuite {
     }
   }
 
+  test("llm_knn_join: audit row unchanged; observed counts equal the standalone counts") {
+    import llm.Similarity.{KnnK, KnnSliceN}
+    for (sf <- Seq(Sf, s"${new java.io.File(Sf).getParent}/sf0.01")) {
+      val (audit, nCand, nEdges) = llm.Similarity.knnJoinAudited(spark, sf)
+      val n = core.Tables.load(spark, sf, "embeddings").count()
+      val k = llm.Similarity.knnKFor(n)
+      assert(nCand == llm.Similarity.knnCandidateCount(spark, sf, k),
+        s"$sf: observed candidate count differs from knnCandidateCount")
+      assert(nEdges == llm.Similarity.knnJoinEdges(spark, sf).count(),
+        s"$sf: observed edge count differs from the edge frame's count")
+      // the row the oracle replays: exact counts plus three pinned TRUEs
+      val expected = Seq(n, KnnK.toLong, math.min(KnnSliceN.toLong, n) * KnnK,
+        true, true, true)
+      assert(audit.collect().map(_.toSeq).toSeq == Seq(expected), sf)
+    }
+  }
+
+  test("indexed cells: the explicit read schema equals the schema Spark infers") {
+    val n = core.Tables.load(spark, Sf, "embeddings").count()
+    for (k <- Seq(llm.Similarity.IvfK, llm.Similarity.knnKFor(n)).distinct) {
+      llm.Similarity.ensureIvfIndex(spark, Sf, k)
+      val inferred = spark.read
+        .parquet(core.Fixtures.path(Sf, llm.Similarity.ivfCellsName(k))).schema
+      assert(llm.Similarity.IndexedCellsSchema == inferred,
+        s"k=$k: the index build writes ${inferred.simpleString}")
+    }
+  }
+
   test("knnKFor: tracks sqrt(n) as powers of two; ceiling lifted to 4096") {
     assert(llm.Similarity.knnKFor(500L) == 32)
     assert(llm.Similarity.knnKFor(200000L) == 512)

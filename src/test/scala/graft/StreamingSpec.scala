@@ -247,6 +247,46 @@ class StreamingSpec extends AnyFunSuite {
     assert(second === first, "re-running the sink query must be idempotent")
   }
 
+  test("a stale scratch checkpoint under an old query name is never resumed") {
+    val base = stream.Streaming.streamCkptBase
+    assume(base.isDefined, "no scratch checkpoint base on this host")
+    // what a run killed before its cleanup leaves behind: a checkpoint
+    // that has already committed every file of the multi-batch source
+    def plantStale(name: String): java.io.File = {
+      val d = new java.io.File(base.get, name)
+      core.Fixtures.rmTree(d)
+      stream.Streaming.eventsStreamMultiBatch(spark, TestSpark.Sf).writeStream
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) => () }
+        .option("checkpointLocation", d.getAbsolutePath)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      assert(new java.io.File(d, "commits").list().nonEmpty)
+      d
+    }
+    val full = stream.Streaming.foreachBatchSink(spark, TestSpark.Sf).collect().toSeq
+    // the name every foreachBatch run used before names became unique
+    val feb = plantStale("feb")
+    try {
+      val next = stream.Streaming.foreachBatchSink(spark, TestSpark.Sf).collect().toSeq
+      assert(next === full, "the run after a killed one must return the full result")
+    } finally core.Fixtures.rmTree(feb)
+    // the delete before use on its own: handed the very name of a
+    // stale checkpoint, a run still reads every batch
+    plantStale("stale_probe")
+    val seen = new java.util.concurrent.atomic.AtomicLong()
+    stream.Streaming.withScratchCkpt("stale_probe") { dir =>
+      val w = stream.Streaming.eventsStreamMultiBatch(spark, TestSpark.Sf).writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.addAndGet(b.count()); ()
+        }
+        .trigger(Trigger.AvailableNow())
+      dir.foreach(d => w.option("checkpointLocation", d))
+      w.start().awaitTermination()
+    }
+    assert(seen.get() === core.Tables.load(spark, TestSpark.Sf, "events").count())
+    assert(!new java.io.File(base.get, "stale_probe").exists(),
+      "the scratch checkpoint must be deleted after the run")
+  }
+
   test("checkpoint resume: second run ingests only the late-arriving files") {
     // force a fresh fixture build so both streaming runs happen now
     val src = core.Fixtures.path(TestSpark.Sf, "stream_resume_src")
