@@ -14,25 +14,6 @@ object Fixtures {
   def exists(sfDir: String, name: String): Boolean =
     new java.io.File(path(sfDir, name), "_SUCCESS").exists()
 
-  /** Build a MULTI-JOB fixture atomically. `_SUCCESS` is written by
-    * the FIRST append job, so a crash between phases of a multi-phase
-    * build would leave a partial directory that [[exists]] calls
-    * complete — silently corrupting every later run (e.g. a 2-of-3
-    * phase late-data source changes watermark semantics). The body
-    * writes into a `<name>.build` sibling; only after it returns is
-    * the directory renamed into place (same filesystem → atomic).
-    * Stale partials from a previous crash are deleted first. No-op if
-    * the fixture is already complete.
-    *
-    * Concurrent-builder safe (r7 advice): the staging dir is
-    * per-process unique (`<name>.build.<pid>`), so two JVMs building
-    * the same fixture never touch each other's staging; each process
-    * only ever deletes its OWN stale staging dir and an incomplete
-    * (no `_SUCCESS`) final dir. A failed rename re-checks [[exists]]:
-    * if another builder published a complete fixture first, that's a
-    * win, not an error (stale `.build.<pid>` dirs from crashed
-    * builders are inert scratch under target/, cleaned by the next
-    * same-pid run or `sbt clean`). */
   /** Fingerprint of a source table's files (relative path + length +
     * mtime, order-independent fold), hex-encoded. Build-once fixtures
     * that are pure functions of a CORPUS key their name with this
@@ -61,12 +42,37 @@ object Fixtures {
     java.lang.Long.toHexString(h)
   }
 
+  /** Name of a build-once fixture that is a pure function of one corpus
+    * table: `name` suffixed with that table's [[corpusFingerprint]], so
+    * a source rewritten in place maps to a new fixture and a rebuild. */
+  def corpusKeyed(sfDir: String, name: String, table: String): String =
+    s"${name}_${corpusFingerprint(sfDir, table)}"
+
   /** Delete a file or directory tree; a missing path is a no-op. */
   def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
     f.delete()
   }
 
+  /** Build a MULTI-JOB fixture atomically. `_SUCCESS` is written by
+    * the FIRST append job, so a crash between phases of a multi-phase
+    * build would leave a partial directory that [[exists]] calls
+    * complete — silently corrupting every later run (e.g. a 2-of-3
+    * phase late-data source changes watermark semantics). The body
+    * writes into a `<name>.build` sibling; only after it returns is
+    * the directory renamed into place (same filesystem → atomic).
+    * Stale partials from a previous crash are deleted first. No-op if
+    * the fixture is already complete.
+    *
+    * Safe under concurrent builds: the staging dir is per-process
+    * unique (`<name>.build.<pid>`), so two JVMs building the same
+    * fixture never touch each other's staging; each process only ever
+    * deletes its OWN stale staging dir and an incomplete (no
+    * `_SUCCESS`) final dir. A failed rename re-checks [[exists]]: if
+    * another process published a complete fixture first, that's a
+    * win, not an error (stale `.build.<pid>` dirs from crashed builds
+    * are inert scratch under target/, cleaned by the next same-pid run
+    * or `sbt clean`). */
   def buildAtomic(sfDir: String, name: String)(body: String => Unit): Unit = {
     if (exists(sfDir, name)) return
     val fin = new java.io.File(path(sfDir, name))

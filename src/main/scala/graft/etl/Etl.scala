@@ -381,20 +381,22 @@ object Etl {
     * `partitionOverwriteMode=dynamic` replaces exactly the partitions
     * present in the written batch, never the whole table. */
   def backfill(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.core.Fixtures.path(dir, "etl_backfill")
+    val fixture = graft.core.Fixtures.corpusKeyed(dir, "etl_backfill", "lineitem")
+    val path = graft.core.Fixtures.path(dir, fixture)
     val fact = t(spark, dir, "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
     // base layout: build-once fixture (r15). A production backfill runs
     // against a table that EXISTS — rebuilding the full partitioned
     // layout per run measured as more than half the key and models
-    // nothing. The fixture is a pure function of lineitem (same
-    // lifecycle as the index fixtures); the per-run work below is the
-    // operator itself: the dynamic-partition overwrite of exactly the
-    // corrected partition, then the full read-back. Idempotent at any
+    // nothing. The fixture is a pure function of lineitem, keyed by its
+    // corpus fingerprint so a rewritten lineitem rebuilds it; the
+    // per-run work below is the operator itself: the dynamic-partition
+    // overwrite of exactly the corrected partition, then the full
+    // read-back. Idempotent at any
     // point: the restated batch derives from the SOURCE table, so
     // re-overwriting 1998 always lands identical content, and a crashed
     // partial overwrite is healed by the next run's overwrite.
-    graft.core.Fixtures.buildAtomic(dir, "etl_backfill") { tmp =>
+    graft.core.Fixtures.buildAtomic(dir, fixture) { tmp =>
       fact.write.mode("overwrite").partitionBy("ship_year").parquet(tmp)
     }
     // backfill batch: only 1998, restated
@@ -510,15 +512,17 @@ object Etl {
     * `spark.sql.files.maxPartitionBytes`-sized files per partition
     * and runs partition-by-partition behind the table's write lock. */
   def compaction(spark: SparkSession, dir: String): DataFrame = {
-    val frag = graft.core.Fixtures.path(dir, "etl_compaction_frag")
+    val fragName = graft.core.Fixtures.corpusKeyed(dir, "etl_compaction_frag", "orders")
+    val frag = graft.core.Fixtures.path(dir, fragName)
     val comp = graft.core.Fixtures.path(dir, "etl_compaction_out")
     val orders = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     // fragmented INPUT layout: build-once fixture (r15) — the 64-file
     // debris is the job's input (what a streaming writer left), not
-    // its work; rebuilding it per run measured ~half the key. The
+    // its work; rebuilding it per run measured ~half the key. Keyed by
+    // the orders fingerprint, so a rewritten orders rebuilds it. The
     // compaction rewrite below runs every time.
-    graft.core.Fixtures.buildAtomic(dir, "etl_compaction_frag") { tmp =>
+    graft.core.Fixtures.buildAtomic(dir, fragName) { tmp =>
       orders.repartition(64).write.mode("overwrite").parquet(tmp)
     }
     val fragged = spark.read.parquet(frag)
@@ -755,10 +759,12 @@ object Etl {
       .withColumn("o_year", year(col("o_orderdate")))
     // coarse base layout: build-once fixture (r15) — the pre-migration
     // table is the job's INPUT, not its work (a production migration
-    // starts from a table that exists). The migration rewrite below
+    // starts from a table that exists), keyed by the orders fingerprint
+    // so a rewritten orders rebuilds it. The migration rewrite below
     // runs every time.
-    val byYear = graft.core.Fixtures.path(dir, "etl_partition_evolution_src")
-    graft.core.Fixtures.buildAtomic(dir, "etl_partition_evolution_src") { tmp =>
+    val srcName = graft.core.Fixtures.corpusKeyed(dir, "etl_partition_evolution_src", "orders")
+    val byYear = graft.core.Fixtures.path(dir, srcName)
+    graft.core.Fixtures.buildAtomic(dir, srcName) { tmp =>
       src.write.mode("overwrite").partitionBy("o_year").parquet(tmp)
     }
     // migration: same rows, finer (year, month) scheme

@@ -14,14 +14,18 @@ import org.apache.spark.sql.functions._
   * versioned rows with [effective_from, effective_to) validity intervals
   * and an is_current flag.
   *
-  * 100 TB notes: both merges are one full-outer (SCD2) / left (SCD1)
-  * join on the business key — shuffle-partitioned by key hash, AQE
-  * handles skew. Change detection is a single sha2 row-hash comparison,
-  * so the join carries (key, hash) + attrs once, never column-by-column
-  * comparisons across the wire. History rows (is_current = false) are
-  * untouched pass-throughs — at scale, store them in a separate
-  * partition (is_current) so the merge only ever reads the current
-  * slice.
+  * 100 TB notes: every merge is ONE full-outer join on the business
+  * key, shuffle-partitioned by key hash; AQE handles skew. The staged
+  * batch is shuffled once: the duplicate-key guard's window partitions
+  * it by the key, and the join reuses that partitioning and its sort
+  * (the staged key is a plain alias of the key column). SCD2 emits the
+  * carried-forward and the newly opened version of a key from the same
+  * joined row, so the join is not split into two. Change detection is
+  * a single sha2 row-hash comparison, so the join carries (key, hash)
+  * + attrs once, never column-by-column comparisons across the wire.
+  * History rows (is_current = false) are untouched pass-throughs — at
+  * scale, store them in a separate partition (is_current) so the
+  * merge only ever reads the current slice.
   */
 object Scd {
 
@@ -38,33 +42,31 @@ object Scd {
     sha2(concat_ws("\u0001",
       attrCols.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*), 256)
 
-  /** First business-key column of the staged frame, guarded against
-    * duplicate keys WITHIN one staged batch: a duplicated key would
-    * multiply current rows through the merge join and silently corrupt
-    * the dimension (several is_current rows, overlapping intervals),
-    * so the merge fails loudly instead. The guard is a window count
-    * folded into the key projection itself (a standalone guard column
-    * would be pruned away by Catalyst along with its raise_error); the
-    * window partitions by the same key hash the merge join shuffles
-    * on, so at scale it costs a per-partition sort, not a new shuffle
-    * pattern. */
-  private def guardedKey(keyCols: Seq[String]): Column = {
+  /** The staged batch, guarded against duplicate keys WITHIN it: a
+    * duplicated key would multiply current rows through the merge join
+    * and silently corrupt the dimension (several is_current rows,
+    * overlapping intervals), so the merge fails loudly instead. The
+    * guard is a Filter over a per-key window count that either passes
+    * the row or raises. Catalyst never prunes a Filter, so the guard
+    * fires under `count()` or a key-only select too. The window
+    * shuffles the batch by key hash, which is the partitioning (and
+    * the sort) the merge join needs, so the guard adds no exchange. */
+  private def guarded(staged: DataFrame, keyCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*)
-    when(count(lit(1)).over(w) > 1,
-      raise_error(concat_ws(" ",
-        lit("duplicate business key in staged batch:"),
-        concat_ws(",", keyCols.map(c =>
-          coalesce(col(c).cast("string"), lit("NULL"))): _*))))
-      .otherwise(col(keyCols.head))
+    staged.withColumn("_n_key", count(lit(1)).over(w))
+      .filter(when(col("_n_key") > 1,
+        raise_error(concat_ws(" ",
+          lit("duplicate business key in staged batch:"),
+          concat_ws(",", keyCols.map(c =>
+            coalesce(col(c).cast("string"), lit("NULL"))): _*))))
+        .otherwise(lit(true)))
+      .drop("_n_key")
   }
 
-  /** Staged-side key projection with the duplicate guard on the first
-    * key column (the guard only needs to live in one surviving
-    * expression to fire for every staged row). */
+  /** Staged-side key columns, renamed `_k_<key>` so they stay apart
+    * from the dimension's own key columns in the join. */
   private def stagedKeys(keyCols: Seq[String]): Seq[Column] =
-    keyCols.zipWithIndex.map { case (c, i) =>
-      (if (i == 0) guardedKey(keyCols) else col(c)).as(s"_k_$c")
-    }
+    keyCols.map(c => col(c).as(s"_k_$c"))
 
   /** Initial SCD2 load: every staged row becomes the first open version. */
   def initialLoad(staged: DataFrame, batchTs: String): DataFrame =
@@ -103,7 +105,7 @@ object Scd {
     val current = dim.filter(col(CurrentCol))
 
     val cur = current.withColumn("_hash", rowHash(attrCols))
-    val stg = staged.withColumn("_hash_stg", rowHash(attrCols))
+    val stg = guarded(staged, keyCols).withColumn("_hash_stg", rowHash(attrCols))
       .select((stagedKeys(keyCols) :+
         col("_hash_stg")) ++ attrCols.map(c => col(c).as(s"_stg_$c")): _*)
 
@@ -115,31 +117,34 @@ object Scd {
     val changed = inCur && inStg && (col("_hash") =!= col("_hash_stg"))
     // soft delete: close the open version of a key absent from an
     // authoritative staged extract (no replacement row is opened).
-    val departed = lit(closeDeparted) && inCur && !inStg
+    val closes = changed || (lit(closeDeparted) && inCur && !inStg)
 
     val dimCols = current.columns.toSeq
 
-    // current rows carried forward: unchanged as-is, changed/departed closed.
-    val carried = joined.filter(inCur)
-      .withColumn(ToCol,
-        when(changed || departed, lit(batchTs).cast("timestamp"))
-          .otherwise(col(ToCol)))
-      .withColumn(CurrentCol,
-        when(changed || departed, lit(false)).otherwise(lit(true)))
-      .select(dimCols.map(col): _*)
+    // current row carried forward: unchanged as-is, changed/departed closed.
+    val carried = struct(dimCols.map {
+      case ToCol => when(closes, lit(batchTs).cast("timestamp"))
+        .otherwise(col(ToCol)).as(ToCol)
+      case CurrentCol => (!closes).as(CurrentCol)
+      case c => col(c).as(c)
+    }: _*)
 
-    // new open versions: changed keys + brand-new keys.
-    val opened = joined.filter(inStg && (!inCur || changed))
-      .select((keyCols.map(c => coalesce(col(c), col(s"_k_$c")).as(c)) ++
-        attrCols.map(c => col(s"_stg_$c").as(c))): _*)
-      .withColumn(FromCol, lit(batchTs).cast("timestamp"))
-      .withColumn(ToCol, lit(HighDate).cast("timestamp"))
-      .withColumn(CurrentCol, lit(true))
-      .select(dimCols.map(col): _*)
+    // new open version: changed keys + brand-new keys.
+    val openedCol = (keyCols.map(c => c -> coalesce(col(c), col(s"_k_$c"))) ++
+      attrCols.map(c => c -> col(s"_stg_$c")) ++ Seq(
+        FromCol -> lit(batchTs).cast("timestamp"),
+        ToCol -> lit(HighDate).cast("timestamp"),
+        CurrentCol -> lit(true))).toMap
+    val opened = struct(dimCols.map(c => openedCol(c).as(c)): _*)
 
-    history.select(dimCols.map(col): _*)
-      .unionByName(carried)
-      .unionByName(opened)
+    // each joined row yields its carried and/or its opened version, so
+    // the full outer join runs once instead of splitting into a left and
+    // a right outer join, one per union branch.
+    val versions = joined.select(inline(filter(
+      array(when(inCur, carried), when(inStg && (!inCur || changed), opened)),
+      (v: Column) => v.isNotNull)))
+
+    history.select(dimCols.map(col): _*).unionByName(versions)
   }
 
   /** SCD Type 3 apply: limited history IN PLACE — one previous-value
@@ -162,7 +167,7 @@ object Scd {
       attrCol: String,
       batchTs: String): DataFrame = {
 
-    val stg = staged.select(
+    val stg = guarded(staged, keyCols).select(
       (stagedKeys(keyCols) :+ col(attrCol).as("_stg_v")): _*)
     val keyEq = keyCols.map(c => col(c) === col(s"_k_$c")).reduce(_ && _)
     val joined = dim.join(stg, keyEq, "full_outer")
@@ -194,7 +199,7 @@ object Scd {
       keyCols: Seq[String],
       attrCols: Seq[String]): DataFrame = {
 
-    val stg = staged.select(
+    val stg = guarded(staged, keyCols).select(
       (stagedKeys(keyCols) ++
         attrCols.map(c => col(c).as(s"_stg_$c"))): _*)
     val keyEq = keyCols.map(c => col(c) === col(s"_k_$c")).reduce(_ && _)

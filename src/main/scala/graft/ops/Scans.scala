@@ -475,8 +475,7 @@ object Scans {
     * place must invalidate the zoned layout, not silently serve the
     * stale one. */
   private[graft] def scanSkippingFixtureName(dir: String): String =
-    "scan_skipping_zones_" +
-      graft.core.Fixtures.corpusFingerprint(dir, "lineitem")
+    graft.core.Fixtures.corpusKeyed(dir, "scan_skipping_zones", "lineitem")
 
   def scanSkipping(spark: SparkSession, dir: String): DataFrame = {
     // Build-once (r11, r10 verdict "what's wrong" #2): the zoned

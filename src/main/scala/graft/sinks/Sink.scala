@@ -129,8 +129,9 @@ case object UpdateInsertDialect extends MergeDialect {
 /** JDBC sink via Spark's built-in `jdbc` source. `batchsize` and
   * `numPartitions` bound parallel connections against the RDBMS —
   * "parallel processing" (README.md:8) has to be capped at what the
-  * target server tolerates, not at Spark's parallelism. */
-/** Not final: IngestSpec subclasses [[stageLoad]] to inject duplicated
+  * target server tolerates, not at Spark's parallelism.
+  *
+  * Not final: IngestSpec subclasses [[stageLoad]] to inject duplicated
   * and lost task commits. */
 class JdbcSink(
     url: String,
@@ -161,11 +162,15 @@ class JdbcSink(
   protected def stageLoad(df: DataFrame, staging: String): Unit =
     write(df, staging, SaveMode.Overwrite)
 
+  private def withConn[A](body: java.sql.Connection => A): A = {
+    val conn = java.sql.DriverManager.getConnection(url, user, password)
+    try body(conn) finally conn.close()
+  }
+
   /** Row count and distinct-key count of `table`, read in one query. */
   private def rowAndKeyCounts(table: String, keyCols: Seq[String]): (Long, Long) = {
     val keys = keyCols.map(k => "\"" + k + "\"").mkString(", ")
-    val conn = java.sql.DriverManager.getConnection(url, user, password)
-    try {
+    withConn { conn =>
       val st = conn.createStatement()
       try {
         val rs = st.executeQuery(
@@ -173,7 +178,7 @@ class JdbcSink(
             s"(SELECT COUNT(*) AS n FROM (SELECT DISTINCT $keys FROM $table) d) k")
         rs.next(); (rs.getLong(1), rs.getLong(2))
       } finally st.close()
-    } finally conn.close()
+    }
   }
 
   /** Idempotent keyed upsert — the load semantics a production RDBMS
@@ -189,76 +194,75 @@ class JdbcSink(
     * in a single driver-side transaction: matched keys update,
     * unmatched insert, and a failure rolls back to the pre-batch
     * state. This is the documented Spark→SQL-Server/Synapse upsert
-    * pattern; Derby (≥10.11) speaks the same ANSI MERGE.
+    * pattern; Derby (≥10.11) speaks the same ANSI MERGE. The MERGE
+    * spelling comes from the [[MergeDialect]] seam.
     *
-    * The MERGE spelling comes from the [[MergeDialect]] seam.
+    * Spark runs two jobs per clean batch: one shuffle-free count of the
+    * batch, and the staging load. Staging is then verified in the
+    * database with one query (row count and distinct-key count), and
+    * the staging table is dropped however the call ends.
+    *
+    * Staging verification: the staging load commits one transaction
+    * per task, so a task retry AFTER its commit (commit landed, report
+    * lost) duplicates that partition's rows in staging. A row count
+    * alone cannot see one duplicated commit plus one lost commit of
+    * the same size, so staging must hold exactly `n` rows AND `n`
+    * distinct keys, `n` being the batch size. A mismatch reloads once
+    * (Overwrite recreates the table) and re-verifies, so the MERGE
+    * only ever runs against a staging that equals the batch.
+    * IngestSpec injects both faults.
     *
     * PRECONDITION (enforced): the batch must be key-unique. ANSI MERGE
     * is undefined when two source rows match one target row — SQL
     * Server raises error 8672 at runtime, Derby's pick is
-    * order-dependent — so a duplicate-key batch fails HERE, loudly,
-    * before any row lands. Producers that can emit duplicates
-    * pre-aggregate latest-wins first (see `etl_cdc_apply`). */
+    * order-dependent. The distinct-key count of the verification
+    * catches it without a pass of its own: after the reload, `n` rows
+    * but fewer distinct keys means the batch itself repeats a key, and
+    * the call fails with an IllegalArgumentException before the MERGE,
+    * leaving the target untouched. Producers that can emit duplicates
+    * pre-aggregate latest-wins first (see `etl_cdc_apply`).
+    *
+    * The batch size is not counted with `Dataset.observe` on the
+    * staging write: on Spark 4.1.2 an Observation on this V1 JDBC write
+    * of a locally checkpointed batch (what the paper's pipeline passes)
+    * completes with a count of 0, so the count is its own job. */
   def upsert(df: DataFrame, table: String, keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    import org.apache.spark.sql.functions.{col, count, lit, max, sum}
-    // ONE pass computes both preconditions (r15 — was a separate
-    // dup-check job): per-key counts fold into (batch size, max
-    // multiplicity); multiplicity > 1 makes MERGE undefined, so fail
-    // loudly before any row lands.
-    val pre = df.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("_n"))
-      .agg(sum(col("_n")), max(col("_n"))).head()
-    val expected = if (pre.isNullAt(0)) 0L else pre.getLong(0)
-    require(pre.isNullAt(1) || pre.getLong(1) <= 1,
-      s"upsert batch has duplicate rows per key (${keyCols.mkString(", ")}); " +
-        "MERGE semantics are undefined — pre-aggregate latest-wins first")
+    // no columns, no aggregate: one job with no shuffle
+    val n = df.select().rdd.count()
     val staging = table + "_stage"
-    // Stage + verify + MERGE: the staging load commits one transaction
-    // per task, so a task retry AFTER its commit (commit landed, report
-    // lost) duplicates that partition's rows in staging, and a
-    // duplicated staging makes the MERGE undefined (two source rows
-    // per target key). A row count alone cannot see one duplicated
-    // commit plus one lost commit of the same size, so staging must
-    // hold exactly `expected` rows AND `expected` distinct keys. The
-    // batch is key-unique (checked above), so together these mean
-    // staging holds each batch key exactly once. A mismatch reloads
-    // once (Overwrite recreates the table) and re-verifies, so the
-    // MERGE only ever runs against a staging that equals the batch.
-    // IngestSpec injects both faults.
-    stageLoad(df, staging)
-    if (rowAndKeyCounts(staging, keyCols) != ((expected, expected))) {
-      stageLoad(df, staging)
-      val (rows, keys) = rowAndKeyCounts(staging, keyCols)
-      require(rows == expected && keys == expected,
-        s"staging $staging holds $rows rows and $keys distinct keys after " +
-          s"reload, batch has $expected — refusing to MERGE from a staging " +
-          "that does not equal the batch")
-    }
-    val stmts = dialect.upsertStatements(table, staging, df.columns.toSeq, keyCols)
-    val conn = java.sql.DriverManager.getConnection(url, user, password)
     try {
-      conn.setAutoCommit(false)
-      val st = conn.createStatement()
-      try { stmts.foreach(st.executeUpdate); conn.commit() }
-      finally st.close()
-    } catch {
-      case e: Throwable =>
-        try conn.rollback() catch { case _: Throwable => () }
-        throw e
-    } finally {
-      // stage cleanup is best-effort housekeeping, never a failure:
-      // the merge already committed (or rolled back) above. The drop
-      // needs its own commit — autoCommit is still off.
-      try {
-        val st = conn.createStatement()
-        try { st.executeUpdate(s"DROP TABLE $staging"); conn.commit() }
-        finally st.close()
-      } catch {
-        case _: Throwable =>
-          try conn.rollback() catch { case _: Throwable => () }
+      stageLoad(df, staging)
+      if (rowAndKeyCounts(staging, keyCols) != ((n, n))) {
+        stageLoad(df, staging)
+        val (rows, keys) = rowAndKeyCounts(staging, keyCols)
+        require(rows != n || keys == n,
+          s"upsert batch has duplicate rows per key (${keyCols.mkString(", ")}): " +
+            s"$n rows, $keys distinct keys; MERGE semantics are undefined — " +
+            "pre-aggregate latest-wins first")
+        require(rows == n && keys == n,
+          s"staging $staging holds $rows rows and $keys distinct keys after " +
+            s"reload, batch has $n — refusing to MERGE from a staging " +
+            "that does not equal the batch")
       }
-      conn.close()
+      val stmts = dialect.upsertStatements(table, staging, df.columns.toSeq, keyCols)
+      withConn { conn =>
+        conn.setAutoCommit(false)
+        try {
+          val st = conn.createStatement()
+          try { stmts.foreach(st.executeUpdate); conn.commit() }
+          finally st.close()
+        } catch {
+          case e: Throwable =>
+            try conn.rollback() catch { case _: Throwable => () }
+            throw e
+        }
+      }
+    } finally {
+      // stage cleanup is best-effort housekeeping, never a failure: the
+      // merge already committed, rolled back, or never ran
+      try withConn(_.createStatement().executeUpdate(s"DROP TABLE $staging"))
+      catch { case _: Throwable => () }
     }
   }
 }

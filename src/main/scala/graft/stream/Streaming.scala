@@ -218,25 +218,47 @@ object Streaming {
     * checkpoint, which this base never touches). Knob:
     * `SPARK_GRAFT_STREAM_CKPT=<dir>` reroutes (e.g. at a big rung
     * whose state outgrows tmpfs); unset and no writable /dev/shm →
-    * Spark's own temp-dir behavior, as before. */
-  private[graft] lazy val streamCkptBase: Option[String] =
-    sys.env.get("SPARK_GRAFT_STREAM_CKPT").filter(_.nonEmpty)
+    * Spark's own temp-dir behavior, as before. First use sweeps the
+    * checkpoints that killed runs left behind ([[sweepDeadRuns]]). */
+  private[graft] lazy val streamCkptBase: Option[String] = {
+    val base = sys.env.get("SPARK_GRAFT_STREAM_CKPT").filter(_.nonEmpty)
       .orElse {
         val shm = new java.io.File("/dev/shm")
         if (shm.isDirectory && shm.canWrite)
           Some("/dev/shm/graft_stream_ckpt")
         else None
       }
+    base.foreach(b => sweepDeadRuns(new java.io.File(b)))
+    base
+  }
 
   /** A name no other query run uses, in this JVM or an earlier one:
-    * result tables and scratch checkpoints are named with it. */
-  private def runName(prefix: String): String =
-    s"${prefix}_${ctr.incrementAndGet()}_${System.nanoTime()}"
+    * result tables and scratch checkpoints are named with it. It
+    * carries the owner's PID, so [[sweepDeadRuns]] can tell a killed
+    * run's leftovers from a live run's. */
+  private[graft] def runName(prefix: String): String =
+    s"${prefix}_p${ProcessHandle.current().pid()}_${ctr.incrementAndGet()}_${System.nanoTime()}"
+
+  private val RunOwner = raw".+_p(\d+)_\d+_\d+".r
+
+  /** Delete the children of `base` named by a [[runName]] whose owning
+    * process is no longer alive: the scratch checkpoints of runs killed
+    * before their cleanup. Children of live processes, and children not
+    * named by [[runName]], stay. */
+  private[graft] def sweepDeadRuns(base: java.io.File): Unit =
+    Option(base.listFiles()).toSeq.flatten.foreach { f =>
+      f.getName match {
+        case RunOwner(pid) if !ProcessHandle.of(pid.toLong).filter(_.isAlive).isPresent =>
+          Fixtures.rmTree(f)
+        case _ =>
+      }
+    }
 
   /** Run `body` with a per-query scratch checkpoint dir (or None →
     * Spark's default temp checkpoint), deleting the dir before and
     * after. A run killed before its cleanup leaves its checkpoint
-    * behind, and a query started on that checkpoint resumes it: it
+    * behind (the next JVM's first use of [[streamCkptBase]] sweeps
+    * it), and a query started on that checkpoint resumes it: it
     * reads zero batches and returns an empty result. Callers therefore
     * pass a [[runName]], and the delete before use covers a name that
     * repeats anyway. StreamingSpec plants such a checkpoint. */

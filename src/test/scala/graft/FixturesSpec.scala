@@ -58,4 +58,47 @@ class FixturesSpec extends AnyFunSuite {
       fail("body must not run when the fixture is complete")
     }
   }
+
+  test("etl input fixtures are rebuilt when their source table is rewritten in place") {
+    import org.apache.spark.sql.functions.col
+    val spark = TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_fx_src").toString
+    def writeSources(keep: Int): Unit =
+      Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey").foreach { case (t, k) =>
+        core.Tables.load(spark, TestSpark.Sf, t).filter(col(k) % keep === 0)
+          .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+      }
+    def names(): Seq[String] = Seq(
+      Fixtures.corpusKeyed(dir, "etl_backfill", "lineitem"),
+      Fixtures.corpusKeyed(dir, "etl_compaction_frag", "orders"),
+      Fixtures.corpusKeyed(dir, "etl_partition_evolution_src", "orders"))
+    // each key's result must describe the source as it is now
+    def check(): Unit = {
+      val lineitem = core.Tables.load(spark, dir, "lineitem").count()
+      val orders = core.Tables.load(spark, dir, "orders").count()
+      val backfill = etl.Etl.backfill(spark, dir).collect()
+      assert(backfill.map(_.getAs[Long]("n")).sum === lineitem, "etl_backfill")
+      val frag = etl.Etl.compaction(spark, dir).collect()
+        .filter(_.getAs[String]("stage") == "fragmented")
+      assert(frag.map(_.getAs[Long]("n_rows")).toSeq === Seq(orders), "etl_compaction")
+      val evo = etl.Etl.partitionEvolution(spark, dir).collect()
+      assert(evo.map(_.getAs[Long]("n")).sum === orders, "etl_partition_evolution")
+      assert(evo.forall(_.getAs[Boolean]("intact")), "etl_partition_evolution intact")
+      names().foreach(n => assert(Fixtures.exists(dir, n), s"fixture $n not built"))
+    }
+    try {
+      writeSources(1)
+      check()
+      val before = names()
+      writeSources(2) // same path, half the rows
+      val after = names()
+      before.zip(after).foreach { case (b, a) =>
+        assert(a !== b, s"fixture name $b must change with its source")
+      }
+      check()
+    } finally {
+      rm(new java.io.File(Fixtures.path(dir, "x")).getParentFile)
+      rm(new java.io.File(dir))
+    }
+  }
 }

@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.Scd
@@ -162,6 +167,58 @@ class ScdSpec extends AnyFunSuite {
     // a batch with distinct keys sails through the same guard
     val ok = dim(Seq((1L, "a", "Y"), (2L, "b", "W")))
     assert(Scd.scd1Apply(cur, ok, Seq("id"), Seq("name", "seg")).count() === 2)
+  }
+
+  /** Walks the executed adaptive plan, query stages included. */
+  private object Executed extends AdaptiveSparkPlanHelper
+
+  /** The three merges of `staged` into a dimension built from `cur`. */
+  private def merges(cur: DataFrame, staged: DataFrame): Seq[(String, DataFrame)] = {
+    val scd3Dim = cur.select(col("id"), col("seg"))
+      .withColumn("seg_prev", lit(null).cast("string"))
+      .withColumn("changed_at", lit(null).cast("timestamp"))
+    Seq(
+      "scd1Apply" -> Scd.scd1Apply(cur, staged, Seq("id"), Seq("name", "seg")),
+      "scd2Merge" -> Scd.scd2Merge(Scd.initialLoad(cur, t1), staged,
+        Seq("id"), Seq("name", "seg"), t2),
+      "scd3Apply" -> Scd.scd3Apply(scd3Dim, staged.select("id", "seg"),
+        Seq("id"), "seg", t2))
+  }
+
+  // The merge's physical shape: one join, and a staged side (the one
+  // holding the duplicate guard's window) that crosses exactly one
+  // shuffle and one sort, the window's, which the join reuses.
+  test("scd merges: one join, and the staged batch is shuffled and sorted once") {
+    val cur = dim((1L to 40L).map(k => (k, s"n$k", "X")))
+    val staged = dim((20L to 60L).map(k => (k, s"n$k", if (k % 2 == 0) "Y" else "X")))
+    for ((name, merged) <- merges(cur, staged)) {
+      merged.collect()
+      val plan = merged.queryExecution.executedPlan
+      val joins = Executed.collect(plan) { case j: BaseJoinExec => j }
+      assert(joins.size === 1, s"$name joins: $plan")
+      val stagedSide = joins.head.children
+        .filter(c => Executed.find(c)(_.isInstanceOf[WindowExec]).isDefined)
+      assert(stagedSide.size === 1, s"$name: no single guarded side in $plan")
+      val shuffles = Executed.collect(stagedSide.head) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size === 1, s"$name staged-side shuffles: $plan")
+      val sorts = Executed.collect(stagedSide.head) { case s: SortExec => s }
+      assert(sorts.size === 1, s"$name staged-side sorts: $plan")
+    }
+  }
+
+  test("duplicate-key guard fires under count() and a key-only select, in all three merges") {
+    val cur = dim(Seq((1L, "a", "X")))
+    val dup = dim(Seq((1L, "a", "Y"), (1L, "a", "Z"), (2L, "b", "W")))
+    for {
+      (name, merged) <- merges(cur, dup)
+      (how, run) <- Seq[(String, DataFrame => Any)](
+        "count()" -> (_.count()),
+        "a key-only select" -> (_.select("id").collect()))
+    } {
+      val e = intercept[Exception](run(merged))
+      assert(e.getMessage.contains("duplicate business key"),
+        s"$name under $how: ${e.getMessage}")
+    }
   }
 
   test("scd2: NULL→value attribute transition closes and reopens the version") {

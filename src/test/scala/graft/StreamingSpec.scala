@@ -287,6 +287,33 @@ class StreamingSpec extends AnyFunSuite {
       "the scratch checkpoint must be deleted after the run")
   }
 
+  test("the sweep deletes scratch checkpoints of dead runs and keeps live ones") {
+    val base = java.nio.file.Files.createTempDirectory("graft_sweep").toFile
+    val live = ProcessHandle.current().pid()
+    val dead = {
+      val p = new ProcessBuilder("true").start()
+      p.waitFor()
+      p.pid()
+    }
+    // a name as this process gives its runs, and the same name as a
+    // killed run of a process that is gone would have left it
+    val liveName = stream.Streaming.runName("graft_ms")
+    assert(liveName.contains(s"_p${live}_"), liveName)
+    val deadName = liveName.replace(s"_p${live}_", s"_p${dead}_")
+    def plant(name: String): java.io.File = {
+      val d = new java.io.File(base, name)
+      assert(new java.io.File(d, "commits").mkdirs())
+      d
+    }
+    val (liveDir, deadDir, other) = (plant(liveName), plant(deadName), plant("stale_probe"))
+    try {
+      stream.Streaming.sweepDeadRuns(base)
+      assert(!deadDir.exists(), "a dead run's checkpoint must be swept")
+      assert(liveDir.exists(), "a live run's checkpoint must stay")
+      assert(other.exists(), "a directory not named by runName must stay")
+    } finally core.Fixtures.rmTree(base)
+  }
+
   test("checkpoint resume: second run ingests only the late-arriving files") {
     // force a fresh fixture build so both streaming runs happen now
     val src = core.Fixtures.path(TestSpark.Sf, "stream_resume_src")
