@@ -4,23 +4,38 @@ import org.apache.spark.sql.SparkSession
 
 /** One construction path for every shipped main's SparkSession
   * (Verify / Bench / QBench / ScaleStats / ScaleUp / PlanDump):
-  * local[cpus], cpus shuffle partitions, UI off — and (r8 verdict
-  * task #5) [[graft.plans.GraftExtensions]] wired, so the ScanGuard
-  * plan lints police every driver-gate and bench run AT RUNTIME, not
-  * only in the PlanSpec/ExtensionSpec sweeps. The post-construction
-  * `require` turns a silently-dropped extension conf (builder drift,
-  * a main that stopped using this path) into a loud failure of the
-  * run itself; a typo'd class name already fails session construction
-  * inside Spark. */
+  * local[cpus], cpus shuffle partitions, UI off, and
+  * [[graft.plans.GraftExtensions]] wired, so the ScanGuard plan lints
+  * police every driver-gate and bench run at runtime, not only in the
+  * PlanSpec/ExtensionSpec sweeps. The post-construction `require`
+  * turns a silently-dropped extension conf (builder drift, a main that
+  * stopped using this path) into a loud failure of the run itself; a
+  * typo'd class name already fails session construction inside Spark.
+  *
+  * The local filesystem is replaced ([[LocalFsConf]]). Without
+  * `libhadoop`, which the Apache Spark distribution does not ship,
+  * Hadoop's stock one forks a `chmod` process for every file and
+  * directory it creates and a `readlink` for every link-status lookup.
+  * One `stream_micro` benchmark run started 1565 processes that way,
+  * one `etl_incremental` run 306; with [[NioLocalFileSystem]] and
+  * [[NioLocalFs]] they start 7 and 2 (BASELINE.md). */
 object Sessions {
   val ExtensionsClass = "graft.plans.GraftExtensions"
+
+  /** The Hadoop confs that put `file:` paths on [[NioLocalFileSystem]]
+    * (`FileSystem` users: parquet, the commit protocol) and
+    * [[NioLocalFs]] (`FileContext` users: streaming checkpoints). The
+    * test session takes them from here too. */
+  val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
   def build(cpus: String, extra: Map[String, String] = Map.empty): SparkSession = {
     // local[n, 4]: FOUR task attempts instead of local mode's
     // fail-fast single attempt. A contended box can fail one task
     // transiently (GC stall, fetch hiccup) — with maxFailures=1 that
-    // killed the whole query (BENCH_r12's lone graph_pagerank
-    // STAGE_MATERIALIZATION failure); retries cost nothing when no
+    // killed the whole query (a bench run once lost graph_pagerank to
+    // one STAGE_MATERIALIZATION failure); retries cost nothing when no
     // task fails, and the query paths are deterministic and
     // side-effect-free per task, so a re-run is always safe. The ONE
     // exception to "side-effect-free": JDBC loads (JdbcSink.write,
@@ -40,9 +55,8 @@ object Sessions {
       // unbounded over a long-running deployment — let the
       // ContextCleaner delete checkpoint files once their RDD is GC'd
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // r14 (guide §6, file listing): above this many paths Spark
-      // launches a whole JOB to list leaf files in parallel. The
-      // default 32 means every read of a cid-partitioned index fixture
+      // file listing: above this many paths Spark launches a whole JOB
+      // to list leaf files in parallel. The default 32 means every read of a cid-partitioned index fixture
       // (64 cells) or a 64-file compaction layout pays a 64-task
       // listing job (~0.2 s each, measured via JobProf) where a
       // driver-side listing of ≤128 local/HDFS dirs is milliseconds.
@@ -51,6 +65,7 @@ object Sessions {
       // threshold is about path COUNT, not cluster size.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
       .config("spark.ui.enabled", "false")
+    LocalFsConf.foreach { case (k, v) => b.config(k, v) }
     extra.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     require(s.conf.get("spark.sql.extensions", "") == ExtensionsClass,

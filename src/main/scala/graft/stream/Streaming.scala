@@ -184,9 +184,7 @@ object Streaming {
       .parquet(path)
   }
 
-  /** Run a bounded streaming DataFrame to completion into a uniquely
-    * named memory sink; return the sink table. */
-  /** Bench sink selector (r8 verdict #3): the memory sink ships every
+  /** Bench sink selector: the memory sink ships every
     * result row to the driver — at sf100 `stream_ewma`'s 543 s was
     * ~entirely a 100M-row driver collect, polluting the heavy-tail
     * evidence with harness cost. `SPARK_GRAFT_STREAM_SINK=parquet`
@@ -203,18 +201,19 @@ object Streaming {
     sys.props.getOrElse("graft.stream.sink",
       sys.env.getOrElse("SPARK_GRAFT_STREAM_SINK", "memory"))
 
-  /** Scratch base for the bounded harness runs' checkpoints (r15,
-    * guide §6 / §1 "time the computation, not the sink"): every
-    * bounded run writes an offset log + commit log + one state-store
-    * delta PER PARTITION PER MICRO-BATCH, each fsync'd — on the
-    * sandbox's disk that I/O was 2-3× the query (measured:
-    * stream_tumbling_append_mb 18.0 s → 5.1 s, stream_join 7.1 → 3.3,
-    * stream_heavy_hitters 4.3 → 3.3 same session). These checkpoints
-    * are EPHEMERAL BY DESIGN — the harness sink is a memory table and
-    * the checkpoint is deleted right after the bounded run — so tmpfs
-    * costs no durability the harness ever had; a production deployment
-    * sets a durable location explicitly (exactly what
-    * `stream_checkpoint_resume` does with its own fixture-dir
+  /** Scratch base for the bounded harness runs' checkpoints: every
+    * bounded run writes an offset log, a commit log and one state-store
+    * delta per partition per micro-batch. None of them is fsync'd.
+    * What made those files slow was Hadoop's stock local filesystem
+    * forking a `chmod` per file and four `readlink`s per rename, on
+    * any medium; [[graft.core.Sessions]] no longer uses it. On
+    * perfbench `stream_micro` (sf0.01, 4 cores, op_p50_s median) tmpfs
+    * gave 1.5 % with the forks (1.187 s vs 1.205 s on disk) and 4 %
+    * without them (0.683 s vs 0.712 s). These checkpoints are ephemeral by design (the harness sink is a
+    * memory table and the checkpoint is deleted right after the bounded
+    * run), so tmpfs costs no durability the harness ever had; a
+    * production deployment sets a durable location explicitly (exactly
+    * what `stream_checkpoint_resume` does with its own fixture-dir
     * checkpoint, which this base never touches). Knob:
     * `SPARK_GRAFT_STREAM_CKPT=<dir>` reroutes (e.g. at a big rung
     * whose state outgrows tmpfs); unset and no writable /dev/shm →
@@ -282,9 +281,7 @@ object Streaming {
     val name = runName("graft_ps")
     val path = s"target/stream_sink/$name"
     liveSinkDirs.add(path)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // Batch-replay idempotence (r10, per advisor): foreachBatch offers
+    // Batch-replay idempotence: foreachBatch offers
     // NO exactly-once guarantee — a retried micro-batch is re-offered
     // with the SAME batchId, and a blind `append` would double its
     // rows into the result the bench reads back. The memory sink
@@ -294,8 +291,8 @@ object Streaming {
     // idempotent). Complete mode re-emits whole state, so a full-path
     // overwrite is already replay-safe there.
     withScratchCkpt(name) { ckptDir =>
-    val q =
-      try withStateStore(spark) {
+    val q = withStatePartitions(spark) {
+      withStateStore(spark) {
         val w = sdf.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             if (mode == "complete") batch.write.mode("overwrite").parquet(path)
@@ -304,7 +301,8 @@ object Streaming {
           .outputMode(mode).trigger(Trigger.AvailableNow())
         ckptDir.foreach(d => w.option("checkpointLocation", d))
         w.start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
+    }
     q.awaitTermination()
     lastBatchId = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
     lastStateRowsPeak = q.recentProgress
@@ -321,7 +319,7 @@ object Streaming {
     }
   }
 
-  /** Big-rung state-store knob (r10, r9 verdict #4):
+  /** Big-rung state-store knob:
     * `SPARK_GRAFT_STATE_STORE=rocksdb` (env, for Bench/QBench at
     * sf ≥ 10; `graft.stream.stateStore` sysprop for in-JVM tests)
     * runs every streaming query's state in the RocksDB provider —
@@ -356,6 +354,25 @@ object Streaming {
         }
     }
 
+  /** Start a streaming query (`start`) with one state partition per
+    * task slot. Every stateful operator keeps one state store per
+    * shuffle partition (a stream-stream join keeps four), and each
+    * store pays a commit per micro-batch, so the count is sized to one
+    * wave of state-store tasks rather than inherited from the batch
+    * setting. The value is captured in the query's checkpoint at
+    * start, so setting it around the start and restoring it is a
+    * per-query override; a deployment whose state outgrows one wave
+    * sizes it to keys × state row size ÷ executor memory. */
+  private def withStatePartitions[A](spark: SparkSession)(start: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, spark.sparkContext.defaultParallelism.toString)
+    try start
+    finally spark.conf.set(key, prev)
+  }
+
+  /** Run a bounded streaming DataFrame to completion into a uniquely
+    * named memory sink; return the sink table. */
   private def runToTable(spark: SparkSession, sdf: DataFrame, mode: String): DataFrame = {
     if (streamSinkMode == "parquet") return runToParquet(spark, sdf, mode)
     // queries run sequentially: earlier sinks' result sets are consumed
@@ -365,25 +382,15 @@ object Streaming {
       spark.catalog.dropTempView(liveSinks.poll())
     val name = runName("graft_ms")
     liveSinks.add(name)
-    // Every stateful operator keeps one state store PER SHUFFLE
-    // PARTITION (a stream-stream join keeps four), and each store pays
-    // a per-microbatch commit. State store count should be sized to
-    // state volume, not inherited from the batch setting: at test
-    // scale 32 partitions × 4 stores × N batches is pure commit
-    // overhead (~7 s on a 20-row join result — measured). The value is
-    // captured in the query's checkpoint at start, so it is a
-    // per-query streaming knob, not a global change; a real deployment
-    // sizes it to keys × state row size ÷ executor memory.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     withScratchCkpt(name) { ckptDir =>
-    val q =
-      try withStateStore(spark) {
+    val q = withStatePartitions(spark) {
+      withStateStore(spark) {
         val w = sdf.writeStream.format("memory").queryName(name)
           .outputMode(mode).trigger(Trigger.AvailableNow())
         ckptDir.foreach(d => w.option("checkpointLocation", d))
         w.start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
+    }
     q.awaitTermination()
     lastBatchId = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
     lastStateRowsPeak = q.recentProgress
@@ -731,19 +738,16 @@ object Streaming {
     // double-count — start from a clean target every run
     Fixtures.rmTree(new java.io.File(out))
     val src = eventsStreamMultiBatch(spark, dir)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     withScratchCkpt(runName("feb")) { ckptDir =>
-    val q =
-      try {
-        val w = src.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out)
-          }
-          .trigger(Trigger.AvailableNow())
-        ckptDir.foreach(d => w.option("checkpointLocation", d))
-        w.start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val q = withStatePartitions(spark) {
+      val w = src.writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("append").parquet(out)
+        }
+        .trigger(Trigger.AvailableNow())
+      ckptDir.foreach(d => w.option("checkpointLocation", d))
+      w.start()
+    }
     q.awaitTermination()
     lastBatchId = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
     }
