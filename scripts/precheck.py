@@ -137,6 +137,15 @@ def main():
 
     con = connect()
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    run = {os.path.basename(p) for p in glob.glob(f"{out_dir}/*")
+           if os.path.isdir(p)}
+    # a requested key must be checked: one in neither the oracle map
+    # nor the run dir (a typo) would otherwise pass as "0 pass, 0 fail"
+    missing = sorted(only - set(oracle) - run)
+    if missing:
+        print(f"unknown key(s), not in oracle_sql.json nor {out_dir}: "
+              + ", ".join(missing))
+        sys.exit(1)
     n_pass = n_fail = 0
     import time
 
@@ -361,8 +370,6 @@ def main():
             print(f"FAIL {name}: {r}")
             n_fail += 1
     # queries without oracle: rows-only
-    run = {os.path.basename(p) for p in glob.glob(f"{out_dir}/*")
-           if os.path.isdir(p)}
     for name in sorted(run - set(oracle)):
         if only and name not in only:
             continue

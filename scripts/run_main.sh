@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main directly against the compiled classes (same JVM
-# flags as build.sbt's forked run), so long ScaleUp/QBench jobs don't
-# hold sbt's project lock while tests run.
+# flags as build.sbt's forked run), so long ScaleUp/Bench/Verify jobs
+# don't hold sbt's project lock while tests run.
 #   scripts/run_main.sh <MainClass> [args...]
 # Honors SPARK_DRIVER_MEM (default 8g) like the sbt run does.
 set -euo pipefail

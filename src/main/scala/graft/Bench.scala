@@ -1,85 +1,78 @@
 package graft
 
-/** Benchmark main — one JSON line per run (driver contract).
+/** Benchmark main — one JSON line per run (driver contract):
+  * `runMain graft.Bench [keys...]` times the given keys, or all of
+  * them when none are given ([[SparkEntry.select]]).
   *
-  * Noise-proofing (round-2 verdict finding #1: a contended bench window
-  * produced a ~2×-inflated artifact that was committed unflagged):
+  * Noise-proofing (a contended bench window once produced a
+  * ~2×-inflated artifact that was committed unflagged):
   *  - every query runs [[Passes]] times and reports the per-query MIN —
   *    a single noisy window can no longer inflate a timing;
   *  - /proc/loadavg is stamped at start and end so an artifact recorded
   *    under contention is self-identifying (healthy: load ≲ cpus);
   *  - a query that throws reports `-1` (an impossible wall time, never
   *    mistaken for a measurement) and its exception lands in the
-  *    `errors` map — failures can't masquerade as timings (finding #3).
+  *    `errors` map — failures can't masquerade as timings.
   */
 object Bench {
   private val Passes = 2
+  // contention gate: canary bound over the clean history 0.176–0.186 s,
+  // 1-min load bound, and the longest settle before giving up
+  private val CanaryBound = 0.19
+  private val SettleLoad = 2.0
+  private val SettleMaxSec = 600
 
   def main(args: Array[String]): Unit = {
+    val names = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the driver contract (local[32]); QBench keeps its
-    // deliberate 4-thread default for steady-state single-query timing.
-    // A 4-thread full-inventory run slipped into bench_history twice
-    // (2026-08-14) before this pin — artifacts self-identify via "cpus".
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // artifacts self-identify via "cpus"
+    val cpus = core.Sessions.envCpus
 
-    // Host-identity probes — shared definitions in [[core.HostProbe]]
-    // (scaladoc there: fixed-work canary, parallel canary, boot
-    // epoch), so JdbcBench's artifact self-identifies with the SAME
-    // probes as this one. benchdiff prefers the par-canary for
-    // normalization when both runs carry it.
-    def canaryMin3(): Double = core.HostProbe.canaryMin3()
-    def canaryPar(n: Int): Double = core.HostProbe.canaryPar(n)
-    def procStat(): Array[Long] = core.HostProbe.procStat()
+    // Host-identity probes ([[core.HostProbe]]: fixed-work canary,
+    // parallel canary, boot epoch), the same ones JdbcBench's artifact
+    // carries. benchdiff prefers the par-canary for normalization when
+    // both runs carry it.
     val bootEpoch: Long = core.HostProbe.bootEpoch()
-    val statStart = procStat()
+    val statStart = core.HostProbe.procStat()
 
-    // Self-gating contention check (r6 verdict task #1: TWICE the
-    // committed artifact was the day's most contended run, despite a
-    // loadavg-only settle loop — loadavg lags and never measured what
-    // the grade normalizes by). Gate on the canary ITSELF: measure it
-    // FIRST, before any Spark work; if it exceeds the pinned bound
-    // (clean history 0.176–0.186 s; bound 0.19) or the 1-min load
-    // exceeds 2, sleep-and-retry in bounded steps. If the box never
-    // quiets, the artifact ships with "contended": true so no human
-    // judgment is needed downstream (benchdiff refuses to compare it).
-    // Each iteration reads /proc/loadavg ONCE into a val so the value
-    // tested and the value logged are the same sample (r6 advice).
-    val canaryBound =
-      sys.env.getOrElse("SPARK_GRAFT_CANARY_BOUND", "0.19").toDouble
-    val settleThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_SETTLE", "2.0").toDouble
-    val settleMaxSec =
-      sys.env.getOrElse("SPARK_GRAFT_SETTLE_MAX", "600").toInt
+    // Self-gating contention check: twice the committed artifact was
+    // the day's most contended run despite a loadavg-only settle loop —
+    // loadavg lags and never measured what the grade normalizes by.
+    // Gate on the canary ITSELF: measure it FIRST, before any Spark
+    // work; if it exceeds [[CanaryBound]] or the 1-min load exceeds
+    // [[SettleLoad]], sleep-and-retry in bounded steps. If the box
+    // never quiets, the artifact ships with "contended": true so no
+    // human judgment is needed downstream (benchdiff refuses to compare
+    // it). Each iteration reads /proc/loadavg ONCE into a val so the
+    // value tested and the value logged are the same sample.
     def loadAvgNow(): Double = try {
       java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split(" ")(0).toDouble
     } catch { case _: Throwable => -1.0 }
     var settledSec = 0
-    var canarySec = canaryMin3()
+    var canarySec = core.HostProbe.canaryMin3()
     var loadStart = loadAvgNow()
-    while ((canarySec > canaryBound || loadStart > settleThreshold) &&
-           settledSec < settleMaxSec) {
+    while ((canarySec > CanaryBound || loadStart > SettleLoad) &&
+           settledSec < SettleMaxSec) {
       System.err.println(
-        f"[bench] contended: canary $canarySec%.3f (bound $canaryBound) " +
-          f"load $loadStart%.2f (bound $settleThreshold) — settling (${settledSec}s)")
+        f"[bench] contended: canary $canarySec%.3f (bound $CanaryBound) " +
+          f"load $loadStart%.2f (bound $SettleLoad) — settling (${settledSec}s)")
       Thread.sleep(15000)
       settledSec += 15
-      canarySec = canaryMin3()
+      canarySec = core.HostProbe.canaryMin3()
       loadStart = loadAvgNow()
     }
-    val contended = canarySec > canaryBound || loadStart > settleThreshold
+    val contended = canarySec > CanaryBound || loadStart > SettleLoad
     if (contended) System.err.println(
       f"[bench] STILL contended after ${settledSec}s — artifact will carry contended:true")
     // measured once, post-settle, pre-Spark (its own threads would
     // otherwise contend with executor threads)
-    val canaryParSec = canaryPar(cpus.toInt)
+    val canaryParSec = core.HostProbe.canaryPar(cpus)
 
-    val spark = core.Sessions.build(cpus)
-    // the 68 GB lesson as a check, not a runbook note (r8 verdict #6)
+    val spark = core.Sessions.build(cpus.toString)
+    // the 68 GB lesson as a check, not a runbook note
     val scratchWarn = core.ScratchPreflight.check(spark, sfDir).isDefined
 
-    def loadAvg: Double = loadAvgNow()
     // nominal clock stamp — a thermally-throttled or power-capped box
     // self-identifies
     val cpuMhz = try {
@@ -130,7 +123,6 @@ object Bench {
 
     // Pass 1 also pays one-time fixture writes (streaming sources,
     // bucketed layouts); the min over passes measures the steady state.
-    val names = SparkEntry.queries.keys.toSeq.sorted
     val best = scala.collection.mutable.Map.empty[String, Double]
     val errors = scala.collection.mutable.Map.empty[String, String]
     for (_ <- 1 to Passes; name <- names) {
@@ -146,31 +138,26 @@ object Bench {
       }
     }
 
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+    import Verify.quote
     val qs = names.map { n =>
-      "\"" + esc(n) + "\":" + best.getOrElse(n, -1.0)
+      quote(n) + ":" + best.getOrElse(n, -1.0)
     }.mkString("{", ",", "}")
     val errs = errors.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + esc(k) + "\":\"" + esc(v) + "\""
+      quote(k) + ":" + quote(v)
     }.mkString("{", ",", "}")
     val total = best.values.sum
     // steal% across the whole measurement window (field 8 of the
     // aggregate cpu line) — hypervisor-level contention that loadavg
     // and the canaries cannot see
     val stealPct = {
-      val a = statStart; val b = procStat()
+      val a = statStart; val b = core.HostProbe.procStat()
       if (a.length >= 8 && b.length >= 8) {
         val d = a.indices.map(i => b(i) - a(i))
         val tot = d.sum.toDouble
         if (tot > 0) 100.0 * d(7) / tot else -1.0
       } else -1.0
     }
-    // Durability-mode self-identification (r13 advisor): key off what
+    // Durability-mode self-identification: key off what
     // the cuts ACTUALLY did (Lineage.lastCutReliable) so a run enabling
     // reliable mode via the runtime conf key — not just the env var —
     // labels itself correctly; fall back to env/conf for a run whose
@@ -181,9 +168,9 @@ object Bench {
           spark.conf.getOption(core.Lineage.ConfKey).exists(_.nonEmpty))
         "reliable"
       else "local"
-    def metaWith(errsJson: String) = s""""sf":"$sfDir","first_stream_init":$streamInit,"passes":$Passes,"errors":$errsJson,"load_avg_start":$loadStart,"load_avg_end":$loadAvg,"cpus":$cpus,"canary_sec":$canarySec,"canary_par_sec":$canaryParSec,"steal_pct":$stealPct,"boot_epoch":$bootEpoch,"cpu_mhz":$cpuMhz,"settled_sec":$settledSec,"contended":$contended,"stream_sink":"${sys.env.getOrElse("SPARK_GRAFT_STREAM_SINK", "memory")}","state_store":"${sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "default")}","scratch_warn":$scratchWarn,"ckpt":"$ckptMode""""
+    def metaWith(errsJson: String) = s""""sf":"$sfDir","first_stream_init":$streamInit,"passes":$Passes,"errors":$errsJson,"load_avg_start":$loadStart,"load_avg_end":${loadAvgNow()},"cpus":$cpus,"canary_sec":$canarySec,"canary_par_sec":$canaryParSec,"steal_pct":$stealPct,"boot_epoch":$bootEpoch,"cpu_mhz":$cpuMhz,"settled_sec":$settledSec,"contended":$contended,"stream_sink":"${sys.env.getOrElse("SPARK_GRAFT_STREAM_SINK", "memory")}","state_store":"${sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "default")}","scratch_warn":$scratchWarn,"ckpt":"$ckptMode""""
     val meta = metaWith(errs)
-    // stdout meta must be BOUNDED (r12, per advisor): errs is
+    // stdout meta must be BOUNDED: errs is
     // unbounded (~170 chars per failing key), so with many errors even
     // the fully-shrunk queries map could not save the line from the
     // tail cut. The stdout copy carries at most ErrsCap messages, each
@@ -192,7 +179,7 @@ object Bench {
     val ErrsCap = 3
     val errSeq = errors.toSeq.sortBy(_._1)
     val errsStdout = errSeq.take(ErrsCap).map { case (k, v) =>
-      "\"" + esc(k) + "\":\"" + esc(v.take(80)) + "\""
+      quote(k) + ":" + quote(v.take(80))
     }.mkString("{", ",", "}")
     val errsOmitted =
       if (errSeq.length > ErrsCap)
@@ -200,9 +187,9 @@ object Bench {
     val metaStdout = metaWith(errsStdout) + errsOmitted
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$meta}"""
     // The driver keeps only the LAST ~2000 chars of stdout, and the
-    // full per-key map has exceeded that since round 1 — every
+    // full per-key map has exceeded that from the start — every
     // committed BENCH_r*.json carried a mid-map truncation and
-    // "parsed": null (r10 verdict #3). The FULL line lives in
+    // "parsed": null. The FULL line lives in
     // bench_out.json + bench_history.jsonl (below); stdout gets a line
     // guaranteed to fit the tail: same contract shape, per-key values
     // rounded to ms, and if the whole map still overflows the budget,
@@ -212,7 +199,7 @@ object Bench {
       val budget = 1900
       def mk(entries: Seq[(String, Double)], omitted: Int): String = {
         val m = entries.map { case (k, v) =>
-          "\"" + esc(k) + "\":" + BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+          quote(k) + ":" + BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
         }.mkString("{", ",", "}")
         val om = if (omitted > 0)
           s""","queries_omitted":$omitted,"queries_full":"bench_history.jsonl"""" else ""
@@ -223,9 +210,8 @@ object Bench {
       if (full.length <= budget) full
       else {
         // largest prefix of the slowest-first ordering that fits;
-        // k floored at 1 (r12, per advisor: the proportional shrink
-        // could reach 0 and emit an empty map, defeating the
-        // slowest-first-prefix intent)
+        // k floored at 1 (the proportional shrink could reach 0 and
+        // emit an empty map, defeating the slowest-first-prefix intent)
         var k = bySlow.length
         var out = full
         while (out.length > budget && k > 1) {
@@ -239,7 +225,7 @@ object Bench {
     // (build.sbt) the forked JVM inherits the real stdout, so this
     // line reaches the driver UNPREFIXED — sbt's default LoggedOutput
     // re-logged it as `[info] {...`, which is why every committed
-    // BENCH_r*.json has `"parsed": null` (r11 verdict #3). The raw FD
+    // BENCH_r*.json has `"parsed": null`. The raw FD
     // write also sidesteps any System.out wrapper and lands as the
     // LAST stdout line before sbt's epilogue.
     val rawOut = new java.io.FileOutputStream(java.io.FileDescriptor.out)
@@ -256,7 +242,7 @@ object Bench {
     }
     // bench_out.json is overwritten per run (driver contract); the
     // history file keeps every run (e.g. one per scale factor) so no
-    // invocation clobbers another's numbers (round-4 advice).
+    // invocation clobbers another's numbers.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_history.jsonl"), line + "\n",
       java.nio.file.StandardOpenOption.CREATE,

@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
 object JdbcBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = core.Sessions.build(cpus)
+    val spark = core.Sessions.build()
     val dbDir = core.Fixtures.path(sfDir, "derby_bench_db")
     System.setProperty("derby.stream.error.file", s"$dbDir.log")
     val url = s"jdbc:derby:$dbDir;create=true"

@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
 object ScaleStats {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleStats <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = core.Sessions.build(cpus)
+    val spark = core.Sessions.build()
 
     for (dir <- args) {
       val d = core.Tables.load(spark, dir, "documents")

@@ -141,7 +141,7 @@ object ScaleUp {
     require(factor >= 1 && factor <= 10,
       s"factor must be in [1,10] (the identity shard + up to 9 codebook replicas), got $factor")
     require(level >= 1 && level <= 3, s"level must be 1..3, got $level")
-    val spark = core.Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = core.Sessions.build()
     run(spark, src, dst, factor, level)
     spark.stop()
   }

@@ -29,6 +29,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (k, q) => k -> q.fn }
 
+  /** The keys a main runs: every key of [[queries]], sorted, when `keys`
+    * is empty, else `keys` themselves. An unknown key fails the run and
+    * names the key, so a typo cannot select nothing. */
+  def select(keys: Seq[String]): Seq[String] = {
+    val known = queries.keySet
+    val unknown = keys.filterNot(known)
+    require(unknown.isEmpty, s"unknown query key(s): ${unknown.mkString(", ")}")
+    if (keys.isEmpty) known.toSeq.sorted else keys.distinct
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -8,20 +8,17 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing args: run only these keys (dev loop; the driver
     // passes exactly two args, so it always dumps the full inventory)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // big-rung instrument, same knob as QBench: streaming keys land in
-    // the harness's MEMORY sink, whose per-batch task results ship to
-    // the driver; at sf10 stream_session's exceed the 1g default. The
-    // driver passes no env, so its runs keep Spark's default.
-    val spark = core.Sessions.build(cpus,
+    val keys = SparkEntry.select(args.toSeq.drop(2))
+    // streaming keys land in the harness's MEMORY sink, whose per-batch
+    // task results ship to the driver; at sf10 stream_session's exceed
+    // the 1g default. The driver passes no env, so its runs keep
+    // Spark's default.
+    val spark = core.Sessions.build(extra =
       Map("spark.sql.session.timeZone" -> "UTC") ++
         sys.env.get("SPARK_GRAFT_MAX_RESULT")
           .map("spark.driver.maxResultSize" -> _))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    keys.foreach { name =>
       val t0 = System.nanoTime()
       try {
         // localCheckpoint BEFORE coalesce(1): a bare coalesce(1)
@@ -33,31 +30,33 @@ object Verify {
         // so the ordered() global sort — which the driver's row-order-
         // sensitive compare depends on — survives, and the one write
         // task streams rows instead of computing them.
-        fn(spark, sfDir).lineageCut().coalesce(1).write.mode("overwrite")
+        SparkEntry.queries(name)(spark, sfDir).lineageCut().coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         // per-key wall time on stderr: the big-rung gates pick their
-        // key lists from these lines (r10)
+        // key lists from these lines
         System.err.println(
           f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** `s` as a JSON string literal: backslash, quote and ALL control
+    * chars (<0x20) escaped. A tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness. */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

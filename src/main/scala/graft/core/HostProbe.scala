@@ -1,14 +1,13 @@
 package graft.core
 
 /** Host-identity probes shared by every artifact-emitting main
-  * (Bench, JdbcBench): a fixed-work single-thread CPU canary, its
-  * parallel variant, and the VM boot epoch. One definition so the
-  * cross-VM comparability rule — compare absolute numbers only within
-  * a `boot_epoch`, normalize by canary — is uniform across artifacts
-  * (r13 advisor: jdbc_bench_r13.json was the only artifact without
-  * self-identification).
+  * (Bench, JdbcBench) and by the perfbench harness: a fixed-work
+  * single-thread CPU canary, its parallel variant, and the VM boot
+  * epoch. One definition, called directly, so the cross-VM
+  * comparability rule — compare absolute numbers only within a
+  * `boot_epoch`, normalize by canary — is uniform across artifacts.
   *
-  * Fixed-work CPU canary (r4 verdict ask): sorting the same 2M
+  * Fixed-work CPU canary: sorting the same 2M
   * xorshift-filled longs is pure single-thread CPU with zero Spark
   * involvement, so every artifact carries its own normalizer — a
   * uniform query slowdown at an UNCHANGED canary is code; at an
@@ -29,7 +28,7 @@ object HostProbe {
 
   def canaryMin3(): Double = { canaryRep(); (1 to 3).map(_ => canaryRep()).min }
 
-  /** Parallel canary (r7): `n` concurrent copies of the same fixed
+  /** Parallel canary: `n` concurrent copies of the same fixed
     * work, reported as the WALL time of the slowest thread's min-of-3.
     * A single-thread probe cannot see host-level effects that only
     * bind under concurrency (scheduler placement, SMT siblings,

@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** One construction path for every shipped main's SparkSession
-  * (Verify / Bench / QBench / ScaleStats / ScaleUp / PlanDump):
+  * (Verify / Bench / PlanDump / ScaleUp / ScaleStats / JdbcBench):
   * local[cpus], cpus shuffle partitions, UI off, and
   * [[graft.plans.GraftExtensions]] wired, so the ScanGuard plan lints
   * police every driver-gate and bench run at runtime, not only in the
@@ -30,7 +30,22 @@ object Sessions {
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
-  def build(cpus: String, extra: Map[String, String] = Map.empty): SparkSession = {
+  /** The one env knob for the session's task slots. */
+  val CpusEnv = "SPARK_GRAFT_CPUS"
+
+  /** Task slots from the [[CpusEnv]] value: the host's processors when
+    * unset, else a positive integer. Anything else fails here, naming
+    * the knob, instead of deep inside Spark's master-URL parsing. */
+  def cpusFrom(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$CpusEnv must be a positive integer, got '$v'"))
+  }
+
+  def envCpus: Int = cpusFrom(sys.env.get(CpusEnv))
+
+  def build(cpus: String = envCpus.toString,
+      extra: Map[String, String] = Map.empty): SparkSession = {
     // local[n, 4]: FOUR task attempts instead of local mode's
     // fail-fast single attempt. A contended box can fail one task
     // transiently (GC stall, fetch hiccup) — with maxFailures=1 that
@@ -58,7 +73,7 @@ object Sessions {
       // file listing: above this many paths Spark launches a whole JOB
       // to list leaf files in parallel. The default 32 means every read of a cid-partitioned index fixture
       // (64 cells) or a 64-file compaction layout pays a 64-task
-      // listing job (~0.2 s each, measured via JobProf) where a
+      // listing job (~0.2 s each, measured per job) where a
       // driver-side listing of ≤128 local/HDFS dirs is milliseconds.
       // 128 keeps the parallel path for genuinely wide tables
       // (thousands of partitions) on any deployment size — the

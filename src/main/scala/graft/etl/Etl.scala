@@ -824,7 +824,7 @@ object Etl {
     // string min/maxes in ONE aggregate forced the whole Expand×6
     // pipeline into SortAggregate — min(string)'s agg buffer is not
     // fixed-width, so HashAggregate is off the table and every
-    // expanded row pays a 6-key Sort (JobProf: a 2.3 s single task
+    // expanded row pays a 6-key Sort (measured: a 2.3 s single task
     // under a 2.9 s key; spreading it 32-way inflated total CPU 12×
     // on sort setup). Split by buffer type instead: the distinct
     // counts ride the Expand with EMPTY buffers (pure HashAggregate

@@ -442,7 +442,7 @@ object Dedup {
     // FOUR times below (both intersection legs + both size joins via
     // sz), and each reference re-derived the whole candidate shingle
     // subtree — docs scan → semi join → Generate — per consumer
-    // (JobProf: 4 repeat subtrees under llm_dedup_incremental's 37-job
+    // (4 repeat subtrees under llm_dedup_incremental's 37-job
     // chain). The cut materializes the candidate-only shingle set once;
     // it is bounded by the candidate pair count (~0.5 % of docs), so
     // the materialization stays small at any corpus scale.
@@ -965,9 +965,9 @@ object Dedup {
     * 64-bit before the shuffle (8 bytes vs ~50) and keep the string
     * only for the report join — noted, not needed at test scale. */
   def spanDedup(spark: SparkSession, dir: String): DataFrame = {
-    // parallelism floor (r14, Spread's documented purpose): the span
+    // parallelism floor (Spread's documented purpose): the span
     // HOF is CPU-bound and the documents scan is 1–2 splits at small
-    // SF — JobProf showed the whole span-generation map on ONE task
+    // SF — the per-job table showed the whole span-generation map on ONE task
     // (0.8 s of the key); no-op where the scan already splits ≥ cores
     val spans = graft.core.Spread.cpuBound(spark, docs(spark, dir), col("doc_id"))
       // tokenize ONCE into a named column; the window HOF references it

@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Lineage.LineageCutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Fixtures, Q, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
 
@@ -44,11 +44,7 @@ object ScaleJoins {
            |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
            |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
     } else {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      if (loc.exists()) rm(loc)
+      Fixtures.rmTree(loc)
       df.write.bucketBy(8, key).sortBy(key).saveAsTable(table)
     }
   }

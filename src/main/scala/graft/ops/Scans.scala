@@ -78,9 +78,9 @@ object Scans {
     * lists a single directory — partition pruning), aggregate it. */
   def sinkPartitioned(spark: SparkSession, dir: String): DataFrame = {
     val path = fix(dir, "sink_partitioned")
-    // parallelism floor on the parquet ENCODE (r15): the lineitem scan
+    // parallelism floor on the parquet ENCODE: the lineitem scan
     // is 3 splits at bench SF, so the partitioned write's encode ran on
-    // 3 of 32 cores (JobProf: 1.4 s CPU on 3 tasks = ~80% of the key).
+    // 3 of 32 cores (1.4 s CPU on 3 tasks = ~80% of the key).
     // Keyed spread, no-op at scale where the scan already splits ≥
     // cores — there file sizing is governed by the ~128 MB scan splits.
     graft.core.Spread.cpuBound(spark,

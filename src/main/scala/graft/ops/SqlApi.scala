@@ -301,8 +301,8 @@ object SqlApi {
     // §3.3 "materialising an intermediate truncates the plan"): Spark
     // inlines a CTE per reference, so the un-materialized spelling
     // re-derived `op` (lineitem scan + distinct) and `e` (the
-    // self-join) inside EVERY recursive step — JobProf measured the op
-    // scan 8× and the e self-join 5× per run at sf0.1. This is the
+    // self-join) inside EVERY recursive step: the per-job table showed
+    // the op scan 8× and the e self-join 5× per run at sf0.1. This is the
     // exact hazard the DuckDB oracle already guards against with
     // WITH ... AS MATERIALIZED (dupClustersSql r13 note); Spark has no
     // MATERIALIZED hint, so the edge list is cut into a temp view and

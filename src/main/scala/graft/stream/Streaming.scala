@@ -1,8 +1,8 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
 import graft.core.{Fixtures, Q, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
@@ -54,14 +54,14 @@ object Streaming {
   private val ctr = new java.util.concurrent.atomic.AtomicLong()
   private val liveSinks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  /** Last batchId of the most recent [[runToTable]] query — lets tests
+  /** Last batchId of the most recent [[runBounded]] query — lets tests
     * assert HOW MANY micro-batches a bounded run actually executed
     * (batchId is 0-based: single-batch runs end at 0, the multi-batch
     * fixture at ≥ [[MbSlices]] − 1). */
   @volatile private[graft] var lastBatchId: Long = -1L
 
   /** Peak state-store row count (sum over state operators, max over
-    * micro-batches) of the most recent [[runToTable]] query, from
+    * micro-batches) of the most recent [[runBounded]] query, from
     * `StreamingQueryProgress.stateOperators` — the store's own account
     * of what it holds, so tests can pin "state is bounded by k/keys,
     * never by input rows" against the runtime, not the code's claim.
@@ -188,7 +188,7 @@ object Streaming {
     * result row to the driver — at sf100 `stream_ewma`'s 543 s was
     * ~entirely a 100M-row driver collect, polluting the heavy-tail
     * evidence with harness cost. `SPARK_GRAFT_STREAM_SINK=parquet`
-    * (env, for Bench/QBench at sf ≥ 10; `graft.stream.sink` sysprop
+    * (env, for Bench at sf ≥ 10; `graft.stream.sink` sysprop
     * for the in-JVM equivalence spec) reroutes the bounded run through
     * foreachBatch → parquet under target/ — fully distributed, zero
     * driver collect — and returns the files read back. Result-set
@@ -290,24 +290,11 @@ object Streaming {
     // mode=overwrite (a replay rewrites the same dir, byte-for-byte
     // idempotent). Complete mode re-emits whole state, so a full-path
     // overwrite is already replay-safe there.
-    withScratchCkpt(name) { ckptDir =>
-    val q = withStatePartitions(spark) {
-      withStateStore(spark) {
-        val w = sdf.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            if (mode == "complete") batch.write.mode("overwrite").parquet(path)
-            else batch.write.mode("overwrite").parquet(s"$path/b$batchId")
-          }
-          .outputMode(mode).trigger(Trigger.AvailableNow())
-        ckptDir.foreach(d => w.option("checkpointLocation", d))
-        w.start()
-      }
-    }
-    q.awaitTermination()
-    lastBatchId = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-    lastStateRowsPeak = q.recentProgress
-      .map(p => Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L))
-      .foldLeft(-1L)(math.max)
+    runBounded(spark, sdf, name, mode)(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (mode == "complete") batch.write.mode("overwrite").parquet(path)
+        else batch.write.mode("overwrite").parquet(s"$path/b$batchId")
+      })
     if (new java.io.File(path).exists())
       // recursiveFileLookup reads the union of the batchId dirs (and
       // the flat complete-mode layout) WITHOUT partition inference —
@@ -315,12 +302,11 @@ object Streaming {
       spark.read.schema(sdf.schema)
         .option("recursiveFileLookup", "true").parquet(path)
     else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sdf.schema)
-    }
+      spark.sparkContext.emptyRDD[Row], sdf.schema)
   }
 
   /** Big-rung state-store knob:
-    * `SPARK_GRAFT_STATE_STORE=rocksdb` (env, for Bench/QBench at
+    * `SPARK_GRAFT_STATE_STORE=rocksdb` (env, for Bench at
     * sf ≥ 10; `graft.stream.stateStore` sysprop for in-JVM tests)
     * runs every streaming query's state in the RocksDB provider —
     * off-heap, spillable-to-disk, the store a production cluster runs
@@ -371,6 +357,29 @@ object Streaming {
     finally spark.conf.set(key, prev)
   }
 
+  /** Run a bounded streaming DataFrame to completion: `sink` names where
+    * its rows go, and everything else is the same for every bounded run.
+    * A scratch checkpoint ([[withScratchCkpt]]) under `name`, per-query
+    * state partitions and store set around `start`, an AvailableNow
+    * trigger, and, once the query ends, [[lastBatchId]] and
+    * [[lastStateRowsPeak]] from its progress. */
+  private def runBounded(spark: SparkSession, sdf: DataFrame, name: String, mode: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    withScratchCkpt(name) { ckptDir =>
+      val q = withStatePartitions(spark) {
+        withStateStore(spark) {
+          val w = sink(sdf.writeStream).outputMode(mode).trigger(Trigger.AvailableNow())
+          ckptDir.foreach(d => w.option("checkpointLocation", d))
+          w.start()
+        }
+      }
+      q.awaitTermination()
+      lastBatchId = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+      lastStateRowsPeak = q.recentProgress
+        .map(p => Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L))
+        .foldLeft(-1L)(math.max)
+    }
+
   /** Run a bounded streaming DataFrame to completion into a uniquely
     * named memory sink; return the sink table. */
   private def runToTable(spark: SparkSession, sdf: DataFrame, mode: String): DataFrame = {
@@ -382,22 +391,8 @@ object Streaming {
       spark.catalog.dropTempView(liveSinks.poll())
     val name = runName("graft_ms")
     liveSinks.add(name)
-    withScratchCkpt(name) { ckptDir =>
-    val q = withStatePartitions(spark) {
-      withStateStore(spark) {
-        val w = sdf.writeStream.format("memory").queryName(name)
-          .outputMode(mode).trigger(Trigger.AvailableNow())
-        ckptDir.foreach(d => w.option("checkpointLocation", d))
-        w.start()
-      }
-    }
-    q.awaitTermination()
-    lastBatchId = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-    lastStateRowsPeak = q.recentProgress
-      .map(p => Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L))
-      .foldLeft(-1L)(math.max)
+    runBounded(spark, sdf, name, mode)(_.format("memory").queryName(name))
     spark.table(name)
-    }
   }
 
   /** Tumbling 10-min window × event_type with a 30-min watermark.
@@ -737,20 +732,10 @@ object Streaming {
     // append across BATCHES is the point; append across RUNS would
     // double-count — start from a clean target every run
     Fixtures.rmTree(new java.io.File(out))
-    val src = eventsStreamMultiBatch(spark, dir)
-    withScratchCkpt(runName("feb")) { ckptDir =>
-    val q = withStatePartitions(spark) {
-      val w = src.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .trigger(Trigger.AvailableNow())
-      ckptDir.foreach(d => w.option("checkpointLocation", d))
-      w.start()
-    }
-    q.awaitTermination()
-    lastBatchId = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-    }
+    runBounded(spark, eventsStreamMultiBatch(spark, dir), runName("feb"), "append")(
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(out)
+      })
     ordered(
       spark.read.parquet(out)
         .groupBy(col("event_type"))
