@@ -16,11 +16,10 @@ package graft
   */
 object Bench {
   private val Passes = 2
-  // contention gate: canary bound over the clean history 0.176–0.186 s,
-  // 1-min load bound, and the longest settle before giving up
-  private val CanaryBound = 0.19
-  private val SettleLoad = 2.0
-  private val SettleMaxSec = 600
+  // the contention rule perfbench publishes: canary over 0.30 s, steal
+  // over 10 %, or 1-min load at start above the core count
+  private val CanaryBound = 0.30
+  private val StealBound = 10.0
 
   def main(args: Array[String]): Unit = {
     val names = SparkEntry.select(args.toSeq)
@@ -35,38 +34,18 @@ object Bench {
     val bootEpoch: Long = core.HostProbe.bootEpoch()
     val statStart = core.HostProbe.procStat()
 
-    // Self-gating contention check: twice the committed artifact was
-    // the day's most contended run despite a loadavg-only settle loop —
-    // loadavg lags and never measured what the grade normalizes by.
-    // Gate on the canary ITSELF: measure it FIRST, before any Spark
-    // work; if it exceeds [[CanaryBound]] or the 1-min load exceeds
-    // [[SettleLoad]], sleep-and-retry in bounded steps. If the box
-    // never quiets, the artifact ships with "contended": true so no
-    // human judgment is needed downstream (benchdiff refuses to compare
-    // it). Each iteration reads /proc/loadavg ONCE into a val so the
-    // value tested and the value logged are the same sample.
+    // Contention is flagged, not waited out: the artifact carries
+    // "contended": true (benchdiff refuses to compare it) when the
+    // canary, measured FIRST and before any Spark work, the 1-min load
+    // at start, or the steal over the run breaks the rule above.
     def loadAvgNow(): Double = try {
       java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split(" ")(0).toDouble
     } catch { case _: Throwable => -1.0 }
-    var settledSec = 0
-    var canarySec = core.HostProbe.canaryMin3()
-    var loadStart = loadAvgNow()
-    while ((canarySec > CanaryBound || loadStart > SettleLoad) &&
-           settledSec < SettleMaxSec) {
-      System.err.println(
-        f"[bench] contended: canary $canarySec%.3f (bound $CanaryBound) " +
-          f"load $loadStart%.2f (bound $SettleLoad) — settling (${settledSec}s)")
-      Thread.sleep(15000)
-      settledSec += 15
-      canarySec = core.HostProbe.canaryMin3()
-      loadStart = loadAvgNow()
-    }
-    val contended = canarySec > CanaryBound || loadStart > SettleLoad
-    if (contended) System.err.println(
-      f"[bench] STILL contended after ${settledSec}s — artifact will carry contended:true")
-    // measured once, post-settle, pre-Spark (its own threads would
-    // otherwise contend with executor threads)
+    val canarySec = core.HostProbe.canaryMin3()
+    val loadStart = loadAvgNow()
+    // measured pre-Spark (its own threads would otherwise contend with
+    // executor threads)
     val canaryParSec = core.HostProbe.canaryPar(cpus)
 
     val spark = core.Sessions.build(cpus.toString)
@@ -157,6 +136,10 @@ object Bench {
         if (tot > 0) 100.0 * d(7) / tot else -1.0
       } else -1.0
     }
+    val contended = canarySec > CanaryBound || stealPct > StealBound || loadStart > cpus
+    if (contended) System.err.println(
+      f"[bench] contended host: canary $canarySec%.3f s, steal $stealPct%.1f %%, " +
+        f"load $loadStart%.2f at start on $cpus cpus — artifact will carry contended:true")
     // Durability-mode self-identification: key off what
     // the cuts ACTUALLY did (Lineage.lastCutReliable) so a run enabling
     // reliable mode via the runtime conf key — not just the env var —
@@ -168,7 +151,7 @@ object Bench {
           spark.conf.getOption(core.Lineage.ConfKey).exists(_.nonEmpty))
         "reliable"
       else "local"
-    def metaWith(errsJson: String) = s""""sf":"$sfDir","first_stream_init":$streamInit,"passes":$Passes,"errors":$errsJson,"load_avg_start":$loadStart,"load_avg_end":${loadAvgNow()},"cpus":$cpus,"canary_sec":$canarySec,"canary_par_sec":$canaryParSec,"steal_pct":$stealPct,"boot_epoch":$bootEpoch,"cpu_mhz":$cpuMhz,"settled_sec":$settledSec,"contended":$contended,"stream_sink":"${sys.env.getOrElse("SPARK_GRAFT_STREAM_SINK", "memory")}","state_store":"${sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "default")}","scratch_warn":$scratchWarn,"ckpt":"$ckptMode""""
+    def metaWith(errsJson: String) = s""""sf":"$sfDir","first_stream_init":$streamInit,"passes":$Passes,"errors":$errsJson,"load_avg_start":$loadStart,"load_avg_end":${loadAvgNow()},"cpus":$cpus,"canary_sec":$canarySec,"canary_par_sec":$canaryParSec,"steal_pct":$stealPct,"boot_epoch":$bootEpoch,"cpu_mhz":$cpuMhz,"contended":$contended,"stream_sink":"${sys.env.getOrElse("SPARK_GRAFT_STREAM_SINK", "memory")}","state_store":"${sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "default")}","scratch_warn":$scratchWarn,"ckpt":"$ckptMode""""
     val meta = metaWith(errs)
     // stdout meta must be BOUNDED: errs is
     // unbounded (~170 chars per failing key), so with many errors even

@@ -87,10 +87,10 @@ import org.apache.spark.sql.functions._
   * perturbation salt are LEVEL-TAGGED so a level-2 transform never
   * inverts a level-1 transform (a shared embedding seed would make
   * shard (r,1)∘(1,s) reproduce identity vectors — instant
-  * cross-shard duplicates). (r14: text output is no longer
-  * byte-identical to the pre-r14 rungs at any level; rungs and
-  * per-rung fixtures are rebuilt per session anyway, per the
-  * BASELINE playbook.) */
+  * cross-shard duplicates). (Text output is not byte-identical to
+  * rungs built before the whole-token codebook, at any level; a
+  * rebuilt rung needs no cleanup, because every build-once fixture
+  * and metadata memo is keyed by its source tables' fingerprints.) */
 object ScaleUp {
   private val Stop = Seq(
     "the", "a", "of", "and", "el", "la", "de", "y",
@@ -395,12 +395,5 @@ object ScaleUp {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dst, LevelMarker),
       level.toString.getBytes)
-    // the dst dir was just written in this JVM: drop any per-dir
-    // metadata memos taken before/while it existed (r14 advice #1 —
-    // the events ns-probe and the embeddings count are both keyed on
-    // the dir path under a write-once contract this flow is the one
-    // legitimate exception to)
-    core.Tables.invalidateDirCaches(dst)
-    graft.llm.Similarity.invalidateDirCaches(dst)
   }
 }

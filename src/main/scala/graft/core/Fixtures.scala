@@ -3,25 +3,20 @@ package graft.core
 /** Per-scale-factor scratch dirs for fixture round-trips (CSV/JSON/ORC
   * rewrites, streaming sources, partitioned layouts) — the sandbox's
   * only in-repo write target. One definition so the location/derivation
-  * can never drift between call sites. */
+  * can never drift between call sites, and one build-once call
+  * ([[once]]) for every fixture that is a pure function of its source
+  * tables. */
 object Fixtures {
   def path(sfDir: String, name: String): String = {
     val sf = new java.io.File(sfDir).getName
     s"/root/repo/target/fixtures/$sf/$name"
   }
 
-  /** True if the fixture was already written by a successful job. */
-  def exists(sfDir: String, name: String): Boolean =
-    new java.io.File(path(sfDir, name), "_SUCCESS").exists()
-
-  /** Fingerprint of a source table's files (relative path + length +
-    * mtime, order-independent fold), hex-encoded. Build-once fixtures
-    * that are pure functions of a CORPUS key their name with this
-    * (r12, per advisor): regenerating `data/sf*` previously served a
-    * stale zoned layout silently, because the fixture was keyed only
-    * by the sf directory NAME. A regenerated corpus has new mtimes →
-    * a new fixture name → a rebuild; the stale directory becomes
-    * inert scratch under target/, cleaned by `sbt clean`. */
+  /** Fingerprint of a source table's files (file name + length +
+    * mtime, order-independent fold), hex-encoded. A table regenerated
+    * or rewritten in place has new mtimes, so everything keyed by this
+    * (the [[once]] fixtures, per-table metadata memos) sees a new key
+    * and never serves state built from the old files. */
   def corpusFingerprint(sfDir: String, table: String): String = {
     val root = {
       val d = new java.io.File(sfDir, table + ".parquet")
@@ -42,49 +37,69 @@ object Fixtures {
     java.lang.Long.toHexString(h)
   }
 
-  /** Name of a build-once fixture that is a pure function of one corpus
-    * table: `name` suffixed with that table's [[corpusFingerprint]], so
-    * a source rewritten in place maps to a new fixture and a rebuild. */
-  def corpusKeyed(sfDir: String, name: String, table: String): String =
-    s"${name}_${corpusFingerprint(sfDir, table)}"
+  /** Fixture roots already swept by [[once]] in this JVM. */
+  private val swept = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** The build-once fixture `name` over the tables `sources` of
+    * `sfDir`, returning its published path.
+    *
+    * The fixture is named `name` plus the [[corpusFingerprint]] of
+    * each source, so a source rewritten in place maps to a new fixture
+    * and a rebuild, never to a stale one. `build` writes into a staging
+    * dir named by [[runName]]; it is published by one rename (same
+    * filesystem → atomic), with a `_SUCCESS` marker at its root, so the
+    * published path exists only when the whole build, however many
+    * jobs it ran, is complete. A crashed build leaves nothing visible
+    * and its staging dir is deleted; a killed one leaves its staging
+    * dir to the next JVM's sweep of the fixture root (the first call
+    * per root runs [[sweepDeadRuns]] there). Safe under concurrent
+    * builds: each stages under its own name, and a rename that loses
+    * to a fixture another process published first is a win. */
+  def once(sfDir: String, name: String, sources: String*)(build: String => Unit): String = {
+    val fin = new java.io.File(
+      path(sfDir, (name +: sources.map(corpusFingerprint(sfDir, _))).mkString("_")))
+    if (fin.isDirectory) return fin.getPath
+    val root = fin.getParentFile
+    root.mkdirs()
+    if (swept.add(root.getPath)) sweepDeadRuns(root)
+    val tmp = new java.io.File(root, runName(fin.getName + ".build"))
+    try {
+      build(tmp.getPath)
+      require(tmp.isDirectory, s"fixture build wrote nothing: $tmp")
+      new java.io.File(tmp, "_SUCCESS").createNewFile()
+      if (!tmp.renameTo(fin) && !fin.isDirectory)
+        throw new IllegalStateException(s"fixture rename failed: $tmp -> $fin")
+    } finally rmTree(tmp)
+    fin.getPath
+  }
+
+  private val ctr = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A name no other run uses, in this JVM or an earlier one: fixture
+    * staging dirs, streaming result tables and scratch checkpoints are
+    * named with it. It carries the owner's PID, so [[sweepDeadRuns]]
+    * can tell a killed run's leftovers from a live run's. */
+  def runName(prefix: String): String =
+    s"${prefix}_p${ProcessHandle.current().pid()}_${ctr.incrementAndGet()}_${System.nanoTime()}"
+
+  private val RunOwner = raw".+_p(\d+)_\d+_\d+".r
+
+  /** Delete the children of `base` named by a [[runName]] whose owning
+    * process is no longer alive: the staging dirs and scratch
+    * checkpoints of runs killed before their cleanup. Children of live
+    * processes, and children not named by [[runName]], stay. */
+  def sweepDeadRuns(base: java.io.File): Unit =
+    Option(base.listFiles()).toSeq.flatten.foreach { f =>
+      f.getName match {
+        case RunOwner(pid) if !ProcessHandle.of(pid.toLong).filter(_.isAlive).isPresent =>
+          rmTree(f)
+        case _ =>
+      }
+    }
 
   /** Delete a file or directory tree; a missing path is a no-op. */
   def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
     f.delete()
-  }
-
-  /** Build a MULTI-JOB fixture atomically. `_SUCCESS` is written by
-    * the FIRST append job, so a crash between phases of a multi-phase
-    * build would leave a partial directory that [[exists]] calls
-    * complete — silently corrupting every later run (e.g. a 2-of-3
-    * phase late-data source changes watermark semantics). The body
-    * writes into a `<name>.build` sibling; only after it returns is
-    * the directory renamed into place (same filesystem → atomic).
-    * Stale partials from a previous crash are deleted first. No-op if
-    * the fixture is already complete.
-    *
-    * Safe under concurrent builds: the staging dir is per-process
-    * unique (`<name>.build.<pid>`), so two JVMs building the same
-    * fixture never touch each other's staging; each process only ever
-    * deletes its OWN stale staging dir and an incomplete (no
-    * `_SUCCESS`) final dir. A failed rename re-checks [[exists]]: if
-    * another process published a complete fixture first, that's a
-    * win, not an error (stale `.build.<pid>` dirs from crashed builds
-    * are inert scratch under target/, cleaned by the next same-pid run
-    * or `sbt clean`). */
-  def buildAtomic(sfDir: String, name: String)(body: String => Unit): Unit = {
-    if (exists(sfDir, name)) return
-    val fin = new java.io.File(path(sfDir, name))
-    val pid = ProcessHandle.current().pid()
-    val tmp = new java.io.File(fin.getParentFile, s"${fin.getName}.build.$pid")
-    rmTree(tmp)
-    rmTree(fin) // a final dir without _SUCCESS is itself a crashed partial
-    tmp.getParentFile.mkdirs()
-    body(tmp.getPath)
-    if (!tmp.renameTo(fin)) {
-      if (exists(sfDir, name)) { rmTree(tmp); return } // someone else won
-      throw new IllegalStateException(s"fixture rename failed: $tmp -> $fin")
-    }
   }
 }

@@ -81,21 +81,15 @@ object Tables {
     "event_id" -> LongType, "ts" -> LongType, "user_id" -> LongType,
     "event_type" -> StringType, "value" -> DoubleType, "props" -> StringType)
 
-  /** Memoized events-footer probe (r14): whether `$sfDir/events.parquet`
-    * stores ts as raw ns longs is a property of the FILE, immutable for
-    * a test-data dir's lifetime — but the probe costs a driver-side
-    * file listing + footer read, and ~25 event-reading keys paid it on
-    * EVERY load call (2 bench passes × 25 keys). Same immutable-dir
-    * assumption as [[graft.llm.Similarity]]'s embCountCache. */
+  /** Memoized events-footer probe: whether `$sfDir/events.parquet`
+    * stores ts as raw ns longs is a property of the FILE, but the probe
+    * costs a driver-side file listing + footer read, and ~25
+    * event-reading keys paid it on EVERY load call. Keyed by the
+    * table's [[Fixtures.corpusFingerprint]], so an events table
+    * rewritten in place ([[graft.ScaleUp]] writes plain µs where driver
+    * testdata stores raw ns) is probed again. */
   private val eventsNanosCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Drop the memoized footer probe for a dir whose events table was
-    * just (re)written in THIS JVM — [[graft.ScaleUp]] calls it on its
-    * dst (it writes events as plain µs where driver testdata stores raw
-    * ns), closing the r14 advice's stale-probe hazard. */
-  private[graft] def invalidateDirCaches(dir: String): Unit =
-    eventsNanosCache.remove(dir)
 
   /** Read one of the ten tables with its explicit schema. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -108,9 +102,10 @@ object Tables {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // the driver's events.parquet stores ns (footer infers LongType
       // under the legacy conf); [[graft.ScaleUp]] output stores plain
-      // µs TimestampType — probe the footer once per dir and take
-      // either path
-      val storedNanos: Boolean = eventsNanosCache.computeIfAbsent(sfDir,
+      // µs TimestampType — probe the footer once per table version
+      // and take either path
+      val storedNanos: Boolean = eventsNanosCache.computeIfAbsent(
+        s"$sfDir#${Fixtures.corpusFingerprint(sfDir, "events")}",
         _ => spark.read.parquet(s"$sfDir/events.parquet")
           .schema("ts").dataType == LongType)
       if (storedNanos)

@@ -381,11 +381,9 @@ object Etl {
     * `partitionOverwriteMode=dynamic` replaces exactly the partitions
     * present in the written batch, never the whole table. */
   def backfill(spark: SparkSession, dir: String): DataFrame = {
-    val fixture = graft.core.Fixtures.corpusKeyed(dir, "etl_backfill", "lineitem")
-    val path = graft.core.Fixtures.path(dir, fixture)
     val fact = t(spark, dir, "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
-    // base layout: build-once fixture (r15). A production backfill runs
+    // base layout: build-once fixture. A production backfill runs
     // against a table that EXISTS — rebuilding the full partitioned
     // layout per run measured as more than half the key and models
     // nothing. The fixture is a pure function of lineitem, keyed by its
@@ -396,8 +394,8 @@ object Etl {
     // point: the restated batch derives from the SOURCE table, so
     // re-overwriting 1998 always lands identical content, and a crashed
     // partial overwrite is healed by the next run's overwrite.
-    graft.core.Fixtures.buildAtomic(dir, fixture) { tmp =>
-      fact.write.mode("overwrite").partitionBy("ship_year").parquet(tmp)
+    val path = graft.core.Fixtures.once(dir, "etl_backfill", "lineitem") { tmp =>
+      fact.write.partitionBy("ship_year").parquet(tmp)
     }
     // backfill batch: only 1998, restated
     val restated = fact.filter(col("ship_year") === 1998)
@@ -512,18 +510,16 @@ object Etl {
     * `spark.sql.files.maxPartitionBytes`-sized files per partition
     * and runs partition-by-partition behind the table's write lock. */
   def compaction(spark: SparkSession, dir: String): DataFrame = {
-    val fragName = graft.core.Fixtures.corpusKeyed(dir, "etl_compaction_frag", "orders")
-    val frag = graft.core.Fixtures.path(dir, fragName)
     val comp = graft.core.Fixtures.path(dir, "etl_compaction_out")
     val orders = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    // fragmented INPUT layout: build-once fixture (r15) — the 64-file
+    // fragmented INPUT layout: build-once fixture — the 64-file
     // debris is the job's input (what a streaming writer left), not
     // its work; rebuilding it per run measured ~half the key. Keyed by
     // the orders fingerprint, so a rewritten orders rebuilds it. The
     // compaction rewrite below runs every time.
-    graft.core.Fixtures.buildAtomic(dir, fragName) { tmp =>
-      orders.repartition(64).write.mode("overwrite").parquet(tmp)
+    val frag = graft.core.Fixtures.once(dir, "etl_compaction_frag", "orders") { tmp =>
+      orders.repartition(64).write.parquet(tmp)
     }
     val fragged = spark.read.parquet(frag)
     val nOut = math.ceil(fragged.count() / 20000.0).toInt // driver-side: one metadata count
@@ -757,15 +753,13 @@ object Etl {
     val path = graft.core.Fixtures.path(dir, "etl_partition_evolution")
     val src = t(spark, dir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
-    // coarse base layout: build-once fixture (r15) — the pre-migration
+    // coarse base layout: build-once fixture — the pre-migration
     // table is the job's INPUT, not its work (a production migration
     // starts from a table that exists), keyed by the orders fingerprint
     // so a rewritten orders rebuilds it. The migration rewrite below
     // runs every time.
-    val srcName = graft.core.Fixtures.corpusKeyed(dir, "etl_partition_evolution_src", "orders")
-    val byYear = graft.core.Fixtures.path(dir, srcName)
-    graft.core.Fixtures.buildAtomic(dir, srcName) { tmp =>
-      src.write.mode("overwrite").partitionBy("o_year").parquet(tmp)
+    val byYear = graft.core.Fixtures.once(dir, "etl_partition_evolution_src", "orders") { tmp =>
+      src.write.partitionBy("o_year").parquet(tmp)
     }
     // migration: same rows, finer (year, month) scheme
     spark.read.parquet(byYear)
@@ -1364,8 +1358,8 @@ object Etl {
     val (na, va) = audit(stageA)
     val (nb, vb) = audit(stageB)
     // clean batches publish via WRITE-TO-TEMP + RENAME (the
-    // Fixtures.buildAtomic idiom — r10, per advisor): the r9 form
-    // deleted the published location BEFORE re-appending, so a crash
+    // Fixtures.once idiom): the earlier form deleted the published
+    // location BEFORE re-appending, so a crash
     // mid-publish (or a concurrent reader) saw a missing/partial
     // table. Now every clean batch lands in a temp dir first and the
     // published location is swapped in one rename — the closest a
@@ -1467,7 +1461,7 @@ object Etl {
     * dangerous kind: a naive directory-glob read silently
     * DOUBLE-COUNTS them, proven by the pinned `naive_read_inflated`
     * flag), and vacuum deletes exactly the unreferenced DATA files
-    * (hidden/underscore metadata — _SUCCESS, .crc sidecars — is the
+    * (hidden/underscore metadata — commit markers, .crc sidecars — is the
     * layout's own, skipped by the same listing rule Delta's VACUUM
     * applies). The audit row carries the post-vacuum
     * count+sum (oracle recomputes from source: vacuum must delete
@@ -1502,7 +1496,7 @@ object Etl {
     val naiveRows = spark.read.schema(schema).parquet(path).count()
     // vacuum: delete every DATA file the manifest doesn't reference.
     // Hidden/underscore-prefixed names are skipped — they are the
-    // layout's own metadata (_SUCCESS, .crc checksum sidecars), never
+    // layout's own metadata (commit markers, .crc checksum sidecars), never
     // vacuum's business: the same listing rule Delta's VACUUM applies.
     def isData(f: java.io.File) =
       f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")

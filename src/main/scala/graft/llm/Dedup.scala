@@ -171,26 +171,25 @@ object Dedup {
     * full [[nearDedupPairsRaw]] run and publishes the (tiny) pair
     * table atomically; every later consumer reads the parquet. The
     * fixture name is PARAMETER-KEYED (permutations, band rows,
-    * threshold), so a tuning change can never serve stale pairs —
-    * it builds a fresh fixture under the new name. This is exactly
-    * how a production near-dedup runs at 100 TB: the candidate+verify
-    * pipeline executes once per corpus snapshot, and the application
-    * (drop list), clustering, and any per-pair re-scoring all consume
-    * the STORED pair table instead of re-mining it (r7 verdict: the
-    * three derived keys re-ran the full banded pipeline per
-    * invocation — 4.2–5.5 s each at sf0.1 for what is a sub-second
-    * increment over a stored pair set). `llm_near_dedup` itself still
+    * threshold) and keyed by the documents table's fingerprint, so
+    * neither a tuning change nor a rewritten corpus can serve stale
+    * pairs — either builds a fresh fixture under a new name. This is
+    * exactly how a production near-dedup runs at 100 TB: the
+    * candidate+verify pipeline executes once per corpus snapshot, and
+    * the application (drop list), clustering, and any per-pair
+    * re-scoring all consume the STORED pair table instead of re-mining
+    * it (the three derived keys used to re-run the full banded
+    * pipeline per invocation — 4.2–5.5 s each at sf0.1 for what is a
+    * sub-second increment over a stored pair set). `llm_near_dedup` itself still
     * runs the pipeline end-to-end — it IS the build step being
     * measured. */
   private[graft] def nearDupPairsFixture(
       spark: SparkSession, dir: String): DataFrame = {
     val name = s"neardup_pairs_p${NumPerms}_r${BandRows}" +
-      s"_t${math.round(JaccardThreshold * 100)}.parquet"
-    graft.core.Fixtures.buildAtomic(dir, name) { tmp =>
-      nearDedupPairsRaw(spark, docs(spark, dir))
-        .write.parquet(tmp)
-    }
-    spark.read.parquet(graft.core.Fixtures.path(dir, name))
+      s"_t${math.round(JaccardThreshold * 100)}"
+    spark.read.parquet(graft.core.Fixtures.once(dir, name, "documents") { tmp =>
+      nearDedupPairsRaw(spark, docs(spark, dir)).write.parquet(tmp)
+    })
   }
 
   /** Deterministic batch membership for the incremental-dedup demo:
@@ -212,12 +211,11 @@ object Dedup {
     * IVF/PQ index fixtures. */
   private[graft] def corpusBandIndexFixture(
       spark: SparkSession, dir: String): DataFrame = {
-    val name = s"neardup_index_p${NumPerms}_r${BandRows}_c$BandBucketCap.parquet"
-    graft.core.Fixtures.buildAtomic(dir, name) { tmp =>
+    val name = s"neardup_index_p${NumPerms}_r${BandRows}_c$BandBucketCap"
+    spark.read.parquet(graft.core.Fixtures.once(dir, name, "documents") { tmp =>
       val corpus = docs(spark, dir).filter(!isIncrementalBatch)
       indexBlockLayout(minhashBands(shinglesOf(spark, corpus))).write.parquet(tmp)
-    }
-    spark.read.parquet(graft.core.Fixtures.path(dir, name))
+    })
   }
 
   /** The index's block layout: each (band, hash) bucket's docs cut

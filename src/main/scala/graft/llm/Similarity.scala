@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
-import graft.core.{Q, Tables}
+import graft.core.{Fixtures, Q, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
 import graft.functions.DotProduct
@@ -32,30 +32,17 @@ object Similarity {
 
   private def emb(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")
 
-  /** Corpus row count memoized per scale dir: the adaptive ladders
-    * (IVF-K, SRP bits, PQ shortlist depth, knn-K) all key off n, and
-    * several query paths consult it — one Spark count job per dir per
-    * JVM instead of one per invocation (the r12 advice flagged
-    * adcShortlistRerank re-counting on every call). IMMUTABLE-DIR
-    * ASSUMPTION (r13 advisor): this memo has no invalidation, so an
-    * in-JVM rewrite of a dir's embeddings table would freeze every
-    * adaptive ladder at the stale n. That is the deployment contract
-    * of the whole repo — scale dirs are write-once (ScaleUp stamps a
-    * level marker and never appends; the driver's testdata is static);
-    * a future mutable-corpus mode must key this cache by (dir, table
-    * snapshot/mtime), not silently reuse it. */
+  /** Corpus row count memoized per version of the embeddings table:
+    * the adaptive ladders (IVF-K, SRP bits, PQ shortlist depth, knn-K)
+    * all key off n, and several query paths consult it — one Spark
+    * count job per table version per JVM instead of one per
+    * invocation. Keyed by the table's [[Fixtures.corpusFingerprint]],
+    * so a table rewritten in place is counted again. */
   private val embCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def embCount(s: SparkSession, d: String): Long =
-    embCountCache.computeIfAbsent(d,
+    embCountCache.computeIfAbsent(s"$d#${Fixtures.corpusFingerprint(d, "embeddings")}",
       _ => java.lang.Long.valueOf(emb(s, d).count())).longValue()
-
-  /** Drop the memoized n for a dir whose tables were just (re)written
-    * in THIS JVM — [[graft.ScaleUp]] calls it on its dst so the
-    * write-once contract above cannot be violated by the one flow that
-    * legitimately writes a scale dir (r14 advice #1). */
-  private[graft] def invalidateDirCaches(dir: String): Unit =
-    embCountCache.remove(dir)
 
   /** Sequential-order dot product of two float vectors in double math —
     * mirrors the oracle's list_dot_product over DOUBLE[] casts. The
@@ -341,13 +328,9 @@ object Similarity {
     * ASSIGNMENT (one columnar UDF pass) and candidate joins stay
     * distributed. */
   private[graft] def ivfCentroids(e0: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
-    def normalize(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v else v.map(_ / n)
-    }
     val unit = e0.orderBy(col("vec_id")).limit(ivfTrainSampleFor(k))
       .select(col("embedding")).collect()
-      .map(r => normalize(r.getSeq[Float](0).map(_.toDouble).toArray))
+      .map(r => normalizeArr(r.getSeq[Float](0).map(_.toDouble).toArray))
     lloydInMemory(unit, k, iters)
   }
 
@@ -358,10 +341,6 @@ object Similarity {
     * bit-deterministic. */
   private def lloydInMemory(
       unit: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
-    def normalize(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v else v.map(_ / n)
-    }
     val dim = unit.headOption.map(_.length).getOrElse(0)
     var cents = unit.take(k)
     for (_ <- 1 to iters) {
@@ -382,7 +361,7 @@ object Similarity {
       }
       cents = cents.indices.map { c =>
         if (counts(c) == 0) cents(c) // empty cluster keeps its centroid
-        else normalize(sums(c).map(_ / counts(c)))
+        else normalizeArr(sums(c).map(_ / counts(c)))
       }.toArray
     }
     cents
@@ -466,11 +445,13 @@ object Similarity {
     cents
   }
 
-  /** Trained quantizers, one per scale dir — a JVM memo over the
-    * PERSISTED index (below): first touch per session loads (or
-    * builds) the parquet index; later calls skip the read. Training is
+  /** Trained quantizers, one per published index — a JVM memo over
+    * the PERSISTED index (below): first touch per index loads (or
+    * builds) the parquet; later calls skip the read. Training is
     * deterministic, so memoizing is behavior-neutral and keeps the
-    * bench honest about query-time cost vs one-time index build. */
+    * bench honest about query-time cost vs one-time index build. Keyed
+    * by the path [[ensureIvfIndex]] returns, so a rewritten corpus
+    * (a new index) is never probed with the old centroids. */
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
 
@@ -479,61 +460,48 @@ object Similarity {
   private[graft] val ivfTrainCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private[graft] def clearIvfMemo(): Unit = centroidCache.clear()
 
-  /** Fixture names carry the training parameters (K, Lloyd iters): a
-    * persisted index trained under OLD parameters must never silently
-    * serve a session whose constants changed — the name mismatch forces
-    * a rebuild (round-4 advice: `Fixtures.exists` checks only
-    * `_SUCCESS`, so an unkeyed name would pin stale centroids
-    * forever). */
-  private[graft] def ivfCentroidsName(k: Int) = s"ivf_centroids_k${k}i$IvfIters"
-  private[graft] def ivfCellsName(k: Int) = s"ivf_cells_k${k}i$IvfIters"
-  private[graft] val IvfCentroidsName = ivfCentroidsName(IvfK)
-  private[graft] val IvfCellsName = ivfCellsName(IvfK)
-
-  private def centroidsPath(dir: String, k: Int) =
-    graft.core.Fixtures.path(dir, ivfCentroidsName(k))
-  private def cellsPath(dir: String, k: Int) =
-    graft.core.Fixtures.path(dir, ivfCellsName(k))
-
-  /** Build-once/serve-many: the real IVF index lifecycle. The trained
-    * centroids (K×64 doubles — KBs) and the cell-assigned corpus
-    * (vec_id, embedding, nrm, CLUSTERED BY cid — cells are the natural
-    * partition key of a stored IVF index, so a probe reads only its
-    * cells' directories) are written as parquet ONCE per scale dir;
-    * every later session — including a fresh JVM — serves queries by
-    * reading them back, never retraining ([[ivfTrainCount]] proves
-    * it). At 100 TB this split is the whole economics of IVF: index
-    * build is a one-time O(n) pass, queries touch K_probe cells. */
+  /** Build-once/serve-many: the real IVF index lifecycle. One fixture
+    * holds the trained centroids (`centroids`: K×64 doubles — KBs) and
+    * the cell-assigned corpus (`cells`: vec_id, embedding, nrm,
+    * CLUSTERED BY cid — cells are the natural partition key of a
+    * stored IVF index, so a probe reads only its cells' directories),
+    * so half an index is never published. It is written ONCE per
+    * version of the embeddings table; every later session — including
+    * a fresh JVM — serves queries by reading it back, never retraining
+    * ([[ivfTrainCount]] proves it). The name carries the training
+    * parameters (K, Lloyd iters), so an index trained under other
+    * constants never serves. At 100 TB this split is the whole
+    * economics of IVF: index build is a one-time O(n) pass, queries
+    * touch K_probe cells. Returns the index's path. */
   private[graft] def ensureIvfIndex(
-      spark: SparkSession, dir: String, k: Int = IvfK): Unit = {
-    if (graft.core.Fixtures.exists(dir, ivfCentroidsName(k)) &&
-      graft.core.Fixtures.exists(dir, ivfCellsName(k))) return
-    DotProduct.register(spark) // nrm below uses the registered function
-    ivfTrainCount.incrementAndGet()
-    // past the driver ceiling, training itself goes distributed —
-    // the r8-verdict task that lifted knnKFor's cap to [[KnnKCeiling]]
-    val cents =
-      if (k > IvfDriverTrainK) ivfCentroidsDistributed(emb(spark, dir), k, IvfIters)
-      else ivfCentroids(emb(spark, dir), k, IvfIters)
-    import spark.implicits._
-    cents.zipWithIndex.toSeq.map { case (c, i) => (i, c) }
-      .toDF("cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(centroidsPath(dir, k))
-    emb(spark, dir)
-      .withColumn("nrm", norm("embedding"))
-      .withColumn("cid", nearestCentroid(cents)(col("embedding")))
-      .write.mode("overwrite").partitionBy("cid").parquet(cellsPath(dir, k))
-  }
+      spark: SparkSession, dir: String, k: Int = IvfK): String =
+    Fixtures.once(dir, s"ivf_index_k${k}i$IvfIters", "embeddings") { tmp =>
+      DotProduct.register(spark) // nrm below uses the registered function
+      ivfTrainCount.incrementAndGet()
+      // past the driver ceiling, training itself goes distributed —
+      // which lifted knnKFor's cap to [[KnnKCeiling]]
+      val cents =
+        if (k > IvfDriverTrainK) ivfCentroidsDistributed(emb(spark, dir), k, IvfIters)
+        else ivfCentroids(emb(spark, dir), k, IvfIters)
+      import spark.implicits._
+      cents.zipWithIndex.toSeq.map { case (c, i) => (i, c) }
+        .toDF("cid", "centroid")
+        .coalesce(1).write.parquet(s"$tmp/centroids")
+      emb(spark, dir)
+        .withColumn("nrm", norm("embedding"))
+        .withColumn("cid", nearestCentroid(cents)(col("embedding")))
+        .write.partitionBy("cid").parquet(s"$tmp/cells")
+    }
 
   private def trainedCentroids(
-      spark: SparkSession, dir: String, k: Int = IvfK): Array[Array[Double]] =
-    centroidCache.computeIfAbsent(s"$dir#k$k", _ => {
-      ensureIvfIndex(spark, dir, k)
-      spark.read.parquet(centroidsPath(dir, k))
+      spark: SparkSession, dir: String, k: Int = IvfK): Array[Array[Double]] = {
+    val index = ensureIvfIndex(spark, dir, k)
+    centroidCache.computeIfAbsent(index, _ =>
+      spark.read.parquet(s"$index/centroids")
         .select(col("cid"), col("centroid")).collect()
         .sortBy(_.getInt(0))
-        .map(_.getSeq[Double](1).toArray)
-    })
+        .map(_.getSeq[Double](1).toArray))
+  }
 
   /** The schema [[ensureIvfIndex]] writes for the cell-assigned corpus:
     * the embeddings columns, then `nrm`, then the partition column
@@ -545,8 +513,7 @@ object Similarity {
   /** The persisted cell-assigned corpus (vec_id, embedding, nrm, cid). */
   private def indexedCells(
       spark: SparkSession, dir: String, k: Int = IvfK): DataFrame = {
-    ensureIvfIndex(spark, dir, k)
-    spark.read.schema(IndexedCellsSchema).parquet(cellsPath(dir, k))
+    spark.read.schema(IndexedCellsSchema).parquet(s"${ensureIvfIndex(spark, dir, k)}/cells")
   }
 
   /** Argmax-dot cluster assignment against unit centroids (|v| is
@@ -1238,13 +1205,9 @@ object Similarity {
     * and exactly how faiss trains PQ (sample → in-memory k-means; only
     * ENCODING is a distributed pass). Returns (m)(k)(subdim). */
   private[graft] def pqCodebooks(e0: DataFrame): Array[Array[Array[Double]]] = {
-    def normalize(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v else v.map(_ / n)
-    }
     val unit = e0.orderBy(col("vec_id")).limit(IvfTrainSample)
       .select(col("embedding")).collect()
-      .map(r => normalize(r.getSeq[Float](0).map(_.toDouble).toArray))
+      .map(r => normalizeArr(r.getSeq[Float](0).map(_.toDouble).toArray))
     val dim = unit.headOption.map(_.length).getOrElse(0)
     require(dim % PqM == 0, s"dim $dim not divisible into $PqM subspaces")
     val sub = dim / PqM
@@ -1275,13 +1238,12 @@ object Similarity {
     }
   }
 
+  /** Trained codebooks, one per published PQ index (the path
+    * [[ensurePqIndex]] returns), as [[centroidCache]] is for IVF. */
   private val pqCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
   private[graft] val pqTrainCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private[graft] def clearPqMemo(): Unit = pqCache.clear()
-
-  private[graft] val PqCodebooksName = s"pq_codebooks_m${PqM}k${PqK}i$PqIters"
-  private[graft] val PqCodesName = s"pq_codes_m${PqM}k${PqK}i$PqIters"
 
   /** Unit-normalize + encode: per subspace, the L2-nearest codebook
     * entry (lowest id on ties). One columnar pass at index build. */
@@ -1308,37 +1270,35 @@ object Similarity {
     }
   }
 
-  /** Build-once/serve-many, same lifecycle as the IVF index: codebooks
-    * (PqM×PqK×8 doubles — KBs) and the encoded corpus (vec_id +
-    * [[PqM]] small ints — the 32×-compressed scan target) persist as
-    * parquet per scale dir; fresh sessions serve from the files,
-    * never retraining ([[pqTrainCount]] proves it). */
-  private[graft] def ensurePqIndex(spark: SparkSession, dir: String): Unit = {
-    if (graft.core.Fixtures.exists(dir, PqCodebooksName) &&
-      graft.core.Fixtures.exists(dir, PqCodesName)) return
-    pqTrainCount.incrementAndGet()
-    val cbs = pqCodebooks(emb(spark, dir))
-    import spark.implicits._
-    cbs.zipWithIndex.flatMap { case (cb, m) =>
-      cb.zipWithIndex.map { case (c, k) => (m, k, c) }
-    }.toSeq.toDF("m", "cid", "centroid")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(graft.core.Fixtures.path(dir, PqCodebooksName))
-    emb(spark, dir)
-      .select(col("vec_id"), pqEncode(cbs)(col("embedding")).as("codes"))
-      .write.mode("overwrite")
-      .parquet(graft.core.Fixtures.path(dir, PqCodesName))
-  }
+  /** Build-once/serve-many, same lifecycle as the IVF index: one
+    * fixture holds the codebooks (`codebooks`: PqM×PqK×8 doubles —
+    * KBs) and the encoded corpus (`codes`: vec_id + [[PqM]] small ints
+    * — the 32×-compressed scan target); fresh sessions serve from the
+    * files, never retraining ([[pqTrainCount]] proves it). Returns the
+    * index's path. */
+  private[graft] def ensurePqIndex(spark: SparkSession, dir: String): String =
+    Fixtures.once(dir, s"pq_index_m${PqM}k${PqK}i$PqIters", "embeddings") { tmp =>
+      pqTrainCount.incrementAndGet()
+      val cbs = pqCodebooks(emb(spark, dir))
+      import spark.implicits._
+      cbs.zipWithIndex.flatMap { case (cb, m) =>
+        cb.zipWithIndex.map { case (c, k) => (m, k, c) }
+      }.toSeq.toDF("m", "cid", "centroid")
+        .coalesce(1).write.parquet(s"$tmp/codebooks")
+      emb(spark, dir)
+        .select(col("vec_id"), pqEncode(cbs)(col("embedding")).as("codes"))
+        .write.parquet(s"$tmp/codes")
+    }
 
-  private def trainedPq(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.computeIfAbsent(dir, _ => {
-      ensurePqIndex(spark, dir)
-      spark.read.parquet(graft.core.Fixtures.path(dir, PqCodebooksName))
+  private def trainedPq(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
+    val index = ensurePqIndex(spark, dir)
+    pqCache.computeIfAbsent(index, _ =>
+      spark.read.parquet(s"$index/codebooks")
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
         .groupBy(_._1).toArray.sortBy(_._1)
-        .map(_._2.sortBy(_._2).map(_._3))
-    })
+        .map(_._2.sortBy(_._2).map(_._3)))
+  }
 
   /** Per-probe ADC machinery for the 10 fixed probes: the PqM×PqK
     * lookup tables of subspace dots (driver-computed from the
@@ -1391,8 +1351,7 @@ object Similarity {
   private[graft] def simsearchPqTopK(spark: SparkSession, dir: String): DataFrame = {
     DotProduct.register(spark)
     val cbs = trainedPq(spark, dir)
-    ensurePqIndex(spark, dir)
-    val codes = spark.read.parquet(graft.core.Fixtures.path(dir, PqCodesName))
+    val codes = spark.read.parquet(s"${ensurePqIndex(spark, dir)}/codes")
     val (adc, probeIds) = adcScorer(spark, dir, cbs)
     // ADC scan: explode the 10-probe literal over the codes table —
     // zero shuffle, no join; then per-probe shortlist
@@ -1503,8 +1462,7 @@ object Similarity {
     DotProduct.register(spark)
     val cents = trainedCentroids(spark, dir)
     val cbs = trainedPq(spark, dir)
-    ensurePqIndex(spark, dir)
-    val codes = spark.read.parquet(graft.core.Fixtures.path(dir, PqCodesName))
+    val codes = spark.read.parquet(s"${ensurePqIndex(spark, dir)}/codes")
     val indexed = indexedCells(spark, dir)
     val (adc, _) = adcScorer(spark, dir, cbs)
     val probes = indexed.filter(col("vec_id") < 10)

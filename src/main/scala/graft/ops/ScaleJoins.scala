@@ -17,44 +17,44 @@ object ScaleJoins {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
+  /** The table `table` of `dir` bucketed and sorted on `key`, as a
+    * build-once fixture keyed by the table's fingerprint, registered in
+    * THIS session's catalog; returns the catalog name. The layout
+    * write is paid at most once per version of the table — the whole
+    * point of bucketing is that the one-time layout cost amortizes
+    * across every later join on that key. The build writes through
+    * `saveAsTable` (the writer that lays out buckets) into the staging
+    * dir and drops that temporary table again; the published layout is
+    * then registered as an external bucketed table over its location
+    * (the catalog is session-local, the files are not). The name
+    * carries the fixture's, so a rewritten table is never joined
+    * through a stale registration. */
+  private def bucketed(spark: SparkSession, dir: String, table: String,
+      key: String): String = {
+    val df = t(spark, dir, table)
+    val loc = Fixtures.once(dir, s"bucketed_$table", table) { tmp =>
+      val staging = new java.io.File(tmp).getName.replaceAll("\\W", "_")
+      df.write.bucketBy(8, key).sortBy(key).option("path", tmp).saveAsTable(staging)
+      spark.sql(s"DROP TABLE $staging")
+    }
+    val name = s"graft_${new java.io.File(dir).getName}_${new java.io.File(loc).getName}"
+      .replaceAll("\\W", "_")
+    if (!spark.catalog.tableExists(name))
+      spark.sql(
+        s"""CREATE TABLE $name (${df.schema.toDDL}) USING PARQUET
+           |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
+           |LOCATION '$loc'""".stripMargin)
+    name
+  }
+
   /** Co-located join via bucketing: both facts written bucketed+sorted
     * on the join key, so the sort-merge join runs with NO exchange and
     * NO sort on either side — at 100 TB this deletes the single most
     * expensive shuffle in the pipeline. The bucket write is a one-time
     * layout cost amortized over every downstream join on that key. */
-  /** Ensure the bucketed layout exists and is registered in THIS
-    * session's catalog, paying the layout write at most once per scale
-    * factor — the whole point of bucketing is that the one-time layout
-    * cost amortizes across every later join on that key.
-    *  - table already in the catalog → free;
-    *  - fresh session but the warehouse files survive (the catalog is
-    *    session-local, the files are not) → re-register the existing
-    *    layout as an external bucketed table over the same location;
-    *  - no complete layout (`_SUCCESS` missing) → wipe any debris and
-    *    write it. */
-  private def ensureBucketed(spark: SparkSession, df: => DataFrame,
-      table: String, key: String): Unit = {
-    if (spark.catalog.tableExists(table)) return
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    if (new java.io.File(loc, "_SUCCESS").exists()) {
-      val schema = spark.read.parquet(loc.getAbsolutePath).schema.toDDL
-      spark.sql(
-        s"""CREATE TABLE $table ($schema) USING PARQUET
-           |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-           |LOCATION '${loc.getAbsolutePath}'""".stripMargin)
-    } else {
-      Fixtures.rmTree(loc)
-      df.write.bucketBy(8, key).sortBy(key).saveAsTable(table)
-    }
-  }
-
   def joinBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val sf = new java.io.File(dir).getName.replace(".", "_")
-    val o = s"graft_orders_b_$sf"
-    val l = s"graft_lineitem_b_$sf"
-    ensureBucketed(spark, t(spark, dir, "orders"), o, "o_orderkey")
-    ensureBucketed(spark, t(spark, dir, "lineitem"), l, "l_orderkey")
+    val o = bucketed(spark, dir, "orders", "o_orderkey")
+    val l = bucketed(spark, dir, "lineitem", "l_orderkey")
     ordered(
       // merge hint: at toy scale Spark would broadcast the small side,
       // which hides the point — bucketed SMJ with zero exchange/sort.
@@ -129,12 +129,11 @@ object ScaleJoins {
     * for every dim-filtered join. PlanSpec asserts the
     * `dynamicpruningexpression` is present in the scan. */
   def joinDpp(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.core.Fixtures.path(dir, "fact_by_year")
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    val fact = spark.read.parquet(Fixtures.once(dir, "fact_by_year", "lineitem") { tmp =>
       t(spark, dir, "lineitem")
         .withColumn("ship_year", year(col("l_shipdate")))
-        .write.mode("overwrite").partitionBy("ship_year").parquet(path)
-    val fact = spark.read.parquet(path)
+        .write.partitionBy("ship_year").parquet(tmp)
+    })
     // the qualifying years are only knowable at runtime (price filter),
     // so Catalyst can't constant-fold a static partition filter — it
     // injects a dynamic pruning subquery instead. (With a literal year

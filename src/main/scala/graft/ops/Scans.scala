@@ -470,41 +470,10 @@ object Scans {
     * visible. `files_pruned` rides a broadcast scalar (kept < total),
     * never a collected list. [[scanSkippingCollectTwin]] keeps the r9
     * driver-side spelling as the equality twin (IngestSpec law). */
-  /** Fixture name keyed by the lineitem corpus FINGERPRINT, not just
-    * the sf dir name (r12, per advisor): regenerating `data/sf*` in
-    * place must invalidate the zoned layout, not silently serve the
-    * stale one. */
-  private[graft] def scanSkippingFixtureName(dir: String): String =
-    graft.core.Fixtures.corpusKeyed(dir, "scan_skipping_zones", "lineitem")
-
   def scanSkipping(spark: SparkSession, dir: String): DataFrame = {
-    // Build-once (r11, r10 verdict "what's wrong" #2): the zoned
-    // layout and its manifest are pure functions of the corpus, but
-    // the r10 form rewrote BOTH on every invocation — ~10× the read
-    // work, so a big-rung gate timed the fixture write, not the scan
-    // skipping. Now parameter-keyed like the IVF/PQ indexes: the
-    // first call per sf writes (atomically — a crash mid-build can't
-    // publish a manifest that disagrees with the zones), every later
-    // call only reads. The root _SUCCESS is touched by the body only
-    // after both sub-writes finish, so `exists` means zones AND
-    // manifest are complete together.
-    val fixture = scanSkippingFixtureName(dir)
-    graft.core.Fixtures.buildAtomic(dir, fixture) { tmp =>
-      Tables.load(spark, dir, "lineitem")
-        .repartitionByRange(8, col("l_shipdate"))
-        .withColumn("zid", spark_partition_id())
-        .write.mode("overwrite").partitionBy("zid").parquet(s"$tmp/zoned")
-      // the manifest: per-zone min/max, derived in one pass at write
-      // time and PERSISTED — the table every later query consults
-      spark.read.parquet(s"$tmp/zoned")
-        .groupBy(col("zid"))
-        .agg(min(col("l_shipdate")).as("lo"), max(col("l_shipdate")).as("hi"))
-        .write.mode("overwrite").parquet(s"$tmp/manifest")
-      require(new java.io.File(tmp, "_SUCCESS").createNewFile(),
-        s"fixture completion marker already present under $tmp")
-    }
-    val path = fix(dir, fixture) + "/zoned"
-    val manifestPath = fix(dir, fixture) + "/manifest"
+    val fixture = scanSkippingZones(spark, dir)
+    val path = fixture + "/zoned"
+    val manifestPath = fixture + "/manifest"
     val d1 = lit(skipD1).cast("timestamp")
     val d2 = lit(skipD2).cast("timestamp")
     val manifest = spark.read.parquet(manifestPath)
@@ -521,6 +490,28 @@ object Scans {
         .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
         .crossJoin(broadcast(pruned)))
   }
+
+  /** The zoned layout (`zoned`) and its manifest (`manifest`), one
+    * build-once fixture keyed by the lineitem table's fingerprint:
+    * both are pure functions of the corpus, and rewriting them on
+    * every invocation was ~10× the read work, so a big-rung gate timed
+    * the fixture write, not the scan skipping. Published as one
+    * fixture, so zones and manifest are complete together, and a
+    * lineitem regenerated in place gets a new layout instead of the
+    * stale one. Returns the fixture's path. */
+  private[graft] def scanSkippingZones(spark: SparkSession, dir: String): String =
+    graft.core.Fixtures.once(dir, "scan_skipping_zones", "lineitem") { tmp =>
+      Tables.load(spark, dir, "lineitem")
+        .repartitionByRange(8, col("l_shipdate"))
+        .withColumn("zid", spark_partition_id())
+        .write.partitionBy("zid").parquet(s"$tmp/zoned")
+      // the manifest: per-zone min/max, derived in one pass at write
+      // time and PERSISTED — the table every later query consults
+      spark.read.parquet(s"$tmp/zoned")
+        .groupBy(col("zid"))
+        .agg(min(col("l_shipdate")).as("lo"), max(col("l_shipdate")).as("hi"))
+        .write.parquet(s"$tmp/manifest")
+    }
 
   /** The r9 driver-side spelling — stats collected, kept paths re-fed
     * to a second read. Correct and bounded by file count, but a 100 TB

@@ -51,7 +51,6 @@ class UserRunningAgg
 
 object Streaming {
 
-  private val ctr = new java.util.concurrent.atomic.AtomicLong()
   private val liveSinks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   /** Last batchId of the most recent [[runBounded]] query — lets tests
@@ -79,9 +78,9 @@ object Streaming {
     * the watermark first advances, which a silent multi-batch split
     * would break. */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.core.Fixtures.path(dir, "events_stream_src")
-    if (!graft.core.Fixtures.exists(dir, "events_stream_src"))
-      Tables.load(spark, dir, "events").write.mode("overwrite").parquet(path)
+    val path = Fixtures.once(dir, "events_stream_src", "events") { tmp =>
+      Tables.load(spark, dir, "events").write.parquet(tmp)
+    }
     spark.readStream.schema(Tables.events)
       .option("maxFilesPerTrigger", 1000000)
       .parquet(path)
@@ -102,41 +101,31 @@ object Streaming {
     * must survive checkpoints, emit exactly once when the watermark
     * passes, and be evicted — the cross-batch state machine, not just
     * single-batch algebra. */
-  private[graft] def eventsStreamMultiBatch(spark: SparkSession, dir: String): DataFrame = {
-    val fixture = "events_stream_src_mb"
-    val path = graft.core.Fixtures.path(dir, fixture)
-    // multi-job build → buildAtomic: _SUCCESS lands with the FIRST
-    // append, so only the rename-into-place makes "exists" mean "all
-    // slices present"
-    graft.core.Fixtures.buildAtomic(dir, fixture) { tmpPath =>
+  private[graft] def eventsStreamMultiBatch(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(Tables.events)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(eventsMultiBatchSrc(spark, dir))
+
+  /** The published dir of [[eventsStreamMultiBatch]]'s source. */
+  private def eventsMultiBatchSrc(spark: SparkSession, dir: String): String =
+    Fixtures.once(dir, "events_stream_src_mb", "events") { tmp =>
       import org.apache.spark.sql.expressions.Window
       // the global ntile below is a DELIBERATE single-partition sort —
       // a one-time fixture build (never a query path). With ScanGuard
-      // wired into the shipped sessions (r9) the window lint would
-      // veto it at sf≥10 sizes, so raise its budget for exactly this
-      // build (plans here are constructed AND executed inside this
-      // block, so the scoped raise covers them)
+      // wired into the shipped sessions the window lint would veto it
+      // at sf≥10 sizes, so raise its budget for exactly this build
+      // (plans here are constructed AND executed inside this block, so
+      // the scoped raise covers them)
       val guardKey = graft.plans.GlobalWindowGuardRule.ConfKey
       val prevGuard = spark.conf.getOption(guardKey)
       spark.conf.set(guardKey, Long.MaxValue.toString)
       try {
-      val sliced = Tables.load(spark, dir, "events")
-        // deterministic slice assignment; single-partition sort is fine
-        // for a one-time test-scale fixture build (never a query path)
-        .withColumn("_slice",
-          ntile(MbSlices).over(Window.orderBy(col("ts"), col("event_id"))))
-      val dirFile = new java.io.File(tmpPath)
-      var known = Set.empty[String]
-      for (i <- 1 to MbSlices) {
-        sliced.filter(col("_slice") === i).drop("_slice")
-          .coalesce(1).write.mode("append").parquet(tmpPath)
-        // pin strictly increasing mtimes so the source's oldest-first
-        // file order IS the time order, independent of write speed
-        val fresh = dirFile.listFiles().filter(f =>
-          f.getName.startsWith("part-") && !known.contains(f.getName))
-        fresh.foreach(_.setLastModified(1600000000000L + i * 60000L))
-        known ++= fresh.map(_.getName)
-      }
+        // deterministic slice assignment
+        val sliced = Tables.load(spark, dir, "events")
+          .withColumn("_slice",
+            ntile(MbSlices).over(Window.orderBy(col("ts"), col("event_id"))))
+        appendSlicesInOrder(tmp,
+          (1 to MbSlices).map(i => sliced.filter(col("_slice") === i).drop("_slice")))
       } finally {
         prevGuard match {
           case Some(v) => spark.conf.set(guardKey, v)
@@ -144,9 +133,21 @@ object Streaming {
         }
       }
     }
-    spark.readStream.schema(Tables.events)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(path)
+
+  /** Append each slice to `path` as one file, in order, and pin
+    * strictly increasing mtimes on its new files: the file source
+    * picks files oldest-mtime-first, so under `maxFilesPerTrigger = 1`
+    * slice i is micro-batch i, independent of write speed. */
+  private def appendSlicesInOrder(path: String, slices: Seq[DataFrame]): Unit = {
+    val dirFile = new java.io.File(path)
+    var known = Set.empty[String]
+    slices.zipWithIndex.foreach { case (slice, i) =>
+      slice.coalesce(1).write.mode("append").parquet(path)
+      val fresh = dirFile.listFiles().filter(f =>
+        f.getName.startsWith("part-") && !known.contains(f.getName))
+      fresh.foreach(_.setLastModified(1600000000000L + i * 60000L))
+      known ++= fresh.map(_.getName)
+    }
   }
 
   /** Three-phase OUT-OF-ORDER source for the late-data key: file 0 the
@@ -159,25 +160,13 @@ object Streaming {
     * make the three batches and their order deterministic. */
   private[graft] def eventsStreamThreePhase(spark: SparkSession, dir: String): DataFrame = {
     // phase structure encoded in the name: a layout change must miss
-    // the old fixture and rebuild (the ivf-index staleness lesson)
-    val fixture = "events_stream_src_late_p3"
-    val path = graft.core.Fixtures.path(dir, fixture)
-    // three append jobs → buildAtomic (a 1- or 2-phase partial would
-    // silently change the late-drop watermark semantics)
-    graft.core.Fixtures.buildAtomic(dir, fixture) { tmpPath =>
+    // the old fixture and rebuild
+    val path = Fixtures.once(dir, "events_stream_src_late_p3", "events") { tmp =>
       val ev = Tables.load(spark, dir, "events")
-      val dirFile = new java.io.File(tmpPath)
-      var known = Set.empty[String]
-      Seq(col("event_id") % 5 =!= 0 && col("event_id") % 5 =!= 2,
+      appendSlicesInOrder(tmp, Seq(
+        col("event_id") % 5 =!= 0 && col("event_id") % 5 =!= 2,
         col("event_id") % 5 === 2,
-        col("event_id") % 5 === 0)
-        .zipWithIndex.foreach { case (pred, i) =>
-          ev.filter(pred).coalesce(1).write.mode("append").parquet(tmpPath)
-          val fresh = dirFile.listFiles().filter(f =>
-            f.getName.startsWith("part-") && !known.contains(f.getName))
-          fresh.foreach(_.setLastModified(1600000000000L + i * 60000L))
-          known ++= fresh.map(_.getName)
-        }
+        col("event_id") % 5 === 0).map(p => ev.filter(p)))
     }
     spark.readStream.schema(Tables.events)
       .option("maxFilesPerTrigger", 1)
@@ -218,7 +207,8 @@ object Streaming {
     * `SPARK_GRAFT_STREAM_CKPT=<dir>` reroutes (e.g. at a big rung
     * whose state outgrows tmpfs); unset and no writable /dev/shm →
     * Spark's own temp-dir behavior, as before. First use sweeps the
-    * checkpoints that killed runs left behind ([[sweepDeadRuns]]). */
+    * checkpoints that killed runs left behind
+    * ([[Fixtures.sweepDeadRuns]]). */
   private[graft] lazy val streamCkptBase: Option[String] = {
     val base = sys.env.get("SPARK_GRAFT_STREAM_CKPT").filter(_.nonEmpty)
       .orElse {
@@ -227,31 +217,9 @@ object Streaming {
           Some("/dev/shm/graft_stream_ckpt")
         else None
       }
-    base.foreach(b => sweepDeadRuns(new java.io.File(b)))
+    base.foreach(b => Fixtures.sweepDeadRuns(new java.io.File(b)))
     base
   }
-
-  /** A name no other query run uses, in this JVM or an earlier one:
-    * result tables and scratch checkpoints are named with it. It
-    * carries the owner's PID, so [[sweepDeadRuns]] can tell a killed
-    * run's leftovers from a live run's. */
-  private[graft] def runName(prefix: String): String =
-    s"${prefix}_p${ProcessHandle.current().pid()}_${ctr.incrementAndGet()}_${System.nanoTime()}"
-
-  private val RunOwner = raw".+_p(\d+)_\d+_\d+".r
-
-  /** Delete the children of `base` named by a [[runName]] whose owning
-    * process is no longer alive: the scratch checkpoints of runs killed
-    * before their cleanup. Children of live processes, and children not
-    * named by [[runName]], stay. */
-  private[graft] def sweepDeadRuns(base: java.io.File): Unit =
-    Option(base.listFiles()).toSeq.flatten.foreach { f =>
-      f.getName match {
-        case RunOwner(pid) if !ProcessHandle.of(pid.toLong).filter(_.isAlive).isPresent =>
-          Fixtures.rmTree(f)
-        case _ =>
-      }
-    }
 
   /** Run `body` with a per-query scratch checkpoint dir (or None →
     * Spark's default temp checkpoint), deleting the dir before and
@@ -259,8 +227,8 @@ object Streaming {
     * behind (the next JVM's first use of [[streamCkptBase]] sweeps
     * it), and a query started on that checkpoint resumes it: it
     * reads zero batches and returns an empty result. Callers therefore
-    * pass a [[runName]], and the delete before use covers a name that
-    * repeats anyway. StreamingSpec plants such a checkpoint. */
+    * pass a [[Fixtures.runName]], and the delete before use covers a
+    * name that repeats anyway. StreamingSpec plants such a checkpoint. */
   private[graft] def withScratchCkpt[A](name: String)(
       body: Option[String] => A): A = {
     val dir = streamCkptBase.map(new java.io.File(_, name))
@@ -278,7 +246,7 @@ object Streaming {
     // result sets on disk across 19 streaming keys × passes
     while (liveSinkDirs.size() > 1)
       Fixtures.rmTree(new java.io.File(liveSinkDirs.poll()))
-    val name = runName("graft_ps")
+    val name = Fixtures.runName("graft_ps")
     val path = s"target/stream_sink/$name"
     liveSinkDirs.add(path)
     // Batch-replay idempotence: foreachBatch offers
@@ -389,7 +357,7 @@ object Streaming {
     // driver memory across a long bench session.
     while (liveSinks.size() > 1)
       spark.catalog.dropTempView(liveSinks.poll())
-    val name = runName("graft_ms")
+    val name = Fixtures.runName("graft_ms")
     liveSinks.add(name)
     runBounded(spark, sdf, name, mode)(_.format("memory").queryName(name))
     spark.table(name)
@@ -545,10 +513,10 @@ object Streaming {
     * doubled (at-least-once delivery simulated); the operator restores
     * exactly-once. */
   def dedup(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.core.Fixtures.path(dir, "stream_dedup_in")
     val ev = Tables.load(spark, dir, "events")
-    if (!graft.core.Fixtures.exists(dir, "stream_dedup_in"))
-      ev.unionByName(ev).write.mode("overwrite").parquet(path)
+    val path = Fixtures.once(dir, "stream_dedup_in", "events") { tmp =>
+      ev.unionByName(ev).write.parquet(tmp)
+    }
     val deduped = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1000000)
       .parquet(path)
@@ -728,11 +696,11 @@ object Streaming {
     * transactional-table commits; the per-batch frame is
     * shuffle-partitioned like any batch job. */
   def foreachBatchSink(spark: SparkSession, dir: String): DataFrame = {
-    val out = graft.core.Fixtures.path(dir, "stream_feb_out")
+    val out = Fixtures.path(dir, "stream_feb_out")
     // append across BATCHES is the point; append across RUNS would
     // double-count — start from a clean target every run
     Fixtures.rmTree(new java.io.File(out))
-    runBounded(spark, eventsStreamMultiBatch(spark, dir), runName("feb"), "append")(
+    runBounded(spark, eventsStreamMultiBatch(spark, dir), Fixtures.runName("feb"), "append")(
       _.foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("append").parquet(out)
       })
@@ -768,11 +736,10 @@ object Streaming {
     * batch aggregate over ALL events iff no row was lost or duplicated
     * across the two runs — which is what the oracle checks. */
   def checkpointResume(spark: SparkSession, dir: String): DataFrame = {
-    eventsStreamMultiBatch(spark, dir) // ensure the 6-slice fixture exists
-    val mbPath = graft.core.Fixtures.path(dir, "events_stream_src_mb")
-    val src = graft.core.Fixtures.path(dir, "stream_resume_src")
-    val ckpt = graft.core.Fixtures.path(dir, "stream_resume_ckpt")
-    val tgt = graft.core.Fixtures.path(dir, "stream_resume_tgt")
+    val mbPath = eventsMultiBatchSrc(spark, dir)
+    val src = Fixtures.path(dir, "stream_resume_src")
+    val ckpt = Fixtures.path(dir, "stream_resume_ckpt")
+    val tgt = Fixtures.path(dir, "stream_resume_tgt")
     val marker = new java.io.File(src, "_RESUME_DONE")
     if (!marker.exists()) {
       Seq(src, ckpt, tgt).foreach(p => Fixtures.rmTree(new java.io.File(p)))
@@ -1217,21 +1184,10 @@ object Streaming {
     import spark.implicits._
     // parameter-keyed on the change-set's insert offset (1e10): the
     // fixture derives from cdcChangeSet, so a derivation change must
-    // invalidate it (the scan_skipping staleness lesson, r11 ADVICE)
-    val fixture = "cdc_stream_src_o1e10"
-    val path = graft.core.Fixtures.path(dir, fixture)
-    graft.core.Fixtures.buildAtomic(dir, fixture) { tmpPath =>
+    // miss the old fixture and rebuild
+    val path = Fixtures.once(dir, "cdc_stream_src_o1e10", "customer") { tmp =>
       val all = graft.etl.Etl.cdcChangeSet(spark, dir)
-      val dirFile = new java.io.File(tmpPath)
-      var known = Set.empty[String]
-      for (s <- 0L to 2L) {
-        all.filter(col("_seq") === s)
-          .coalesce(1).write.mode("append").parquet(tmpPath)
-        val fresh = dirFile.listFiles().filter(f =>
-          f.getName.startsWith("part-") && !known.contains(f.getName))
-        fresh.foreach(_.setLastModified(1600000000000L + s * 60000L))
-        known ++= fresh.map(_.getName)
-      }
+      appendSlicesInOrder(tmp, (0L to 2L).map(q => all.filter(col("_seq") === q)))
     }
     val changes = spark.readStream
       .schema("c_custkey BIGINT, c_name STRING, c_mktsegment STRING, _seq BIGINT, _op STRING")

@@ -394,8 +394,7 @@ class IngestSpec extends AnyFunSuite {
     // fixture is now parameter-keyed build-once — a second call must
     // not touch the published files.
     ops.Scans.scanSkipping(spark, Sf).head()
-    val root = new java.io.File(
-      core.Fixtures.path(Sf, ops.Scans.scanSkippingFixtureName(Sf)))
+    val root = new java.io.File(ops.Scans.scanSkippingZones(spark, Sf))
     assert(new java.io.File(root, "_SUCCESS").exists(), "completion marker missing")
     def stamp(): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -416,20 +415,22 @@ class IngestSpec extends AnyFunSuite {
     // name + length + mtime): a regenerated corpus — same rows, new
     // files — must map to a DIFFERENT fixture, and an untouched one
     // to the SAME fixture (stability half, or build-once dies).
-    val fp1 = ops.Scans.scanSkippingFixtureName(Sf)
-    assert(fp1 === ops.Scans.scanSkippingFixtureName(Sf),
+    val fp1 = ops.Scans.scanSkippingZones(spark, Sf)
+    assert(fp1 === ops.Scans.scanSkippingZones(spark, Sf),
       "fingerprint must be deterministic for an unchanged corpus")
     // copy the corpus and touch one file's mtime — the regeneration
     // signature (content-identical rewrites still change mtimes)
     val dir = java.nio.file.Files.createTempDirectory("graft_fp").toString
     val src = core.Tables.load(spark, Sf, "lineitem")
     src.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val fpA = ops.Scans.scanSkippingFixtureName(dir)
+    val fpA = ops.Scans.scanSkippingZones(spark, dir)
     val part = Option(new java.io.File(s"$dir/lineitem.parquet").listFiles())
       .get.filter(_.getName.startsWith("part-")).head
     assert(part.setLastModified(part.lastModified() + 60000))
-    val fpB = ops.Scans.scanSkippingFixtureName(dir)
+    val fpB = ops.Scans.scanSkippingZones(spark, dir)
     assert(fpA !== fpB,
       "a regenerated corpus must produce a different fixture name")
+    core.Fixtures.rmTree(new java.io.File(fpA).getParentFile)
+    core.Fixtures.rmTree(new java.io.File(dir))
   }
 }

@@ -57,9 +57,11 @@ class LlmSpec extends AnyFunSuite {
     }
     // the stored index is a build-once artifact: a second call must
     // read the parquet, not re-mine the corpus (same contract as the
-    // IVF/PQ fixtures — exists() green means _SUCCESS was published)
-    assert(graft.core.Fixtures.exists(Sf,
-      s"neardup_index_p64_r4_c${llm.Dedup.BandBucketCap}.parquet"))
+    // IVF/PQ fixtures — once() must find it published, not build it)
+    graft.core.Fixtures.once(Sf,
+      s"neardup_index_p64_r4_c${llm.Dedup.BandBucketCap}", "documents") { _ =>
+      fail("the stored index must already be published")
+    }
   }
 
   test("incremental probe: capped index join equals the naive bucket join, groups bounded") {
@@ -136,9 +138,9 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("IVF index persists: a fresh session serves without retraining") {
-    llm.Similarity.ensureIvfIndex(spark, Sf)
-    assert(core.Fixtures.exists(Sf, llm.Similarity.IvfCentroidsName) &&
-      core.Fixtures.exists(Sf, llm.Similarity.IvfCellsName),
+    val index = llm.Similarity.ensureIvfIndex(spark, Sf)
+    assert(new java.io.File(index, "centroids/_SUCCESS").exists() &&
+      new java.io.File(index, "cells/_SUCCESS").exists(),
       "index written as parquet under a parameter-keyed name")
     val first = llm.Similarity.simsearchIvfTopK(spark, Sf).collect().toSeq
     val builds = llm.Similarity.ivfTrainCount.get()
@@ -551,9 +553,9 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("PQ index persists: fresh session serves from codes parquet, no retraining") {
-    llm.Similarity.ensurePqIndex(spark, Sf)
-    assert(core.Fixtures.exists(Sf, llm.Similarity.PqCodebooksName) &&
-      core.Fixtures.exists(Sf, llm.Similarity.PqCodesName))
+    val index = llm.Similarity.ensurePqIndex(spark, Sf)
+    assert(new java.io.File(index, "codebooks/_SUCCESS").exists() &&
+      new java.io.File(index, "codes/_SUCCESS").exists())
     val first = llm.Similarity.simsearchPqTopK(spark, Sf).collect().toSeq
     val builds = llm.Similarity.pqTrainCount.get()
     llm.Similarity.clearPqMemo()
@@ -562,8 +564,7 @@ class LlmSpec extends AnyFunSuite {
       "rebuilt-from-disk PQ index must serve queries with no retraining")
     assert(second === first)
     // the codes table IS the compression story: 8 small ints per vector
-    val codes = spark.read.parquet(
-      core.Fixtures.path(Sf, llm.Similarity.PqCodesName))
+    val codes = spark.read.parquet(s"$index/codes")
     val badWidth = codes
       .filter(size(col("codes")) =!= 8).count()
     assert(badWidth === 0, "every vector must encode to exactly 8 codes")
@@ -610,15 +611,15 @@ class LlmSpec extends AnyFunSuite {
     // — the ADC approximation can never be worse than the codebook's
     // reconstruction error. A broken encoder (wrong subspace slicing,
     // transposed codebooks) violates this immediately.
-    llm.Similarity.ensurePqIndex(spark, Sf)
+    val index = llm.Similarity.ensurePqIndex(spark, Sf)
     def unit(v: Array[Double]): Array[Double] = {
       val n = math.sqrt(v.map(x => x * x).sum); if (n == 0) v else v.map(_ / n)
     }
-    val cbs = spark.read.parquet(core.Fixtures.path(Sf, llm.Similarity.PqCodebooksName))
+    val cbs = spark.read.parquet(s"$index/codebooks")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toArray.sortBy(_._1).map(_._2.sortBy(_._2).map(_._3))
     val sub = cbs(0)(0).length
-    val codes = spark.read.parquet(core.Fixtures.path(Sf, llm.Similarity.PqCodesName))
+    val codes = spark.read.parquet(s"$index/codes")
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     val vecs = core.Tables.load(spark, Sf, "embeddings")
       .select(col("vec_id"), col("embedding")).collect()
@@ -807,9 +808,8 @@ class LlmSpec extends AnyFunSuite {
   test("indexed cells: the explicit read schema equals the schema Spark infers") {
     val n = core.Tables.load(spark, Sf, "embeddings").count()
     for (k <- Seq(llm.Similarity.IvfK, llm.Similarity.knnKFor(n)).distinct) {
-      llm.Similarity.ensureIvfIndex(spark, Sf, k)
       val inferred = spark.read
-        .parquet(core.Fixtures.path(Sf, llm.Similarity.ivfCellsName(k))).schema
+        .parquet(s"${llm.Similarity.ensureIvfIndex(spark, Sf, k)}/cells").schema
       assert(llm.Similarity.IndexedCellsSchema == inferred,
         s"k=$k: the index build writes ${inferred.simpleString}")
     }
@@ -867,9 +867,8 @@ class LlmSpec extends AnyFunSuite {
     import TestSpark.{spark => s, Sf}
     // force the two-level path at small K (the quadratic-control
     // convention): 64 fine cells on the test corpus, 8-cell router
-    llm.Similarity.ensureIvfIndex(s, Sf, 64)
     val cents = s.read
-      .parquet(s"${graft.core.Fixtures.path(Sf, "ivf_centroids_k64i3")}")
+      .parquet(s"${llm.Similarity.ensureIvfIndex(s, Sf, 64)}/centroids")
       .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
     assert(cents.length == 64)
     val e = core.Tables.load(s, Sf, "embeddings")

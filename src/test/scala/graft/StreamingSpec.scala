@@ -297,21 +297,31 @@ class StreamingSpec extends AnyFunSuite {
     }
     // a name as this process gives its runs, and the same name as a
     // killed run of a process that is gone would have left it
-    val liveName = stream.Streaming.runName("graft_ms")
+    def asDead(name: String) = name.replace(s"_p${live}_", s"_p${dead}_")
+    val liveName = core.Fixtures.runName("graft_ms")
     assert(liveName.contains(s"_p${live}_"), liveName)
-    val deadName = liveName.replace(s"_p${live}_", s"_p${dead}_")
-    def plant(name: String): java.io.File = {
-      val d = new java.io.File(base, name)
+    def plant(in: java.io.File, name: String): java.io.File = {
+      val d = new java.io.File(in, name)
       assert(new java.io.File(d, "commits").mkdirs())
       d
     }
-    val (liveDir, deadDir, other) = (plant(liveName), plant(deadName), plant("stale_probe"))
+    val (liveDir, deadDir, other) =
+      (plant(base, liveName), plant(base, asDead(liveName)), plant(base, "stale_probe"))
+    // fixture staging dirs, as Fixtures.once names them, in the fixture
+    // root of an sf dir no call has touched yet: its first once() sweeps
+    val sf = base.getPath + "_sf"
+    val root = new java.io.File(core.Fixtures.path(sf, "x")).getParentFile
+    val stagingName = core.Fixtures.runName("x.build")
+    val (liveStaging, deadStaging) = (plant(root, stagingName), plant(root, asDead(stagingName)))
     try {
-      stream.Streaming.sweepDeadRuns(base)
+      core.Fixtures.sweepDeadRuns(base)
       assert(!deadDir.exists(), "a dead run's checkpoint must be swept")
       assert(liveDir.exists(), "a live run's checkpoint must stay")
       assert(other.exists(), "a directory not named by runName must stay")
-    } finally core.Fixtures.rmTree(base)
+      core.Fixtures.once(sf, "y")(tmp => assert(new java.io.File(tmp).mkdirs()))
+      assert(!deadStaging.exists(), "a dead build's staging dir must be swept")
+      assert(liveStaging.exists(), "a live build's staging dir must stay")
+    } finally Seq(base, root).foreach(core.Fixtures.rmTree)
   }
 
   test("checkpoint resume: second run ingests only the late-arriving files") {
