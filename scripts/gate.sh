@@ -5,12 +5,14 @@
 # status: 0 iff every requested key was dumped and every oracled key
 # matches. An unknown key fails Verify, and with it the gate.
 #   scripts/gate.sh <sf-dir> <out-dir> [keys...]
-# Verify runs outside sbt (scripts/run_main.sh), so Verify's env knobs
-# (SPARK_GRAFT_CPUS, default: the host's processors; SPARK_DRIVER_MEM,
-# SPARK_GRAFT_MAX_RESULT, SPARK_GRAFT_STREAM_SINK,
-# SPARK_GRAFT_CHECKPOINT_DIR) pass through. On
-# a big scale dir, gate a long key list in chunks, one call per chunk:
-# one JVM accumulates state across keys.
+# Verify runs outside sbt (scripts/run_main.sh), so SPARK_GRAFT_CPUS
+# (default: the host's processors) and SPARK_DRIVER_MEM pass through.
+# A spark.* conf reaches Verify's session as a JVM system property in
+# JAVA_TOOL_OPTIONS, e.g. reliable lineage cuts and a bigger result limit:
+#   JAVA_TOOL_OPTIONS="-Dspark.checkpoint.dir=/tmp/ckpt -Dspark.driver.maxResultSize=4g" \
+#     scripts/gate.sh <sf-dir> <out-dir> graph_pagerank
+# On a big scale dir, gate a long key list in chunks, one call per
+# chunk: one JVM accumulates state across keys.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 [ $# -ge 2 ] || { echo "usage: $0 <sf-dir> <out-dir> [keys...]" >&2; exit 2; }

@@ -140,18 +140,13 @@ object Bench {
     if (contended) System.err.println(
       f"[bench] contended host: canary $canarySec%.3f s, steal $stealPct%.1f %%, " +
         f"load $loadStart%.2f at start on $cpus cpus — artifact will carry contended:true")
-    // Durability-mode self-identification: key off what
-    // the cuts ACTUALLY did (Lineage.lastCutReliable) so a run enabling
-    // reliable mode via the runtime conf key — not just the env var —
-    // labels itself correctly; fall back to env/conf for a run whose
-    // query set happened to hit zero lineage-cut sites.
-    val ckptMode =
-      if (core.Lineage.lastCutReliable ||
-          sys.env.contains("SPARK_GRAFT_CHECKPOINT_DIR") ||
-          spark.conf.getOption(core.Lineage.ConfKey).exists(_.nonEmpty))
-        "reliable"
-      else "local"
-    def metaWith(errsJson: String) = s""""sf":"$sfDir","first_stream_init":$streamInit,"passes":$Passes,"errors":$errsJson,"load_avg_start":$loadStart,"load_avg_end":${loadAvgNow()},"cpus":$cpus,"canary_sec":$canarySec,"canary_par_sec":$canaryParSec,"steal_pct":$stealPct,"boot_epoch":$bootEpoch,"cpu_mhz":$cpuMhz,"contended":$contended,"stream_sink":"${sys.env.getOrElse("SPARK_GRAFT_STREAM_SINK", "memory")}","state_store":"${sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "default")}","scratch_warn":$scratchWarn,"ckpt":"$ckptMode""""
+    // durability and state-store self-identification, from what the
+    // context and session hold: a reliable cut is one taken while the
+    // context has a checkpoint dir (core.Lineage.cut)
+    val ckptMode = if (spark.sparkContext.getCheckpointDir.isDefined) "reliable" else "local"
+    val stateStore =
+      spark.conf.getAll.getOrElse(stream.Streaming.StateStoreProviderConf, "default")
+    def metaWith(errsJson: String) = s""""sf":"$sfDir","first_stream_init":$streamInit,"passes":$Passes,"errors":$errsJson,"load_avg_start":$loadStart,"load_avg_end":${loadAvgNow()},"cpus":$cpus,"canary_sec":$canarySec,"canary_par_sec":$canaryParSec,"steal_pct":$stealPct,"boot_epoch":$bootEpoch,"cpu_mhz":$cpuMhz,"contended":$contended,"state_store":"$stateStore","scratch_warn":$scratchWarn,"ckpt":"$ckptMode""""
     val meta = metaWith(errs)
     // stdout meta must be BOUNDED: errs is
     // unbounded (~170 chars per failing key), so with many errors even

@@ -11,12 +11,10 @@ object Verify {
     val keys = SparkEntry.select(args.toSeq.drop(2))
     // streaming keys land in the harness's MEMORY sink, whose per-batch
     // task results ship to the driver; at sf10 stream_session's exceed
-    // the 1g default. The driver passes no env, so its runs keep
-    // Spark's default.
-    val spark = core.Sessions.build(extra =
-      Map("spark.sql.session.timeZone" -> "UTC") ++
-        sys.env.get("SPARK_GRAFT_MAX_RESULT")
-          .map("spark.driver.maxResultSize" -> _))
+    // the 1g default of spark.driver.maxResultSize. Like every spark.*
+    // conf it is read from a JVM system property
+    // (`scripts/run_main.sh -Dspark.driver.maxResultSize=4g graft.Verify …`).
+    val spark = core.Sessions.build(extra = Map("spark.sql.session.timeZone" -> "UTC"))
     new java.io.File(outDir).mkdirs()
     keys.foreach { name =>
       val t0 = System.nanoTime()

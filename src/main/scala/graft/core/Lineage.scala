@@ -5,96 +5,39 @@ import org.apache.spark.sql.Dataset
 /** One definition of the per-round lineage cut every iterative operator
   * uses (PageRank/BFS/CC/label-prop rounds, dedup candidate sets, index
   * fixtures in flight) — and the single place the executor-loss story
-  * is decided.
+  * is decided. The rule: a RELIABLE `checkpoint()` when the context has
+  * a checkpoint dir, a `localCheckpoint()` when it has none.
   *
-  * Default: `localCheckpoint()` — eager, truncates lineage, but the
+  * `localCheckpoint()` is eager and truncates lineage, but the
   * materialized blocks live ONLY on the executors that computed them:
   * non-replicated and, because lineage is gone, non-recomputable. On a
   * real cluster a lost executor (preemption, OOM kill, spot reclaim)
-  * makes every downstream stage fail with stage-materialization errors
-  * — BENCH_r12 recorded exactly one such `graph_pagerank` failure under
-  * heavy external load. On `local[n]` there is a single "executor"
-  * whose loss is the application's, so the default is safe AND avoids
-  * per-round disk writes in every bench/gate session.
+  * makes every downstream stage fail with stage-materialization errors.
+  * On `local[n]` there is a single "executor" whose loss is the
+  * application's, so it is safe there AND avoids per-round disk writes.
   *
-  * Knob: set `SPARK_GRAFT_CHECKPOINT_DIR=<dir>` (env) or
-  * `spark.graft.checkpointDir` (conf, runtime-settable — what the spec
-  * uses) and every cut becomes a RELIABLE `checkpoint()`: round
-  * results are written to the named directory (HDFS/object store on a
-  * cluster), survive any executor loss, and downstream stages re-read
+  * A deployment that must survive executor loss gives the context a
+  * checkpoint dir: `spark.checkpoint.dir` (e.g. `-Dspark.checkpoint.dir=…`,
+  * HDFS/object store on a cluster) or `sc.setCheckpointDir`. Every cut
+  * then writes its round to that dir, and downstream stages re-read it
   * instead of failing. Results are BIT-IDENTICAL either way
-  * (LineageSpec law: pagerank/CC/near-dup rows equal under both modes)
-  * — the cut decides only where the materialized rounds live and what
+  * (LineageSpec: pagerank/CC/near-dup rows equal under both modes) —
+  * the cut decides only where the materialized rounds live and what
   * dies with an executor.
   *
-  * This helper is the repo-wide routing point: ~50 call sites across
-  * the iterative graph ops, the dedup band joins, and the curation
-  * pipelines all cut through here, so a deployment flips ONE knob to
-  * trade per-round durable writes for restart-from-scratch risk.
-  *
-  * Cleanup (r13 advisor): reliable checkpoints write one rdd-N dir
-  * per cut — unbounded growth over a long-running deployment unless
-  * cleaned. [[Sessions.build]] sets
+  * Reliable cuts write one rdd-N dir each. [[Sessions.build]] sets
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` so the
   * ContextCleaner deletes a cut's files once its RDD is GC'd; a
   * session built elsewhere should do the same or provision the dir.
   */
 object Lineage {
-  /** Conf key mirrored by the SPARK_GRAFT_CHECKPOINT_DIR env var. */
-  val ConfKey = "spark.graft.checkpointDir"
-
-  /** True if the last cut in this JVM went through reliable
-    * checkpoint() — surfaced by Bench into its artifact (the `ckpt`
-    * meta field) so a run self-identifies which durability mode it
-    * actually measured, whichever of env var / runtime conf enabled it. */
-  @volatile private[graft] var lastCutReliable = false
-
-  /** The dir THIS helper last registered on the context (None = we
-    * never registered one). `sc.getCheckpointDir` cannot serve as the
-    * ledger: setCheckpointDir appends a UUID subdirectory, so the
-    * requested path never round-trips — which is exactly how the r13
-    * "register only while getCheckpointDir is empty" spelling silently
-    * ignored every later change to [[ConfKey]] for the JVM's lifetime
-    * (and sent LineageSpec's 2nd/3rd cuts into the 1st test's deleted
-    * temp dir). */
-  @volatile private var registeredDir: Option[String] = None
-
   /** Enrichment so call sites read like the Dataset API:
     * `df.lineageCut()` = `Lineage.cut(df)`. */
   implicit class LineageCutOps[T](private val ds: Dataset[T]) extends AnyVal {
     def lineageCut(): Dataset[T] = cut(ds)
   }
 
-  def cut[T](ds: Dataset[T]): Dataset[T] = {
-    val spark = ds.sparkSession
-    val dir = sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .orElse(spark.conf.getOption(ConfKey))
-      .filter(_.nonEmpty)
-    dir match {
-      case Some(d) =>
-        val sc = spark.sparkContext
-        if (registeredDir.contains(d)) {
-          // already registered by us — nothing to do
-        } else if (registeredDir.isEmpty && sc.getCheckpointDir.nonEmpty) {
-          // a dir set OUTSIDE this helper (cluster deploy) wins, but
-          // loudly: the knob's dir is being ignored, and silence here
-          // is how a run believes it checkpointed somewhere it didn't
-          System.err.println(
-            s"[graft] Lineage: $ConfKey=$d IGNORED — the context already " +
-              s"has an externally-set checkpoint dir " +
-              s"(${sc.getCheckpointDir.get}); cuts go there")
-        } else {
-          registeredDir.foreach(old => System.err.println(
-            s"[graft] Lineage: checkpoint dir changed $old -> $d; " +
-              "re-registering (later cuts land under the new dir)"))
-          sc.setCheckpointDir(d)
-          registeredDir = Some(d)
-        }
-        lastCutReliable = true
-        ds.checkpoint() // eager + reliable: blocks in the checkpoint dir
-      case None =>
-        lastCutReliable = false
-        ds.localCheckpoint()
-    }
-  }
+  def cut[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint()
+    else ds.localCheckpoint()
 }

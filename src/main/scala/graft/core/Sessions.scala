@@ -44,6 +44,23 @@ object Sessions {
 
   def envCpus: Int = cpusFrom(sys.env.get(CpusEnv))
 
+  /** Run `body` with each of `confs` set on the session, then put each
+    * back as it was, also when `body` throws: its previous value if the
+    * session had one set, unset if not. "Set" is what the session holds
+    * (`getAll`), not a registered default, so a provider or mode that a
+    * deployment chose session-wide survives and an unset key stays
+    * unset. Confs a query captures at start (shuffle partitions, the
+    * state-store provider) make this a per-query override. */
+  def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val held = spark.conf.getAll
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally confs.foreach { case (k, _) =>
+      held.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
   def build(cpus: String = envCpus.toString,
       extra: Map[String, String] = Map.empty): SparkSession = {
     // local[n, 4]: FOUR task attempts instead of local mode's

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Q, Sessions, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
 
@@ -401,12 +401,8 @@ object Etl {
     val restated = fact.filter(col("ship_year") === 1998)
       .withColumn("l_extendedprice",
         (money(col("l_extendedprice")) * onePlus(lit(0.10))).cast("double"))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try restated.write.mode("overwrite").partitionBy("ship_year").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    Sessions.withConfs(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      restated.write.mode("overwrite").partitionBy("ship_year").parquet(path)
     }
     // restated prices are scale-3 decimals (2-dec × 1.10): aggregate at
     // scale 4 so no per-row cast ever rounds a .xx5 tie (Determinism

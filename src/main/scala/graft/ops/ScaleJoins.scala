@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Lineage.LineageCutOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Fixtures, Q, Tables}
+import graft.core.{Fixtures, Q, Sessions, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
 
@@ -296,29 +296,16 @@ object ScaleJoins {
           dsum(col("l_quantity")).as("sum_qty")))
   }
 
-  private def withBloomConfs[T](spark: SparkSession)(body: => T): T = {
-    val BloomConf = "spark.sql.optimizer.runtime.bloomFilter.enabled"
-    val AppThresh =
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-    // InjectRuntimeFilter refuses when either side is broadcastable by
-    // size (a broadcast join already row-filters): at 100 TB a real
-    // semi-join dim exceeds the broadcast threshold naturally; at test
-    // scale the threshold is lowered for the window so the same code
-    // path fires.
-    val Abjt = "spark.sql.autoBroadcastJoinThreshold"
-    val prevOn = spark.conf.getOption(BloomConf)
-    val prevThresh = spark.conf.getOption(AppThresh)
-    val prevAbjt = spark.conf.getOption(Abjt)
-    spark.conf.set(BloomConf, "true")
-    spark.conf.set(AppThresh, "0")
-    spark.conf.set(Abjt, "-1")
-    try body
-    finally {
-      prevOn.fold(spark.conf.unset(BloomConf))(spark.conf.set(BloomConf, _))
-      prevThresh.fold(spark.conf.unset(AppThresh))(spark.conf.set(AppThresh, _))
-      prevAbjt.fold(spark.conf.unset(Abjt))(spark.conf.set(Abjt, _))
-    }
-  }
+  // InjectRuntimeFilter refuses when either side is broadcastable by
+  // size (a broadcast join already row-filters): at 100 TB a real
+  // semi-join dim exceeds the broadcast threshold naturally; at test
+  // scale the threshold is lowered for the window so the same code
+  // path fires.
+  private def withBloomConfs[T](spark: SparkSession)(body: => T): T =
+    Sessions.withConfs(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   private val joinBloomSql =
     s"""SELECT p_partkey, COUNT(*) AS n_items, ${O.dsum("l_quantity")} AS sum_qty

@@ -3,7 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, Trigger, ValueState}
-import graft.core.{Fixtures, Q, Tables}
+import graft.core.{Fixtures, Q, Sessions, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
 
@@ -50,6 +50,10 @@ class UserRunningAgg
 }
 
 object Streaming {
+
+  /** Spark's conf naming the state-store provider of every query a
+    * session starts; a deployment sets it (e.g. to RocksDB) session-wide. */
+  private[graft] val StateStoreProviderConf = "spark.sql.streaming.stateStore.providerClass"
 
   private val liveSinks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
@@ -116,21 +120,14 @@ object Streaming {
       // at sf≥10 sizes, so raise its budget for exactly this build
       // (plans here are constructed AND executed inside this block, so
       // the scoped raise covers them)
-      val guardKey = graft.plans.GlobalWindowGuardRule.ConfKey
-      val prevGuard = spark.conf.getOption(guardKey)
-      spark.conf.set(guardKey, Long.MaxValue.toString)
-      try {
+      Sessions.withConfs(spark,
+          graft.plans.GlobalWindowGuardRule.ConfKey -> Long.MaxValue.toString) {
         // deterministic slice assignment
         val sliced = Tables.load(spark, dir, "events")
           .withColumn("_slice",
             ntile(MbSlices).over(Window.orderBy(col("ts"), col("event_id"))))
         appendSlicesInOrder(tmp,
           (1 to MbSlices).map(i => sliced.filter(col("_slice") === i).drop("_slice")))
-      } finally {
-        prevGuard match {
-          case Some(v) => spark.conf.set(guardKey, v)
-          case None => spark.conf.unset(guardKey)
-        }
       }
     }
 
@@ -172,23 +169,6 @@ object Streaming {
       .option("maxFilesPerTrigger", 1)
       .parquet(path)
   }
-
-  /** Bench sink selector: the memory sink ships every
-    * result row to the driver — at sf100 `stream_ewma`'s 543 s was
-    * ~entirely a 100M-row driver collect, polluting the heavy-tail
-    * evidence with harness cost. `SPARK_GRAFT_STREAM_SINK=parquet`
-    * (env, for Bench at sf ≥ 10; `graft.stream.sink` sysprop
-    * for the in-JVM equivalence spec) reroutes the bounded run through
-    * foreachBatch → parquet under target/ — fully distributed, zero
-    * driver collect — and returns the files read back. Result-set
-    * equality with the memory sink is law-tested per output mode:
-    * complete re-emits whole state (overwrite keeps the last emission,
-    * like the memory sink's truncate); append/update emit deltas
-    * (parquet append ≡ the memory sink's row appends). Correctness
-    * gates never set the knob, so oracle runs stay memory-sink. */
-  private def streamSinkMode: String =
-    sys.props.getOrElse("graft.stream.sink",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SINK", "memory"))
 
   /** Scratch base for the bounded harness runs' checkpoints: every
     * bounded run writes an offset log, a commit log and one state-store
@@ -237,109 +217,29 @@ object Streaming {
     finally dir.foreach(Fixtures.rmTree)
   }
 
-  private val liveSinkDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private def runToParquet(spark: SparkSession, sdf: DataFrame, mode: String): DataFrame = {
-    // sequential-consumption contract (same as liveSinks): by the time
-    // the next streaming query runs, earlier results are consumed —
-    // keep only the most recent dir so sf100 runs don't accumulate
-    // result sets on disk across 19 streaming keys × passes
-    while (liveSinkDirs.size() > 1)
-      Fixtures.rmTree(new java.io.File(liveSinkDirs.poll()))
-    val name = Fixtures.runName("graft_ps")
-    val path = s"target/stream_sink/$name"
-    liveSinkDirs.add(path)
-    // Batch-replay idempotence: foreachBatch offers
-    // NO exactly-once guarantee — a retried micro-batch is re-offered
-    // with the SAME batchId, and a blind `append` would double its
-    // rows into the result the bench reads back. The memory sink
-    // ignores re-offered batchIds; the parquet fold matches it by
-    // keying each batch's write to a batchId directory with
-    // mode=overwrite (a replay rewrites the same dir, byte-for-byte
-    // idempotent). Complete mode re-emits whole state, so a full-path
-    // overwrite is already replay-safe there.
-    runBounded(spark, sdf, name, mode)(
-      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (mode == "complete") batch.write.mode("overwrite").parquet(path)
-        else batch.write.mode("overwrite").parquet(s"$path/b$batchId")
-      })
-    if (new java.io.File(path).exists())
-      // recursiveFileLookup reads the union of the batchId dirs (and
-      // the flat complete-mode layout) WITHOUT partition inference —
-      // `b<id>` must stay a directory name, never a schema column
-      spark.read.schema(sdf.schema)
-        .option("recursiveFileLookup", "true").parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], sdf.schema)
-  }
-
-  /** Big-rung state-store knob:
-    * `SPARK_GRAFT_STATE_STORE=rocksdb` (env, for Bench at
-    * sf ≥ 10; `graft.stream.stateStore` sysprop for in-JVM tests)
-    * runs every streaming query's state in the RocksDB provider —
-    * off-heap, spillable-to-disk, the store a production cluster runs
-    * stateful streaming on when per-key state outgrows executor heap
-    * (sf100 `stream_session`/`stream_stateful` hold millions of user
-    * states; the default HDFS-backed provider keeps them ALL in JVM
-    * memory maps). Correctness gates never set the knob, so oracle
-    * runs stay on the default provider; `stream_tws` pins RocksDB
-    * itself regardless (transformWithState requires it). The conf is
-    * captured per-query at start, so set-around-start + restore is a
-    * per-query override, not a session mutation. */
-  private def stateStoreConf: Option[String] =
-    sys.props.get("graft.stream.stateStore")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_STORE")) match {
-      case Some("rocksdb") => Some(
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case _ => None
-    }
-
-  private def withStateStore[A](spark: SparkSession)(body: => A): A =
-    stateStoreConf match {
-      case None => body
-      case Some(cls) =>
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, cls)
-        try body
-        finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-    }
-
-  /** Start a streaming query (`start`) with one state partition per
-    * task slot. Every stateful operator keeps one state store per
-    * shuffle partition (a stream-stream join keeps four), and each
-    * store pays a commit per micro-batch, so the count is sized to one
-    * wave of state-store tasks rather than inherited from the batch
-    * setting. The value is captured in the query's checkpoint at
-    * start, so setting it around the start and restoring it is a
-    * per-query override; a deployment whose state outgrows one wave
-    * sizes it to keys × state row size ÷ executor memory. */
-  private def withStatePartitions[A](spark: SparkSession)(start: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, spark.sparkContext.defaultParallelism.toString)
-    try start
-    finally spark.conf.set(key, prev)
-  }
-
   /** Run a bounded streaming DataFrame to completion: `sink` names where
     * its rows go, and everything else is the same for every bounded run.
     * A scratch checkpoint ([[withScratchCkpt]]) under `name`, per-query
-    * state partitions and store set around `start`, an AvailableNow
-    * trigger, and, once the query ends, [[lastBatchId]] and
-    * [[lastStateRowsPeak]] from its progress. */
+    * state partitions set around `start`, an AvailableNow trigger, and,
+    * once the query ends, [[lastBatchId]] and [[lastStateRowsPeak]]
+    * from its progress.
+    *
+    * State partitions: one per task slot. Every stateful operator keeps
+    * one state store per shuffle partition (a stream-stream join keeps
+    * four), and each store pays a commit per micro-batch, so the count
+    * is sized to one wave of state-store tasks rather than inherited
+    * from the batch setting. The query captures it in its checkpoint at
+    * start; a deployment whose state outgrows one wave sizes it to
+    * keys × state row size ÷ executor memory. The state-store provider
+    * is the session's `spark.sql.streaming.stateStore.providerClass`. */
   private def runBounded(spark: SparkSession, sdf: DataFrame, name: String, mode: String)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
     withScratchCkpt(name) { ckptDir =>
-      val q = withStatePartitions(spark) {
-        withStateStore(spark) {
-          val w = sink(sdf.writeStream).outputMode(mode).trigger(Trigger.AvailableNow())
-          ckptDir.foreach(d => w.option("checkpointLocation", d))
-          w.start()
-        }
+      val q = Sessions.withConfs(spark,
+          "spark.sql.shuffle.partitions" -> spark.sparkContext.defaultParallelism.toString) {
+        val w = sink(sdf.writeStream).outputMode(mode).trigger(Trigger.AvailableNow())
+        ckptDir.foreach(d => w.option("checkpointLocation", d))
+        w.start()
       }
       q.awaitTermination()
       lastBatchId = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
@@ -351,7 +251,6 @@ object Streaming {
   /** Run a bounded streaming DataFrame to completion into a uniquely
     * named memory sink; return the sink table. */
   private def runToTable(spark: SparkSession, sdf: DataFrame, mode: String): DataFrame = {
-    if (streamSinkMode == "parquet") return runToParquet(spark, sdf, mode)
     // queries run sequentially: earlier sinks' result sets are consumed
     // by now — drop them so complete-mode outputs don't accumulate in
     // driver memory across a long bench session.
@@ -657,9 +556,6 @@ object Streaming {
     * batch iterator order can't matter. Oracle: plain GROUP BY. */
   def tws(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // transformWithState requires the RocksDB state store provider.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val src = eventsStream(spark, dir)
       .select(col("user_id"), col("value"))
       .as[(Long, Double)]
@@ -667,17 +563,20 @@ object Streaming {
       .transformWithState(new UserRunningAgg(), TimeMode.None(),
         OutputMode.Update(), implicitly[org.apache.spark.sql.Encoder[(Long, Long, Double)]])
       .toDF("user_id", "n_events", "max_value")
+    // transformWithState requires the RocksDB state store provider; the
+    // session's own choice is back in place once the query has run
+    val sink = Sessions.withConfs(spark, StateStoreProviderConf ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      runToTable(spark, out, "update")
+    }
     // post-aggregate to each key's final emission (strictly-increasing
     // n) so a multi-batch split can't leave intermediate rows behind —
     // same rationale as [[statefulFrom]].
-    try {
-      val sink = runToTable(spark, out, "update")
-      ordered(
-        sink.groupBy(col("user_id"))
-          .agg(max(struct(col("n_events"), col("max_value"))).as("_last"))
-          .select(col("user_id"), col("_last.n_events").as("n_events"),
-            col("_last.max_value").as("max_value")))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    ordered(
+      sink.groupBy(col("user_id"))
+        .agg(max(struct(col("n_events"), col("max_value"))).as("_last"))
+        .select(col("user_id"), col("_last.n_events").as("n_events"),
+          col("_last.max_value").as("max_value")))
   }
 
   private val twsSql =

@@ -1,38 +1,37 @@
 package graft
 
+import org.apache.spark.CheckpointDirs
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Lineage
 
-/** The fault-tolerance knob's contract (r12 verdict #2): flipping
-  * every per-round lineage cut from localCheckpoint (fast, dies with
-  * an executor) to reliable checkpoint() (durable in
-  * spark.graft.checkpointDir) changes WHERE materialized rounds live
-  * and nothing else — the iterative operators' results must be
+/** Lineage durability's contract: with a checkpoint dir on the context
+  * (`spark.checkpoint.dir` or `setCheckpointDir`) every per-round
+  * lineage cut is a reliable checkpoint() into that dir instead of a
+  * localCheckpoint(). That changes WHERE materialized rounds live and
+  * nothing else — the iterative operators' results must be
   * bit-identical under both modes. Exercised on the three iterative
-  * kernels the r12 bench flagged as structurally fragile under
-  * localCheckpoint: PageRank rounds, the shared CC label-propagation
-  * kernel, and the banded near-dup miner. */
+  * kernels that are structurally fragile under localCheckpoint:
+  * PageRank rounds, the shared CC label-propagation kernel, and the
+  * banded near-dup miner. */
 class LineageSpec extends AnyFunSuite {
   import TestSpark.{spark, Sf}
 
-  private def withReliable[T](body: => T): T = {
+  /** Run `body(dir)` with the context's checkpoint dir set to a fresh
+    * temp `dir`, then clear it again so later suites stay local. */
+  private def withReliable[T](body: String => T): T = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    spark.conf.set(Lineage.ConfKey, tmp)
+    spark.sparkContext.setCheckpointDir(tmp)
     try {
-      val r = body
-      // the cut must land in the dir THIS block configured — the r13
-      // "register only while getCheckpointDir is empty" bug sent every
-      // later test's cuts into the first test's already-deleted dir
-      // (Hadoop mkdirs silently recreated it). setCheckpointDir nests
-      // a UUID subdir, so "landed here" = tmp gained a subdirectory.
+      val r = body(tmp)
+      // setCheckpointDir nests a UUID subdir, so "the cuts landed
+      // here" = tmp gained a subdirectory
       val sub = new java.io.File(tmp).listFiles()
       assert(sub != null && sub.exists(_.isDirectory),
         s"reliable cut did not checkpoint under the configured dir $tmp")
       r
     } finally {
-      spark.conf.unset(Lineage.ConfKey)
-      // the dir is re-registered per change now; the temp dir can be
-      // reclaimed as soon as the suite's asserts are done
+      CheckpointDirs.clear(spark.sparkContext)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     }
   }
@@ -40,14 +39,22 @@ class LineageSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
+  /** The materialized RDD of a fresh cut: its checkpoint file is
+    * defined for a reliable cut, empty for a local one. */
+  private def cutRdd(): org.apache.spark.rdd.RDD[_] = {
+    val cut = Lineage.cut(spark.range(8).toDF())
+    cut.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+      .filter(_.isCheckpointed)
+      .getOrElse(fail(s"the cut is not a checkpointed RDD: ${cut.queryExecution.analyzed}"))
+  }
+
   test("reliable checkpoint knob: pagerank bit-identical, and actually reliable") {
     val local = rows(ops.Graph.pageRank(spark, Sf))
-    val reliable = withReliable {
+    val reliable = withReliable { tmp =>
       val r = rows(ops.Graph.pageRank(spark, Sf))
-      assert(Lineage.lastCutReliable,
-        "knob set but the cut still took the localCheckpoint path")
-      assert(spark.sparkContext.getCheckpointDir.nonEmpty,
-        "reliable mode must register a checkpoint dir on the context")
+      val file = cutRdd().getCheckpointFile
+      assert(file.exists(_.contains(tmp)),
+        s"checkpoint dir $tmp set but the cut's RDD is checkpointed at $file")
       r
     }
     assert(local == reliable)
@@ -55,7 +62,7 @@ class LineageSpec extends AnyFunSuite {
 
   test("reliable checkpoint knob: pagerank iterations equal the reference on generated graphs") {
     import org.scalacheck.{Test => SCTest}
-    val res = withReliable(SCTest.check(
+    val res = withReliable(_ => SCTest.check(
       SCTest.Parameters.default
         .withMinSuccessfulTests(8)
         .withInitialSeed(org.scalacheck.rng.Seed(7L))
@@ -66,20 +73,20 @@ class LineageSpec extends AnyFunSuite {
 
   test("reliable checkpoint knob: connected components bit-identical") {
     val local = rows(ops.Graph.connectedComponents(spark, Sf))
-    val reliable = withReliable(rows(ops.Graph.connectedComponents(spark, Sf)))
+    val reliable = withReliable(_ => rows(ops.Graph.connectedComponents(spark, Sf)))
     assert(local == reliable)
   }
 
   test("reliable checkpoint knob: banded near-dup bit-identical") {
     val local = rows(SparkEntry.queries("llm_near_dedup")(spark, Sf))
     val reliable =
-      withReliable(rows(SparkEntry.queries("llm_near_dedup")(spark, Sf)))
+      withReliable(_ => rows(SparkEntry.queries("llm_near_dedup")(spark, Sf)))
     assert(local == reliable)
   }
 
   test("default mode stays localCheckpoint (no per-round disk writes)") {
-    spark.conf.unset(Lineage.ConfKey)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     rows(ops.Graph.pageRank(spark, Sf))
-    assert(!Lineage.lastCutReliable)
+    assert(cutRdd().getCheckpointFile.isEmpty)
   }
 }

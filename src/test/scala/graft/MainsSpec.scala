@@ -1,11 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The two inputs every main reads the same way: its key list
   * ([[SparkEntry.select]]) and its task slots ([[core.Sessions.cpusFrom]]).
   * Both are outside input, so a bad value must fail the run up front and
-  * say which value was bad. */
+  * say which value was bad. The env knobs the program reads at all are
+  * pinned here too. */
 class MainsSpec extends AnyFunSuite {
 
   test("an empty key list selects every key, sorted") {
@@ -36,5 +39,20 @@ class MainsSpec extends AnyFunSuite {
       val e = intercept[IllegalArgumentException](core.Sessions.cpusFrom(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), s"'$bad': ${e.getMessage}")
     }
+  }
+
+  test("the program reads exactly the four SPARK_GRAFT_* knobs that README documents") {
+    // a new knob must be added here and to README on purpose; a
+    // Spark behaviour belongs in its spark.* conf instead
+    val knob = "SPARK_GRAFT_[A-Z_]+".r
+    val sources = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala")))(
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
+    assert(sources.nonEmpty)
+    val used = sources.flatMap(p => knob.findAllIn(Files.readString(p))).toSet
+    val documented = Set("CPUS", "SF_DIR", "BENCH_OUT", "STREAM_CKPT").map("SPARK_GRAFT_" + _)
+    assert(used === documented)
+    val readme = Files.readString(Paths.get("README.md"))
+    val undocumented = documented.filterNot(readme.contains)
+    assert(undocumented.isEmpty, s"README does not document $undocumented")
   }
 }

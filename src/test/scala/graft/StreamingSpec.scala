@@ -544,41 +544,35 @@ class StreamingSpec extends AnyFunSuite {
     assert(single.exists(_.getBoolean(4)), "no alarm fired on the whole corpus")
   }
 
-  test("parquet bench sink is result-equal to the memory sink (all three output modes)") {
-    // the sf≥10 bench knob (SPARK_GRAFT_STREAM_SINK=parquet) must be a
-    // pure harness change: one key per output mode, collected result
-    // sets compared exactly. complete → overwrite-per-batch keeps the
-    // final emission (the memory sink's truncate); append/update →
-    // parquet append reproduces the memory sink's row appends.
-    for (key <- Seq("stream_tumbling", "stream_join", "stream_ewma")) {
-      val mem = SparkEntry.queries(key)(spark, TestSpark.Sf)
-        .collect().map(_.toString).sorted.toSeq
-      sys.props("graft.stream.sink") = "parquet"
-      try {
-        val pq = SparkEntry.queries(key)(spark, TestSpark.Sf)
-          .collect().map(_.toString).sorted.toSeq
-        assert(pq == mem, s"$key: parquet sink diverged from memory sink")
-        assert(mem.nonEmpty, s"$key: equivalence vacuous on an empty result")
-      } finally sys.props.remove("graft.stream.sink")
-    }
+  test("stream_tws leaves the session's state-store provider as it found it") {
+    // transformWithState needs RocksDB for its own query only: a
+    // provider the session chose stays chosen, an unset one stays unset
+    val key = stream.Streaming.StateStoreProviderConf
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    spark.conf.set(key, rocks)
+    try {
+      stream.Streaming.tws(spark, TestSpark.Sf).collect()
+      assert(spark.conf.getAll.get(key) === Some(rocks))
+    } finally spark.conf.unset(key)
+    assert(stream.Streaming.tws(spark, TestSpark.Sf).collect().nonEmpty)
+    assert(!spark.conf.getAll.contains(key), spark.conf.getAll.get(key))
   }
 
-  test("rocksdb state store is result-equal to the default provider (r10)") {
-    // the sf≥10 knob (SPARK_GRAFT_STATE_STORE=rocksdb) must be a pure
-    // provider swap: stateful keys across the operator families —
-    // windowed agg (complete), dedup (append), flatMapGroupsWithState
-    // (update) — produce identical result sets under RocksDB
-    for (key <- Seq("stream_tumbling", "stream_dedup", "stream_session")) {
-      val default = SparkEntry.queries(key)(spark, TestSpark.Sf)
-        .collect().map(_.toString).sorted.toSeq
-      sys.props("graft.stream.stateStore") = "rocksdb"
-      try {
-        val rocks = SparkEntry.queries(key)(spark, TestSpark.Sf)
-          .collect().map(_.toString).sorted.toSeq
-        assert(rocks == default, s"$key: rocksdb store diverged from default")
-        assert(default.nonEmpty, s"$key: equivalence vacuous on an empty result")
-      } finally sys.props.remove("graft.stream.stateStore")
-    }
+  test("withConfs restores every conf when its body throws") {
+    val (held, unset) = ("graft.test.held", "spark.sql.sources.partitionOverwriteMode")
+    assert(!spark.conf.getAll.contains(unset))
+    spark.conf.set(held, "before")
+    try {
+      intercept[IllegalStateException] {
+        core.Sessions.withConfs(spark, held -> "inside", unset -> "dynamic") {
+          assert(spark.conf.get(held) === "inside")
+          assert(spark.conf.get(unset) === "dynamic")
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(spark.conf.get(held) === "before")
+      assert(!spark.conf.getAll.contains(unset), "an unset conf came back set")
+    } finally spark.conf.unset(held)
   }
 
   test("stream_anomaly: state rows = distinct users, not input rows") {
