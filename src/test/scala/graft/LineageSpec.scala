@@ -17,18 +17,25 @@ import graft.core.Lineage
 class LineageSpec extends AnyFunSuite {
   import TestSpark.{spark, Sf}
 
+  /** The reliable cuts under `dir`: setCheckpointDir creates a UUID
+    * subdir at once, and each checkpointed RDD writes an `rdd-<id>` dir
+    * into it (the test session keeps them: no cleanCheckpoints). */
+  private def cutsUnder(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.isDirectory)
+      .flatMap(sub => Option(sub.listFiles()).toSeq.flatten)
+      .filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
+
   /** Run `body(dir)` with the context's checkpoint dir set to a fresh
-    * temp `dir`, then clear it again so later suites stay local. */
+    * temp `dir`, check that the body's cuts landed there, then clear
+    * the dir again so later suites stay local. */
   private def withReliable[T](body: String => T): T = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
     spark.sparkContext.setCheckpointDir(tmp)
     try {
       val r = body(tmp)
-      // setCheckpointDir nests a UUID subdir, so "the cuts landed
-      // here" = tmp gained a subdirectory
-      val sub = new java.io.File(tmp).listFiles()
-      assert(sub != null && sub.exists(_.isDirectory),
-        s"reliable cut did not checkpoint under the configured dir $tmp")
+      assert(cutsUnder(tmp).nonEmpty,
+        s"no reliable cut landed under the configured dir $tmp")
       r
     } finally {
       CheckpointDirs.clear(spark.sparkContext)
@@ -50,14 +57,13 @@ class LineageSpec extends AnyFunSuite {
 
   test("reliable checkpoint knob: pagerank bit-identical, and actually reliable") {
     val local = rows(ops.Graph.pageRank(spark, Sf))
-    val reliable = withReliable { tmp =>
-      val r = rows(ops.Graph.pageRank(spark, Sf))
+    val reliable = withReliable(_ => rows(ops.Graph.pageRank(spark, Sf)))
+    assert(local == reliable)
+    withReliable { tmp =>
       val file = cutRdd().getCheckpointFile
       assert(file.exists(_.contains(tmp)),
         s"checkpoint dir $tmp set but the cut's RDD is checkpointed at $file")
-      r
     }
-    assert(local == reliable)
   }
 
   test("reliable checkpoint knob: pagerank iterations equal the reference on generated graphs") {

@@ -448,6 +448,7 @@ class StreamingSpec extends AnyFunSuite {
         "stream_session")) {
       val run = SparkEntry.queries(key)
       val base = run(spark, TestSpark.Sf).collect().map(_.toString).sorted
+      assert(base.nonEmpty, s"$key: vacuous")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocks)
       val swapped = try run(spark, TestSpark.Sf).collect().map(_.toString).sorted
       finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
