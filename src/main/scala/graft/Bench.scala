@@ -28,7 +28,7 @@ object Bench {
     val cpus = core.Sessions.envCpus
 
     // Host-identity probes ([[core.HostProbe]]: fixed-work canary,
-    // parallel canary, boot epoch), the same ones JdbcBench's artifact
+    // parallel canary, boot epoch), the same ones perfbench's artifact
     // carries. benchdiff prefers the par-canary for normalization when
     // both runs carry it.
     val bootEpoch: Long = core.HostProbe.bootEpoch()
@@ -102,12 +102,14 @@ object Bench {
 
     // Pass 1 also pays one-time fixture writes (streaming sources,
     // bucketed layouts); the min over passes measures the steady state.
+    // Each pass writes the key's full result to the noop sink, as
+    // perfbench's op does: a count() lets Catalyst prune most of it.
     val best = scala.collection.mutable.Map.empty[String, Double]
     val errors = scala.collection.mutable.Map.empty[String, String]
     for (_ <- 1 to Passes; name <- names) {
       val t0 = System.nanoTime()
       try {
-        SparkEntry.queries(name)(spark, sfDir).count()
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
         if (dt < best.getOrElse(name, Double.MaxValue)) best(name) = dt
       } catch {

@@ -98,12 +98,12 @@ object ScaleUp {
 
   /** Level-marker file: records the composition level that PRODUCED a
     * directory, so the next amplification can derive (and validate)
-    * its own level instead of trusting the caller. The r8 foot-gun
-    * this closes: a level-1 re-composition of level-1 data maps every
+    * its own level instead of trusting the caller. The foot-gun this
+    * closes: a level-1 re-composition of level-1 data maps every
     * shard's token to the SAME image, collapsing shards into exact
     * duplicates — observed once as a silent 107× near-dup candidate
-    * jump before ScaleStats caught it. Driver-generated testdata has
-    * no marker = level 0. */
+    * jump in a per-rung candidate count (ScaleUpSpec pins the marker
+    * law). Driver-generated testdata has no marker = level 0. */
   private val LevelMarker = "_scaleup_level"
 
   private[graft] def recordedLevel(dir: String): Int = {

@@ -1,7 +1,7 @@
 package graft.core
 
-/** Host-identity probes shared by every artifact-emitting main
-  * (Bench, JdbcBench) and by the perfbench harness: a fixed-work
+/** Host-identity probes shared by the artifact-emitting main
+  * (Bench) and by the perfbench harness: a fixed-work
   * single-thread CPU canary, its parallel variant, and the VM boot
   * epoch. One definition, called directly, so the cross-VM
   * comparability rule — compare absolute numbers only within a

@@ -27,7 +27,8 @@ import org.apache.spark.sql.Dataset
   *
   * Reliable cuts write one rdd-N dir each. [[Sessions.build]] sets
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` so the
-  * ContextCleaner deletes a cut's files once its RDD is GC'd; a
+  * ContextCleaner deletes a cut's files once its RDD is GC'd, and
+  * deletes the context's checkpoint dir when the application ends; a
   * session built elsewhere should do the same or provision the dir.
   */
 object Lineage {

@@ -2,18 +2,17 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Shuffle-scratch preflight for the dedup verify tail (r8 verdict
-  * task #6). The one real single-box lesson of the sf100 rung
-  * (BASELINE r13): the containment verify exchange wants ~68 GB of
-  * shuffle scratch — ordinary provisioned space on a cluster, but on
+/** Shuffle-scratch preflight for the dedup verify tail. The one real
+  * single-box lesson of the sf100 rung (BASELINE.md): the containment
+  * verify exchange wants ~68 GB of shuffle scratch — ordinary provisioned space on a cluster, but on
   * one box it silently fills `/tmp` mid-run unless `SPARK_LOCAL_DIRS`
   * spans more volumes. This turns that lesson into a check that runs
   * before any query does.
   *
   * Calibration, from measured rungs: containment prefix candidates
-  * grow at a constant ~17.2/doc at every measured decade (ScaleStats
-  * sf0.1 → sf100: 86,245/5k … 85,965,668/5M docs), and the sf100 run
-  * peaked at ~68 GB scratch for 85.9M candidates ≈ 850 B/candidate of
+  * grew at a constant ~17.2/doc at every measured decade (sf0.1 →
+  * sf100: 86,245/5k … 85,965,668/5M docs, BASELINE.md), and the sf100
+  * run peaked at ~68 GB scratch for 85.9M candidates ≈ 850 B/candidate of
   * shuffle file + spill. The estimate is deliberately the TAIL's
   * dominant term, not a sum — other keys' exchanges are an order
   * smaller and sequential with it. */

@@ -1,9 +1,11 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** One construction path for every shipped main's SparkSession
-  * (Verify / Bench / PlanDump / ScaleUp / ScaleStats / JdbcBench):
+  * (Verify / Bench / PlanDump / ScaleUp):
   * local[cpus], cpus shuffle partitions, UI off, and
   * [[graft.plans.GraftExtensions]] wired, so the ScanGuard plan lints
   * police every driver-gate and bench run at runtime, not only in the
@@ -105,6 +107,17 @@ object Sessions {
     System.err.println(
       s"[graft] ScanGuard extensions active (spark.sql.extensions=$ExtensionsClass)")
     s.sparkContext.setLogLevel("WARN")
+    // the cleaner deletes a cut's files only once its RDD is GC'd, so
+    // the last cuts and the context's own <uuid> checkpoint dir outlive
+    // the run; delete that dir when the application ends, or every run
+    // leaves a tree in a long-lived spark.checkpoint.dir
+    val sc = s.sparkContext
+    sc.addSparkListener(new SparkListener {
+      override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+        sc.getCheckpointDir.map(new Path(_)).foreach { p =>
+          p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+        }
+    })
     s
   }
 }

@@ -258,8 +258,8 @@ object Dedup {
     * is hash-gated here too. */
   /** Candidate stage of [[dedupIncremental]] — (doc_a, doc_b) pairs a
     * batch band signature raises against the stored index plus itself.
-    * Factored out so [[graft.ScaleStats]] counts EXACTLY what the
-    * keyed query verifies (nothing re-derived). */
+    * Factored out so ScaleUpSpec's candidate-growth test counts
+    * EXACTLY what the keyed query verifies (nothing re-derived). */
   private[graft] def incrementalCandidates(
       batchBands: DataFrame, index: DataFrame): DataFrame = {
     // probe: only buckets the index knows, exploded over the stored
@@ -365,7 +365,7 @@ object Dedup {
 
   /** (doc_id, band_idx, band_hash) LSH index of a (doc_id, shingle)
     * set — the signature+banding stage of [[nearDedupPairs]], one
-    * definition shared with [[graft.ScaleStats]]' candidate counting.
+    * definition shared with ScaleUpSpec's candidate counting.
     * localCheckpoint'ed: bandPairsKeyed's x/y branches and its ranking
     * window would otherwise re-run the 64-agg signature build per
     * branch (same stored-index note as cosineBandCandidates). */
@@ -714,9 +714,9 @@ object Dedup {
       prefixFilter = true))
 
   /** The keyed query's corpus: documents plus the planted sub-doc
-    * derivatives — one definition shared with [[graft.ScaleStats]]'
-    * candidate counting so stats measure the same input the query
-    * runs on. */
+    * derivatives — one definition shared with ScaleUpSpec's
+    * candidate counting so the growth test measures the same input
+    * the query runs on. */
   private[graft] def containmentCorpus(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
     val toks = split(col("text"), " ")
@@ -777,17 +777,18 @@ object Dedup {
 
   /** The 8-byte shingle fingerprint column of a (doc_id, shingle)
     * frame — one definition shared by [[containmentPairs]] and
-    * [[graft.ScaleStats]] so the measured stage is the keyed stage. */
+    * ScaleUpSpec's growth test, so the measured stage is the keyed
+    * stage. */
   private[graft] def fingerprinted(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
 
   /** PPJoin-style prefix-filtered candidates of a (doc_id, shingle)
     * set: each doc's n − ⌈t·n⌉ + 1 RAREST shingles joined against the
     * full set — recall-lossless by the prefix-filter theorem. One
-    * definition shared by [[containmentPairs]] and
-    * [[graft.ScaleStats]]' candidate counting. Un-distinct'ed.
+    * definition shared by [[containmentPairs]] and ScaleUpSpec's
+    * candidate counting. Un-distinct'ed.
     *
-    * POSITIONAL filter (r10, PPJoin's second pruning rule — Xiao et
+    * POSITIONAL filter (PPJoin's second pruning rule — Xiao et
     * al. WWW'08 §3.2 — adapted to the max-containment predicate): a
     * candidate row matches A's rank-i shingle to B's rank-j shingle
     * (both ranked in the ONE global rarity order). Common elements

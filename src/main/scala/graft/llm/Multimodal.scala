@@ -331,10 +331,10 @@ object Multimodal {
   /** Banded candidate pairs of [[imageDedup]] from its hash table —
     * THE stage whose cardinality decides whether image dedup is linear
     * or quadratic at scale (7×9 bands went chance-quadratic at 500k
-    * docs → 3×21 at r12; 3×21 measured 100×/decade on the decorrelated
-    * r14 corpus → chained triples, see [[PHashSlices]]).
-    * One definition shared by the keyed query and [[graft.ScaleStats]],
-    * so the per-decade candidate series measures exactly what ships. */
+    * docs → 3×21; 3×21 measured 100×/decade on the decorrelated
+    * corpus → chained triples, see [[PHashSlices]]).
+    * One definition shared by the keyed query and ScaleUpSpec's
+    * candidate-growth test, so the test measures exactly what ships. */
   /** (id cols..., cb, k1, k2, k3): one row per chained band-triple of
     * `hashCol`, the join key of both modalities' candidate stages. */
   private def tripleBands(h: DataFrame, hashCol: String,
@@ -375,29 +375,21 @@ object Multimodal {
       ") AS t(cb, ci, cj, ck))"
 
   /** The decoded-and-hashed image corpus — shared entry for the keyed
-    * query and ScaleStats (16 B/row; lineage cut so the decode pass
-    * runs once per session). */
+    * query and ScaleUpSpec's growth test (16 B/row; lineage cut so the
+    * decode pass runs once per session). */
   private[graft] def imageHashes(spark: SparkSession, dir: String): DataFrame =
     perceptualHash(spark, imageCorpus(spark, dir)).toDF().lineageCut()
-
-  /** Exact Hamming verify of the banded candidates — the other half
-    * of the ScaleStats pair: candidates vs VERIFIED pairs. Their ratio
-    * staying O(1) per rung is the proof the banding emits true
-    * near-dups (the composed rungs plant shard-replica clusters, so
-    * verified pairs themselves grow super-10× across a composition
-    * level — a data property, not chance-collision garbage). */
-  private[graft] def imageVerifiedFrom(h: DataFrame, cand: DataFrame): DataFrame =
-    cand
-      .join(h.select(col("doc_id").as("doc_a"), col("hash").as("_ha")), Seq("doc_a"))
-      .join(h.select(col("doc_id").as("doc_b"), col("hash").as("_hb")), Seq("doc_b"))
-      .withColumn("hamming", expr("cast(bit_count(_ha ^ _hb) as int)"))
-      .filter(col("hamming") <= PHashMaxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
 
   def imageDedup(spark: SparkSession, dir: String): DataFrame = {
     // read by the band explode and both verify sides
     val h = imageHashes(spark, dir)
-    ordered(imageVerifiedFrom(h, imageCandidatesFrom(h)))
+    // exact Hamming verify of the banded candidates
+    ordered(imageCandidatesFrom(h)
+      .join(h.select(col("doc_id").as("doc_a"), col("hash").as("_ha")), Seq("doc_a"))
+      .join(h.select(col("doc_id").as("doc_b"), col("hash").as("_hb")), Seq("doc_b"))
+      .withColumn("hamming", expr("cast(bit_count(_ha ^ _hb) as int)"))
+      .filter(col("hamming") <= PHashMaxHamming)
+      .select(col("doc_a"), col("doc_b"), col("hamming")))
   }
 
   private val imageDedupSql =
@@ -559,10 +551,11 @@ object Multimodal {
     * quadratic verify only ever sees banded survivors, never n²
     * (10 chained band rows per frame). */
   /** Aligned banded candidate (frame, doc pair) rows of [[videoDedup]]
-    * from its frame-hash table — the per-decade ScaleStats series for
-    * the video modality (same rationale as [[imageCandidatesFrom]]:
-    * every band widening so far was a quadratic caught by this
-    * series; it is the measurement that catches the next one). */
+    * from its frame-hash table — what ScaleUpSpec's candidate-growth
+    * test counts for the video modality (same rationale as
+    * [[imageCandidatesFrom]]: every band widening so far was a
+    * quadratic caught by a per-rung candidate count; the test catches
+    * the next one). */
   private[graft] def videoCandidatesFrom(h: DataFrame): DataFrame = {
     val bands = tripleBands(
       h.select(col("doc_id"), col("frame_idx"), col("fhash")),
@@ -574,17 +567,19 @@ object Multimodal {
   }
 
   /** The decoded per-frame hash table — shared entry for the keyed
-    * query and ScaleStats (one mapPartitions codec visit, no shuffle;
-    * lineage cut so the decode pass runs once per session). */
+    * query and ScaleUpSpec's growth test (one mapPartitions codec
+    * visit, no shuffle; lineage cut so the decode pass runs once per
+    * session). */
   private[graft] def videoFrameHashes(spark: SparkSession, dir: String): DataFrame =
     frameHashes(spark, videoCorpus(spark, dir)).toDF().lineageCut()
 
-  /** Per-frame exact Hamming verify of the aligned banded candidates,
-    * grouped to (doc pair, matched_frames) — shared by the keyed query
-    * and ScaleStats (same candidates-vs-verified rationale as
-    * [[imageVerifiedFrom]]). */
-  private[graft] def videoMatchedFrom(h: DataFrame, cand: DataFrame): DataFrame =
-    cand
+  def videoDedup(spark: SparkSession, dir: String): DataFrame = {
+    // read by the band explode, both verify sides, and the per-doc
+    // frame counts
+    val h = videoFrameHashes(spark, dir)
+    val nf = h.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
+    // per-frame exact Hamming verify of the aligned banded candidates
+    val matched = videoCandidatesFrom(h)
       .join(h.select(col("doc_id").as("doc_a"), col("frame_idx"),
         col("fhash").as("_ha")), Seq("doc_a", "frame_idx"))
       .join(h.select(col("doc_id").as("doc_b"), col("frame_idx"),
@@ -592,13 +587,6 @@ object Multimodal {
       .filter(expr(s"bit_count(_ha ^ _hb) <= $VideoMaxHamming"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("matched_frames"))
-
-  def videoDedup(spark: SparkSession, dir: String): DataFrame = {
-    // read by the band explode, both verify sides, and the per-doc
-    // frame counts
-    val h = videoFrameHashes(spark, dir)
-    val nf = h.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val matched = videoMatchedFrom(h, videoCandidatesFrom(h))
     ordered(matched
       .join(nf.select(col("doc_id").as("doc_a"), col("nf").as("_na")), Seq("doc_a"))
       .join(nf.select(col("doc_id").as("doc_b"), col("nf").as("_nb")), Seq("doc_b"))

@@ -833,12 +833,12 @@ object Similarity {
   private[graft] val PlantedIdFloor = 10000000L
 
   /** The ORACLE-facing slice of the LSH dedup output: base ids below
-    * [[BruteSliceRows]] plus every planted id — the same r7
+    * [[BruteSliceRows]] plus every planted id — the same
     * bounded-ground-truth design as the brute twin ([[BruteSliceRows]]
     * there), because the DuckDB oracle must brute ALL pairs of
     * whatever row set it checks: unsliced, that is n²/2 pairs × three
     * 64-dim dots = 2·10¹⁰ pairs at sf10, which is what actually killed
-    * the r12 sf10 oracle row (spilled past the disk, would have run
+    * the sf10 oracle row (spilled past the disk, would have run
     * for hours — an infeasible oracle, not a scratch shortfall). The
     * slice keeps the oracle at a CONSTANT ≈12.7M pairs at every SF and
     * keeps every planted pair inside it (derived ids ≥
@@ -847,8 +847,8 @@ object Similarity {
     * emitted rows are unchanged there. The LSH pipeline itself —
     * banding depth from the FULL corpus count, capped band self-join,
     * exact verify — still runs over the full corpus (the
-    * `cand_frac_lt_20pct` selectivity column and ScaleStats' candidate
-    * series keep measuring the full-corpus machinery). */
+    * `cand_frac_lt_20pct` selectivity column and ScaleUpSpec's
+    * candidate-growth tests keep measuring the full-corpus machinery). */
   private def inLshOracleSlice(id: Column): Column =
     id < BruteSliceRows.toLong || id >= PlantedIdFloor
 
@@ -859,8 +859,7 @@ object Similarity {
     val nPairs = nRows * (nRows - 1) / 2
     // materialize the (tiny) candidate set once: the selectivity count
     // and the verify join read the same blocks
-    val cand = cosineBandCandidates(e, srpBitsFor(nRows), DedupBands)
-      .lineageCut()
+    val cand = cosineDedupCandidates(e, nRows).lineageCut()
     cosineVerify(e, cand, DedupThreshold)
       .filter(inLshOracleSlice(col("id_a")) && inLshOracleSlice(col("id_b")))
       .withColumn("cand_frac_lt_20pct",
@@ -876,11 +875,13 @@ object Similarity {
     * banding is O(n²) in disguise: random (near-orthogonal) vectors
     * land in a shared 8-bit bucket with p ≈ 2⁻⁸ per band, so
     * candidates ≈ bands·n²/2⁹ — a constant FRACTION of all pairs, not
-    * a bounded set. Measured by [[graft.ScaleStats]]: 77 k candidates
-    * at sf0.1 → 7.37 M at sf1 (95.6× for 10× vectors, exactly the n²
-    * slope). With depth growing log₂(n), occupancy — and with it the
-    * random-collision candidate mass — stays flat, so candidates track
-    * the TRUE near-dup count (linear). Recall on the pinned families
+    * a bounded set. Measured: 77 k candidates at sf0.1 → 7.37 M at
+    * sf1 (95.6× for 10× vectors, exactly the n² slope); ScaleUpSpec's
+    * candidate-growth tests hold the fixed depth over the quadratic
+    * bound and this depth under it. With depth growing log₂(n),
+    * occupancy — and with it the random-collision candidate mass —
+    * stays flat, so candidates track the TRUE near-dup count
+    * (linear). Recall on the pinned families
     * stays deterministic-exact far beyond any shipped SF: a planted
     * pair at θ ≈ 2.9° flips a plane with p = θ/π ≈ 0.016, so at even
     * 16-bit bands P[a band breaks] = 1 − 0.984¹⁶ ≈ 0.23 and P[all 8
@@ -916,6 +917,11 @@ object Similarity {
     Dedup.bandPairs(banded)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
   }
+
+  /** [[cosineDedupLsh]]'s candidate stage over an `n`-row corpus: band
+    * depth [[srpBitsFor]]`(n)`. */
+  private[graft] def cosineDedupCandidates(e: DataFrame, n: Long): DataFrame =
+    cosineBandCandidates(e, srpBitsFor(n), DedupBands)
 
   private[graft] def cosineDedupLshImpl(
       e0: DataFrame, bits: Int, bands: Int, thr: Double): DataFrame =
@@ -1115,14 +1121,20 @@ object Similarity {
     s"CAST(FLOOR($code * 1.0 / (${semDivisorSql(nExpr)})) AS INT)"
   }
 
-  def semDedup(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
+  /** [[semDedup]]'s corpus with its adaptive cell id `cid` (and the
+    * corpus count `n_corpus` it was sized by): pairs within a cell are
+    * the query's candidate set. */
+  private[graft] def semCells(spark: SparkSession, dir: String): DataFrame = {
     val planted = plantedEmbeddings(emb(spark, dir))
     val nRow = planted.agg(count(lit(1)).as("n_corpus"))
-    val e = planted.crossJoin(broadcast(nRow))
+    planted.crossJoin(broadcast(nRow))
       .withColumn("cid",
         expr(semCidSql(i => s"element_at(embedding, $i)", "n_corpus")))
-      .withColumn("nrm", norm("embedding"))
+  }
+
+  def semDedup(spark: SparkSession, dir: String): DataFrame = {
+    DotProduct.register(spark)
+    val e = semCells(spark, dir).withColumn("nrm", norm("embedding"))
     val a = e.select(col("cid"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
     val b = e.select(col("cid"), col("vec_id").as("id_b"),
@@ -1541,10 +1553,11 @@ object Similarity {
     * √n, floored at the online-search [[IvfK]] and capped at
     * [[KnnKCeiling]]. This is the `srpBitsFor` lesson applied to IVF:
     * at FIXED K the cid-join candidate volume is (P/K)·n² — a
-    * quadratic wearing a linear disguise, the exact class of bug
-    * ScaleStats caught twice (fixed-8-bit SRP banding, fixed-16-cell
-    * semdedup). With K ≈ √n and P fixed, candidates = P·n/K per probe
-    * side ≈ P·n^{3/2} total — and per-query work P·√n, faiss's
+    * quadratic wearing a linear disguise, the class of bug that
+    * fixed-8-bit SRP banding and fixed-16-cell semdedup both had
+    * (ScaleUpSpec's candidate-growth tests pin K = 16 over the bound
+    * and this K under it). With K ≈ √n and P fixed, candidates =
+    * P·n/K per probe side ≈ P·n^{3/2} total — and per-query work P·√n, faiss's
     * standard nlist ≈ √n sizing. */
   private[graft] def knnKFor(n: Long): Int = {
     var k = IvfK
@@ -1555,10 +1568,9 @@ object Similarity {
   /** Training-sample size for a K-cell quantizer: ≥ 64 rows per
     * centroid (the [[IvfTrainSample]] floor covers online-search K);
     * the sample grows WITH K — capping K by a fixed sample is how the
-    * adaptive cell count silently stops adapting (caught by
-    * ScaleStats at sf1: K stuck at 64, candidate fraction stopped
-    * falling). Up to [[IvfDriverTrainK]] the sample is a driver
-    * collect (≤ 16 MB); past it the sample stays distributed
+    * adaptive cell count silently stops adapting (seen at sf1: K
+    * stuck at 64, candidate fraction stopped falling). Up to
+    * [[IvfDriverTrainK]] the sample is a driver collect (≤ 16 MB); past it the sample stays distributed
     * ([[ivfCentroidsDistributed]]) and only per-cell sums reach the
     * driver. */
   private[graft] def ivfTrainSampleFor(k: Int): Int =
@@ -1579,20 +1591,19 @@ object Similarity {
   private[graft] def knnJoinCandidates(
       spark: SparkSession, dir: String, nProbe: Int = KnnProbes,
       kOpt: Option[Int] = None): DataFrame =
-    // kOpt threads a caller's already-derived cell count through
-    // (r8 advice: knnJoin counted the embeddings table once for n and
-    // then this default path re-counted it to derive the same K)
+    // kOpt threads a caller's already-derived cell count through, so
+    // a caller that counted the embeddings for n does not count again
     knnJoinCandidatesAt(spark, dir, nProbe,
       kOpt.getOrElse(knnKFor(embCount(spark, dir))))
 
-  /** Candidates at an EXPLICIT cell count — [[ScaleStats]] uses this to
-    * measure the fixed-K quadratic control next to the adaptive path. */
+  /** Candidates at an EXPLICIT cell count — ScaleUpSpec's growth test
+    * uses it for the fixed-K quadratic control next to the adaptive path. */
   private[graft] def knnJoinCandidatesAt(
       spark: SparkSession, dir: String, nProbe: Int, k: Int,
       indexedOpt: Option[DataFrame] = None): DataFrame = {
     DotProduct.register(spark)
     val cents = trainedCentroids(spark, dir, k)
-    // r14: share the caller's cell scan (one fixture listing per query)
+    // share the caller's cell scan (one fixture listing per query)
     val indexed = indexedOpt.getOrElse(indexedCells(spark, dir, k))
     val qs = indexed.select(
       col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -1624,54 +1635,6 @@ object Similarity {
       .select(col("q_id"), col("vec_id"), col("score"), col("rn"))
   }
 
-  /** Exact candidate count WITHOUT re-running the candidate join:
-    * every (query, probed cell) contributes |cell| rows minus the one
-    * self-match when the probed cell is the query's own — so the count
-    * is one O(n·P) aggregate against the broadcast K-row cell-size
-    * table. [[knnJoin]] does not call it: its audit observes the
-    * candidate rows inside the edge job. ScaleStats measures
-    * candidate growth with it, and LlmSpec pins it equal to both the
-    * candidate join's count and [[knnJoin]]'s observed count. */
-  private[graft] def knnCandidateCount(
-      spark: SparkSession, dir: String, k: Int,
-      indexedOpt: Option[DataFrame] = None): Long = {
-    val cents = trainedCentroids(spark, dir, k)
-    // r14: callers that already hold the cell scan pass it in, so the
-    // audit shares ONE file index with the edge build instead of
-    // re-listing the cid-partitioned fixture (64 leaf dirs) per read
-    val indexed = indexedOpt.getOrElse(indexedCells(spark, dir, k))
-    val sizes = indexed.groupBy(col("cid")).agg(count(lit(1)).as("cell_n"))
-    val qs = indexed.select(
-      col("vec_id").as("q_id"), col("cid").as("own_cid"),
-      explode(probeCells(cents, math.min(KnnProbes, k))(col("embedding")))
-        .as("cid"))
-    val r = qs.join(broadcast(sizes), Seq("cid"))
-      .agg(sum(col("cell_n")),
-        count(when(col("cid") === col("own_cid"), lit(1))))
-      .head()
-    r.getLong(0) - r.getLong(1)
-  }
-
-  /** IVF cell-occupancy profile at cell count `k` — (nCells, max,
-    * mean, p99 of |cell|). The k-NN candidate math (P·n^{3/2})
-    * assumes cells near n/K; real embedding corpora cluster, and a
-    * hot cell turns every probe that routes to it into a mini
-    * all-pairs. ScaleStats emits this at every rung (r10, r9 verdict
-    * #3) so the assumption is MEASURED, not asserted — the remedy, if
-    * a rung ever shows p99 ≫ mean, is re-clustering hot-cell
-    * residuals (split), which changes the index fixture, not the
-    * query. One groupBy over the persisted index, driver gets 4
-    * scalars. */
-  private[graft] def ivfCellOccupancy(
-      spark: SparkSession, dir: String, k: Int): (Long, Long, Double, Long) = {
-    val sizes = indexedCells(spark, dir, k)
-      .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-    val r = sizes.agg(
-      count(lit(1)), max(col("n")), avg(col("n")),
-      expr("approx_percentile(n, 0.99, 10000)")).head()
-    (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))
-  }
-
   /** k-NN JOIN — every vector's top-[[KnnK]] neighbours in one pass,
     * the batch operator under retrieval-corpus construction, semantic
     * clustering prep, and graph-based ANN index builds (`llm_simsearch`
@@ -1698,8 +1661,8 @@ object Similarity {
   }
 
   /** [[knnJoin]]'s audit row plus the candidate and edge counts it was
-    * decided on, so LlmSpec can pin the observed counts against
-    * [[knnCandidateCount]] and the edge frame's own count. */
+    * decided on, so LlmSpec can pin the observed counts against the
+    * candidate join's count and the edge frame's own count. */
   private[graft] def knnJoinAudited(
       spark: SparkSession, dir: String): (DataFrame, Long, Long) = {
     DotProduct.register(spark)

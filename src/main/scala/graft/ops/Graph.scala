@@ -384,8 +384,8 @@ object Graph {
   private[graft] val WedgeBlockCap = 64
 
   /** Co-order adjacency edges of the link-prediction graph — one
-    * definition shared by the keyed query and [[graft.ScaleStats]]'
-    * wedge counting. Returns (pairs, edges); `edges` is
+    * definition shared by the keyed query and ScaleUpSpec's wedge
+    * counting. Returns (pairs, edges); `edges` is
     * localCheckpoint'ed (read by degrees AND the wedge join). */
   private[graft] def coOrderEdges(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {

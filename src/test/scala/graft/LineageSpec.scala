@@ -4,6 +4,7 @@ import org.apache.spark.CheckpointDirs
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Lineage
+import scala.jdk.CollectionConverters._
 
 /** Lineage durability's contract: with a checkpoint dir on the context
   * (`spark.checkpoint.dir` or `setCheckpointDir`) every per-round
@@ -94,5 +95,37 @@ class LineageSpec extends AnyFunSuite {
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
     rows(ops.Graph.pageRank(spark, Sf))
     assert(cutRdd().getCheckpointFile.isEmpty)
+  }
+
+  test("a Verify run with spark.checkpoint.dir leaves no checkpoint tree behind") {
+    // a main's own session (core.Sessions.build) in a child JVM, since
+    // the tree is left when the application ends; the poll proves the
+    // run's cuts did land in the dir before it was cleaned
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_run_").toFile
+    val out = java.nio.file.Files.createTempDirectory("graft_ckpt_out_").toFile
+    try {
+      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
+      val log = new java.io.File(out, "run.log")
+      val pb = new ProcessBuilder((Seq(
+        s"${System.getProperty("java.home")}/bin/java", "-Xmx1g",
+        s"-Dspark.checkpoint.dir=$ckpt", "-cp", System.getProperty("java.class.path")) ++
+        jvmArgs ++ Seq("graft.Verify", Sf, out.getPath, "graph_pagerank")).asJava)
+        .redirectErrorStream(true)
+        .redirectOutput(log)
+      pb.environment().put(core.Sessions.CpusEnv, "2")
+      val child = pb.start()
+      val deadline = System.nanoTime() + 300L * 1000000000L
+      var sawCut = false
+      while (child.isAlive && System.nanoTime() < deadline) {
+        sawCut ||= cutsUnder(ckpt.getPath).nonEmpty
+        Thread.sleep(20)
+      }
+      if (child.isAlive) { child.destroyForcibly(); fail("the Verify run took over 300 s") }
+      assert(child.exitValue() == 0, java.nio.file.Files.readString(log.toPath))
+      assert(new java.io.File(out, "graph_pagerank/_SUCCESS").isFile, "the key did not run")
+      assert(sawCut, s"no reliable cut landed under $ckpt during the run")
+      assert(ckpt.list().isEmpty, s"left behind: ${ckpt.list().mkString(", ")}")
+    } finally Seq(ckpt, out).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
   }
 }

@@ -793,9 +793,8 @@ class LlmSpec extends AnyFunSuite {
     for (sf <- Seq(Sf, s"${new java.io.File(Sf).getParent}/sf0.01")) {
       val (audit, nCand, nEdges) = llm.Similarity.knnJoinAudited(spark, sf)
       val n = core.Tables.load(spark, sf, "embeddings").count()
-      val k = llm.Similarity.knnKFor(n)
-      assert(nCand == llm.Similarity.knnCandidateCount(spark, sf, k),
-        s"$sf: observed candidate count differs from knnCandidateCount")
+      assert(nCand == llm.Similarity.knnJoinCandidates(spark, sf).count(),
+        s"$sf: observed candidate count differs from the candidate join's count")
       assert(nEdges == llm.Similarity.knnJoinEdges(spark, sf).count(),
         s"$sf: observed edge count differs from the edge frame's count")
       // the row the oracle replays: exact counts plus three pinned TRUEs
@@ -910,14 +909,6 @@ class LlmSpec extends AnyFunSuite {
     // determinism: same UDF twice, same routing
     val again = probes(llm.Similarity.nearestCentroidsHier(cents, 12, 2))
     assert(again == shipped, "hierarchical routing must be deterministic")
-  }
-
-  test("knn candidate count: the O(n*P) cell-size spelling equals the join count") {
-    val n = core.Tables.load(TestSpark.spark, TestSpark.Sf, "embeddings").count()
-    val k = llm.Similarity.knnKFor(n)
-    val cheap = llm.Similarity.knnCandidateCount(TestSpark.spark, TestSpark.Sf, k)
-    val join = llm.Similarity.knnJoinCandidates(TestSpark.spark, TestSpark.Sf).count()
-    assert(cheap == join, s"cell-size count $cheap != join count $join")
   }
 
   test("llm_mmr: first pick is max relevance, scores non-increasing, picks distinct, deterministic") {

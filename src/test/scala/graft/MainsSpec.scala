@@ -41,18 +41,35 @@ class MainsSpec extends AnyFunSuite {
     }
   }
 
+  private lazy val sources = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala")))(
+    _.iterator.asScala.filter(_.toString.endsWith(".scala")).map(Files.readString).toList)
+
   test("the program reads exactly the four SPARK_GRAFT_* knobs that README documents") {
     // a new knob must be added here and to README on purpose; a
     // Spark behaviour belongs in its spark.* conf instead
     val knob = "SPARK_GRAFT_[A-Z_]+".r
-    val sources = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala")))(
-      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
     assert(sources.nonEmpty)
-    val used = sources.flatMap(p => knob.findAllIn(Files.readString(p))).toSet
+    val used = sources.flatMap(knob.findAllIn(_)).toSet
     val documented = Set("CPUS", "SF_DIR", "BENCH_OUT", "STREAM_CKPT").map("SPARK_GRAFT_" + _)
     assert(used === documented)
     val readme = Files.readString(Paths.get("README.md"))
     val undocumented = documented.filterNot(readme.contains)
     assert(undocumented.isEmpty, s"README does not document $undocumented")
+  }
+
+  test("the program has exactly the four mains that README's Run section lists") {
+    // a fifth main must be added here and to README on purpose; a
+    // measurement belongs in a test or in Bench's record instead
+    val mains = sources.flatMap { src =>
+      val at = src.indexOf("def main(")
+      if (at < 0) None
+      else raw"object (\w+)".r.findAllMatchIn(src.take(at)).map(_.group(1)).toSeq.lastOption
+    }.toSet
+    val expected = Set("Bench", "Verify", "PlanDump", "ScaleUp")
+    assert(mains === expected)
+    val readme = Files.readString(Paths.get("README.md"))
+    val run = readme.split("\n## ").find(_.startsWith("Run"))
+      .getOrElse(fail("README has no Run section"))
+    assert(raw"runMain graft\.(\w+)".r.findAllMatchIn(run).map(_.group(1)).toSet === expected)
   }
 }
