@@ -4,11 +4,13 @@ import java.nio.file.{Files, Paths}
 
 
 /** Dumps `explain`-style physical plans of the headline queries to
-  * PLANS.md — the reviewable evidence for the plan-shape claims made in
+  * PLANS.md in the working directory — the reviewable evidence for the plan-shape claims made in
   * module scaladoc and pinned by PlanSpec (pushdown, broadcast vs SMJ,
   * bucketed no-exchange join, TakeOrderedAndProject top-k).
   *
-  * Run: `sbt "runMain graft.PlanDump"` (regenerates PLANS.md).
+  * Run: `sbt "runMain graft.PlanDump"` or `scripts/run_main.sh
+  * graft.PlanDump` (both start in the repo root, so either regenerates
+  * the repo's PLANS.md; run from a copy, it writes the copy's).
   */
 object PlanDump {
 
@@ -80,6 +82,8 @@ object PlanDump {
     "llm_image_dedup" -> "perceptual-hash image dedup: partition-local dHash (no shuffle), capped chained-band-triple self-join candidates, bit_count Hamming verify — never all-pairs",
     "llm_video_dedup" -> "video near-dup: partition-local per-frame gradient hash (no shuffle), capped (frame_idx,band,value) self-join, per-frame Hamming verify, coverage agg per doc pair")
 
+  private val Sf = "/root/testdata/sf0.001"
+
   def main(args: Array[String]): Unit = {
     val spark = core.Sessions.build("4",
       Map("spark.sql.session.timeZone" -> "UTC"))
@@ -95,22 +99,24 @@ object PlanDump {
       // which would hide the TakeOrdered shape — dump the subplan
       val df = key match {
         case "sample_bottomk" => ops.Relational.bottomKRanked(
-          core.Tables.load(spark, "/root/testdata/sf0.001", "orders"), 100)
-        // the keyed PQ query is the bound-summary row; the search plan
-        // worth documenting is the top-k pipeline itself
+          core.Tables.load(spark, Sf, "orders"), 100)
+        // the keyed IVF and PQ queries are bound-summary rows; the
+        // search plan worth documenting is the top-k pipeline itself
+        case "llm_simsearch_ivf" =>
+          llm.Similarity.simsearchIvfTopK(spark, Sf)
         case "llm_simsearch_pq" =>
-          llm.Similarity.simsearchPqTopK(spark, "/root/testdata/sf0.001")
+          llm.Similarity.simsearchPqTopK(spark, Sf)
         // the keyed knn query is the audit-summary row; the graph
         // pipeline is the plan worth documenting
         case "llm_knn_join" =>
-          llm.Similarity.knnJoinEdges(spark, "/root/testdata/sf0.001")
-        case _ => SparkEntry.queries(key)(spark, "/root/testdata/sf0.001")
+          llm.Similarity.knnJoinEdges(spark, Sf)
+        case _ => SparkEntry.queries(key)(spark, Sf)
       }
       sb.append(s"\n## $key\n\n_${why}_\n\n```\n")
       sb.append(df.queryExecution.executedPlan.toString.take(4000))
       sb.append("\n```\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${Headline.size} plans)")
     spark.stop()
   }

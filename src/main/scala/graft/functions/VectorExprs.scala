@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -55,10 +56,14 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Register `dot_product(a, b)` for use via `expr(...)`. */
+  /** Register `dot_product(a, b)` for use via `expr(...)`. A no-op on a
+    * session that has it: callers register at every vector read, and
+    * each replacement would log a warning. */
   def register(spark: SparkSession): String = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("dot_product")))
+      registry.createOrReplaceTempFunction(
+        "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
     "dot_product"
   }
 }

@@ -27,10 +27,34 @@ import graft.functions.DotProduct
   *    space (banded SRP buckets → candidates-only exact verify);
   *    `llm_cosine_dedup`, the brute pair join, is its test-scale
   *    ground truth — never run at 100 TB.
+  *
+  * Shared stages, each written once and called by every key that
+  * uses it:
+  *  - [[emb]] / [[indexedCells]] / [[withNorm]]: every vector read
+  *    goes through [[registered]], which registers `dot_product`;
+  *  - [[cosine]]: the rounded cosine score column;
+  *  - [[probeRows]] / [[probeSide]]: the [[NProbes]] fixed probes;
+  *  - [[topK]] and the scoring spine [[rankTopK]] (score, then
+  *    per-query top-k) — the exact search, the LSH/IVF/PQ verify
+  *    stages and the k-NN graph all rank here;
+  *  - [[exactTwinAudit]] and its oracle [[exactTwinSql]]: the audit
+  *    row of the four ANN search keys;
+  *  - [[probedCells]]: a vector's probed IVF cells;
+  *  - [[centroidDot]]: the one centroid dot loop behind the trainers,
+  *    the cell assignment and the probes.
   */
 object Similarity {
 
-  private def emb(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")
+  /** Every read of embedding vectors (the raw table, a persisted
+    * index, or a caller's frame via [[withNorm]]) passes through here:
+    * it registers the codegen'd `dot_product` on the frame's session,
+    * so scoring columns built on the result resolve. */
+  private def registered(df: DataFrame): DataFrame = {
+    DotProduct.register(df.sparkSession)
+    df
+  }
+
+  private def emb(s: SparkSession, d: String) = registered(Tables.load(s, d, "embeddings"))
 
   /** Corpus row count memoized per version of the embeddings table:
     * the adaptive ladders (IVF-K, SRP bits, PQ shortlist depth, knn-K)
@@ -55,16 +79,104 @@ object Similarity {
 
   /** Codegen'd dot product via the registered `dot_product` function
     * (Spark 4 hides the Column→Expression bridge, so custom expressions
-    * go through the function registry + `expr`). Callers must
-    * [[DotProduct.register]] on the session first. */
+    * go through the function registry + `expr`); [[registered]] has
+    * registered it on every frame this module scores. */
   private def dot(a: String, b: String): Column = expr(s"dot_product($a, $b)")
 
   private def norm(a: String): Column = sqrt(dot(a, a))
 
-  private val oracleCos =
-    "list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) / " +
-      "(sqrt(list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[]))) * " +
-      "sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))))"
+  /** `e` with each vector's norm `nrm`: computed once per vector (n
+    * ops), not once per pair (n·k). */
+  private def withNorm(e: DataFrame): DataFrame =
+    registered(e).withColumn("nrm", norm("embedding"))
+
+  /** The cosine score every exact path ranks or thresholds on, rounded
+    * so both engines compare identical values. */
+  private def cosine(x: String, y: String, nx: Column, ny: Column): Column =
+    round6(dot(x, y) / (nx * ny))
+
+  /** DuckDB's unrounded cosine of the embeddings of aliases `p`, `c`. */
+  private def oracleCosOf(p: String, c: String): String =
+    s"list_dot_product(CAST($p.embedding AS DOUBLE[]), CAST($c.embedding AS DOUBLE[])) / " +
+      s"(sqrt(list_dot_product(CAST($p.embedding AS DOUBLE[]), CAST($p.embedding AS DOUBLE[]))) * " +
+      s"sqrt(list_dot_product(CAST($c.embedding AS DOUBLE[]), CAST($c.embedding AS DOUBLE[]))))"
+
+  private val oracleCos = oracleCosOf("p", "c")
+
+  /** The search keys' fixed query probes are the [[NProbes]] lowest
+    * vec_ids; each answers its top [[TopK]]. */
+  private val NProbes = 10
+  private val TopK = 5
+
+  private def probeRows(df: DataFrame): DataFrame = df.filter(col("vec_id") < NProbes)
+
+  /** The probe side of an exact scoring join: (probe_id, probe_emb,
+    * probe_nrm) of `rows`, the norm given by `nrm`, then `extra`. */
+  private def probeSide(rows: DataFrame, nrm: Column, extra: Column*): DataFrame =
+    rows.select(Seq(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
+      nrm.as("probe_nrm")) ++ extra: _*)
+
+  /** Per-query top-`k` of `df`: number the rows of each `query` into
+    * `rn` by `score` desc, vec_id asc (the tiebreak both engines
+    * share), keep rn ≤ k. Spark plans it as a Partial WindowGroupLimit
+    * heap before the exchange and a Final one after. */
+  private def topK(df: DataFrame, query: String, score: String, rn: String, k: Int): DataFrame =
+    df.withColumn(rn, row_number().over(Window.partitionBy(col(query))
+      .orderBy(col(score).desc, col("vec_id").asc)))
+      .filter(col(rn) <= k)
+
+  /** The scoring spine of every exact and ANN search: the cosine of
+    * the query vector `<q>_emb` (norm `<q>_nrm`) against each candidate
+    * row's `embedding` (norm `nrm`), then the per-query top-`k`, as
+    * (`<q>_id`, vec_id, score, rn). `cands` holds only the pairs a path
+    * chose to score; a pruning bound on them (a reference-point bound,
+    * a per-query stopping rule) belongs here, where every path ranks. */
+  private def rankTopK(cands: DataFrame, q: String, nrm: Column, k: Int): DataFrame =
+    topK(cands.withColumn("score", cosine(s"${q}_emb", "embedding", col(s"${q}_nrm"), nrm)),
+      s"${q}_id", "score", "rn", k)
+      .select(col(s"${q}_id"), col("vec_id"), col("score"), col("rn"))
+
+  /** The (query, vec_id) pairs of a top-k frame, collected. */
+  private def pairs(df: DataFrame, query: String): Set[(Long, Long)] =
+    df.select(col(query), col("vec_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def recallOf(exact: Set[(Long, Long)], got: Set[(Long, Long)]): Double =
+    (exact & got).size.toDouble / exact.size
+
+  /** The exact-twin audit row of an ANN search key: the exact search
+    * ([[simsearch]], tiny: 10 probes × 5) runs next to `ann`, and the
+    * row is (n_probes, k, n_exact_pairs) then the key's `bounds` given
+    * the recall — booleans the oracle ([[exactTwinSql]]) pins to TRUE,
+    * so a recall or pruning regression fails the oracle compare. The
+    * exact twin is the verification harness, not the scale path. */
+  private def exactTwinAudit(spark: SparkSession, dir: String, ann: DataFrame)(
+      bounds: Double => Seq[Column]): DataFrame = {
+    val exact = pairs(simsearch(spark, dir), "probe_id")
+    spark.range(1).select(Seq(lit(NProbes.toLong).as("n_probes"),
+      lit(TopK.toLong).as("k"), lit(exact.size.toLong).as("n_exact_pairs")) ++
+      bounds(recallOf(exact, pairs(ann, "probe_id"))): _*)
+  }
+
+  /** The `exact` CTE of the audit oracles: each probe p of `probes`
+    * ranked over the whole corpus by rounded cosine, vec_id tiebreak
+    * ([[simsearch]]'s ranking); `where` restricts p. */
+  private def exactCteSql(probes: String, where: String): String =
+    s"""exact AS (
+       |  SELECT p.vec_id AS probe_id, c.vec_id,
+       |    ROW_NUMBER() OVER (PARTITION BY p.vec_id
+       |      ORDER BY round($oracleCos, 6) DESC, c.vec_id ASC) AS rn
+       |  FROM $probes p JOIN embeddings c ON c.vec_id <> p.vec_id$where)"""
+
+  /** Oracle of an [[exactTwinAudit]] row: the exact pair count, then
+    * the key's `bounds` columns. */
+  private def exactTwinSql(bounds: String): String =
+    s"""WITH ${exactCteSql("embeddings", s"\n       |  WHERE p.vec_id < $NProbes")}
+       |SELECT CAST($NProbes AS BIGINT) AS n_probes, CAST($TopK AS BIGINT) AS k,
+       |  COUNT(*) AS n_exact_pairs,
+       |  $bounds
+       |FROM exact WHERE rn <= $TopK
+       |${O.OrderAll}"""
 
   /** Brute-force cosine top-5 for 10 fixed probes. Ranking is on the
     * rounded score with vec_id tiebreak so both engines rank
@@ -73,27 +185,15 @@ object Similarity {
     * / `llm_simsearch_ivf` are graded against — at 100 TB you run
     * those; this one exists so "recall" has a ground truth. */
   def simsearch(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
-    // norms computed once per vector (n ops), not once per pair (n*k).
-    val e = emb(spark, dir).withColumn("nrm", norm("embedding"))
+    val e = withNorm(emb(spark, dir))
     // limit(10) is a provable identity (vec_id unique ⇒ ≤ 10 rows
     // match the filter) whose job is to put the probe-set bound IN
     // THE PLAN: the broadcast side of the non-equi scoring join then
     // carries maxRows = 10 — the in-plan license the inventory-wide
     // non-equi-join lint (PlanSpec sweep) checks for.
-    val probes = e.filter(col("vec_id") < 10).limit(10)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
-        col("nrm").as("probe_nrm"))
-    val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("score",
-        round6(dot("probe_emb", "embedding") /
-          (col("probe_nrm") * col("nrm"))))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    ordered(
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("probe_id"), col("vec_id"), col("score"), col("rn")))
+    val probes = probeSide(probeRows(e).limit(NProbes), col("nrm"))
+    ordered(rankTopK(e.join(broadcast(probes), col("vec_id") =!= col("probe_id")),
+      "probe", col("nrm"), TopK))
   }
 
   private val simsearchSql =
@@ -103,8 +203,8 @@ object Similarity {
        |    ROW_NUMBER() OVER (PARTITION BY p.vec_id
        |      ORDER BY round($oracleCos, 6) DESC, c.vec_id ASC) AS rn
        |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-       |  WHERE p.vec_id < 10)
-       |WHERE rn <= 5
+       |  WHERE p.vec_id < $NProbes)
+       |WHERE rn <= $TopK
        |${O.OrderAll}"""
 
   /** splitmix64 finalizer — full-avalanche deterministic mixing for
@@ -179,69 +279,51 @@ object Similarity {
     * ~2.3× the candidates (still a candidate-only cost; LlmSpec pins
     * both numbers and the ≤ 5× worst-case bound).
     *
-    * KEYED OUTPUT (since r5): the top-5 lists themselves are
-    * hash-family-specific, so the oracle-facing row is the exact-twin
-    * comparison — the query runs BOTH the exact search and the LSH
-    * search, measures recall and the multi-probe candidate overhead,
-    * and emits the bound booleans the DuckDB oracle pins to TRUE
-    * (plus the exact-pair count the oracle recomputes). A recall
-    * regression or a candidate blow-up turns the driver row red
-    * instead of hiding behind `no_oracle`. (The exact twin is the
-    * verification harness, not the scale path — at 100 TB only the
-    * LSH search runs; same pattern as `agg_approx_distinct`.)
-    * ScalaTest separately pins the tighter measured numbers. */
+    * KEYED OUTPUT: the top-5 lists themselves are hash-family-specific,
+    * so the oracle-facing row is the [[exactTwinAudit]] row: recall and
+    * the multi-probe candidate overhead as bound booleans, plus the
+    * exact-pair count the oracle recomputes (at 100 TB only the LSH
+    * search runs; same pattern as `agg_approx_distinct`). ScalaTest
+    * separately pins the tighter measured numbers. */
   def simsearchLsh(spark: SparkSession, dir: String): DataFrame = {
-    def pairs(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("probe_id"), col("vec_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(simsearch(spark, dir))       // tiny: 10 probes × 5
     // one banding pass: the tagged candidate set feeds the bound
     // counts AND the scoring join (checkpointed — it's pairs-sized)
     val tagged = simsearchCandidatesTagged(spark, dir).lineageCut()
-    val cRow = tagged
-      .agg(sum(col("_direct")).as("single"), count(lit(1)).as("multi")).head()
-    val (cSingle, cMulti) = (cRow.getLong(0), cRow.getLong(1))
-    val lsh = pairs(scoreTopK(spark, dir,
-      tagged.select(col("probe_id"), col("vec_id"))))
-    val recall = (exact & lsh).size.toDouble / exact.size
-    spark.range(1).select(
-      lit(10L).as("n_probes"), lit(5L).as("k"),
-      lit(exact.size.toLong).as("n_exact_pairs"),
-      lit(recall >= LshRecallBound).as("recall_ge_bound"),
-      lit(cMulti <= (SimBandBits + 1).toLong * cSingle)
-        .as("cand_le_multiprobe_bound"))
+    val (cSingle, cMulti) = candidateCounts(tagged)
+    exactTwinAudit(spark, dir,
+      scoreTopK(spark, dir, tagged.select(col("probe_id"), col("vec_id")))) { recall =>
+      Seq(lit(recall >= LshRecallBound).as("recall_ge_bound"),
+        lit(cMulti <= (SimBandBits + 1).toLong * cSingle).as("cand_le_multiprobe_bound"))
+    }
   }
 
   private val simsearchLshSql =
-    s"""WITH exact AS (
-       |  SELECT p.vec_id AS probe_id, c.vec_id,
-       |    ROW_NUMBER() OVER (PARTITION BY p.vec_id
-       |      ORDER BY round($oracleCos, 6) DESC, c.vec_id ASC) AS rn
-       |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-       |  WHERE p.vec_id < 10)
-       |SELECT CAST(10 AS BIGINT) AS n_probes, CAST(5 AS BIGINT) AS k,
-       |  COUNT(*) AS n_exact_pairs,
-       |  TRUE AS recall_ge_bound, TRUE AS cand_le_multiprobe_bound
-       |FROM exact WHERE rn <= 5
-       |${O.OrderAll}"""
+    exactTwinSql("TRUE AS recall_ge_bound, TRUE AS cand_le_multiprobe_bound")
+
+  /** The corpus banded once by the search's SRP index (vec_id,
+    * band_idx, bucket), cut so the probe side reuses it (see
+    * cosineBandCandidates). */
+  private def simBanded(spark: SparkSession, dir: String): DataFrame =
+    emb(spark, dir).select(col("vec_id"),
+      posexplode(srpBands(SimBandBits, SimBands)(col("embedding"))).as(Seq("band_idx", "bucket")))
+      .lineageCut()
+
+  /** A band bucket, then its [[SimBandBits]] 1-bit flips. */
+  private def withFlips(bucket: Column): Column =
+    array(bucket +: (0 until SimBandBits).map(j => bucket.bitwiseXOR(lit(1 << j))): _*)
 
   /** Candidate (probe_id, vec_id) pairs from the banded SRP index;
     * `multiProbe` adds the 1-bit-flipped probe buckets. Exposed so
     * LlmSpec can price the multi-probe candidate overhead directly. */
   private[graft] def simsearchCandidates(
       spark: SparkSession, dir: String, multiProbe: Boolean): DataFrame = {
-    val bandsOf = srpBands(SimBandBits, SimBands)
-    // banded once, reused by the probe side (see cosineBandCandidates)
-    val banded = emb(spark, dir).select(col("vec_id"),
-      posexplode(bandsOf(col("embedding"))).as(Seq("band_idx", "bucket")))
-      .lineageCut()
-    val probeBase = banded.filter(col("vec_id") < 10)
+    val banded = simBanded(spark, dir)
+    val probeBase = probeRows(banded)
       .select(col("vec_id").as("probe_id"), col("band_idx"), col("bucket"))
     val probeBands =
       if (!multiProbe) probeBase
       else probeBase.select(col("probe_id"), col("band_idx"),
-        explode(array(col("bucket") +: (0 until SimBandBits).map(j =>
-          col("bucket").bitwiseXOR(lit(1 << j))): _*)).as("bucket"))
+        explode(withFlips(col("bucket"))).as("bucket"))
     banded.join(broadcast(probeBands), Seq("band_idx", "bucket"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id")).distinct()
@@ -256,51 +338,37 @@ object Similarity {
     * total, not three. */
   private[graft] def simsearchCandidatesTagged(
       spark: SparkSession, dir: String): DataFrame = {
-    val bandsOf = srpBands(SimBandBits, SimBands)
-    // banded once, reused by the probe side (see cosineBandCandidates)
-    val banded = emb(spark, dir).select(col("vec_id"),
-      posexplode(bandsOf(col("embedding"))).as(Seq("band_idx", "bucket")))
-      .lineageCut()
-    val probeBands = banded.filter(col("vec_id") < 10)
+    val banded = simBanded(spark, dir)
+    val probeBands = probeRows(banded)
       .select(col("vec_id").as("probe_id"), col("band_idx"),
-        posexplode(array(col("bucket") +: (0 until SimBandBits).map(j =>
-          col("bucket").bitwiseXOR(lit(1 << j))): _*))
-          .as(Seq("probe_pos", "bucket")))
+        posexplode(withFlips(col("bucket"))).as(Seq("probe_pos", "bucket")))
     banded.join(broadcast(probeBands), Seq("band_idx", "bucket"))
       .filter(col("vec_id") =!= col("probe_id"))
       .groupBy(col("probe_id"), col("vec_id"))
       .agg(max(when(col("probe_pos") === 0, 1L).otherwise(0L)).as("_direct"))
   }
 
-  private[graft] def simsearchCandidateCounts(
-      spark: SparkSession, dir: String): (Long, Long) = {
-    val row = simsearchCandidatesTagged(spark, dir)
-      .agg(sum(col("_direct")).as("single"), count(lit(1)).as("multi"))
-      .head()
+  /** (single-probe, multi-probe) candidate counts of a tagged
+    * candidate set. */
+  private def candidateCounts(tagged: DataFrame): (Long, Long) = {
+    val row = tagged
+      .agg(sum(col("_direct")).as("single"), count(lit(1)).as("multi")).head()
     (row.getLong(0), row.getLong(1))
   }
 
+  private[graft] def simsearchCandidateCounts(
+      spark: SparkSession, dir: String): (Long, Long) =
+    candidateCounts(simsearchCandidatesTagged(spark, dir))
+
   /** Exact-cosine scoring + per-probe top-5 over a candidate
-    * (probe_id, vec_id) list — the verify stage both ANN paths share. */
+    * (probe_id, vec_id) list — the verify stage of the LSH path. */
   private def scoreTopK(
       spark: SparkSession, dir: String, cand: DataFrame): DataFrame = {
-    DotProduct.register(spark)
-    val e = emb(spark, dir).withColumn("nrm", norm("embedding"))
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
-        col("nrm").as("probe_nrm"))
+    val e = withNorm(emb(spark, dir))
     val scored = cand
       .join(e.select(col("vec_id"), col("embedding"), col("nrm")), Seq("vec_id"))
-      .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("score",
-        round6(dot("probe_emb", "embedding") /
-          (col("probe_nrm") * col("nrm"))))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    ordered(
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("probe_id"), col("vec_id"), col("score"), col("rn")))
+      .join(broadcast(probeSide(probeRows(e), col("nrm"))), Seq("probe_id"))
+    ordered(rankTopK(scored, "probe", col("nrm"), TopK))
   }
 
   private[graft] def simsearchLshImpl(
@@ -347,14 +415,7 @@ object Similarity {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Long](k)
       unit.foreach { v =>
-        var best = 0; var bestDot = Double.NegativeInfinity
-        var c = 0
-        while (c < cents.length) {
-          var s = 0.0; var i = 0
-          while (i < dim) { s += cents(c)(i) * v(i); i += 1 }
-          if (s > bestDot) { bestDot = s; best = c }
-          c += 1
-        }
+        val best = nearest(cents, v)
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
         counts(best) += 1
@@ -397,7 +458,8 @@ object Similarity {
     *  - only K rows per iteration reach the driver (the per-cell
     *    sums: K×64 longs ≈ 2 MB at K=4096) vs the driver path's
     *    64·K-row sample collect (128 MB at K=4096) plus its
-    *    SEQUENTIAL ~2e11-flop Lloyd pass — the r14 ceiling;
+    *    SEQUENTIAL ~2e11-flop Lloyd pass, where the driver trainer
+    *    stopped scaling;
     *  - recenter sums are EXACT-INTEGER: unit-vector components are
     *    fixed-point-quantized (×2²⁴, half-up) to longs before the
     *    per-cell sum, so the distributed aggregation is
@@ -414,9 +476,8 @@ object Similarity {
       e0: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
     val n = e0.count()
     val gate = math.max(1L, n / ivfTrainSampleFor(k).toLong)
-    val unit = e0
-      .filter(pmod(xxhash64(lit("graft_ivf_train"), col("vec_id")), lit(gate)) === 0)
-      .withColumn("nrm", norm("embedding"))
+    val unit = withNorm(e0
+      .filter(pmod(xxhash64(lit("graft_ivf_train"), col("vec_id")), lit(gate)) === 0))
       .withColumn("q", transform(col("embedding"),
         x => round(x.cast("double") / col("nrm") * IvfFixedPoint).cast("long")))
       .select(col("vec_id"), col("embedding"), col("q"))
@@ -476,7 +537,6 @@ object Similarity {
   private[graft] def ensureIvfIndex(
       spark: SparkSession, dir: String, k: Int = IvfK): String =
     Fixtures.once(dir, s"ivf_index_k${k}i$IvfIters", "embeddings") { tmp =>
-      DotProduct.register(spark) // nrm below uses the registered function
       ivfTrainCount.incrementAndGet()
       // past the driver ceiling, training itself goes distributed —
       // which lifted knnKFor's cap to [[KnnKCeiling]]
@@ -487,8 +547,7 @@ object Similarity {
       cents.zipWithIndex.toSeq.map { case (c, i) => (i, c) }
         .toDF("cid", "centroid")
         .coalesce(1).write.parquet(s"$tmp/centroids")
-      emb(spark, dir)
-        .withColumn("nrm", norm("embedding"))
+      withNorm(emb(spark, dir))
         .withColumn("cid", nearestCentroid(cents)(col("embedding")))
         .write.partitionBy("cid").parquet(s"$tmp/cells")
     }
@@ -512,40 +571,51 @@ object Similarity {
 
   /** The persisted cell-assigned corpus (vec_id, embedding, nrm, cid). */
   private def indexedCells(
-      spark: SparkSession, dir: String, k: Int = IvfK): DataFrame = {
-    spark.read.schema(IndexedCellsSchema).parquet(s"${ensureIvfIndex(spark, dir, k)}/cells")
+      spark: SparkSession, dir: String, k: Int = IvfK): DataFrame =
+    registered(spark.read.schema(IndexedCellsSchema)
+      .parquet(s"${ensureIvfIndex(spark, dir, k)}/cells"))
+
+  /** The one centroid dot loop: centroid `c` against vector `v` over
+    * their common length, summed in index order. The trainers, the
+    * cell assignment and the probes all score through it, so a
+    * persisted index and the queries served from it agree bit for
+    * bit. A float vector is widened to double first, exactly as the
+    * mixed-type product would widen it. */
+  private def centroidDot(c: Array[Double], v: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < c.length && i < v.length) { s += c(i) * v(i); i += 1 }
+    s
   }
 
-  /** Argmax-dot cluster assignment against unit centroids (|v| is
-    * constant per row, so max dot = max cosine); ties resolve to the
-    * lowest centroid id. */
-  private def nearestCentroid(cents: Array[Array[Double]]) = udf { (v: Array[Float]) =>
+  /** Index of the max-dot centroid; ties resolve to the lowest id. */
+  private def nearest(cents: Array[Array[Double]], v: Array[Double]): Int = {
     var best = 0
     var bestDot = Double.NegativeInfinity
     var c = 0
     while (c < cents.length) {
-      val cent = cents(c)
-      var s = 0.0
-      var i = 0
-      while (i < cent.length && i < v.length) { s += cent(i) * v(i); i += 1 }
+      val s = centroidDot(cents(c), v)
       if (s > bestDot) { bestDot = s; best = c }
       c += 1
     }
     best
   }
 
-  /** Top-`nProbe` nearest centroid ids for a query vector (dot desc,
-    * centroid id asc on ties). */
+  /** The `n` of centroids `ids` with the largest dot against `v` (dot
+    * desc, id asc on ties). */
+  private def nearestOf(cents: Array[Array[Double]], ids: Seq[Int], v: Array[Double],
+      n: Int): Seq[Int] =
+    ids.map(c => (-centroidDot(cents(c), v), c)).sorted.take(n).map(_._2)
+
+  /** Argmax-dot cluster assignment against unit centroids (|v| is
+    * constant per row, so max dot = max cosine). */
+  private def nearestCentroid(cents: Array[Array[Double]]) = udf { (v: Array[Float]) =>
+    nearest(cents, v.map(_.toDouble))
+  }
+
+  /** Top-`nProbe` nearest centroid ids for a query vector. */
   private def nearestCentroids(cents: Array[Array[Double]], nProbe: Int) =
-    udf { (v: Array[Float]) =>
-      cents.indices.map { c =>
-        val cent = cents(c)
-        var s = 0.0
-        var i = 0
-        while (i < cent.length && i < v.length) { s += cent(i) * v(i); i += 1 }
-        (-s, c)
-      }.sorted.take(nProbe).map(_._2).toArray
-    }
+    udf { (v: Array[Float]) => nearestOf(cents, cents.indices, v.map(_.toDouble), nProbe).toArray }
 
   /** Past this cell count the FLAT probe's K·dim dots per vector is
     * the next binding constraint (the one [[KnnKCeiling]]'s scaladoc
@@ -576,17 +646,7 @@ object Similarity {
     while (kc * kc < cents.length) kc *= 2
     val coarse = lloydInMemory(cents, kc, IvfIters)
     val members = Array.fill(coarse.length)(List.newBuilder[Int])
-    cents.indices.foreach { f =>
-      var best = 0; var bestDot = Double.NegativeInfinity
-      var c = 0
-      while (c < coarse.length) {
-        var s = 0.0; var i = 0
-        while (i < coarse(c).length) { s += coarse(c)(i) * cents(f)(i); i += 1 }
-        if (s > bestDot) { bestDot = s; best = c }
-        c += 1
-      }
-      members(best) += f
-    }
+    cents.indices.foreach(f => members(nearest(coarse, cents(f))) += f)
     (coarse, members.map(_.result().toArray))
   }
 
@@ -599,15 +659,9 @@ object Similarity {
       cents: Array[Array[Double]], nProbe: Int, rCoarse: Int) = {
     val (coarse, members) = coarseRouter(cents)
     udf { (v: Array[Float]) =>
-      def dotV(c: Array[Double]): Double = {
-        var s = 0.0; var i = 0
-        while (i < c.length && i < v.length) { s += c(i) * v(i); i += 1 }
-        s
-      }
-      val topCoarse = coarse.indices.map(c => (-dotV(coarse(c)), c))
-        .sorted.take(math.min(rCoarse, coarse.length)).map(_._2)
-      topCoarse.flatMap(members(_)).map(f => (-dotV(cents(f)), f))
-        .sorted.take(nProbe).map(_._2).toArray
+      val d = v.map(_.toDouble)
+      nearestOf(cents, nearestOf(coarse, coarse.indices, d, rCoarse).flatMap(members(_)),
+        d, nProbe).toArray
     }
   }
 
@@ -621,6 +675,10 @@ object Similarity {
       nearestCentroidsHier(cents, nProbe, math.max(1, kc / HierCoarseDiv))
     } else nearestCentroids(cents, nProbe)
 
+  /** A row's probed cells, one output row per cell id `cid`. */
+  private def probedCells(cents: Array[Array[Double]], nProbe: Int): Column =
+    explode(probeCells(cents, nProbe)(col("embedding"))).as("cid")
+
   /** ANN via IVF (inverted-file) — the other standard scale path next
     * to SRP-LSH: a K-centroid coarse quantizer partitions the corpus
     * into cells; a query scores only vectors in its [[IvfProbes]]
@@ -633,26 +691,13 @@ object Similarity {
     * pass, cells are the natural partition key for the stored index,
     * and K grows ~√n so cells stay executor-sized. */
   private[graft] def simsearchIvfTopK(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
     val cents = trainedCentroids(spark, dir)
     // served FROM the persisted index — cell assignment was paid once
     // at index build, not per query
     val indexed = indexedCells(spark, dir)
-    val probes = indexed.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
-        col("nrm").as("probe_nrm"),
-        explode(nearestCentroids(cents, IvfProbes)(col("embedding"))).as("cid"))
-    val scored = indexed.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("score",
-        round6(dot("probe_emb", "embedding") /
-          (col("probe_nrm") * col("nrm"))))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    ordered(
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("probe_id"), col("vec_id"), col("score"), col("rn")))
+    val probes = probeSide(probeRows(indexed), col("nrm"), probedCells(cents, IvfProbes))
+    ordered(rankTopK(indexed.join(broadcast(probes), Seq("cid"))
+      .filter(col("vec_id") =!= col("probe_id")), "probe", col("nrm"), TopK))
   }
 
   /** Recall/pruning floors for the IVF search, measured with margin on
@@ -664,61 +709,49 @@ object Similarity {
   private[graft] val IvfRecallBound = 0.8
   private[graft] val IvfScoredFracBound = 0.4
 
-  /** Keyed IVF query (since r5): like [[simsearchLsh]], the oracle-facing
-    * row is the exact-twin comparison — recall vs the exact top-5 and
-    * the scored-candidate fraction, emitted as bound booleans the
-    * oracle pins to TRUE. A quantizer regression (recall collapse) or a
-    * cell-balance regression (pruning collapse) turns the driver row
-    * red. ScalaTest pins the tighter measured numbers; the persisted
-    * build-once index economics are proven by the no-retrain test. */
-  def simsearchIvf(spark: SparkSession, dir: String): DataFrame = {
-    def pairs(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("probe_id"), col("vec_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(simsearch(spark, dir))
-    val ivf = pairs(simsearchIvfTopK(spark, dir))
-    val recall = (exact & ivf).size.toDouble / exact.size
-    val n = embCount(spark, dir)
-    val cand = simsearchIvfCandidates(spark, dir).count()
-    val frac = cand.toDouble / (10.0 * (n - 1))
-    spark.range(1).select(
-      lit(10L).as("n_probes"), lit(5L).as("k"),
-      lit(exact.size.toLong).as("n_exact_pairs"),
-      lit(recall >= IvfRecallBound).as("recall_ge_bound"),
+  /** Keyed IVF query: like [[simsearchLsh]], the oracle-facing row is
+    * the [[exactTwinAudit]] row — recall vs the exact top-5 and the
+    * scored-candidate fraction as bound booleans. A quantizer
+    * regression (recall collapse) or a cell-balance regression
+    * (pruning collapse) fails the oracle compare. ScalaTest pins the
+    * tighter measured numbers; the persisted build-once index
+    * economics are proven by the no-retrain test. */
+  def simsearchIvf(spark: SparkSession, dir: String): DataFrame =
+    exactTwinAudit(spark, dir, simsearchIvfTopK(spark, dir))(
+      ivfBounds(spark, dir, IvfRecallBound))
+
+  /** The IVF keys' bound columns given the recall: recall against
+    * `recallBound`, and the share of all probe pairs (each probe with
+    * the other n−1 vectors) that the IVF candidates score, against
+    * [[IvfScoredFracBound]]. */
+  private def ivfBounds(spark: SparkSession, dir: String,
+      recallBound: Double): Double => Seq[Column] = {
+    val frac = simsearchIvfCandidates(spark, dir).count().toDouble /
+      (NProbes.toDouble * (embCount(spark, dir) - 1))
+    recall => Seq(lit(recall >= recallBound).as("recall_ge_bound"),
       lit(frac <= IvfScoredFracBound).as("scored_frac_le_bound"))
   }
 
   private val simsearchIvfSql =
-    s"""WITH exact AS (
-       |  SELECT p.vec_id AS probe_id, c.vec_id,
-       |    ROW_NUMBER() OVER (PARTITION BY p.vec_id
-       |      ORDER BY round($oracleCos, 6) DESC, c.vec_id ASC) AS rn
-       |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-       |  WHERE p.vec_id < 10)
-       |SELECT CAST(10 AS BIGINT) AS n_probes, CAST(5 AS BIGINT) AS k,
-       |  COUNT(*) AS n_exact_pairs,
-       |  TRUE AS recall_ge_bound, TRUE AS scored_frac_le_bound
-       |FROM exact WHERE rn <= 5
-       |${O.OrderAll}"""
+    exactTwinSql("TRUE AS recall_ge_bound, TRUE AS scored_frac_le_bound")
+
+  /** The probes' IVF cells: (probe_id, cid), one row per probed cell. */
+  private def ivfProbeCells(indexed: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    probeRows(indexed).select(col("vec_id").as("probe_id"), probedCells(cents, IvfProbes))
 
   /** IVF candidate (probe_id, vec_id) pairs — exposed so LlmSpec can
     * price the probed fraction directly. */
   private[graft] def simsearchIvfCandidates(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
-    val cents = trainedCentroids(spark, dir)
     val indexed = indexedCells(spark, dir)
-    val probes = indexed.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"),
-        explode(nearestCentroids(cents, IvfProbes)(col("embedding"))).as("cid"))
-    indexed.join(broadcast(probes), Seq("cid"))
+    indexed.join(broadcast(ivfProbeCells(indexed, trainedCentroids(spark, dir))), Seq("cid"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"))
   }
 
   /** Hard ceiling on the brute pair join: above this the keyed query
     * REFUSES instead of silently launching an O(n²)
-    * BroadcastNestedLoop (r4 verdict: a ground-truth query reachable
-    * from the driver at arbitrary sf must not be a scale trap). 50k
+    * BroadcastNestedLoop (a ground-truth query reachable from the
+    * driver at arbitrary sf must not be a scale trap). 50k
     * rows ≈ 1.25G pairs — already an hour-class job; every shipped
     * test corpus is orders of magnitude below. */
   private[graft] val MaxBruteRows = 50000L
@@ -726,7 +759,7 @@ object Similarity {
   /** The keyed brute twin's corpus bound: the LOWEST-id slice of the
     * embeddings table, so the ground-truth query stays a bounded,
     * deterministic sample at every scale factor instead of growing
-    * quadratically with the corpus (r7 verdict: the un-sliced twin hit
+    * quadratically with the corpus (the un-sliced twin hit
     * 263 s at sf1 — 38 % of the whole bench — for a query whose entire
     * job is to be a reference, which `llm_cosine_dedup_lsh` already
     * covers at scale). 5 000 vectors = 12.5 M pairs ≈ 16 s worst-case
@@ -746,7 +779,6 @@ object Similarity {
     * smaller, a bounded sample at sf ≥ 1). At 100 TB you run the LSH
     * query, never this one. */
   def cosineDedup(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
     // TakeOrdered at the scan: the slice never materializes a global
     // sort of the full table
     val e = emb(spark, dir).orderBy(col("vec_id")).limit(BruteSliceRows)
@@ -756,28 +788,30 @@ object Similarity {
   /** Brute all-pairs cosine dedup over an arbitrary (vec_id, embedding)
     * frame — shared by the keyed query and the planted-dup ScalaTest. */
   private[graft] def cosineDedupImpl(e0: DataFrame, thr: Double): DataFrame = {
-    DotProduct.register(e0.sparkSession)
-    val withNorm = e0.withColumn("nrm", norm("embedding"))
-    // parallelism floor on the STREAM side of the nested-loop pair join
-    // (r14): the slice arrives as ONE partition (TakeOrdered output),
+    val e = withNorm(e0)
+    // parallelism floor on the STREAM side of the nested-loop pair join:
+    // the slice arrives as ONE partition (TakeOrdered output),
     // so the whole O(slice²) dot-product pass ran on one core — 2.2 s
     // of the key's 2.4 s at sf0.1, and the scaladoc's 16 s worst case
     // at the 5 000-row bound would serialize the same way. Spreading
     // the probe side divides the pair work by the core count; the
     // broadcast side is unchanged.
-    val a = graft.core.Spread
-      .cpuBound(e0.sparkSession, withNorm)
-      .select(col("vec_id").as("id_a"),
-        col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
-    val b = withNorm.select(col("vec_id").as("id_b"),
-      col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
-    ordered(
-      a.join(b, col("id_a") < col("id_b"))
-        .withColumn("cos",
-          round6(dot("emb_a", "emb_b") / (col("nrm_a") * col("nrm_b"))))
-        .filter(col("cos") >= thr)
-        .select(col("id_a"), col("id_b"), col("cos")))
+    val a = pairSide(graft.core.Spread.cpuBound(e0.sparkSession, e), "a")
+    ordered(cosineAtLeast(a.join(pairSide(e, "b"), col("id_a") < col("id_b")), thr))
   }
+
+  /** One side of a vector pair join: the `keys` columns, then `e`'s
+    * vec_id, embedding and nrm as id_<s>, emb_<s>, nrm_<s>. */
+  private def pairSide(e: DataFrame, s: String, keys: Column*): DataFrame =
+    e.select(keys ++ Seq(col("vec_id").as(s"id_$s"), col("embedding").as(s"emb_$s"),
+      col("nrm").as(s"nrm_$s")): _*)
+
+  /** The (id_a, id_b, cos) pairs of a pair join whose cosine reaches
+    * `thr` — only the pairs joined pay the dot product. */
+  private def cosineAtLeast(pairs: DataFrame, thr: Double): DataFrame =
+    pairs.withColumn("cos", cosine("emb_a", "emb_b", col("nrm_a"), col("nrm_b")))
+      .filter(col("cos") >= thr)
+      .select(col("id_a"), col("id_b"), col("cos"))
 
   private[graft] val DedupBandBits = 8 // bits per band
   private[graft] val DedupBands = 8    // bands → 64 hyperplanes total
@@ -794,7 +828,7 @@ object Similarity {
     * ground truth. Why plant: the synthetic embeddings are mutually
     * near-orthogonal, so a production threshold would be vacuous on
     * them — planting puts real mass above 0.9 where the production
-    * band depth (8×8) has something to find (r4 verdict ask). */
+    * band depth (8×8) has something to find. */
   private[graft] def plantedEmbeddings(e0: DataFrame): DataFrame = {
     val base = e0.select(col("vec_id"), col("embedding"))
     def derived(offset: Long, f: Column => Column): DataFrame =
@@ -806,14 +840,30 @@ object Similarity {
       .unionByName(derived(20000000L, x => x + lit(0.05) * abs(x)))
   }
 
+  /** DuckDB's rebuild of [[plantedEmbeddings]] as a `planted` CTE;
+    * `where` restricts the real rows. */
+  private def plantedCteSql(where: String): String =
+    s"""planted AS (
+       |  SELECT vec_id, embedding FROM embeddings$where
+       |  UNION ALL
+       |  SELECT vec_id + 10000000,
+       |    list_transform(embedding,
+       |      x -> CAST(CAST(x AS DOUBLE) * 2.0 AS FLOAT))
+       |  FROM embeddings WHERE vec_id < 25
+       |  UNION ALL
+       |  SELECT vec_id + 20000000,
+       |    list_transform(embedding,
+       |      x -> CAST(CAST(x AS DOUBLE) + 0.05 * abs(CAST(x AS DOUBLE)) AS FLOAT))
+       |  FROM embeddings WHERE vec_id < 25)"""
+
   /** SCALE PATH for embedding near-dup: banded sign-random-projection
     * LSH, mirroring the MinHash-LSH shape of `llm_near_dedup`.
     * Candidates come from band-bucket equality joins — shuffle
     * O(n·bands) plus Σ bucket-pair counts, never the O(n²) cross
     * product — and only candidates pay the exact-cosine verification.
     *
-    * Parameter choice is threshold-driven, and since r5 the keyed
-    * query ships the PRODUCTION regime: threshold 0.9 (θ ≤ 26°,
+    * Parameter choice is threshold-driven, and the keyed query ships
+    * the PRODUCTION regime: threshold 0.9 (θ ≤ 26°,
     * per-plane collision p₁ = 1 − θ/π ≥ 0.86, ρ ≈ 0.2) with deep
     * bands (8 bits × 8 bands), over [[plantedEmbeddings]] so the
     * threshold is non-vacuous. In this regime banding genuinely earns
@@ -853,7 +903,6 @@ object Similarity {
     id < BruteSliceRows.toLong || id >= PlantedIdFloor
 
   def cosineDedupLsh(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
     val e = plantedEmbeddings(emb(spark, dir))
     val nRows = e.count()
     val nPairs = nRows * (nRows - 1) / 2
@@ -931,18 +980,9 @@ object Similarity {
     * only candidates pay the dot product. */
   private def cosineVerify(
       e0: DataFrame, cand: DataFrame, thr: Double): DataFrame = {
-    DotProduct.register(e0.sparkSession)
-    val withNorm = e0.withColumn("nrm", norm("embedding"))
-    val a = withNorm.select(col("vec_id").as("id_a"),
-      col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
-    val b = withNorm.select(col("vec_id").as("id_b"),
-      col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
-    ordered(
-      cand.join(a, Seq("id_a")).join(b, Seq("id_b"))
-        .withColumn("cos",
-          round6(dot("emb_a", "emb_b") / (col("nrm_a") * col("nrm_b"))))
-        .filter(col("cos") >= thr)
-        .select(col("id_a"), col("id_b"), col("cos")))
+    val e = withNorm(e0)
+    ordered(cosineAtLeast(
+      cand.join(pairSide(e, "a"), Seq("id_a")).join(pairSide(e, "b"), Seq("id_b")), thr))
   }
 
   private val cosineDedupSql =
@@ -959,21 +999,9 @@ object Similarity {
     * double-arithmetic-then-float-cast spelling, so the LSH result
     * must hash-match it bit-for-bit; pre-filtering the slice INSIDE
     * the CTE keeps the brute join at ≈12.7M pairs at every SF (the
-    * unsliced spelling was 2·10¹⁰ pairs at sf10 — the r12 open row). */
+    * unsliced spelling was 2·10¹⁰ pairs at sf10 and never finished). */
   private val cosineDedupLshSql =
-    s"""WITH planted AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  WHERE vec_id < $BruteSliceRows
-       |  UNION ALL
-       |  SELECT vec_id + 10000000,
-       |    list_transform(embedding,
-       |      x -> CAST(CAST(x AS DOUBLE) * 2.0 AS FLOAT))
-       |  FROM embeddings WHERE vec_id < 25
-       |  UNION ALL
-       |  SELECT vec_id + 20000000,
-       |    list_transform(embedding,
-       |      x -> CAST(CAST(x AS DOUBLE) + 0.05 * abs(CAST(x AS DOUBLE)) AS FLOAT))
-       |  FROM embeddings WHERE vec_id < 25)
+    s"""WITH ${plantedCteSql(s"\n       |  WHERE vec_id < $BruteSliceRows")}
        |SELECT p.vec_id AS id_a, c.vec_id AS id_b,
        |  round($oracleCos, 6) AS cos,
        |  TRUE AS cand_frac_lt_20pct
@@ -987,7 +1015,6 @@ object Similarity {
     * a partition-local pass; here the "decode" is byte-length + the
     * deterministic metadata a decoder would attach. */
   def multimodal(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
     val d = Tables.load(spark, dir, "documents")
       .withColumn("payload", encode(col("text"), "UTF-8"))
     val e = emb(spark, dir)
@@ -1133,17 +1160,10 @@ object Similarity {
   }
 
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
-    val e = semCells(spark, dir).withColumn("nrm", norm("embedding"))
-    val a = e.select(col("cid"), col("vec_id").as("id_a"),
-      col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
-    val b = e.select(col("cid"), col("vec_id").as("id_b"),
-      col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
-    val dropped = a.join(b, Seq("cid"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos",
-        round6(dot("emb_a", "emb_b") / (col("nrm_a") * col("nrm_b"))))
-      .filter(col("cos") >= 0.9)
+    val e = withNorm(semCells(spark, dir))
+    val dropped = cosineAtLeast(pairSide(e, "a", col("cid"))
+      .join(pairSide(e, "b", col("cid")), Seq("cid"))
+      .filter(col("id_a") < col("id_b")), 0.9)
       .select(col("id_b").as("vec_id")).distinct()
     ordered(
       e.join(dropped.withColumn("is_kept", lit(false)), Seq("vec_id"), "left")
@@ -1153,22 +1173,8 @@ object Similarity {
 
   private val semDedupSql = {
     val cid = semCidSql(i => s"embedding[$i]", "n_corpus")
-    val cos =
-      "list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) / " +
-        "(sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) * " +
-        "sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))"
-    s"""WITH planted AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000000,
-       |    list_transform(embedding,
-       |      x -> CAST(CAST(x AS DOUBLE) * 2.0 AS FLOAT))
-       |  FROM embeddings WHERE vec_id < 25
-       |  UNION ALL
-       |  SELECT vec_id + 20000000,
-       |    list_transform(embedding,
-       |      x -> CAST(CAST(x AS DOUBLE) + 0.05 * abs(CAST(x AS DOUBLE)) AS FLOAT))
-       |  FROM embeddings WHERE vec_id < 25),
+    val cos = oracleCosOf("a", "b")
+    s"""WITH ${plantedCteSql("")},
        |nn AS (SELECT COUNT(*) AS n_corpus FROM planted),
        |e AS (
        |  SELECT vec_id, embedding, $cid AS cid FROM planted CROSS JOIN nn),
@@ -1201,7 +1207,7 @@ object Similarity {
     * so a fixed shortlist's recall decays with every decade — measured
     * at the 200k-vector rung, where the fixed-50 shortlist dropped
     * probe recall below the 0.6 pin that every smaller rung clears
-    * (the full sf10 hash gate caught it, r12). n/1000 keeps the exact
+    * (the full sf10 hash gate caught it). n/1000 keeps the exact
     * rerank at 0.1% of an exact scan — the same pinned-recall-vs-
     * scaling trade as the adaptive IVF-K and SRP-bit ladders; faiss
     * instead fixes k_factor and lets recall drift, which a pinned
@@ -1322,7 +1328,7 @@ object Similarity {
       cbs: Array[Array[Array[Double]]])
       : (org.apache.spark.sql.expressions.UserDefinedFunction, Column) = {
     val sub = cbs(0)(0).length
-    val probeVecs = emb(spark, dir).filter(col("vec_id") < 10)
+    val probeVecs = probeRows(emb(spark, dir))
       .select(col("vec_id"), col("embedding")).collect()
       .map { r =>
         val v = r.getSeq[Float](1).map(_.toDouble).toArray
@@ -1331,11 +1337,8 @@ object Similarity {
       }.sortBy(_._1)
     val luts: Map[Long, Array[Array[Double]]] = probeVecs.map { case (pid, q) =>
       pid -> Array.tabulate(PqM) { m =>
-        Array.tabulate(cbs(m).length) { k =>
-          var s = 0.0; var j = 0
-          while (j < sub) { s += q(m * sub + j) * cbs(m)(k)(j); j += 1 }
-          s
-        }
+        val qm = q.slice(m * sub, (m + 1) * sub)
+        cbs(m).map(centroidDot(_, qm))
       }
     }.toMap
     val adc = udf { (pid: Long, codes: Array[Int]) =>
@@ -1361,7 +1364,6 @@ object Similarity {
     * exact rerank touches 0.1% of the corpus — constant FRACTION, not
     * constant count. */
   private[graft] def simsearchPqTopK(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
     val cbs = trainedPq(spark, dir)
     val codes = spark.read.parquet(s"${ensurePqIndex(spark, dir)}/codes")
     val (adc, probeIds) = adcScorer(spark, dir, cbs)
@@ -1389,31 +1391,17 @@ object Similarity {
       scored: DataFrame): DataFrame = {
     val n = embCount(spark, dir)
     val depth = pqShortlistFor(n)
-    val wShort = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc").desc, col("vec_id").asc)
-    val shortlist0 = scored
-      .withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= depth)
+    val shortlist0 = topK(scored, "probe_id", "adc", "srn", depth)
       .select(col("probe_id"), col("vec_id"))
     val shortlist =
-      if (10L * depth <= PqBroadcastShortlistMax) broadcast(shortlist0)
+      if (NProbes.toLong * depth <= PqBroadcastShortlistMax) broadcast(shortlist0)
       else shortlist0
     // exact rerank of the shortlist: fetch raw vectors for the
     // ≤ 10×depth candidates, score true cosine
-    val probeDf = emb(spark, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
-        norm("embedding").as("probe_nrm"))
     val rerank = emb(spark, dir)
       .join(shortlist, Seq("vec_id"))
-      .join(broadcast(probeDf), Seq("probe_id"))
-      .withColumn("score",
-        round6(dot("probe_emb", "embedding") / (col("probe_nrm") * norm("embedding"))))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    ordered(rerank
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("probe_id"), col("vec_id"), col("score"), col("rn")))
+      .join(broadcast(probeSide(probeRows(emb(spark, dir)), norm("embedding"))), Seq("probe_id"))
+    ordered(rankTopK(rerank, "probe", norm("embedding"), TopK))
   }
 
   /** Measured with margin on every shipped SF (deterministic training
@@ -1427,35 +1415,18 @@ object Similarity {
     * (recall collapse) or an encoding-width regression turns the
     * driver row red. */
   def simsearchPq(spark: SparkSession, dir: String): DataFrame = {
-    def pairs(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("probe_id"), col("vec_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(simsearch(spark, dir))
-    val pq = pairs(simsearchPqTopK(spark, dir))
-    val recall = (exact & pq).size.toDouble / exact.size
     val dim = emb(spark, dir)
       .agg(max(size(col("embedding")))).head().getInt(0)
-    spark.range(1).select(
-      lit(10L).as("n_probes"), lit(5L).as("k"),
-      lit(exact.size.toLong).as("n_exact_pairs"),
-      lit(dim.toLong * 4L / PqM).as("compression_x"),
-      lit(recall >= PqRecallBound).as("recall_ge_bound"))
+    exactTwinAudit(spark, dir, simsearchPqTopK(spark, dir)) { recall =>
+      Seq(lit(dim.toLong * 4L / PqM).as("compression_x"),
+        lit(recall >= PqRecallBound).as("recall_ge_bound"))
+    }
   }
 
   private val simsearchPqSql =
-    s"""WITH exact AS (
-       |  SELECT p.vec_id AS probe_id, c.vec_id,
-       |    ROW_NUMBER() OVER (PARTITION BY p.vec_id
-       |      ORDER BY round($oracleCos, 6) DESC, c.vec_id ASC) AS rn
-       |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-       |  WHERE p.vec_id < 10)
-       |SELECT CAST(10 AS BIGINT) AS n_probes, CAST(5 AS BIGINT) AS k,
-       |  COUNT(*) AS n_exact_pairs,
-       |  (SELECT CAST(MAX(len(embedding)) * 4 // 8 AS BIGINT)
+    exactTwinSql("""(SELECT CAST(MAX(len(embedding)) * 4 // 8 AS BIGINT)
        |     FROM embeddings) AS compression_x,
-       |  TRUE AS recall_ge_bound
-       |FROM exact WHERE rn <= 5
-       |${O.OrderAll}"""
+       |  TRUE AS recall_ge_bound""")
 
   /** IVF-PQ — the composition faiss actually ships as its workhorse
     * (`IVFx,PQy`): IVF's coarse cells prune WHICH vectors to score
@@ -1471,17 +1442,13 @@ object Similarity {
     * the seam. Everything downstream of candidate generation is the
     * shared PQ tail. */
   private[graft] def simsearchIvfPqTopK(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
     val cents = trainedCentroids(spark, dir)
     val cbs = trainedPq(spark, dir)
     val codes = spark.read.parquet(s"${ensurePqIndex(spark, dir)}/codes")
     val indexed = indexedCells(spark, dir)
     val (adc, _) = adcScorer(spark, dir, cbs)
-    val probes = indexed.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"),
-        explode(nearestCentroids(cents, IvfProbes)(col("embedding"))).as("cid"))
     val scored = indexed.select(col("vec_id"), col("cid"))
-      .join(broadcast(probes), Seq("cid"))
+      .join(broadcast(ivfProbeCells(indexed, cents)), Seq("cid"))
       .filter(col("vec_id") =!= col("probe_id"))
       .join(codes, Seq("vec_id"))
       .withColumn("adc", adc(col("probe_id"), col("codes")))
@@ -1491,35 +1458,11 @@ object Similarity {
   /** Keyed IVF-PQ query: recall vs the exact twin (bounded below by
     * neither parent alone — pinned against BOTH in LlmSpec) plus the
     * IVF pruning bound; booleans oracle-pinned TRUE. */
-  def simsearchIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    def pairs(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("probe_id"), col("vec_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(simsearch(spark, dir))
-    val ivfpq = pairs(simsearchIvfPqTopK(spark, dir))
-    val recall = (exact & ivfpq).size.toDouble / exact.size
-    val n = embCount(spark, dir)
-    val cand = simsearchIvfCandidates(spark, dir).count()
-    val frac = cand.toDouble / (10.0 * (n - 1))
-    spark.range(1).select(
-      lit(10L).as("n_probes"), lit(5L).as("k"),
-      lit(exact.size.toLong).as("n_exact_pairs"),
-      lit(recall >= PqRecallBound).as("recall_ge_bound"),
-      lit(frac <= IvfScoredFracBound).as("scored_frac_le_bound"))
-  }
+  def simsearchIvfPq(spark: SparkSession, dir: String): DataFrame =
+    exactTwinAudit(spark, dir, simsearchIvfPqTopK(spark, dir))(
+      ivfBounds(spark, dir, PqRecallBound))
 
-  private val simsearchIvfPqSql =
-    s"""WITH exact AS (
-       |  SELECT p.vec_id AS probe_id, c.vec_id,
-       |    ROW_NUMBER() OVER (PARTITION BY p.vec_id
-       |      ORDER BY round($oracleCos, 6) DESC, c.vec_id ASC) AS rn
-       |  FROM embeddings p JOIN embeddings c ON c.vec_id <> p.vec_id
-       |  WHERE p.vec_id < 10)
-       |SELECT CAST(10 AS BIGINT) AS n_probes, CAST(5 AS BIGINT) AS k,
-       |  COUNT(*) AS n_exact_pairs,
-       |  TRUE AS recall_ge_bound, TRUE AS scored_frac_le_bound
-       |FROM exact WHERE rn <= 5
-       |${O.OrderAll}"""
+  private val simsearchIvfPqSql = simsearchIvfSql
 
   private[graft] val KnnK = 3
   /** 12 probed cells of the adaptive-K index: a k-NN GRAPH build
@@ -1535,13 +1478,13 @@ object Similarity {
   private val KnnRecallBound = 0.7
 
   /** Ceiling of the adaptive cell count: 4096 cells keeps K = √n
-    * honest to ~16M vectors. Raised from 1024 (r8 verdict task #1) by
-    * switching training past [[IvfDriverTrainK]] to
-    * [[ivfCentroidsDistributed]] — the old cap existed only because
-    * the driver trainer's sample collect and sequential Lloyd pass
-    * stopped scaling, not because the index wanted fewer cells. The
-    * next constraint past it — the flat probe's K·dim dots per
-    * vector — is ALSO lifted (r9): at [[HierProbeK]] cells probing
+    * honest to ~16M vectors. Raised from 1024 by switching training
+    * past [[IvfDriverTrainK]] to [[ivfCentroidsDistributed]] — the old
+    * cap existed only because the driver trainer's sample collect and
+    * sequential Lloyd pass stopped scaling, not because the index
+    * wanted fewer cells. The next constraint past it — the flat
+    * probe's K·dim dots per vector — is ALSO lifted: at [[HierProbeK]]
+    * cells probing
     * routes through the √K-cell [[coarseRouter]] (~K/4 of the flat
     * flops; completeness + routing-recall laws in LlmSpec at forced
     * small K). The ceiling can now move with the corpus; 4096 ≈
@@ -1601,14 +1544,12 @@ object Similarity {
   private[graft] def knnJoinCandidatesAt(
       spark: SparkSession, dir: String, nProbe: Int, k: Int,
       indexedOpt: Option[DataFrame] = None): DataFrame = {
-    DotProduct.register(spark)
     val cents = trainedCentroids(spark, dir, k)
     // share the caller's cell scan (one fixture listing per query)
     val indexed = indexedOpt.getOrElse(indexedCells(spark, dir, k))
     val qs = indexed.select(
       col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      col("nrm").as("q_nrm"),
-      explode(probeCells(cents, math.min(nProbe, k))(col("embedding"))).as("cid"))
+      col("nrm").as("q_nrm"), probedCells(cents, math.min(nProbe, k)))
     indexed.join(qs, Seq("cid")).filter(col("vec_id") =!= col("q_id"))
   }
 
@@ -1625,14 +1566,8 @@ object Similarity {
       case Some(k) => knnJoinCandidatesAt(spark, dir, nProbe, k, indexedOpt)
       case None => knnJoinCandidates(spark, dir, nProbe, kOpt)
     }
-    val scored = candidatesObs.fold(cands)(o => cands.observe(o, count(lit(1)).as("n")))
-      .withColumn("score",
-        round6(dot("q_emb", "embedding") / (col("q_nrm") * col("nrm"))))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= KnnK)
-      .select(col("q_id"), col("vec_id"), col("score"), col("rn"))
+    rankTopK(candidatesObs.fold(cands)(o => cands.observe(o, count(lit(1)).as("n"))),
+      "q", col("nrm"), KnnK)
   }
 
   /** k-NN JOIN — every vector's top-[[KnnK]] neighbours in one pass,
@@ -1665,8 +1600,7 @@ object Similarity {
     * candidate join's count and the edge frame's own count. */
   private[graft] def knnJoinAudited(
       spark: SparkSession, dir: String): (DataFrame, Long, Long) = {
-    DotProduct.register(spark)
-    val e = emb(spark, dir).withColumn("nrm", norm("embedding"))
+    val e = withNorm(emb(spark, dir))
     val n = embCount(spark, dir)
     val k = knnKFor(n)
     // one cell scan shared by the edge build and the slice check
@@ -1697,21 +1631,11 @@ object Similarity {
     // purpose): the embeddings scan is 1–2 splits at small SF, so the
     // slice×corpus exact pass would run on one core; no-op at scale
     // where the scan already splits ≥ cores
-    val exScored = graft.core.Spread.cpuBound(spark, e, col("vec_id"))
-      .join(broadcast(slice), col("vec_id") =!= col("q_id"))
-      .withColumn("score",
-        round6(dot("q_emb", "embedding") / (col("q_nrm") * col("nrm"))))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    val exact = exScored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= KnnK)
-      .select(col("q_id"), col("vec_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivfSlice = knn
-      .filter(col("q_id").isin(sliceRows.map(_.getLong(0)): _*))
-      .select(col("q_id"), col("vec_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact & ivfSlice).size.toDouble / exact.size
+    val exact = pairs(rankTopK(graft.core.Spread.cpuBound(spark, e, col("vec_id"))
+      .join(broadcast(slice), col("vec_id") =!= col("q_id")), "q", col("nrm"), KnnK), "q_id")
+    val ivfSlice =
+      pairs(knn.filter(col("q_id").isin(sliceRows.map(_.getLong(0)): _*)), "q_id")
+    val recall = recallOf(exact, ivfSlice)
     val fracBound = knnScoredFracBound(k)
     val audit = spark.range(1).select(
       lit(n).as("n_vectors"), lit(KnnK.toLong).as("k"),
@@ -1726,11 +1650,7 @@ object Similarity {
   private val knnJoinSql =
     s"""WITH slice AS (
        |  SELECT * FROM embeddings ORDER BY vec_id LIMIT $KnnSliceN),
-       |exact AS (
-       |  SELECT p.vec_id AS probe_id, c.vec_id,
-       |    ROW_NUMBER() OVER (PARTITION BY p.vec_id
-       |      ORDER BY round($oracleCos, 6) DESC, c.vec_id ASC) AS rn
-       |  FROM slice p JOIN embeddings c ON c.vec_id <> p.vec_id)
+       |${exactCteSql("slice", "")}
        |SELECT (SELECT COUNT(*) FROM embeddings) AS n_vectors,
        |  CAST($KnnK AS BIGINT) AS k,
        |  COUNT(*) AS n_exact_slice_pairs,
@@ -1763,26 +1683,21 @@ object Similarity {
     * Oracle: the k greedy steps replay as [[MmrK]] unrolled CTEs over
     * the identical round6 scores — bit-exact, no recursion needed. */
   def mmr(spark: SparkSession, dir: String): DataFrame = {
-    DotProduct.register(spark)
-    val e = emb(spark, dir).withColumn("nrm", norm("embedding"))
+    val e = withNorm(emb(spark, dir))
     val q = e.filter(col("vec_id") === 0).limit(1)
       .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     val relScored = e.join(broadcast(q), col("vec_id") =!= lit(0))
-      .withColumn("rel",
-        round6(dot("q_emb", "embedding") / (col("q_nrm") * col("nrm"))))
+      .withColumn("rel", cosine("q_emb", "embedding", col("q_nrm"), col("nrm")))
     // global top-20 = TakeOrderedAndProject (per-partition heaps + a
     // 20-row driver merge), NEVER a single-partition row_number window
     val cands = relScored
       .orderBy(col("rel").desc, col("vec_id").asc).limit(MmrCands)
       .select(col("vec_id"), col("rel"), col("embedding"), col("nrm"))
       .lineageCut()
-    val x = cands.select(col("vec_id").as("a"), col("embedding").as("a_emb"),
-      col("nrm").as("a_nrm"))
-    val y = cands.select(col("vec_id").as("b"), col("embedding").as("b_emb"),
-      col("nrm").as("b_nrm"))
-    val simRows = x.join(broadcast(y), col("a") =!= col("b"))
-      .select(col("a"), col("b"),
-        round6(dot("a_emb", "b_emb") / (col("a_nrm") * col("b_nrm"))).as("sim"))
+    val simRows = pairSide(cands, "a").join(broadcast(pairSide(cands, "b")),
+      col("id_a") =!= col("id_b"))
+      .select(col("id_a"), col("id_b"),
+        cosine("emb_a", "emb_b", col("nrm_a"), col("nrm_b")).as("sim"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val pool = cands.select(col("vec_id"), col("rel"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
@@ -1807,10 +1722,7 @@ object Similarity {
   }
 
   private val mmrSql = {
-    val cosXy =
-      "list_dot_product(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])) / " +
-        "(sqrt(list_dot_product(CAST(x.embedding AS DOUBLE[]), CAST(x.embedding AS DOUBLE[]))) * " +
-        "sqrt(list_dot_product(CAST(y.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[]))))"
+    val cosXy = oracleCosOf("x", "y")
     def step(k: Int): String =
       s"""p$k AS (SELECT vec_id, rel, msim, CAST($k AS BIGINT) AS mmr_rank FROM (
          |  SELECT c.vec_id, c.rel, MAX(s.sim) AS msim,

@@ -18,15 +18,10 @@ class FixturesSpec extends AnyFunSuite {
   private def file(name: String, parts: String*) =
     java.nio.file.Paths.get(Fixtures.path(sfDir, name), parts: _*).toFile
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-    f.delete()
-  }
-
   test("a body that crashes mid-build publishes nothing; retry rebuilds cleanly") {
     val name = s"atomic_crash_${System.nanoTime()}"
     val root = file(name).getParentFile
-    rm(root)
+    Fixtures.rmTree(root)
     def entries() = Option(root.list()).toSeq.flatten.filter(_.startsWith(name))
     // phase 1 writes _SUCCESS (as Spark's first append job would),
     // phase 2 crashes
@@ -165,8 +160,8 @@ class FixturesSpec extends AnyFunSuite {
       assert(llm.Similarity.ivfTrainCount.get() > ivfBuilds, "IVF index retrained")
       assert(llm.Similarity.pqTrainCount.get() > pqBuilds, "PQ index retrained")
     } finally {
-      rm(new java.io.File(Fixtures.path(dir, "x")).getParentFile)
-      rm(new java.io.File(dir))
+      Fixtures.rmTree(new java.io.File(Fixtures.path(dir, "x")).getParentFile)
+      Fixtures.rmTree(new java.io.File(dir))
     }
   }
 }

@@ -11,34 +11,50 @@ class IngestSpec extends AnyFunSuite {
   import TestSpark.{spark, Sf}
   import spark.implicits._
 
+  /** An embedded Derby database in a fresh temp dir: `body` gets its
+    * JDBC URL; afterwards the database is shut down and the dir
+    * deleted. */
+  private def withDerby[T](prefix: String)(body: String => T): T =
+    TestSpark.withTempDir(prefix) { dir =>
+      System.setProperty("derby.stream.error.file", s"$dir/derby.log")
+      try body(s"jdbc:derby:$dir/db;create=true")
+      finally {
+        // a clean shutdown always ends in an SQLException (SQLState 08006)
+        try java.sql.DriverManager.getConnection(s"jdbc:derby:$dir/db;shutdown=true")
+        catch { case _: java.sql.SQLException => }
+      }
+    }
+
   test("CSV PERMISSIVE mode captures corrupt rows instead of failing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/data.csv"),
-      "k,v\n1,a\nnot_a_number,b\n3,c\n")
-    val schema = StructType(Seq(
-      StructField("k", LongType), StructField("v", StringType),
-      StructField("_corrupt", StringType)))
-    val df = spark.read.schema(schema)
-      .option("header", "true").option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .csv(s"$dir/data.csv").cache()
-    assert(df.count() === 3, "PERMISSIVE must keep all rows")
-    val bad = df.filter(col("_corrupt").isNotNull).collect()
-    assert(bad.length === 1 && bad(0).getAs[String]("_corrupt").startsWith("not_a_number"))
-    assert(df.filter(col("_corrupt").isNull).count() === 2)
+    TestSpark.withTempDir("graft_csv") { dir =>
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/data.csv"),
+        "k,v\n1,a\nnot_a_number,b\n3,c\n")
+      val schema = StructType(Seq(
+        StructField("k", LongType), StructField("v", StringType),
+        StructField("_corrupt", StringType)))
+      val df = spark.read.schema(schema)
+        .option("header", "true").option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt")
+        .csv(s"$dir/data.csv").cache()
+      assert(df.count() === 3, "PERMISSIVE must keep all rows")
+      val bad = df.filter(col("_corrupt").isNotNull).collect()
+      assert(bad.length === 1 && bad(0).getAs[String]("_corrupt").startsWith("not_a_number"))
+      assert(df.filter(col("_corrupt").isNull).count() === 2)
+    }
   }
 
   test("JSON malformed lines yield null fields, not job failure") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/data.json"),
-      """{"k": 1}""" + "\n" + """{broken""" + "\n" + """{"k": 3}""" + "\n")
-    val df = spark.read.schema("k LONG, _corrupt_record STRING")
-      .json(s"$dir/data.json").cache()
-    assert(df.count() === 3)
-    assert(df.filter(col("_corrupt_record").isNotNull).count() === 1)
-    assert(df.select(sum("k")).as[Long].head() === 4)
+    TestSpark.withTempDir("graft_json") { dir =>
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/data.json"),
+        """{"k": 1}""" + "\n" + """{broken""" + "\n" + """{"k": 3}""" + "\n")
+      val df = spark.read.schema("k LONG, _corrupt_record STRING")
+        .json(s"$dir/data.json").cache()
+      assert(df.count() === 3)
+      assert(df.filter(col("_corrupt_record").isNotNull).count() === 1)
+      assert(df.select(sum("k")).as[Long].head() === 4)
+    }
   }
 
   // dialect-parameterized (r8 verdict #8): the same upsert scenario
@@ -50,34 +66,33 @@ class IngestSpec extends AnyFunSuite {
       "ANSI MERGE" -> sinks.AnsiMergeDialect,
       "UPDATE+INSERT fallback" -> sinks.UpdateInsertDialect))
   test(s"jdbc upsert [$dialectName]: idempotent and touches only its keys") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ups").toString
-    System.setProperty("derby.stream.error.file", s"$dir/derby.log")
-    val url = s"jdbc:derby:$dir/db;create=true"
-    val sink = new sinks.JdbcSink(url, "u", "p", numPartitions = 1,
-      dialect = dialect)
-    val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
-      .toDF("k", "name", "bal")
-    sink.write(base, "t", org.apache.spark.sql.SaveMode.Overwrite)
-    val delta = Seq((2L, "b2", 25.0), (4L, "d", 40.0)).toDF("k", "name", "bal")
-    sink.upsert(delta, "t", Seq("k"))
-    sink.upsert(delta, "t", Seq("k")) // re-running the batch must be a no-op
-    val out = new sources.JdbcSource(url, "u", "p").read(spark, "t")
-      .orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-    assert(out === Seq((1L, "a", 10.0), (2L, "b2", 25.0),
-      (3L, "c", 30.0), (4L, "d", 40.0)),
-      "matched key updated, new key inserted, untouched keys intact, no dups")
-    // stage-table hygiene: the staging table is dropped after the merge
-    val ex = intercept[Exception] {
-      new sources.JdbcSource(url, "u", "p").read(spark, "t_stage").collect()
+    withDerby("graft_ups") { url =>
+      val sink = new sinks.JdbcSink(url, "u", "p", numPartitions = 1,
+        dialect = dialect)
+      val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
+        .toDF("k", "name", "bal")
+      sink.write(base, "t", org.apache.spark.sql.SaveMode.Overwrite)
+      val delta = Seq((2L, "b2", 25.0), (4L, "d", 40.0)).toDF("k", "name", "bal")
+      sink.upsert(delta, "t", Seq("k"))
+      sink.upsert(delta, "t", Seq("k")) // re-running the batch must be a no-op
+      val out = new sources.JdbcSource(url, "u", "p").read(spark, "t")
+        .orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+      assert(out === Seq((1L, "a", 10.0), (2L, "b2", 25.0),
+        (3L, "c", 30.0), (4L, "d", 40.0)),
+        "matched key updated, new key inserted, untouched keys intact, no dups")
+      // stage-table hygiene: the staging table is dropped after the merge
+      val ex = intercept[Exception] {
+        new sources.JdbcSource(url, "u", "p").read(spark, "t_stage").collect()
+      }
+      assert(ex.getMessage != null)
+      // precondition: a duplicate-key batch must fail loudly up front
+      val dup = Seq((9L, "x", 1.0), (9L, "y", 2.0)).toDF("k", "name", "bal")
+      val err = intercept[IllegalArgumentException] {
+        sink.upsert(dup, "t", Seq("k"))
+      }
+      assert(err.getMessage.contains("duplicate"))
     }
-    assert(ex.getMessage != null)
-    // precondition: a duplicate-key batch must fail loudly up front
-    val dup = Seq((9L, "x", 1.0), (9L, "y", 2.0)).toDF("k", "name", "bal")
-    val err = intercept[IllegalArgumentException] {
-      sink.upsert(dup, "t", Seq("k"))
-    }
-    assert(err.getMessage.contains("duplicate"))
   }
 
   // The one JDBC hazard local mode hides (Sessions.scala scaladoc): the
@@ -99,35 +114,34 @@ class IngestSpec extends AnyFunSuite {
       "a duplicated staging commit (task retry after commit)" -> None,
       "a duplicated plus a lost staging commit (row count unchanged)" -> Some(4L)))
   test(s"jdbc upsert: $fault is healed before MERGE") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_retry").toString
-    System.setProperty("derby.stream.error.file", s"$dir/derby.log")
-    val url = s"jdbc:derby:$dir/db;create=true"
-    class RetrySink extends sinks.JdbcSink(url, "u", "p", numPartitions = 1) {
-      @volatile var loads = 0
-      override protected def stageLoad(
-          df: org.apache.spark.sql.DataFrame, staging: String): Unit = {
-        super.stageLoad(df, staging)
-        loads += 1
-        if (loads == 1) {
-          // the lost commit: one partition's rows never land
-          lost.foreach(dropStagedKey(url, staging, _))
-          // the duplicated commit: one partition's rows land a 2nd time
-          write(df.filter(col("k") =!= lost.getOrElse(-1L)).limit(1), staging,
-            org.apache.spark.sql.SaveMode.Append)
+    withDerby("graft_retry") { url =>
+      class RetrySink extends sinks.JdbcSink(url, "u", "p", numPartitions = 1) {
+        @volatile var loads = 0
+        override protected def stageLoad(
+            df: org.apache.spark.sql.DataFrame, staging: String): Unit = {
+          super.stageLoad(df, staging)
+          loads += 1
+          if (loads == 1) {
+            // the lost commit: one partition's rows never land
+            lost.foreach(dropStagedKey(url, staging, _))
+            // the duplicated commit: one partition's rows land a 2nd time
+            write(df.filter(col("k") =!= lost.getOrElse(-1L)).limit(1), staging,
+              org.apache.spark.sql.SaveMode.Append)
+          }
         }
       }
+      val sink = new RetrySink
+      val base = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "name", "bal")
+      sink.write(base, "t", org.apache.spark.sql.SaveMode.Overwrite)
+      val delta = Seq((2L, "b2", 25.0), (4L, "d", 40.0)).toDF("k", "name", "bal")
+      sink.upsert(delta, "t", Seq("k"))
+      assert(sink.loads == 2, "the faulty staging must be reloaded through stageLoad")
+      val out = new sources.JdbcSource(url, "u", "p").read(spark, "t")
+        .orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+      assert(out === Seq((1L, "a", 10.0), (2L, "b2", 25.0), (4L, "d", 40.0)),
+        "upsert over a faulty staging must equal the clean upsert")
     }
-    val sink = new RetrySink
-    val base = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "name", "bal")
-    sink.write(base, "t", org.apache.spark.sql.SaveMode.Overwrite)
-    val delta = Seq((2L, "b2", 25.0), (4L, "d", 40.0)).toDF("k", "name", "bal")
-    sink.upsert(delta, "t", Seq("k"))
-    assert(sink.loads == 2, "the faulty staging must be reloaded through stageLoad")
-    val out = new sources.JdbcSource(url, "u", "p").read(spark, "t")
-      .orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-    assert(out === Seq((1L, "a", 10.0), (2L, "b2", 25.0), (4L, "d", 40.0)),
-      "upsert over a faulty staging must equal the clean upsert")
   }
 
   private def tableExists(url: String, table: String): Boolean = {
@@ -137,63 +151,61 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("jdbc upsert: a duplicate-key batch fails before MERGE, leaves the target, drops staging") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dup").toString
-    System.setProperty("derby.stream.error.file", s"$dir/derby.log")
-    val url = s"jdbc:derby:$dir/db;create=true"
-    val sink = new sinks.JdbcSink(url, "u", "p", numPartitions = 1)
-    val base = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "name", "bal")
-    sink.write(base, "t", org.apache.spark.sql.SaveMode.Overwrite)
-    // key 2 twice, plus a new key: a MERGE would update 2 from an
-    // arbitrary source row and insert 5
-    val dup = Seq((2L, "x", 1.0), (2L, "y", 2.0), (5L, "z", 3.0)).toDF("k", "name", "bal")
-    val err = intercept[IllegalArgumentException] {
-      sink.upsert(dup, "t", Seq("k"))
+    withDerby("graft_dup") { url =>
+      val sink = new sinks.JdbcSink(url, "u", "p", numPartitions = 1)
+      val base = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "name", "bal")
+      sink.write(base, "t", org.apache.spark.sql.SaveMode.Overwrite)
+      // key 2 twice, plus a new key: a MERGE would update 2 from an
+      // arbitrary source row and insert 5
+      val dup = Seq((2L, "x", 1.0), (2L, "y", 2.0), (5L, "z", 3.0)).toDF("k", "name", "bal")
+      val err = intercept[IllegalArgumentException] {
+        sink.upsert(dup, "t", Seq("k"))
+      }
+      assert(err.getMessage.contains("duplicate"), err.getMessage)
+      val out = new sources.JdbcSource(url, "u", "p").read(spark, "t")
+        .orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+      assert(out === Seq((1L, "a", 10.0), (2L, "b", 20.0)), "the target must be untouched")
+      assert(tableExists(url, "t") && !tableExists(url, "t_stage"),
+        "the staging table must be dropped when the upsert fails")
     }
-    assert(err.getMessage.contains("duplicate"), err.getMessage)
-    val out = new sources.JdbcSource(url, "u", "p").read(spark, "t")
-      .orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
-    assert(out === Seq((1L, "a", 10.0), (2L, "b", 20.0)), "the target must be untouched")
-    assert(tableExists(url, "t") && !tableExists(url, "t_stage"),
-      "the staging table must be dropped when the upsert fails")
   }
 
   test("jdbc upsert: a clean batch runs two Spark jobs, the count and the staging load") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toString
-    System.setProperty("derby.stream.error.file", s"$dir/derby.log")
-    val url = s"jdbc:derby:$dir/db;create=true"
-    val sink = new sinks.JdbcSink(url, "u", "p", numPartitions = 2)
-    // a checkpointed batch, as the pipeline passes one
-    val batch = spark.range(1, 201).select(col("id").as("k"),
-      concat(lit("n"), col("id")).as("name")).localCheckpoint(eager = true)
-    sink.write(batch.limit(0), "t", org.apache.spark.sql.SaveMode.Overwrite)
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    withDerby("graft_jobs") { url =>
+      val sink = new sinks.JdbcSink(url, "u", "p", numPartitions = 2)
+      // a checkpointed batch, as the pipeline passes one
+      val batch = spark.range(1, 201).select(col("id").as("k"),
+        concat(lit("n"), col("id")).as("name")).localCheckpoint(eager = true)
+      sink.write(batch.limit(0), "t", org.apache.spark.sql.SaveMode.Overwrite)
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          groups.add(Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("upsert_jobs", "upsert")
+        sink.upsert(batch, "t", Seq("k"))
+        // listener events arrive in order: once the marker job is seen,
+        // every upsert job has been seen too
+        sc.setJobGroup("upsert_jobs_marker", "marker")
+        sc.parallelize(Seq(1)).count()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!groups.contains("upsert_jobs_marker") && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        assert(groups.contains("upsert_jobs_marker"), "listener never saw the marker job")
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      val n = groups.toArray.count(_ == "upsert_jobs")
+      assert(n === 2, s"upsert ran $n Spark jobs")
+      assert(new sources.JdbcSource(url, "u", "p").read(spark, "t").count() === 200)
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("upsert_jobs", "upsert")
-      sink.upsert(batch, "t", Seq("k"))
-      // listener events arrive in order: once the marker job is seen,
-      // every upsert job has been seen too
-      sc.setJobGroup("upsert_jobs_marker", "marker")
-      sc.parallelize(Seq(1)).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("upsert_jobs_marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("upsert_jobs_marker"), "listener never saw the marker job")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    val n = groups.toArray.count(_ == "upsert_jobs")
-    assert(n === 2, s"upsert ran $n Spark jobs")
-    assert(new sources.JdbcSource(url, "u", "p").read(spark, "t").count() === 200)
   }
 
   test("jdbc scale knobs: partitioned read fans out, fetchsize + writer cap set") {
@@ -202,23 +214,22 @@ class IngestSpec extends AnyFunSuite {
     // connections with a bounded per-roundtrip fetchsize; the write
     // side must cap concurrent connections at what the server
     // tolerates, not at Spark's parallelism.
-    val dir = java.nio.file.Files.createTempDirectory("graft_knobs").toString
-    System.setProperty("derby.stream.error.file", s"$dir/derby.log")
-    val url = s"jdbc:derby:$dir/db;create=true"
-    val sink = new sinks.JdbcSink(url, "u", "p", numPartitions = 2)
-    assert(sink.options("t")("numPartitions") == "2",
-      "writer-connection cap must reach the JDBC options")
-    assert(sink.options("t")("batchsize") == "10000",
-      "batched inserts, never per-row")
-    val base = (1L to 100L).map(i => (i, s"n$i")).toDF("k", "name")
-    sink.write(base, "t", org.apache.spark.sql.SaveMode.Overwrite)
-    val src = new sources.JdbcSource(url, "u", "p", fetchSize = 500)
-    assert(src.options("t")("fetchsize") == "500",
-      "fetchsize must reach the JDBC options")
-    val back = src.readPartitioned(spark, "t", "k", 1L, 101L, numPartitions = 4)
-    assert(back.rdd.getNumPartitions == 4,
-      s"expected 4 range partitions, got ${back.rdd.getNumPartitions}")
-    assert(back.count() == 100, "range split must cover all rows exactly once")
+    withDerby("graft_knobs") { url =>
+      val sink = new sinks.JdbcSink(url, "u", "p", numPartitions = 2)
+      assert(sink.options("t")("numPartitions") == "2",
+        "writer-connection cap must reach the JDBC options")
+      assert(sink.options("t")("batchsize") == "10000",
+        "batched inserts, never per-row")
+      val base = (1L to 100L).map(i => (i, s"n$i")).toDF("k", "name")
+      sink.write(base, "t", org.apache.spark.sql.SaveMode.Overwrite)
+      val src = new sources.JdbcSource(url, "u", "p", fetchSize = 500)
+      assert(src.options("t")("fetchsize") == "500",
+        "fetchsize must reach the JDBC options")
+      val back = src.readPartitioned(spark, "t", "k", 1L, 101L, numPartitions = 4)
+      assert(back.rdd.getNumPartitions == 4,
+        s"expected 4 range partitions, got ${back.rdd.getNumPartitions}")
+      assert(back.count() == 100, "range split must cover all rows exactly once")
+    }
   }
 
   test("merge dialects: ANSI vs T-SQL spellings, key-only degenerate") {
@@ -277,48 +288,49 @@ class IngestSpec extends AnyFunSuite {
     val zPath = core.Fixtures.path(Sf, "sink_zorder")
     // unclustered twin: same rows, same file count, no z sort — the
     // layout a plain ingest would produce
-    val uPath = java.nio.file.Files.createTempDirectory("graft_unclustered").toString
-    spark.read.schema(core.Tables.lineitem).parquet(zPath)
-      .repartition(8).write.mode("overwrite").parquet(uPath)
+    TestSpark.withTempDir("graft_unclustered") { uPath =>
+      spark.read.schema(core.Tables.lineitem).parquet(zPath)
+        .repartition(8).write.mode("overwrite").parquet(uPath)
 
-    // a ~25%-per-dimension box placed inside the actual key ranges
-    // (scale-factor-robust): ~6% of rows, the selective-lookup shape
-    // z-ordering exists for
-    val b = spark.read.schema(core.Tables.lineitem).parquet(zPath)
-      .agg(min(col("l_partkey")), max(col("l_partkey")),
-        min(col("l_suppkey")), max(col("l_suppkey"))).head()
-    def box(lo: Long, hi: Long): (Long, Long) =
-      (lo + (hi - lo) / 10, lo + (hi - lo) * 35 / 100)
-    val (pkLo, pkHi) = box(b.getLong(0), b.getLong(1))
-    val (skLo, skHi) = box(b.getLong(2), b.getLong(3))
+      // a ~25%-per-dimension box placed inside the actual key ranges
+      // (scale-factor-robust): ~6% of rows, the selective-lookup shape
+      // z-ordering exists for
+      val b = spark.read.schema(core.Tables.lineitem).parquet(zPath)
+        .agg(min(col("l_partkey")), max(col("l_partkey")),
+          min(col("l_suppkey")), max(col("l_suppkey"))).head()
+      def box(lo: Long, hi: Long): (Long, Long) =
+        (lo + (hi - lo) / 10, lo + (hi - lo) * 35 / 100)
+      val (pkLo, pkHi) = box(b.getLong(0), b.getLong(1))
+      val (skLo, skHi) = box(b.getLong(2), b.getLong(3))
 
-    // rows the parquet reader actually SURFACES under the pushed filter
-    // = rows in row groups whose min/max stats overlap the box (the
-    // Filter node above re-evaluates exactly; scan metrics expose the
-    // skip). This is the query-level proof the file-stats test above
-    // can't give: clustering must turn stats into skipped IO.
-    def scanned(path: String): (Long, Long) = {
-      val df = spark.read.schema(core.Tables.lineitem).parquet(path)
-        .filter(col("l_partkey").between(pkLo, pkHi) &&
-          col("l_suppkey").between(skLo, skHi))
-        .select(col("l_orderkey"))
-      val matched = df.count()
-      df.collect()
-      val scan = df.queryExecution.executedPlan.collectLeaves().head
-      (scan.metrics("numOutputRows").value, matched)
+      // rows the parquet reader actually SURFACES under the pushed filter
+      // = rows in row groups whose min/max stats overlap the box (the
+      // Filter node above re-evaluates exactly; scan metrics expose the
+      // skip). This is the query-level proof the file-stats test above
+      // can't give: clustering must turn stats into skipped IO.
+      def scanned(path: String): (Long, Long) = {
+        val df = spark.read.schema(core.Tables.lineitem).parquet(path)
+          .filter(col("l_partkey").between(pkLo, pkHi) &&
+            col("l_suppkey").between(skLo, skHi))
+          .select(col("l_orderkey"))
+        val matched = df.count()
+        df.collect()
+        val scan = df.queryExecution.executedPlan.collectLeaves().head
+        (scan.metrics("numOutputRows").value, matched)
+      }
+      val (zScanned, zMatched) = scanned(zPath)
+      val (uScanned, uMatched) = scanned(uPath)
+      assert(zMatched === uMatched, "layout must never change the answer")
+      assert(zMatched > 0, "the box predicate should select something")
+      // unclustered: every row group overlaps the box -> full-table scan
+      val total = spark.read.parquet(zPath).count()
+      assert(uScanned >= (total * 0.9).toLong,
+        s"unclustered baseline unexpectedly pruned: $uScanned of $total")
+      // z-ordered: the Morton sort concentrates the box into few row
+      // groups; the reader must skip well over half the table
+      assert(zScanned * 2 < uScanned,
+        s"z-order pruned too little: scanned $zScanned vs unclustered $uScanned")
     }
-    val (zScanned, zMatched) = scanned(zPath)
-    val (uScanned, uMatched) = scanned(uPath)
-    assert(zMatched === uMatched, "layout must never change the answer")
-    assert(zMatched > 0, "the box predicate should select something")
-    // unclustered: every row group overlaps the box -> full-table scan
-    val total = spark.read.parquet(zPath).count()
-    assert(uScanned >= (total * 0.9).toLong,
-      s"unclustered baseline unexpectedly pruned: $uScanned of $total")
-    // z-ordered: the Morton sort concentrates the box into few row
-    // groups; the reader must skip well over half the table
-    assert(zScanned * 2 < uScanned,
-      s"z-order pruned too little: scanned $zScanned vs unclustered $uScanned")
   }
 
   test("partition evolution: migrated layout is intact and physically (year, month)-nested") {

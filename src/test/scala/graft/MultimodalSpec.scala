@@ -113,30 +113,31 @@ class MultimodalSpec extends AnyFunSuite {
     // definition now filters to ASCII on both engines identically, so
     // a non-ASCII doc is excluded rather than hashed to two different
     // values per engine.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ascii").toString
-    val asciiText = "a" * 200
-    val accented = "é" + ("a" * 200)
-    // r12, per advisor: ASCII except a FINAL U+2028 line separator.
-    // Java regex `$` matches before a final line terminator (incl.
-    // U+2028), so the old anchored gate `^[\x00-\x7F]*$` PASSED this
-    // doc on the Spark side while DuckDB RE2 `$` (end-of-text only)
-    // excluded it — the exact divergence the anchor-free negation
-    // closes. Both engines must now exclude it.
-    val trailingLsep = ("a" * 200) + "\u2028"
-    Seq((1L, asciiText, "en", "web", 200L), (2L, accented, "fr", "web", 201L),
-        (3L, trailingLsep, "en", "web", 201L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val ids = Multimodal.imageCorpus(spark, dir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids.contains(1L), "ASCII doc must stay in the corpus")
-    assert(ids.contains(1L + Multimodal.ImageDupOffset),
-      "planted copy of the ASCII doc must stay")
-    assert(!ids.contains(2L) && !ids.contains(2L + Multimodal.ImageDupOffset),
-      "non-ASCII doc must be excluded by the corpus definition itself")
-    assert(!ids.contains(3L) && !ids.contains(3L + Multimodal.ImageDupOffset),
-      "doc ending in U+2028 must be excluded — Java `$` would have " +
-        "passed it under the old anchored gate")
+    TestSpark.withTempDir("graft_ascii") { dir =>
+      val asciiText = "a" * 200
+      val accented = "é" + ("a" * 200)
+      // r12, per advisor: ASCII except a FINAL U+2028 line separator.
+      // Java regex `$` matches before a final line terminator (incl.
+      // U+2028), so the old anchored gate `^[\x00-\x7F]*$` PASSED this
+      // doc on the Spark side while DuckDB RE2 `$` (end-of-text only)
+      // excluded it — the exact divergence the anchor-free negation
+      // closes. Both engines must now exclude it.
+      val trailingLsep = ("a" * 200) + "\u2028"
+      Seq((1L, asciiText, "en", "web", 200L), (2L, accented, "fr", "web", 201L),
+          (3L, trailingLsep, "en", "web", 201L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val ids = Multimodal.imageCorpus(spark, dir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(ids.contains(1L), "ASCII doc must stay in the corpus")
+      assert(ids.contains(1L + Multimodal.ImageDupOffset),
+        "planted copy of the ASCII doc must stay")
+      assert(!ids.contains(2L) && !ids.contains(2L + Multimodal.ImageDupOffset),
+        "non-ASCII doc must be excluded by the corpus definition itself")
+      assert(!ids.contains(3L) && !ids.contains(3L + Multimodal.ImageDupOffset),
+        "doc ending in U+2028 must be excluded — Java `$` would have " +
+          "passed it under the old anchored gate")
+    }
   }
 
   test("video dedup: per-frame banded candidates ≡ brute aligned Hamming (pigeonhole)") {

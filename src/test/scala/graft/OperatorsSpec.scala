@@ -245,16 +245,17 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("sinks: parquet round-trip and jdbc option plumbing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    new sinks.ParquetSink(dir).write(df, "t1", org.apache.spark.sql.SaveMode.Overwrite)
-    assert(spark.read.parquet(s"$dir/t1").count() === 2)
+    TestSpark.withTempDir("graft_sink") { dir =>
+      val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      new sinks.ParquetSink(dir).write(df, "t1", org.apache.spark.sql.SaveMode.Overwrite)
+      assert(spark.read.parquet(s"$dir/t1").count() === 2)
 
-    val jdbc = new sinks.JdbcSink("jdbc:sqlserver://host;db", "u", "p",
-      batchSize = 500, numPartitions = 2)
-    val opts = jdbc.options("dbo.target")
-    assert(opts("dbtable") === "dbo.target" && opts("batchsize") === "500"
-      && opts("numPartitions") === "2")
+      val jdbc = new sinks.JdbcSink("jdbc:sqlserver://host;db", "u", "p",
+        batchSize = 500, numPartitions = 2)
+      val opts = jdbc.options("dbo.target")
+      assert(opts("dbtable") === "dbo.target" && opts("batchsize") === "500"
+        && opts("numPartitions") === "2")
+    }
   }
 
   test("asof nearest: picks the argmin of the backward/forward twins, ties backward") {

@@ -661,6 +661,24 @@ class PlanSpec extends AnyFunSuite {
       s"PQ rerank must stay equi-join shaped:\n$p")
   }
 
+  test("llm_simsearch_ivf and llm_knn_join: cid-keyed hash join, top-k as Partial+Final WindowGroupLimit") {
+    // the IVF search and the k-NN graph (llm_knn_join's timed plan)
+    // score only the probed cells' vectors: an equi-join on the cell id,
+    // then per-query heaps before and after the query-keyed exchange
+    Seq("simsearchIvfTopK" -> (llm.Similarity.simsearchIvfTopK(spark, Sf), 5),
+      "knnJoinEdges" -> (llm.Similarity.knnJoinEdges(spark, Sf), llm.Similarity.KnnK))
+      .foreach { case (name, (df, k)) =>
+        val p = df.queryExecution.executedPlan.toString
+        assert("(Broadcast|Shuffled)HashJoin \\[cid#\\d+\\], \\[cid#\\d+\\]".r
+          .findFirstIn(p).isDefined, s"$name: candidates must be a cid hash join:\n$p")
+        assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+          s"$name: no nested-loop or cartesian join:\n$p")
+        for (mode <- Seq("Partial", "Final"))
+          assert(p.contains(s"row_number(), $k, $mode"),
+            s"$name: top-$k must run as a $mode WindowGroupLimit:\n$p")
+      }
+  }
+
   test("ts_downsample: candles are pure mergeable aggregates — no Window, map-side combine") {
     // the scale claim: bars (not ticks) cross the shuffle; a
     // row_number-over-window respelling would full-sort the fact table

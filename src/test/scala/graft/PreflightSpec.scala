@@ -32,19 +32,20 @@ class PreflightSpec extends AnyFunSuite {
     // free bytes — SPARK_LOCAL_DIRS=/tmp/a,/tmp/b was silencing the
     // preflight exactly in the multi-dir config its warning recommends
     val base = java.nio.file.Files.createTempDirectory("graft_pf_").toFile
-    val a = new java.io.File(base, "a"); a.mkdirs()
-    val b = new java.io.File(base, "b"); b.mkdirs()
-    val one = core.ScratchPreflight.usableAcross(Seq(a.getPath))
-    val two = core.ScratchPreflight.usableAcross(Seq(a.getPath, b.getPath))
-    // same volume: adding a second dir adds ~nothing (tolerance for
-    // concurrent disk churn between the two measurements)
-    assert(two < one * 1.05 + (1L << 26),
-      s"same-volume dirs double-counted: one=$one two=$two")
-    // a missing dir contributes nothing rather than throwing
-    assert(core.ScratchPreflight.usableAcross(
-      Seq(a.getPath, new java.io.File(base, "nope").getPath)) == two ||
-      math.abs(core.ScratchPreflight.usableAcross(
-        Seq(a.getPath, new java.io.File(base, "nope").getPath)) - two) < (1L << 26))
-    a.delete(); b.delete(); base.delete()
+    try {
+      val a = new java.io.File(base, "a"); a.mkdirs()
+      val b = new java.io.File(base, "b"); b.mkdirs()
+      val one = core.ScratchPreflight.usableAcross(Seq(a.getPath))
+      val two = core.ScratchPreflight.usableAcross(Seq(a.getPath, b.getPath))
+      // same volume: adding a second dir adds ~nothing (tolerance for
+      // concurrent disk churn between the two measurements)
+      assert(two < one * 1.05 + (1L << 26),
+        s"same-volume dirs double-counted: one=$one two=$two")
+      // a missing dir contributes nothing rather than throwing
+      assert(core.ScratchPreflight.usableAcross(
+        Seq(a.getPath, new java.io.File(base, "nope").getPath)) == two ||
+        math.abs(core.ScratchPreflight.usableAcross(
+          Seq(a.getPath, new java.io.File(base, "nope").getPath)) - two) < (1L << 26))
+    } finally core.Fixtures.rmTree(base)
   }
 }

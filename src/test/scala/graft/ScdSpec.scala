@@ -320,20 +320,21 @@ class ScdSpec extends AnyFunSuite {
     // 1000110 (neither divisible by 7, so no delete tombstone interferes) — a row_number tie Spark and the SQL oracle broke
     // differently at sf10. The law: a CDC feed never emits two ops for
     // one key at one sequence number, at any corpus scale.
-    val dir = java.nio.file.Files.createTempDirectory("cdc_keyspace").toString
-    Seq((110L, "Customer#110", "AUTOMOBILE"),
-      (1000110L, "Customer#1000110", "BUILDING"),
-      (7L, "Customer#7", "MACHINERY"))
-      .toDF("c_custkey", "c_name", "c_mktsegment")
-      .write.parquet(s"$dir/customer.parquet")
-    val changes = graft.etl.Etl.cdcChangeSet(spark, dir)
-    val dupSeqKeys = changes.groupBy(col("c_custkey"), col("_seq"))
-      .count().filter(col("count") > 1).count()
-    assert(dupSeqKeys == 0, "two change ops share one (key, _seq)")
-    // and the applied result keeps the collided key's own update
-    val applied = graft.etl.Etl.cdcApply(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(applied(1000110L) == "CDC-U")
-    assert(applied(10000000110L) == "CDC-I")
+    TestSpark.withTempDir("cdc_keyspace") { dir =>
+      Seq((110L, "Customer#110", "AUTOMOBILE"),
+        (1000110L, "Customer#1000110", "BUILDING"),
+        (7L, "Customer#7", "MACHINERY"))
+        .toDF("c_custkey", "c_name", "c_mktsegment")
+        .write.parquet(s"$dir/customer.parquet")
+      val changes = graft.etl.Etl.cdcChangeSet(spark, dir)
+      val dupSeqKeys = changes.groupBy(col("c_custkey"), col("_seq"))
+        .count().filter(col("count") > 1).count()
+      assert(dupSeqKeys == 0, "two change ops share one (key, _seq)")
+      // and the applied result keeps the collided key's own update
+      val applied = graft.etl.Etl.cdcApply(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
+      assert(applied(1000110L) == "CDC-U")
+      assert(applied(10000000110L) == "CDC-I")
+    }
   }
 }

@@ -19,4 +19,11 @@ object TestSpark {
   }
 
   val Sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a fresh temp dir named `prefix…` and deletes the
+    * dir afterwards, whether `body` passes or throws. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.getPath) finally graft.core.Fixtures.rmTree(dir)
+  }
 }
