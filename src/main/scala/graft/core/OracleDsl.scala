@@ -40,4 +40,19 @@ object OracleDsl {
   val revenue: String = s"${dec("l_extendedprice")} * ${oneMinus("l_discount")}"
 
   val OrderAll: String = "ORDER BY ALL NULLS FIRST"
+
+  /** One row per element of the list column `l` of `from`: the `keep`
+    * columns, the element as `tok` and its 1-based position `pos`. */
+  def elements(from: String, keep: String): String =
+    s"SELECT $keep, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM $from"
+
+  /** CTEs `t` (doc_id, l = the text split on single spaces) over
+    * `from`, and `toks` (doc_id, tok, pos): the whitespace tokens every
+    * text oracle starts from. `toks` is MATERIALIZED because its
+    * callers join it with itself, and DuckDB otherwise inlines a CTE
+    * once per reference. A fragment for a caller's `WITH` list, in the
+    * `|`-margin form `Q` strips. */
+  def tokensCte(from: String): String =
+    s"""t AS (SELECT doc_id, string_split(text, ' ') AS l FROM $from),
+       |toks AS MATERIALIZED (${elements("t", "doc_id")})"""
 }

@@ -105,14 +105,7 @@ object Curation {
   }
 
   private val contaminationSql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       |toks AS (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
-       |sh AS (
-       |  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS s
-       |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-       |  JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-       |  UNION
-       |  SELECT doc_id, text AS s FROM documents WHERE len(string_split(text, ' ')) <= 3),
+    s"""WITH ${Dedup.shingleSetCte("documents")},
        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 50 = 0),
        |corpus AS (SELECT * FROM sh WHERE doc_id % 50 <> 0),
        |tot AS (SELECT doc_id, COUNT(*) AS n_shingles FROM corpus GROUP BY 1),
@@ -389,8 +382,7 @@ object Curation {
   }
 
   private val repetitionSql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       |toks AS (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
+    s"""WITH ${O.tokensCte("documents")},
        |big AS (SELECT a.doc_id, a.tok || ' ' || b.tok AS bigram
        |        FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
        |c AS (SELECT doc_id, bigram, COUNT(*) AS c FROM big GROUP BY 1, 2),

@@ -4,7 +4,7 @@ import graft.core.Lineage.LineageCutOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Blocked, Q, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
 import graft.functions.WordShingles
@@ -24,7 +24,18 @@ import graft.functions.WordShingles
   *    for the LSH path (ScalaTest asserts LSH == brute on test data).
   *  - SimHash stores one 64-bit signature per doc; candidates share a
   *    16-bit band (pigeonhole: hamming ≤ 3 pairs always share one of 4
-  *    bands; we use ham ≤ 3 for guaranteed recall).
+  *    bands; we use ham ≤ 3 for guaranteed recall). Its band join is
+  *    capped like the MinHash one ([[graft.core.Blocked.selfPairs]]),
+  *    so a hot 16-bit bucket is never one m² join group.
+  *
+  * Every near-dup key composes the same few stages, each defined once:
+  * the capped band join ([[graft.core.Blocked.selfPairs]]), the
+  * candidate-doc cut ([[candidateRows]]), Jaccard from intersection
+  * counts ([[jaccardAtLeast]]), the Hamming verify ([[hammingAtMost]],
+  * after the [[withHashes]] lookup for the image and video keys), the
+  * planted-copy corpus ([[planted]]) and, on the oracle side, the
+  * shingle set ([[shingleSetCte]]) and the all-pairs Jaccard replay
+  * ([[jaccardCte]]).
   */
 object Dedup {
 
@@ -58,8 +69,8 @@ object Dedup {
     shinglesOf(spark, docs(spark, dir))
 
   /** Per-doc shingle SETS. The dedup happens INSIDE the generator
-    * (row-local hash set, bounded by the doc's own length) — r8: the
-    * previous `.distinct()` spelling was a cluster-wide exchange of
+    * (row-local hash set, bounded by the doc's own length): a
+    * `.distinct()` spelling is a cluster-wide exchange of
     * every raw shingle string (~415M rows at the sf100 rung, the
     * pipeline's largest shuffle, and the disk-spill that killed the
     * first sf100 bench attempt), deduping per (doc_id, shingle) — a
@@ -73,8 +84,8 @@ object Dedup {
     // distinct's incidental exchange the whole shingle+hash pipeline
     // would run on 1–2 cores (measured: the brute-jaccard twin
     // 9→23 s at sf1). No-op at scale and for the candidate-cut verify
-    // inputs, whose join already partitioned them. Keyed on doc_id
-    // (r15): skips round-robin's sort-before-repartition, and the
+    // inputs, whose join already partitioned them. Keyed on doc_id:
+    // skips round-robin's sort-before-repartition, and the
     // downstream signature groupBy(doc_id) can reuse the hash layout.
     graft.core.Spread.cpuBound(spark, d, col("doc_id"))
       .selectExpr("doc_id", s"$fn(text) AS shingle")
@@ -88,7 +99,7 @@ object Dedup {
     * → 16 LSH bands of 4 → band-bucket candidate pairs → exact-Jaccard
     * verification ≥ 0.8. Fixed seeds end-to-end → deterministic.
     *
-    * Oracled against the brute-force ground-truth SQL (since r5): the
+    * Oracled against the brute-force ground-truth SQL: the
     * verify step makes LSH ⊆ brute BY CONSTRUCTION (every emitted pair
     * passed the exact-Jaccard cut), and recall is exact on these
     * corpora — a ≥0.8-Jaccard pair collides in at least one of the 16
@@ -111,11 +122,11 @@ object Dedup {
   /** UNSORTED, localCheckpoint'ed near-dup pair set — the production
     * pair source for the derived ops ([[dedupApply]], [[dupClusters]]),
     * which re-join or anti-join it and must not inherit a pointless
-    * global sort (or, worse, the brute twin's all-pairs self-join:
-    * until r8 both derived keys rode [[bruteJaccardPairs]], 10–12 s
-    * each at sf1 vs the banded path's near-linear candidates). */
+    * global sort (or, worse, the brute twin's all-pairs self-join,
+    * 10–12 s per derived key at sf1 vs the banded path's near-linear
+    * candidates). */
   private[graft] def nearDedupPairsRaw(spark: SparkSession, d: DataFrame): DataFrame = {
-    // No cache on the shingle stream (r8): with the per-doc dedup
+    // No cache on the shingle stream: with the per-doc dedup
     // inside the generator, shingles are a pure map-side derivation of
     // the docs scan — re-generating the few CANDIDATE docs' shingles
     // for the verify costs one pruned parquet read, while caching the
@@ -148,19 +159,14 @@ object Dedup {
     val cand = bandPairs(bands).lineageCut()
 
     // verify input: shingle sets of CANDIDATE DOCS ONLY, with the cut
-    // applied to the docs themselves (broadcast semi-join ahead of the
-    // generator) so only candidate docs are even re-tokenized —
-    // upstream of verifyJaccard's own id cut, which is a no-op here.
-    val candIds = cand
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    val shCand = shinglesOf(spark,
-      d.join(broadcast(candIds), Seq("doc_id"), "left_semi"))
+    // applied to the docs themselves (ahead of the generator) so only
+    // candidate docs are even re-tokenized — upstream of
+    // verifyJaccard's own id cut, which is a no-op here.
+    val shCand = shinglesOf(spark, candidateRows(cand, d))
 
     // checkpoint the UNSORTED pair set (tiny — tens of rows), then sort:
-    // round 2 checkpointed through ordered()'s global sort, which
-    // materialized the sort itself into block storage and cost a
-    // reproduced ~1.6× slowdown (round-2 verdict finding #2).
+    // checkpointing through ordered()'s global sort materializes the
+    // sort itself into block storage (a reproduced ~1.6× slowdown).
     verifyJaccard(cand, shCand, JaccardThreshold).lineageCut()
   }
 
@@ -222,15 +228,45 @@ object Dedup {
     * into [[BandBucketCap]]-sized `gx` blocks, `num_g` = the bucket's
     * block count. One definition shared by [[corpusBandIndexFixture]]
     * and the probe-law spec. */
-  private[graft] def indexBlockLayout(bands: DataFrame): DataFrame = {
-    val bucket = Window.partitionBy(col("band_idx"), col("band_hash"))
-    bands
-      .withColumn("gx",
-        ((row_number().over(bucket.orderBy(col("doc_id"))) - 1) / BandBucketCap)
-          .cast("long"))
-      .withColumn("num_g",
-        ((count(lit(1)).over(bucket) + BandBucketCap - 1) / BandBucketCap)
-          .cast("long"))
+  private[graft] def indexBlockLayout(bands: DataFrame): DataFrame =
+    Blocked.blocks(bands, BandKeys, "doc_id", BandBucketCap, "gx", "num_g")
+
+  /** Candidate stage of [[dedupIncremental]] — (doc_a, doc_b) pairs a
+    * batch band signature raises against the stored index plus itself.
+    * Factored out so ScaleUpSpec's candidate-growth test counts
+    * EXACTLY what the keyed query verifies (nothing re-derived). */
+  private[graft] def incrementalCandidates(
+      batchBands: DataFrame, index: DataFrame): DataFrame = {
+    // probe: only buckets the index knows, exploded over the stored
+    // block count — equi join on (band, hash, gx, _gb), ≤ Cap² rows
+    // per group. BOTH sides are block-capped: the corpus side at build
+    // time (gx/num_g), the batch side here by the same ranking
+    // (_gb/_numGb), so a hot BATCH bucket cannot put its m probes ×
+    // one corpus block in a single join group; corpus rows replicate
+    // over the batch's block count (1 for the common small bucket),
+    // batch rows over the stored num_g — every (corpus doc, batch doc)
+    // bucket pair meets on exactly one (gx, _gb) key, so the distinct
+    // output is provably unchanged.
+    val rankedB = Blocked.blocks(batchBands, BandKeys, "doc_id", BandBucketCap,
+      "_gb", "_numGb")
+    val numG = index
+      .select(col("band_idx"), col("band_hash"), col("num_g")).distinct()
+    val probe = rankedB.join(numG, BandKeys)
+      .select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"),
+        col("_gb"),
+        explode(sequence(lit(0L), col("num_g") - 1)).as("gx"))
+    val numGb = rankedB
+      .select(col("band_idx"), col("band_hash"), col("_numGb")).distinct()
+    val corpusSide = index
+      .select(col("band_idx"), col("band_hash"), col("gx"),
+        col("doc_id").as("doc_a"))
+      .join(numGb, BandKeys) // touched buckets only
+      .select(col("band_idx"), col("band_hash"), col("gx"), col("doc_a"),
+        explode(sequence(lit(0L), col("_numGb") - 1)).as("_gb"))
+    val bc = probe
+      .join(corpusSide, BandKeys ++ Seq("gx", "_gb"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+    bc.unionByName(bandPairs(batchBands)).distinct()
   }
 
   /** INCREMENTAL near-dedup — the lifecycle a production corpus
@@ -246,8 +282,8 @@ object Dedup {
     * Shape: batch shingles → batch band signature → two candidate
     * sources, both equi-joins: (1) batch probes the stored index on
     * (band, hash, gx, _gb) — corpus side block-capped AT BUILD TIME
-    * (gx/num_g), batch side capped at probe time by the same ranking
-    * (r9), so a join group is ≤ [[BandBucketCap]]² rows even when the
+    * (gx/num_g), batch side capped at probe time by the same ranking,
+    * so a join group is ≤ [[BandBucketCap]]² rows even when the
     * BATCH lands a hot bucket; (2) the
     * batch self-joins through the capped [[bandPairs]]. Only
     * candidates pay the exact-Jaccard verify. Drop rules: a batch doc
@@ -256,56 +292,12 @@ object Dedup {
     * min-id-wins, exactly [[dedupApply]]'s convention. The oracle
     * replays both rules over brute all-pairs Jaccard, so LSH recall
     * is hash-gated here too. */
-  /** Candidate stage of [[dedupIncremental]] — (doc_a, doc_b) pairs a
-    * batch band signature raises against the stored index plus itself.
-    * Factored out so ScaleUpSpec's candidate-growth test counts
-    * EXACTLY what the keyed query verifies (nothing re-derived). */
-  private[graft] def incrementalCandidates(
-      batchBands: DataFrame, index: DataFrame): DataFrame = {
-    // probe: only buckets the index knows, exploded over the stored
-    // block count — equi join on (band, hash, gx, _gb), ≤ Cap² rows
-    // per group. BOTH sides are now block-capped (r9 — closing the
-    // scaladoc's "documented extension"): the corpus side at build
-    // time (gx/num_g), the batch side here by the same ranking
-    // (_gb/_numGb), so a hot BATCH bucket can no longer put its m
-    // probes × one corpus block in a single join group; corpus rows
-    // replicate over the batch's block count (1 for the common small
-    // bucket), batch rows over the stored num_g — every (corpus doc,
-    // batch doc) bucket pair meets on exactly one (gx, _gb) key, so
-    // the distinct output is provably unchanged.
-    val cap = BandBucketCap
-    val bWin = Window.partitionBy(col("band_idx"), col("band_hash"))
-    val rankedB = batchBands
-      .withColumn("_gb",
-        ((row_number().over(bWin.orderBy(col("doc_id"))) - 1) / cap).cast("long"))
-      .withColumn("_numGb",
-        ((count(lit(1)).over(bWin) + cap - 1) / cap).cast("long"))
-    val numG = index
-      .select(col("band_idx"), col("band_hash"), col("num_g")).distinct()
-    val probe = rankedB.join(numG, Seq("band_idx", "band_hash"))
-      .select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"),
-        col("_gb"),
-        explode(sequence(lit(0L), col("num_g") - 1)).as("gx"))
-    val numGb = rankedB
-      .select(col("band_idx"), col("band_hash"), col("_numGb")).distinct()
-    val corpusSide = index
-      .select(col("band_idx"), col("band_hash"), col("gx"),
-        col("doc_id").as("doc_a"))
-      .join(numGb, Seq("band_idx", "band_hash")) // touched buckets only
-      .select(col("band_idx"), col("band_hash"), col("gx"), col("doc_a"),
-        explode(sequence(lit(0L), col("_numGb") - 1)).as("_gb"))
-    val bc = probe
-      .join(corpusSide, Seq("band_idx", "band_hash", "gx", "_gb"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    bc.unionByName(bandPairs(batchBands)).distinct()
-  }
-
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
     val batch = d.filter(isIncrementalBatch)
     val index = corpusBandIndexFixture(spark, dir)
     // batch shingles are a pure map-side derivation (per-doc dedup
-    // lives in the generator — r8); the two reads below each cost one
+    // lives in the generator); the two reads below each cost one
     // pruned scan of the ~10% batch, cheaper at scale than holding the
     // shingle rows across the verify
     val batchSh = shinglesOf(spark, batch)
@@ -314,12 +306,8 @@ object Dedup {
     // verify: batch shingles are in hand; only candidate CORPUS docs
     // are re-shingled (a bounded set — in production these doc reads
     // are the index's payload column)
-    val candIds = cand
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    val corpusCandSh = shinglesOf(spark,
-      d.filter(!isIncrementalBatch)
-        .join(broadcast(candIds), Seq("doc_id"), "left_semi"))
+    val corpusCandSh =
+      shinglesOf(spark, candidateRows(cand, d.filter(!isIncrementalBatch)))
     val pairs =
       verifyJaccard(cand, batchSh.unionByName(corpusCandSh), JaccardThreshold)
     val drops = pairs.select(col("doc_b").as("drop_id")).distinct()
@@ -328,31 +316,46 @@ object Dedup {
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars")))
   }
 
-  // MATERIALIZED on the multiply-referenced CTEs (r13): DuckDB INLINES
-  // a CTE per reference — `jac` twice in drops, `sh` twice in inter,
-  // `toks` three times in sh — so the whole shingle-join tree executed
-  // up to 2x3x2 times concurrently in one query plan and spilled >45 GB
-  // at sf10 where one evaluation runs in ~30 s (the ngram_jaccard twin,
-  // single-referenced downstream, passes untouched). Postgres-standard
-  // syntax, honored by DuckDB >= 0.9.
-  private val dedupIncrementalSql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       |toks AS MATERIALIZED (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
+  /** Oracle CTEs `t` and `toks` ([[graft.core.OracleDsl.tokensCte]])
+    * plus `sh` (doc_id, s): each doc of `from`'s distinct 3-word
+    * shingles, or its whole text when it has ≤ 3 tokens — the mirror of
+    * [[shinglesOf]]'s generator. `sh` is MATERIALIZED: DuckDB INLINES a
+    * CTE once per reference, and every caller joins `sh` with itself,
+    * so an inlined shingle tree ran once per reference (with `toks` and
+    * `jac` also inlined, up to 2x3x2 concurrent copies in
+    * `llm_dedup_incremental`'s plan, which spilled >45 GB at sf10 where
+    * one evaluation runs in ~30 s). Postgres-standard syntax, honored
+    * by DuckDB >= 0.9; it never changes results. */
+  private[llm] def shingleSetCte(from: String): String =
+    s"""${O.tokensCte(from)},
        |sh AS MATERIALIZED (
        |  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS s
        |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
        |  JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
        |  UNION
-       |  SELECT doc_id, text AS s FROM documents WHERE len(string_split(text, ' ')) <= 3),
+       |  SELECT doc_id, text AS s FROM $from WHERE len(string_split(text, ' ')) <= 3)"""
+
+  /** Oracle CTEs of [[shingleSetCte]] over `documents` plus `jac`
+    * (doc_a < doc_b, jaccard): every pair at 3-shingle Jaccard ≥
+    * [[JaccardThreshold]], by all-pairs intersection counts — the brute
+    * replay that every near-dup oracle checks the banded path against.
+    * `jac` is MATERIALIZED for the callers that read it twice. */
+  private def jaccardCte: String =
+    s"""${shingleSetCte("documents")},
        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
        |inter AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2),
        |jac AS MATERIALIZED (
-       |  SELECT doc_a, doc_b FROM inter
+       |  SELECT doc_a, doc_b,
+       |    CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) AS jaccard
+       |  FROM inter
        |  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-       |  WHERE CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) >= 0.8),
+       |  WHERE CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) >= $JaccardThreshold)"""
+
+  private val dedupIncrementalSql =
+    s"""WITH $jaccardCte,
        |drops AS (
        |  SELECT DISTINCT d FROM (
        |    SELECT doc_b AS d, doc_a AS o FROM jac
@@ -389,6 +392,9 @@ object Dedup {
     * single join group at BandBucketCap² pair rows. */
   private[graft] val BandBucketCap = 64
 
+  /** The bucket key of a band frame: (band index, band value). */
+  private val BandKeys = Seq("band_idx", "band_hash")
+
   /** All intra-bucket candidate pairs (doc_a < doc_b) of a
     * (doc_id, band_idx, band_hash) frame, with BOUNDED per-join-key
     * fan-out, key columns retained for the skew test. A naive bucket
@@ -407,130 +413,108 @@ object Dedup {
     * Output is provably identical to the naive self-join: a pair
     * (a ≤ blocks gx) × (b ≤ gy), gx ≤ gy, joins on exactly one key —
     * (gx, gy) — and same-block mirrors die on doc_a < doc_b. The
-    * decomposition itself is [[graft.core.Blocked.selfPairs]] (r9:
-    * factored out so the link-prediction wedge join shares the exact
-    * same machinery — one bounded-self-join definition in the repo). */
+    * decomposition itself is [[graft.core.Blocked.selfPairs]], shared
+    * with the link-prediction wedge join and the image and video band
+    * joins. */
   private[graft] def bandPairsKeyed(bands: DataFrame): DataFrame =
-    graft.core.Blocked.selfPairs(bands, Seq("band_idx", "band_hash"),
-      "doc_id", BandBucketCap, "doc_a", "doc_b")
+    Blocked.selfPairs(bands, BandKeys, "doc_id", BandBucketCap, "doc_a", "doc_b")
 
   /** Candidate pairs from band buckets — the bounded-skew spelling of
     * `bands ⋈ bands ON same bucket AND doc_a < doc_b`. */
   private[graft] def bandPairs(bands: DataFrame): DataFrame =
     bandPairsKeyed(bands).select(col("doc_a"), col("doc_b")).distinct()
 
+  /** The rows of `rows` whose doc_id is in a (doc_a, doc_b) pair of
+    * `pairs`, via a broadcast semi join on the pairs' distinct doc
+    * ids. LSH leaves ~0.5% of docs in any candidate pair, so this cut
+    * is what keeps every verify join candidate-sized. */
+  private def candidateRows(pairs: DataFrame, rows: DataFrame): DataFrame = {
+    val ids = pairs
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+      .distinct()
+    rows.join(broadcast(ids), Seq("doc_id"), "left_semi")
+  }
+
   /** Exact Jaccard for a pair list, given the (doc_id, shingle) set.
     * Returns UNSORTED pairs — callers order (or feed downstream ops).
     *
-    * The shingle table is first cut to CANDIDATE DOCS ONLY via a
-    * broadcast semi join on the pair set's doc ids (r8): LSH leaves
-    * ~0.5% of docs in any candidate pair, so without the cut the two
-    * intersection joins shuffle the FULL corpus shingle table to score
-    * a few hundred pairs — measured 1.26 s → ~0.4 s at sf0.1, and the
-    * gap widens with corpus size (candidates grow near-linearly but
-    * the un-cut shuffle grows with total shingle volume). Per-doc
-    * shingle sets survive the cut whole, so n_a/n_b/intersections are
-    * unchanged — output is provably identical. `pairs` must be
-    * materialized by the caller (it is read twice). */
+    * The shingle table is first cut to CANDIDATE DOCS ONLY
+    * ([[candidateRows]]): without the cut the two intersection joins
+    * shuffle the FULL corpus shingle table to score a few hundred
+    * pairs — measured 1.26 s → ~0.4 s at sf0.1, and the gap widens
+    * with corpus size (candidates grow near-linearly but the un-cut
+    * shuffle grows with total shingle volume). Per-doc shingle sets
+    * survive the cut whole, so n_a/n_b/intersections are unchanged —
+    * output is provably identical. `pairs` must be materialized by the
+    * caller (it is read twice). */
   private[graft] def verifyJaccard(pairs: DataFrame, sh: DataFrame, thr: Double): DataFrame = {
-    val candIds = pairs
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    // lineage cut (r15, guide §3 plan truncation): shc is referenced
-    // FOUR times below (both intersection legs + both size joins via
-    // sz), and each reference re-derived the whole candidate shingle
-    // subtree — docs scan → semi join → Generate — per consumer
-    // (4 repeat subtrees under llm_dedup_incremental's 37-job
-    // chain). The cut materializes the candidate-only shingle set once;
-    // it is bounded by the candidate pair count (~0.5 % of docs), so
-    // the materialization stays small at any corpus scale.
-    val shc = sh.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-      .lineageCut()
-    val sz = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    // lineage cut (guide §3 plan truncation): shc is referenced FOUR
+    // times below (both intersection legs + both size joins), and each
+    // reference re-derived the whole candidate shingle subtree — docs
+    // scan → semi join → Generate — per consumer (4 repeat subtrees
+    // under llm_dedup_incremental's 37-job chain). The cut
+    // materializes the candidate-only shingle set once; it is bounded
+    // by the candidate pair count (~0.5 % of docs), so the
+    // materialization stays small at any corpus scale.
+    val shc = candidateRows(pairs, sh).lineageCut()
     val inter = pairs
       .join(shc.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
       .join(shc.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_inter"))
-    val jac = inter
+    jaccardAtLeast(inter, shc, thr)
+  }
+
+  /** (doc_a, doc_b, jaccard) of the (doc_a, doc_b, n_inter) pairs whose
+    * Jaccard n_inter / (n_a + n_b − n_inter) is ≥ `thr`, with the set
+    * sizes counted from the (doc_id, shingle) set `sh`. jaccard is an
+    * exact rational of small ints → bit-identical on both engines;
+    * rounding would tie at the 7th digit (103/128 = 0.8046875) where
+    * the engines disagree. Compare raw. */
+  private def jaccardAtLeast(inter: DataFrame, sh: DataFrame, thr: Double): DataFrame = {
+    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    inter
       .join(sz.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
       .join(sz.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
       .withColumn("jaccard",
         col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
       .filter(col("jaccard") >= thr)
-      // jaccard is an exact rational of small ints → bit-identical on
-      // both engines; rounding would tie at the 7th digit (103/128 =
-      // 0.8046875) where the engines disagree. Compare raw.
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    jac
   }
 
   /** Brute-force 3-gram Jaccard ≥ 0.8 over all pairs sharing ≥1 shingle
-    * — the oracle-checkable ground truth for `llm_near_dedup`. */
+    * — the oracle-checkable ground truth for `llm_near_dedup`. The
+    * derived ops (`dedupApply`, `dupClusters`) ride the banded
+    * production path ([[nearDedupPairsRaw]]), never this one. */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ordered(jaccardPairsBrute(spark, dir))
+    ordered(bruteJaccardPairs(spark, docs(spark, dir)))
 
-  /** The brute pair set, UNSORTED and localCheckpoint'ed (lineage
-    * truncated, shingle cache released). Since r8 this feeds ONLY the
-    * `llm_ngram_jaccard` ground-truth key — the derived ops
-    * (`dedupApply`, `dupClusters`) ride the banded production path
-    * ([[nearDedupPairsRaw]]), closing the r6 audit note that marked
-    * the brute twin verification-only while two production keys still
-    * called it. */
-  private def jaccardPairsBrute(spark: SparkSession, dir: String): DataFrame =
-    bruteJaccardPairs(spark, docs(spark, dir))
-
-  /** Brute pair set over an arbitrary (doc_id, text) frame — the
-    * ground-truth twin of [[nearDedupPairs]] for generated corpora.
-    * Verification twin, never the scale path: the production pair
-    * source is the banded [[nearDedupPairs]] (PlanSpec pins its capped
-    * blocked join); this all-pairs join exists so the oracle and the
-    * LSH==brute laws have an exact reference. */
+  /** Brute pair set over an arbitrary (doc_id, text) frame, UNSORTED
+    * and localCheckpoint'ed (lineage truncated, shingle cache
+    * released) — the ground-truth twin of [[nearDedupPairs]] for
+    * generated corpora. Verification twin, never the scale path: the
+    * production pair source is the banded [[nearDedupPairs]] (PlanSpec
+    * pins its capped blocked join); this all-pairs join exists so the
+    * oracle and the LSH==brute laws have an exact reference. */
   private[graft] def bruteJaccardPairs(spark: SparkSession, d: DataFrame): DataFrame = {
     // Direct intersection counts from the shingle self-join — one
     // shuffle join + one aggregation. (A pairs→distinct→re-join
     // formulation does the same work three times: measured 10.6 s vs
     // ~4 s at sf0.1.)
     val sh = shinglesOf(spark, d).cache() // released after checkpoint below
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = sh.select(col("doc_id").as("doc_a"), col("shingle"))
       .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_inter"))
-    val jac = inter
-      .join(sz.select(col("doc_id").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
-      .join(sz.select(col("doc_id").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
     // checkpoint before any sort (see nearDedup): the pair set is tiny.
-    val out = jac.lineageCut()
+    val out = jaccardAtLeast(inter, sh, JaccardThreshold).lineageCut()
     sh.unpersist()
     out
   }
 
   private val ngramJaccardSql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       |toks AS (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
-       |sh AS (
-       |  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS s
-       |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-       |  JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-       |  UNION
-       |  SELECT doc_id, text AS s FROM documents WHERE len(string_split(text, ' ')) <= 3),
-       |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-       |inter AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT doc_a, doc_b,
-       |  CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) AS jaccard
-       |FROM inter
-       |JOIN sz sa ON sa.doc_id = doc_a
-       |JOIN sz sb ON sb.doc_id = doc_b
-       |WHERE CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) >= 0.8
+    s"""WITH $jaccardCte
+       |SELECT doc_a, doc_b, jaccard FROM jac
        |${O.OrderAll}"""
 
   /** Portable FNV-1a 64-bit string hash (deterministic across runs;
@@ -545,8 +529,10 @@ object Dedup {
   /** Hamming ≤ 3 SimHash pairs over an arbitrary (doc_id, text) frame:
     * 64-bit per-doc signature from token-hash bit votes; candidates
     * share one of four 16-bit bands (pigeonhole guarantees recall for
-    * hamming ≤ 3); verified by exact hamming. Shared by the keyed
-    * query and the planted-near-dup ScalaTest. */
+    * hamming ≤ 3) through the capped band join
+    * ([[graft.core.Blocked.selfPairs]]); verified by exact hamming
+    * ([[hammingAtMost]]) inside that join. Shared by the keyed query
+    * and the planted-near-dup ScalaTest. */
   private[graft] def simhashPairs(d: DataFrame): DataFrame = {
     val sim = udf { (text: String) =>
       val votes = new Array[Int](64)
@@ -560,26 +546,54 @@ object Dedup {
       while (i < 64) { if (votes(i) > 0) out |= (1L << i); i += 1 }
       out
     }
-    val sigs = d.select(col("doc_id"), sim(col("text")).as("sig"))
-    // materialize the band index once — both self-join branches reuse
-    // it instead of re-hashing every document (see the same note on
-    // cosineBandCandidates)
-    val bands = sigs.select(col("doc_id"), col("sig"),
-      posexplode(array((0 until 4).map(i =>
-        shiftrightunsigned(col("sig"), i * 16).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("band_idx", "chunk")))
+    // The pair id is the struct (doc_id, sig): it orders and compares
+    // by doc_id (unique), and it brings both signatures into the capped
+    // band join, so the Hamming check runs as that join's residual and
+    // only verified pairs reach the distinct. 16-bit bands of this
+    // 31-token-vocabulary corpus collide quadratically (7.8M candidate
+    // rows at sf1, 250k at sf0.1), which a verify after a candidate
+    // distinct would shuffle first. localCheckpoint'ed: both self-join
+    // branches read the bands instead of re-hashing every document.
+    val bands = d.select(struct(col("doc_id"), sim(col("text")).as("sig")).as("ds"))
+      .select(col("ds"),
+        posexplode(array((0 until 4).map(i =>
+          shiftrightunsigned(col("ds.sig"), i * 16).bitwiseAND(lit(0xFFFFL))): _*))
+          .as(BandKeys))
       .lineageCut()
-    bands.as("x").join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.chunk") === col("y.chunk") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= 3)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
+    val pairs = Blocked.selfPairs(bands, BandKeys, "ds", BandBucketCap, "a", "b")
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.sig").as("_ha"), col("b.sig").as("_hb"))
+    hammingAtMost(pairs, 3).select(col("doc_a"), col("doc_b"), col("hamming")).distinct()
   }
+
+  /** `cand` (doc_a, doc_b, `on`…) with each side's `hashCol` looked up
+    * in `h` on (doc_id, `on`…) as `_ha`/`_hb` — the input of
+    * [[hammingAtMost]] for the image and video keys in [[Multimodal]]. */
+  private[llm] def withHashes(cand: DataFrame, h: DataFrame, hashCol: String,
+      on: Seq[String]): DataFrame = {
+    def side(id: String, hash: String) =
+      h.select((col("doc_id").as(id) +: on.map(col)) :+ col(hashCol).as(hash): _*)
+    cand
+      .join(side("doc_a", "_ha"), "doc_a" +: on)
+      .join(side("doc_b", "_hb"), "doc_b" +: on)
+  }
+
+  /** The pairs whose hashes `_ha` and `_hb` differ in at most `max`
+    * bits, with that distance as `hamming` — the exact verify after
+    * every Hamming banding: SimHash here, the image and video dHash in
+    * [[Multimodal]]. */
+  private[llm] def hammingAtMost(pairs: DataFrame, max: Int): DataFrame =
+    pairs
+      .withColumn("hamming", expr("cast(bit_count(_ha ^ _hb) as int)"))
+      .filter(col("hamming") <= max)
+
+  /** The planted derivative of each doc of the (doc_id, text) frame `d`
+    * with doc_id < `n`: id + `offset`, text `text` (an expression over
+    * the source doc's columns) — the copies whose detection the
+    * near-dup keys' oracles pin. */
+  private[llm] def planted(d: DataFrame, n: Long, offset: Long, text: Column): DataFrame =
+    d.filter(col("doc_id") < n)
+      .select((col("doc_id") + offset).as("doc_id"), text.as("text"))
 
   /** Planted-variant id offsets for the keyed SimHash query: each is a
     * text transformation that provably PRESERVES the SimHash signature,
@@ -590,7 +604,7 @@ object Dedup {
   private val ShuffleOffset = 200000000L // tokens sorted: votes are a bag-of-words sum
   private val DoubleOffset = 300000000L  // text repeated: votes double, signs unchanged
 
-  /** Keyed SimHash query (since r5): the signature family is
+  /** Keyed SimHash query: the signature family is
     * hash-specific, so the ORACLE-FACING output is the set of pairs
     * whose detection is mathematically guaranteed, each with its
     * detection flags — planted variants exercising SimHash's defining
@@ -607,14 +621,14 @@ object Dedup {
     * tolerance is expressible. */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
-    val base = d.filter(col("doc_id") < SimhashPlantBase)
-    def planted(offset: Long, f: Column => Column): DataFrame =
-      base.select((col("doc_id") + offset).as("doc_id"), f(col("text")).as("text"))
-    val corpus = d
-      .unionByName(planted(CopyOffset, identity))
-      .unionByName(planted(ShuffleOffset,
-        t => array_join(sort_array(split(t, " ")), " ")))
-      .unionByName(planted(DoubleOffset, t => concat(t, lit(" "), t)))
+    val text = col("text")
+    val variants = Seq(
+      ("planted_copy", CopyOffset, text),
+      ("planted_shuffled", ShuffleOffset, array_join(sort_array(split(text, " ")), " ")),
+      ("planted_doubled", DoubleOffset, concat(text, lit(" "), text)))
+    val corpus = variants.foldLeft(d) { case (c, (_, off, t)) =>
+      c.unionByName(planted(d, SimhashPlantBase, off, t))
+    }
     // the real pipeline over corpus ∪ planted; pairs is small (planted
     // + true near-dups), localCheckpoint'ed so the three flag joins
     // below don't re-run the band join each
@@ -623,11 +637,10 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
 
     // expected pairs: one row per guaranteed detection
-    val plantedExpected = Seq(
-      ("planted_copy", CopyOffset), ("planted_shuffled", ShuffleOffset),
-      ("planted_doubled", DoubleOffset)).map { case (kind, off) =>
-      base.select(lit(kind).as("pair_kind"), col("doc_id").as("id_a"),
-        (col("doc_id") + off).as("id_b"))
+    val plantedExpected = variants.map { case (kind, off, _) =>
+      d.filter(col("doc_id") < SimhashPlantBase)
+        .select(lit(kind).as("pair_kind"), col("doc_id").as("id_a"),
+          (col("doc_id") + off).as("id_b"))
     }.reduce(_ unionByName _)
     // corpus raw-text dup groups: canonical (min_id, other) pairs.
     // Grouped/joined on a 256-bit content hash so the exchange carries
@@ -720,11 +733,8 @@ object Dedup {
   private[graft] def containmentCorpus(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir).select(col("doc_id"), col("text"))
     val toks = split(col("text"), " ")
-    val planted = d.filter(col("doc_id") < 10)
-      .select((col("doc_id") + ContainedOffset).as("doc_id"),
-        array_join(slice(toks, lit(1), ((size(toks) + 1) / 2).cast("int")), " ")
-          .as("text"))
-    d.unionByName(planted)
+    d.unionByName(planted(d, 10, ContainedOffset,
+      array_join(slice(toks, lit(1), ((size(toks) + 1) / 2).cast("int")), " ")))
   }
 
   /** Containment pairs over an arbitrary (doc_id, text) frame.
@@ -740,7 +750,7 @@ object Dedup {
       thrNum: Int = 9, thrDen: Int = 10, shingleK: Int = 3): DataFrame = {
     val thr = thrNum.toDouble / thrDen
     // Carry an 8-byte shingle FINGERPRINT (xxhash64) through the
-    // pipeline instead of the ~30-byte string (r8): every downstream
+    // pipeline instead of the ~30-byte string: every downstream
     // stage — df count, prefix rank, candidate join, intersection
     // joins — only ever compares shingles for equality/order, and the
     // output contains no shingle, so a fingerprint with a consistent
@@ -856,7 +866,7 @@ object Dedup {
   /** Exact-containment verification of a candidate pair list against
     * the shingle set — only candidates pay the intersection work.
     *
-    * Shape (r8): per-doc fingerprint ARRAYS + codegen'd
+    * Shape: per-doc fingerprint ARRAYS + codegen'd
     * `array_intersect`, not an explode-and-count join. The row spelling
     * (cand ⋈ sh on doc_a, then ⋈ sh on (doc_b, shingle), groupBy pair)
     * materializes Σ_pairs |set(doc_a)| rows through the second join's
@@ -905,14 +915,7 @@ object Dedup {
        |    array_to_string(l[1:(len(l)+1)//2], ' ')
        |  FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
        |  WHERE doc_id < 10),
-       |t AS (SELECT doc_id, string_split(text, ' ') AS l FROM corpus),
-       |toks AS (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
-       |sh AS (
-       |  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS s
-       |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-       |  JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-       |  UNION
-       |  SELECT doc_id, text AS s FROM corpus WHERE len(string_split(text, ' ')) <= 3),
+       |${shingleSetCte("corpus")},
        |dfreq AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY 1),
        |ranked AS (
        |  SELECT sh.doc_id, sh.s,
@@ -971,7 +974,7 @@ object Dedup {
     val spans = graft.core.Spread.cpuBound(spark, docs(spark, dir), col("doc_id"))
       // tokenize ONCE into a named column; the window HOF references it
       .select(col("doc_id"),
-        split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " ").as("_toks"))
+        split(normText, " ").as("_toks"))
       .filter(size(col("_toks")) >= SpanTokens)
       .select(col("doc_id"),
         explode(expr(
@@ -1007,13 +1010,13 @@ object Dedup {
   /** Apply the near-dedup: the cleaned corpus after dropping every doc
     * that near-duplicates a smaller-id partner (min-id-wins, the usual
     * training-corpus convention). Edges come from the PRODUCTION
-    * banded LSH path (r8 — previously the brute self-join, 9.9 s at
-    * sf1 and quadratic-risk beyond): LSH == brute on these corpora is
+    * banded LSH path (the brute self-join took 9.9 s at sf1 and is
+    * quadratic-risk beyond): LSH == brute on these corpora is
     * pinned at sf0.001+sf0.01 in LlmSpec and on generated adversarial
     * corpora in PropertySpec, so the brute-replaying oracle SQL stays
     * the honest gate — a recall regression in the banded path turns
     * THIS row red too, not just `llm_near_dedup`'s. Pairs come from
-    * the build-once [[nearDupPairsFixture]] (r8): this key pays only
+    * the build-once [[nearDupPairsFixture]]: this key pays only
     * the anti-join increment, the lifecycle a production dedup-apply
     * actually has. */
   def dedupApply(spark: SparkSession, dir: String): DataFrame = {
@@ -1026,25 +1029,9 @@ object Dedup {
   }
 
   private val dedupApplySql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       |toks AS (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
-       |sh AS (
-       |  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS s
-       |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-       |  JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-       |  UNION
-       |  SELECT doc_id, text AS s FROM documents WHERE len(string_split(text, ' ')) <= 3),
-       |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-       |inter AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |drops AS (
-       |  SELECT DISTINCT doc_b FROM inter
-       |  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-       |  WHERE CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) >= 0.8)
+    s"""WITH $jaccardCte
        |SELECT doc_id, lang, source, n_chars FROM documents
-       |WHERE doc_id NOT IN (SELECT doc_b FROM drops)
+       |WHERE doc_id NOT IN (SELECT doc_b FROM jac)
        |${O.OrderAll}"""
 
   /** Duplicate clusters: connected components of the near-dup graph by
@@ -1081,9 +1068,9 @@ object Dedup {
     * multi-component) can exercise the multi-round convergence paths
     * the test corpus never reaches. */
   private[graft] def components(pairs: DataFrame): DataFrame = {
-    // Materialize the symmetric edge list ONCE (r14): before this cut,
-    // every hook round's neighbor-min join re-evaluated `pairs` — for
-    // graph_cc that meant re-running the support-filtered lineitem
+    // Materialize the symmetric edge list ONCE: without this cut,
+    // every hook round's neighbor-min join re-evaluates `pairs` — for
+    // graph_cc that means re-running the support-filtered lineitem
     // self-join EVERY round of the convergence loop. One cut, read by
     // all rounds.
     val edges = pairs
@@ -1131,30 +1118,13 @@ object Dedup {
   }
 
   private val dupClustersSql =
-    // MATERIALIZED (r13): same inlining hazard as dedupIncrementalSql,
-    // compounded by recursion — un-materialized, `edges` re-derives the
-    // whole shingle tree inside every reach round (ENOSPC at sf10).
+    // MATERIALIZED: un-materialized, `edges` would re-derive the whole
+    // shingle tree inside every reach round (ENOSPC at sf10)
     s"""WITH RECURSIVE
-       |t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       |toks AS MATERIALIZED (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
-       |sh AS MATERIALIZED (
-       |  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS s
-       |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-       |  JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-       |  UNION
-       |  SELECT doc_id, text AS s FROM documents WHERE len(string_split(text, ' ')) <= 3),
-       |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-       |inter AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |pairs AS MATERIALIZED (
-       |  SELECT doc_a, doc_b FROM inter
-       |  JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-       |  WHERE CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) >= 0.8),
+       |$jaccardCte,
        |edges AS MATERIALIZED (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
+       |  SELECT doc_a, doc_b FROM jac
+       |  UNION SELECT doc_b, doc_a FROM jac),
        |reach(src, dst) AS (
        |  SELECT doc_a, doc_b FROM edges
        |  UNION
@@ -1285,7 +1255,7 @@ object Dedup {
   def editDistance(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
     // candidates from the stored fixture: Levenshtein is the verify
-    // increment over the pair set, not a reason to re-mine it (r8)
+    // increment over the pair set, not a reason to re-mine it
     val pairs = nearDupPairsFixture(spark, dir).select(col("doc_a"), col("doc_b"))
     ordered(
       pairs
@@ -1301,29 +1271,12 @@ object Dedup {
   }
 
   private val editDistanceSql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       |toks AS (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
-       |sh AS (
-       |  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS s
-       |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-       |  JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
-       |  UNION
-       |  SELECT doc_id, text AS s FROM documents WHERE len(string_split(text, ' ')) <= 3),
-       |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-       |pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-       |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |cand AS (
-       |  SELECT doc_a, doc_b FROM pairs
-       |  JOIN sz sa ON sa.doc_id = doc_a
-       |  JOIN sz sb ON sb.doc_id = doc_b
-       |  WHERE CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) >= 0.8)
+    s"""WITH $jaccardCte
        |SELECT doc_a, doc_b,
        |  CAST(levenshtein(da.text, db.text) AS BIGINT) AS lev,
        |  1.0 - CAST(levenshtein(da.text, db.text) AS DOUBLE)
        |      / CAST(greatest(len(da.text), len(db.text)) AS DOUBLE) AS edit_sim
-       |FROM cand
+       |FROM jac
        |JOIN documents da ON da.doc_id = doc_a
        |JOIN documents db ON db.doc_id = doc_b
        |${O.OrderAll}"""

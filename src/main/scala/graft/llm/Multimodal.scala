@@ -1,10 +1,11 @@
 package graft.llm
 
 import graft.core.Lineage.LineageCutOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables}
+import graft.core.{Blocked, Q, Tables}
 import graft.core.Determinism._
+import graft.core.{OracleDsl => O}
 
 /** Multimodal-column plumbing (SURVEY.md §2.11 / north star): treat
   * media as opaque `binary` columns with typed metadata, decoded by a
@@ -74,7 +75,7 @@ object Multimodal {
   /** Driver-contract query: documents' text bytes as the stand-in
     * payload → partition-local decode → flat feature columns.
     *
-    * Oracled exactly (since r5): the corpus is pure ASCII, so every
+    * Oracled exactly: the corpus is pure ASCII, so every
     * payload byte IS the character's code point and DuckDB can replay
     * the whole byte fold — length via octet_length, min/max/mean via a
     * char-split + unicode() list fold. f_mean is double-divided then
@@ -151,11 +152,10 @@ object Multimodal {
           col("f_min"), col("f_max")))
   }
 
-  /** UNIT COUPLING (r6/r7 advice): this SQL is single-unit — frame
-    * count AND slices both derive from CHARACTERS (`length` // 64,
-    * `substring` + `unicode` code points; r7 advice closed the
-    * internal inconsistency where n_frames divided `octet_length`
-    * bytes while slices took chars). The Scala path slices the UTF-8
+  /** UNIT COUPLING: this SQL is single-unit — frame count AND slices
+    * both derive from CHARACTERS (`length` // 64, `substring` +
+    * `unicode` code points; n_frames must not divide `octet_length`
+    * bytes while slices take chars). The Scala path slices the UTF-8
     * BYTE payload; the two engines agree iff the corpus is pure ASCII
     * (byte i == char i, code point == byte value) — an invariant
     * `llm_multimodal_decode` relies on identically and MultimodalSpec
@@ -191,22 +191,22 @@ object Multimodal {
        |ORDER BY ALL NULLS FIRST"""
   }
 
-  // ——— perceptual-hash image dedup (r10, r9 verdict #5) ———
+  // ——— perceptual-hash image dedup ———
 
   /** 1-D "resize" target: 64 block means → 63 dHash bits. */
   private[graft] val PHashBlocks = 64
   /** 5 band slices (bit offset, width) covering all 63 hash bits,
-    * joined as chained TRIPLES (r14 — the banding-width ladder's
-    * third rung; r12's 3 × 21 replaced 7 × 9 when the 9-bit alphabet
-    * went chance-quadratic at 500k docs). Why chaining: a 21-bit
+    * joined as chained TRIPLES — the third rung of the banding-width
+    * ladder (7 × 9-bit bands went chance-quadratic at 500k docs;
+    * 3 × 21-bit bands came next). Why chaining: a 21-bit
     * slice of this hash carries only ~17 bits of EFFECTIVE entropy —
     * gradient bits are correlated through the payload's length/
     * word-boundary structure — so even at 2²¹ nominal values,
     * chance-collision candidates measured 100×/decade at sf1→sf10
-    * (1.95M candidates against 771 true pairs) once the r14 corpus
-    * fix removed the real cross-shard dups that had been masking
-    * them. Joining on a CHAINED key of three 12–13-bit slices
-    * multiplies effective entropies (~26 bits measured jointly):
+    * (1.95M candidates against 771 true pairs) once the corpus
+    * generator stopped emitting the real cross-shard dups that had
+    * been masking them. Joining on a CHAINED key of three 12–13-bit
+    * slices multiplies effective entropies (~26 bits measured jointly):
     * candidate series re-measured 71 → 723 → 9.7k over
     * sf0.1→1→10 ≈ 10–13×/decade, tracking true pairs. Recall stays
     * EXACT by pigeonhole: Hamming ≤ [[PHashMaxHamming]] = 2 dirties
@@ -276,6 +276,52 @@ object Multimodal {
       }
   }
 
+  /** Stand-in media corpus shared by the image and video keys: the
+    * documents of ≥ `minChars` chars that contain no non-ASCII char,
+    * plus a planted derivative of each doc_id < 10 at id + `offset`
+    * with text `plantedText`, as (doc_id, payload = the text's UTF-8
+    * bytes) rows.
+    *
+    * ASCII gate: the Scala path hashes UTF-8 BYTES, the SQL mirror
+    * ([[mediaCorpusSql]]) hashes CODE POINTS — the two define the same
+    * hash only when byte i == code point i, i.e. pure ASCII. The
+    * corpus DEFINITION enforces that on both engines identically, so a
+    * non-ASCII document is excluded rather than silently hashed to two
+    * different values (and the length gate counts the same unit on
+    * both sides, chars == bytes). The gate is spelled ANCHOR-FREE
+    * ("contains no non-ASCII char"): Java regex `$` (Spark rlike) also
+    * matches BEFORE a final line terminator — including the non-ASCII
+    * U+0085 / U+2028 / U+2029 — while DuckDB RE2 `$` is end-of-text
+    * only, so the anchored form `^[\x00-\x7F]*$` passes a doc ending in
+    * U+2028 on the Spark side but excludes it in the SQL mirror.
+    * Negation has no anchors to diverge on; both engines agree on
+    * every input (fixture doc ending in U+2028 pinned in
+    * MultimodalSpec). */
+  private def mediaCorpus(spark: SparkSession, dir: String, minChars: Int,
+      offset: Long, plantedText: Column): DataFrame = {
+    val d = Tables.load(spark, dir, "documents")
+      .filter(!col("text").rlike("[^\\x00-\\x7F]"))
+      .filter(length(col("text")) >= minChars)
+      .select(col("doc_id"), col("text"))
+    d.unionByName(Dedup.planted(d, 10, offset, plantedText))
+      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
+  }
+
+  /** Oracle CTEs `gated` and `corpus` mirroring [[mediaCorpus]]; a
+    * fragment for a `WITH` list, in the `|`-margin form `Q` strips. */
+  private def mediaCorpusSql(minChars: Int, offset: Long,
+      plantedText: String): String =
+    s"""gated AS (
+       |  SELECT doc_id, text FROM documents
+       |  WHERE NOT regexp_matches(text, '[^\\x00-\\x7F]')
+       |    AND length(text) >= $minChars),
+       |corpus AS (
+       |  SELECT doc_id, text FROM gated
+       |  UNION ALL
+       |  SELECT doc_id + $offset,
+       |    $plantedText
+       |  FROM gated WHERE doc_id < 10)"""
+
   /** The keyed corpus: ASCII text bytes as the stand-in image payload
     * (≥ [[PHashMinBytes]]), plus PLANTED perturbed copies — each
     * doc_id < 10 contributes a derivative at id + 5·10⁸ whose FIRST
@@ -283,58 +329,11 @@ object Multimodal {
     * watermark"): a one-block edit moves at most dHash bit 0, so the
     * planted pair sits at Hamming ≤ 1, inside the threshold by
     * construction and replayable in SQL. */
-  private[graft] def imageCorpus(spark: SparkSession, dir: String): DataFrame = {
-    // ASCII gate (r11, per advisor): the Scala path hashes UTF-8
-    // BYTES, the SQL mirror hashes CODE POINTS — the two define the
-    // same hash only when byte i == code point i, i.e. pure ASCII.
-    // That invariant was previously assumed of the fixture; now the
-    // corpus DEFINITION enforces it on both engines identically, so a
-    // non-ASCII document is excluded rather than silently hashed to
-    // two different values (and the length-≥-min gate below counts
-    // the same unit on both sides, chars == bytes).
-    //
-    // The gate is spelled ANCHOR-FREE ("contains no non-ASCII char",
-    // r12 per advisor): Java regex `$` (Spark rlike) also matches
-    // BEFORE a final line terminator — including the non-ASCII
-    // U+0085 / U+2028 / U+2029 — while DuckDB RE2 `$` is end-of-text
-    // only, so the anchored form `^[\x00-\x7F]*$` passed a doc ending
-    // in U+2028 on the Spark side but excluded it in the SQL mirror.
-    // Negation has no anchors to diverge on; both engines agree on
-    // every input (fixture doc ending in U+2028 pinned in
-    // MultimodalSpec).
-    val d = Tables.load(spark, dir, "documents")
-      .filter(!col("text").rlike("[^\\x00-\\x7F]"))
-      .filter(length(col("text")) >= PHashMinBytes)
-      .select(col("doc_id"), col("text"))
-    val planted = d.filter(col("doc_id") < 10)
-      .select((col("doc_id") + ImageDupOffset).as("doc_id"),
-        expr("concat(repeat('z', (length(text) + 63) div 64), " +
-          "substring(text, (length(text) + 63) div 64 + 1))").as("text"))
-    d.unionByName(planted)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-  }
+  private[graft] def imageCorpus(spark: SparkSession, dir: String): DataFrame =
+    mediaCorpus(spark, dir, PHashMinBytes, ImageDupOffset,
+      expr("concat(repeat('z', (length(text) + 63) div 64), " +
+        "substring(text, (length(text) + 63) div 64 + 1))"))
 
-  /** Perceptual-hash near-duplicate IMAGES — dedup for the binary/
-    * multimodal column (text and embeddings have their own passes;
-    * this is the one for payload bytes: thumbnails, re-encodes,
-    * watermarked copies). Pipeline: per-partition dHash (decode-time
-    * work, no shuffle) → chained [[PHashSlices]] band-triple keys
-    * ([[BandTriples]]) → candidates from the CAPPED band self-join
-    * ([[graft.core.Blocked.selfPairs]], ≤ cap² rows per join group —
-    * a boilerplate band bucket never becomes one straggler task) →
-    * exact Hamming verify (`bit_count(xor)`) at ≤ [[PHashMaxHamming]].
-    * Banding is recall-exact at this threshold (pigeonhole, see
-    * [[PHashMaxHamming]]), and MultimodalSpec pins banded ≡ brute on
-    * the fixture corpus plus the planted-copy recall law. At 100 TB:
-    * hashes are 16 B/row, bands shuffle 10 rows/doc, candidates scale
-    * with true collisions, never n². */
-  /** Banded candidate pairs of [[imageDedup]] from its hash table —
-    * THE stage whose cardinality decides whether image dedup is linear
-    * or quadratic at scale (7×9 bands went chance-quadratic at 500k
-    * docs → 3×21; 3×21 measured 100×/decade on the decorrelated
-    * corpus → chained triples, see [[PHashSlices]]).
-    * One definition shared by the keyed query and ScaleUpSpec's
-    * candidate-growth test, so the test measures exactly what ships. */
   /** (id cols..., cb, k1, k2, k3): one row per chained band-triple of
     * `hashCol`, the join key of both modalities' candidate stages. */
   private def tripleBands(h: DataFrame, hashCol: String,
@@ -352,27 +351,48 @@ object Multimodal {
         col("col.k3").as("k3")): _*)
   }
 
+  /** Oracle CTEs `slices`, `combos`, `bands` and `cand` over hash table
+    * `h`: the (`keys`…, doc_a < doc_b) pairs that share a chained band
+    * triple of `hashCol` at equal `keys` — the all-pairs band join the
+    * capped Scala stage must equal. Generated from
+    * [[PHashSlices]]/[[VideoSlices]] and [[BandTriples]] so the oracle
+    * can never drift from the Scala stage; list indices are 1-based
+    * (DuckDB). */
+  private def bandCandidatesSql(hashCol: String, slices: Seq[(Int, Int)],
+      keys: Seq[String]): String = {
+    val ids = ("doc_id" +: keys).mkString(", ")
+    val s = slices.map { case (o, w) => s"($hashCol >> $o) & ${(1 << w) - 1}" }
+      .mkString("[", ", ", "]")
+    val combos = BandTriples.zipWithIndex.map { case ((i, j, k), c) =>
+      s"($c, ${i + 1}, ${j + 1}, ${k + 1})" }.mkString(", ")
+    val on = (keys ++ Seq("cb", "k1", "k2", "k3")).map(k => s"y.$k = x.$k")
+    s"""slices AS (
+       |  SELECT $ids, $s AS s FROM h),
+       |combos AS (SELECT * FROM (VALUES $combos) AS t(cb, ci, cj, ck)),
+       |bands AS (
+       |  SELECT $ids, cb, s[ci] AS k1, s[cj] AS k2, s[ck] AS k3
+       |  FROM slices, combos),
+       |cand AS (
+       |  SELECT DISTINCT ${keys.map(k => s"x.$k, ").mkString}x.doc_id AS doc_a, y.doc_id AS doc_b
+       |  FROM bands x JOIN bands y
+       |    ON ${on.mkString(" AND ")} AND x.doc_id < y.doc_id)"""
+  }
+
+  /** Banded candidate pairs of [[imageDedup]] from its hash table —
+    * THE stage whose cardinality decides whether image dedup is linear
+    * or quadratic at scale (7×9 bands went chance-quadratic at 500k
+    * docs → 3×21; 3×21 measured 100×/decade on the decorrelated
+    * corpus → chained triples, see [[PHashSlices]]).
+    * One definition shared by the keyed query and ScaleUpSpec's
+    * candidate-growth test, so the test measures exactly what ships. */
   private[graft] def imageCandidatesFrom(h: DataFrame): DataFrame = {
     val bands = tripleBands(h.select(col("doc_id"), col("hash")),
       "hash", PHashSlices, Seq("doc_id"))
-    graft.core.Blocked
+    Blocked
       .selfPairs(bands, Seq("cb", "k1", "k2", "k3"), "doc_id",
-        graft.llm.Dedup.BandBucketCap, "doc_a", "doc_b")
+        Dedup.BandBucketCap, "doc_a", "doc_b")
       .select(col("doc_a"), col("doc_b")).distinct()
   }
-
-  /** SQL spellings of the slice list and the triple enumeration —
-    * generated from [[PHashSlices]]/[[BandTriples]] so the oracle
-    * can never drift from the Scala stage. List indices are 1-based
-    * (DuckDB). */
-  private def slicesSql(slices: Seq[(Int, Int)], h: String): String =
-    slices.map { case (o, w) => s"($h >> $o) & ${(1 << w) - 1}" }
-      .mkString("[", ", ", "]")
-  private def combosSql: String =
-    "combos AS (SELECT * FROM (VALUES " +
-      BandTriples.zipWithIndex.map { case ((i, j, k), c) =>
-        s"($c, ${i + 1}, ${j + 1}, ${k + 1})" }.mkString(", ") +
-      ") AS t(cb, ci, cj, ck))"
 
   /** The decoded-and-hashed image corpus — shared entry for the keyed
     * query and ScaleUpSpec's growth test (16 B/row; lineage cut so the
@@ -380,38 +400,40 @@ object Multimodal {
   private[graft] def imageHashes(spark: SparkSession, dir: String): DataFrame =
     perceptualHash(spark, imageCorpus(spark, dir)).toDF().lineageCut()
 
+  /** Perceptual-hash near-duplicate IMAGES — dedup for the binary/
+    * multimodal column (text and embeddings have their own passes;
+    * this is the one for payload bytes: thumbnails, re-encodes,
+    * watermarked copies). Pipeline: per-partition dHash (decode-time
+    * work, no shuffle) → chained [[PHashSlices]] band-triple keys
+    * ([[BandTriples]]) → candidates from the CAPPED band self-join
+    * ([[graft.core.Blocked.selfPairs]], ≤ cap² rows per join group —
+    * a boilerplate band bucket never becomes one straggler task) →
+    * exact Hamming verify ([[Dedup.hammingAtMost]]) at ≤
+    * [[PHashMaxHamming]]. Banding is recall-exact at this threshold
+    * (pigeonhole, see [[PHashMaxHamming]]), and MultimodalSpec pins
+    * banded ≡ brute on the fixture corpus plus the planted-copy recall
+    * law. At 100 TB: hashes are 16 B/row, bands shuffle 10 rows/doc,
+    * candidates scale with true collisions, never n². */
   def imageDedup(spark: SparkSession, dir: String): DataFrame = {
     // read by the band explode and both verify sides
     val h = imageHashes(spark, dir)
-    // exact Hamming verify of the banded candidates
-    ordered(imageCandidatesFrom(h)
-      .join(h.select(col("doc_id").as("doc_a"), col("hash").as("_ha")), Seq("doc_a"))
-      .join(h.select(col("doc_id").as("doc_b"), col("hash").as("_hb")), Seq("doc_b"))
-      .withColumn("hamming", expr("cast(bit_count(_ha ^ _hb) as int)"))
-      .filter(col("hamming") <= PHashMaxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming")))
+    ordered(
+      Dedup.hammingAtMost(
+        Dedup.withHashes(imageCandidatesFrom(h), h, "hash", Nil), PHashMaxHamming)
+        .select(col("doc_a"), col("doc_b"), col("hamming")))
   }
 
   private val imageDedupSql =
-    s"""WITH ascii_docs AS (
-       |  SELECT doc_id, text FROM documents
-       |  WHERE NOT regexp_matches(text, '[^\\x00-\\x7F]')
-       |    AND length(text) >= $PHashMinBytes),
-       |corpus AS (
-       |  SELECT doc_id, text FROM ascii_docs
-       |  UNION ALL
-       |  SELECT doc_id + $ImageDupOffset,
-       |    repeat('z', (length(text) + 63) // 64) ||
-       |      substring(text, (length(text) + 63) // 64 + 1)
-       |  FROM ascii_docs WHERE doc_id < 10),
+    s"""WITH ${mediaCorpusSql(PHashMinBytes, ImageDupOffset,
+           "repeat('z', (length(text) + 63) // 64) || " +
+             "substring(text, (length(text) + 63) // 64 + 1)")},
        |d AS (SELECT doc_id, length(text) AS n,
        |  list_transform(regexp_split_to_array(text, ''), x -> unicode(x)) AS l
        |  FROM corpus),
-       |toks AS (SELECT doc_id, n, unnest(l) AS v,
-       |  generate_subscripts(l, 1) AS p FROM d),
+       |toks AS (${O.elements("d", "doc_id, n")}),
        |blk AS (
-       |  SELECT doc_id, (CAST(p - 1 AS BIGINT) * $PHashBlocks) // n AS j,
-       |    CAST(SUM(v) AS BIGINT) AS s, COUNT(*) AS c
+       |  SELECT doc_id, (CAST(pos - 1 AS BIGINT) * $PHashBlocks) // n AS j,
+       |    CAST(SUM(tok) AS BIGINT) AS s, COUNT(*) AS c
        |  FROM toks GROUP BY 1, 2),
        |h AS (
        |  SELECT a.doc_id,
@@ -419,27 +441,17 @@ object Multimodal {
        |      THEN CAST(1 AS BIGINT) << CAST(a.j AS INT) ELSE 0 END) AS BIGINT) AS hash
        |  FROM blk a JOIN blk b ON b.doc_id = a.doc_id AND b.j = a.j + 1
        |  GROUP BY 1),
-       |slices AS (
-       |  SELECT doc_id, ${slicesSql(PHashSlices, "hash")} AS s FROM h),
-       |$combosSql,
-       |bands AS (
-       |  SELECT doc_id, cb, s[ci] AS k1, s[cj] AS k2, s[ck] AS k3
-       |  FROM slices, combos),
-       |cand AS (
-       |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       |  FROM bands x JOIN bands y
-       |    ON y.cb = x.cb AND y.k1 = x.k1 AND y.k2 = x.k2 AND y.k3 = x.k3
-       |    AND x.doc_id < y.doc_id)
+       |${bandCandidatesSql("hash", PHashSlices, Nil)}
        |SELECT doc_a, doc_b,
        |  CAST(bit_count(xor(ha.hash, hb.hash)) AS INT) AS hamming
        |FROM cand
        |JOIN h ha ON ha.doc_id = cand.doc_a
        |JOIN h hb ON hb.doc_id = cand.doc_b
        |WHERE bit_count(xor(ha.hash, hb.hash)) <= $PHashMaxHamming
-       |${graft.core.OracleDsl.OrderAll}"""
+       |${O.OrderAll}"""
 
-  // ——— video-level near-dup (r12, r11 verdict #8: the multimodal
-  // composition — frames → per-frame hash → doc-pair coverage) ———
+  // ——— video-level near-dup: the multimodal composition — frames →
+  // per-frame hash → doc-pair coverage ———
 
   /** 32-byte frames: every gated doc (≥ [[VideoMinChars]]) yields ≥ 8
     * full frames, so coverage has a real denominator on this corpus
@@ -453,15 +465,15 @@ object Multimodal {
     * standard dHash trick of adding a second gradient direction when
     * one row of comparisons yields too few bits. The banding is the
     * same 5-slice chained-triple scheme as the image hash
-    * ([[PHashSlices]] rationale — r14: the r12 3 × 20-bit bands
-    * measured 80×/decade chance candidates at sf1→sf10 once the
-    * corpus fix removed the masking cross-shard dups, because a
+    * ([[PHashSlices]] rationale: 3 × 20-bit bands measured
+    * 80×/decade chance candidates at sf1→sf10 once the corpus
+    * generator stopped emitting the masking cross-shard dups, because a
     * 20-bit slice of 32-byte-frame gradients carries far less
     * effective entropy; chained triples re-measured 17.5k → 177k →
     * 1.97M ≈ 10–11×/decade, tracking true matched frames). All 61
-    * bits are banded (the old spare bit 60 now lives in a slice);
-    * [[VideoMaxHamming]] ≤ 2 = 5 − 3 keeps the chained banding
-    * recall-EXACT by the same pigeonhole as [[PHashMaxHamming]]. */
+    * bits are banded; [[VideoMaxHamming]] ≤ 2 = 5 − 3 keeps the
+    * chained banding recall-EXACT by the same pigeonhole as
+    * [[PHashMaxHamming]]. */
   private[graft] val VideoSlices: Seq[(Int, Int)] =
     Seq((0, 13), (13, 12), (25, 12), (37, 12), (49, 12))
   private[graft] val VideoMaxHamming = 2
@@ -483,24 +495,13 @@ object Multimodal {
     * deterministic "subtitle burn-in"): the perturbed frame's bytes
     * are constant, so its gradient hash is 0 — far from the original
     * in Hamming — while the other 3/4 of frames stay bit-identical. */
-  private[graft] def videoCorpus(spark: SparkSession, dir: String): DataFrame = {
-    // same anchor-free ASCII gate as imageCorpus (byte i == char i ==
-    // code point i is what lets DuckDB replay the byte hash)
-    val d = Tables.load(spark, dir, "documents")
-      .filter(!col("text").rlike("[^\\x00-\\x7F]"))
-      .filter(length(col("text")) >= VideoMinChars)
-      .select(col("doc_id"), col("text"))
-    val planted = d.filter(col("doc_id") < 10)
-      .select((col("doc_id") + VideoDupOffset).as("doc_id"),
-        expr(s"""concat(array_join(transform(
+  private[graft] def videoCorpus(spark: SparkSession, dir: String): DataFrame =
+    mediaCorpus(spark, dir, VideoMinChars, VideoDupOffset,
+      expr(s"""concat(array_join(transform(
           sequence(0, int(length(text) / $VideoFrameChars) - 1),
           f -> IF(f % 4 = 2, repeat('z', $VideoFrameChars),
             substring(text, f * $VideoFrameChars + 1, $VideoFrameChars))), ''),
-          substring(text, int(length(text) / $VideoFrameChars) * $VideoFrameChars + 1))""")
-          .as("text"))
-    d.unionByName(planted)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-  }
+          substring(text, int(length(text) / $VideoFrameChars) * $VideoFrameChars + 1))"""))
 
   /** Payload → one gradient hash per full [[VideoFrameChars]]-byte
     * frame, in the same per-partition decoder pass as [[sampleFrames]]
@@ -533,23 +534,6 @@ object Multimodal {
       }
   }
 
-  /** Video-level near-duplicates — the end-to-end multimodal
-    * composition: frames → per-frame gradient hash (decode-time, no
-    * shuffle) → per-frame LSH candidates at the SAME timeline index
-    * through the capped band self-join ([[graft.core.Blocked.selfPairs]]
-    * on (frame_idx, chained band triple) — [[VideoSlices]] with
-    * [[BandTriples]] (3×10 bands went chance-quadratic at sf10 → 3×20
-    * at r12 → chained triples at r14, see [[VideoSlices]]'s rationale;
-    * keep the constants and this sentence in sync), frame_idx in the key
-    * spreads each band's alphabet across the timeline, and the cap
-    * bounds any boilerplate bucket) → exact per-frame Hamming verify
-    * (recall-exact banding, pigeonhole) → group matches by doc pair →
-    * coverage ≥ [[VideoCoverage]] of the shorter side's frames.
-    * MultimodalSpec pins banded ≡ brute per-frame recall and the
-    * planted-derivative coverage law. At 100 TB: 20 B/frame-hash rows,
-    * 3 band rows per frame, candidates track aligned collisions — the
-    * quadratic verify only ever sees banded survivors, never n²
-    * (10 chained band rows per frame). */
   /** Aligned banded candidate (frame, doc pair) rows of [[videoDedup]]
     * from its frame-hash table — what ScaleUpSpec's candidate-growth
     * test counts for the video modality (same rationale as
@@ -560,9 +544,9 @@ object Multimodal {
     val bands = tripleBands(
       h.select(col("doc_id"), col("frame_idx"), col("fhash")),
       "fhash", VideoSlices, Seq("doc_id", "frame_idx"))
-    graft.core.Blocked
+    Blocked
       .selfPairs(bands, Seq("frame_idx", "cb", "k1", "k2", "k3"), "doc_id",
-        graft.llm.Dedup.BandBucketCap, "doc_a", "doc_b")
+        Dedup.BandBucketCap, "doc_a", "doc_b")
       .select(col("frame_idx"), col("doc_a"), col("doc_b")).distinct()
   }
 
@@ -573,18 +557,31 @@ object Multimodal {
   private[graft] def videoFrameHashes(spark: SparkSession, dir: String): DataFrame =
     frameHashes(spark, videoCorpus(spark, dir)).toDF().lineageCut()
 
+  /** Video-level near-duplicates — the end-to-end multimodal
+    * composition: frames → per-frame gradient hash (decode-time, no
+    * shuffle) → per-frame LSH candidates at the SAME timeline index
+    * through the capped band self-join ([[graft.core.Blocked.selfPairs]]
+    * on (frame_idx, chained band triple) — [[VideoSlices]] with
+    * [[BandTriples]] (3×10 bands went chance-quadratic at sf10, then
+    * 3×20 bands, now chained triples, see [[VideoSlices]]'s rationale;
+    * keep the constants and this sentence in sync), frame_idx in the key
+    * spreads each band's alphabet across the timeline, and the cap
+    * bounds any boilerplate bucket) → exact per-frame Hamming verify
+    * ([[Dedup.hammingAtMost]]; recall-exact banding, pigeonhole) →
+    * group matches by doc pair → coverage ≥ [[VideoCoverage]] of the
+    * shorter side's frames. MultimodalSpec pins banded ≡ brute
+    * per-frame recall and the planted-derivative coverage law. At
+    * 100 TB: 20 B/frame-hash rows, 10 chained band rows per frame,
+    * candidates track aligned collisions — the quadratic verify only
+    * ever sees banded survivors, never n². */
   def videoDedup(spark: SparkSession, dir: String): DataFrame = {
     // read by the band explode, both verify sides, and the per-doc
     // frame counts
     val h = videoFrameHashes(spark, dir)
     val nf = h.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    // per-frame exact Hamming verify of the aligned banded candidates
-    val matched = videoCandidatesFrom(h)
-      .join(h.select(col("doc_id").as("doc_a"), col("frame_idx"),
-        col("fhash").as("_ha")), Seq("doc_a", "frame_idx"))
-      .join(h.select(col("doc_id").as("doc_b"), col("frame_idx"),
-        col("fhash").as("_hb")), Seq("doc_b", "frame_idx"))
-      .filter(expr(s"bit_count(_ha ^ _hb) <= $VideoMaxHamming"))
+    val matched = Dedup.hammingAtMost(
+        Dedup.withHashes(videoCandidatesFrom(h), h, "fhash", Seq("frame_idx")),
+        VideoMaxHamming)
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("matched_frames"))
     ordered(matched
@@ -596,23 +593,16 @@ object Multimodal {
       .select(col("doc_a"), col("doc_b"), col("matched_frames"), col("coverage")))
   }
 
-  private val videoDedupSql =
-    s"""WITH gated AS (
-       |  SELECT doc_id, text FROM documents
-       |  WHERE NOT regexp_matches(text, '[^\\x00-\\x7F]')
-       |    AND length(text) >= $VideoMinChars),
-       |corpus AS (
-       |  SELECT doc_id, text FROM gated
-       |  UNION ALL
-       |  SELECT doc_id + $VideoDupOffset,
-       |    list_aggregate(list_transform(range(0, length(text) // $VideoFrameChars),
-       |      f -> CASE WHEN f % 4 = 2 THEN repeat('z', $VideoFrameChars)
-       |        ELSE substring(text, CAST(f * $VideoFrameChars + 1 AS INT),
-       |          $VideoFrameChars) END),
-       |      'string_agg', '') ||
-       |      substring(text,
-       |        CAST(length(text) // $VideoFrameChars * $VideoFrameChars + 1 AS INT))
-       |  FROM gated WHERE doc_id < 10),
+  private val videoDedupSql = {
+    val planted =
+      s"""list_aggregate(list_transform(range(0, length(text) // $VideoFrameChars),
+         |      f -> CASE WHEN f % 4 = 2 THEN repeat('z', $VideoFrameChars)
+         |        ELSE substring(text, CAST(f * $VideoFrameChars + 1 AS INT),
+         |          $VideoFrameChars) END),
+         |      'string_agg', '') ||
+         |      substring(text,
+         |        CAST(length(text) // $VideoFrameChars * $VideoFrameChars + 1 AS INT))"""
+    s"""WITH ${mediaCorpusSql(VideoMinChars, VideoDupOffset, planted)},
        |frames AS (
        |  SELECT doc_id, CAST(f AS INT) AS frame_idx,
        |    list_transform(regexp_split_to_array(
@@ -631,19 +621,7 @@ object Multimodal {
        |        ELSE CAST(0 AS BIGINT) END), 'sum') AS BIGINT) AS fhash
        |  FROM frames),
        |nf AS (SELECT doc_id, COUNT(*) AS nf FROM h GROUP BY 1),
-       |slices AS (
-       |  SELECT doc_id, frame_idx,
-       |    ${slicesSql(VideoSlices, "fhash")} AS s FROM h),
-       |$combosSql,
-       |bands AS (
-       |  SELECT doc_id, frame_idx, cb,
-       |    s[ci] AS k1, s[cj] AS k2, s[ck] AS k3
-       |  FROM slices, combos),
-       |cand AS (
-       |  SELECT DISTINCT x.frame_idx, x.doc_id AS doc_a, y.doc_id AS doc_b
-       |  FROM bands x JOIN bands y
-       |    ON y.frame_idx = x.frame_idx AND y.cb = x.cb AND y.k1 = x.k1
-       |    AND y.k2 = x.k2 AND y.k3 = x.k3 AND x.doc_id < y.doc_id),
+       |${bandCandidatesSql("fhash", VideoSlices, Seq("frame_idx"))},
        |m AS (
        |  SELECT doc_a, doc_b, COUNT(*) AS matched_frames
        |  FROM cand
@@ -657,7 +635,8 @@ object Multimodal {
        |JOIN nf na ON na.doc_id = m.doc_a
        |JOIN nf nb ON nb.doc_id = m.doc_b
        |WHERE CAST(matched_frames AS DOUBLE) / least(na.nf, nb.nf) >= $VideoCoverage
-       |${graft.core.OracleDsl.OrderAll}"""
+       |${O.OrderAll}"""
+  }
 
   val queries: Map[String, Q] = Map(
     "llm_multimodal_decode" -> Q(multimodalDecode _, multimodalDecodeSql),

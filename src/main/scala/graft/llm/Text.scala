@@ -216,7 +216,7 @@ object Text {
       minWin(col("text")).as("min_window_fp"))
   }
 
-  /** Keyed fingerprint query (since r5): the 64-bit values are
+  /** Keyed fingerprint query: the 64-bit values are
     * hash-family-specific, so the ORACLE-FACING columns are the two
     * properties a fingerprint must have, computed over the real
     * fingerprints and pinned to TRUE by the oracle:
@@ -295,8 +295,7 @@ object Text {
     ordered(lmScores(spark, dir))
 
   private val lmScoreSql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       |toks AS (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
+    s"""WITH ${O.tokensCte("documents")},
        |bg AS (
        |  SELECT a.doc_id, a.tok AS w1, a.tok || ' ' || b.tok AS bigram
        |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
@@ -402,10 +401,7 @@ object Text {
   }
 
   private val dsirSql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents
-       |  WHERE len(string_split(text, ' ')) >= 2),
-       |toks AS (SELECT doc_id, unnest(l) AS tok,
-       |  generate_subscripts(l, 1) AS pos FROM t),
+    s"""WITH ${O.tokensCte("documents")},
        |bg AS (
        |  SELECT a.doc_id, a.doc_id % 50 = 0 AS tgt,
        |    a.tok || ' ' || b.tok AS bg
@@ -495,8 +491,7 @@ object Text {
   }
 
   private val pplBucketsSql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-       |toks AS (SELECT doc_id, unnest(l) AS tok, generate_subscripts(l, 1) AS pos FROM t),
+    s"""WITH ${O.tokensCte("documents")},
        |bg AS (
        |  SELECT a.doc_id, a.tok AS w1, a.tok || ' ' || b.tok AS bigram
        |  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),

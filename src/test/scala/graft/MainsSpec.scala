@@ -41,8 +41,9 @@ class MainsSpec extends AnyFunSuite {
     }
   }
 
-  private lazy val sources = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala")))(
-    _.iterator.asScala.filter(_.toString.endsWith(".scala")).map(Files.readString).toList)
+  private lazy val sourceFiles = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala")))(
+    _.iterator.asScala.filter(_.toString.endsWith(".scala")).map(p => p -> Files.readString(p)).toList)
+  private lazy val sources = sourceFiles.map(_._2)
 
   test("the program reads exactly the four SPARK_GRAFT_* knobs that README documents") {
     // a new knob must be added here and to README on purpose; a
@@ -55,6 +56,18 @@ class MainsSpec extends AnyFunSuite {
     val readme = Files.readString(Paths.get("README.md"))
     val undocumented = documented.filterNot(readme.contains)
     assert(undocumented.isEmpty, s"README does not document $undocumented")
+  }
+
+  test("no file under src/main/scala/graft/llm holds a round-history tag") {
+    // a comment keeps its reason and measurement; which round of work
+    // wrote it is the commit history's record, not the code's
+    val llmDir = Paths.get("src/main/scala/graft/llm")
+    val llm = sourceFiles.filter(_._1.startsWith(llmDir))
+    assert(llm.nonEmpty)
+    val tag = raw"\br[0-9]+\b".r
+    val tagged = llm.flatMap { case (p, src) =>
+      tag.findAllIn(src).map(t => s"${p.getFileName}: $t") }
+    assert(tagged.isEmpty, s"round-history tags: ${tagged.mkString(", ")}")
   }
 
   test("the program has exactly the four mains that README's Run section lists") {

@@ -456,6 +456,23 @@ class PlanSpec extends AnyFunSuite {
       s"exact per-frame Hamming verify must ride bit_count(xor):\n$p")
   }
 
+  test("llm_simhash: band join is the CAPPED blocked shape") {
+    // the keyed plan starts at the post-localCheckpoint pair scan, so
+    // pin the pair STAGE the keyed query runs: joined on the 16-bit
+    // band bucket alone, one hot bucket is a single m² join group;
+    // the block ids spread it over block-pair keys
+    val d = core.Tables.load(spark, Sf, "documents").select(col("doc_id"), col("text"))
+    val p = llm.Dedup.simhashPairs(d).queryExecution.executedPlan.toString
+    assert(p.matches(
+      "(?s).*Join \\[band_idx#\\d+, band_hash#\\d+L?, _gx#\\d+L?, _gy#\\d+L?\\],.*"),
+      s"block ids _gx/_gy missing from the SimHash band join key:\n$p")
+    assert(!p.contains("CartesianProduct") &&
+      !p.contains("BroadcastNestedLoopJoin"),
+      s"SimHash dedup must stay equi-join shaped:\n$p")
+    assert(p.contains("bit_count"),
+      s"exact Hamming verify must ride bit_count(xor):\n$p")
+  }
+
   test("graph_jaccard: wedge join is the CAPPED blocked shape (block ids in the join key)") {
     // same pin as the band join above, same shared machinery
     // (core.Blocked.selfPairs): block ids in the join key mean a hub
