@@ -67,7 +67,7 @@ object Determinism {
 
   def round6(c: Column): Column = round(c, 6)
 
-  /** 'yyyy-MM-dd' string of a date/timestamp (oracle: strftime '%Y-%m-%d'). */
+  /** 'yyyy-MM-dd' string of a date/timestamp (oracle: OracleDsl.dateStr). */
   def dateStr(c: Column): Column = date_format(c, "yyyy-MM-dd")
 
   /** Epoch microseconds of a timestamp (oracle: epoch_us(ts)). */

@@ -41,6 +41,10 @@ object OracleDsl {
 
   val OrderAll: String = "ORDER BY ALL NULLS FIRST"
 
+  /** 'YYYY-MM-DD' string of a date/timestamp expression (mirror of
+    * Determinism.dateStr). */
+  def dateStr(c: String): String = s"strftime($c, '%Y-%m-%d')"
+
   /** One row per element of the list column `l` of `from`: the `keep`
     * columns, the element as `tok` and its 1-based position `pos`. */
   def elements(from: String, keep: String): String =

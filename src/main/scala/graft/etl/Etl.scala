@@ -1,23 +1,64 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Sessions, Tables}
+import org.apache.spark.sql.types.DecimalType
+import graft.core.{Fixtures, Q, Sessions, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
 
 /** SURVEY.md §2.9 — ETL composite operators, the reference's core
-  * identity (/root/reference/README.md:4 incremental/full load, :6 SCD,
+  * identity (the reference's README.md:4 incremental/full load, :6 SCD,
   * :12 integrity + audit logging).
   *
   * Each query is a full pipeline expressed as one deterministic
   * DataFrame so the DuckDB oracle can replay it in pure SQL. Batches
   * are deterministic date/key slices of the test tables (SURVEY.md
   * §2.9's cutover construction).
+  *
+  * Each stage that several keys share is written once, its oracle
+  * twin beside it: the customer dimension (`customerDim`), the
+  * urgent-buyer slice (`urgentBuyers`, `vipStaged`; oracle
+  * `urgentCte`), the SCD2 fixture (`Scd2T1`/`Scd2T2`, `moved`,
+  * `scd2Rows`), the DQ rules that both the gate and the quarantine
+  * apply (`orphanOrders`, `negativeAcctbal`; oracle `orphansSql`, also
+  * `etl_fk_check`'s), the column profile (`ProfileCols`,
+  * `profileMinMax`, `profileRows`; oracle `profileSql`) and the
+  * two-batch schema layout (`twoBatches`).
   */
 object Etl {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
+
+  /** The customer dimension's business key and tracked attributes. */
+  private val Key = Seq("c_custkey")
+  private val Attrs = Seq("c_name", "c_mktsegment")
+  private val dimCols: Seq[Column] = (Key ++ Attrs).map(col)
+
+  /** The customer dimension every SCD key versions: key and attributes. */
+  private def customerDim(spark: SparkSession, dir: String): DataFrame =
+    t(spark, dir, "customer").select(dimCols: _*)
+
+  /** Customers with any 1-URGENT order, found with a left-semi join:
+    * the slice the SCD1, SCD3, SCD4 and bitemporal keys move to 'VIP'. */
+  private def urgentBuyers(spark: SparkSession, dir: String): DataFrame =
+    t(spark, dir, "customer")
+      .join(t(spark, dir, "orders")
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .select(col("o_custkey")), col("c_custkey") === col("o_custkey"),
+        "left_semi")
+
+  /** The urgent buyers re-segmented as 'VIP': the staged extract of the
+    * SCD1, SCD3 and SCD4 keys. */
+  private def vipStaged(spark: SparkSession, dir: String): DataFrame =
+    urgentBuyers(spark, dir)
+      .select(col("c_custkey"), col("c_name"), lit("VIP").as("c_mktsegment"))
+
+  /** Oracle CTE `u`: the urgent buyers' keys. */
+  private val urgentCte =
+    """u AS (SELECT DISTINCT c_custkey FROM customer
+      |  WHERE EXISTS (SELECT 1 FROM orders o
+      |    WHERE o.o_custkey = c_custkey AND o.o_orderpriority = '1-URGENT'))"""
 
   /** Full load: truncate-and-reload the per-customer order summary from
     * the complete extract. 100 TB: this is the O(all-data) path you run
@@ -35,8 +76,8 @@ object Etl {
   private val fullLoadSql =
     s"""SELECT o_custkey, COUNT(*) AS n_orders,
        |  ${O.dsum("o_totalprice")} AS lifetime_value,
-       |  min(strftime(o_orderdate, '%Y-%m-%d')) AS first_order,
-       |  max(strftime(o_orderdate, '%Y-%m-%d')) AS last_order
+       |  min(${O.dateStr("o_orderdate")}) AS first_order,
+       |  max(${O.dateStr("o_orderdate")}) AS last_order
        |FROM orders GROUP BY o_custkey
        |${O.OrderAll}"""
 
@@ -73,59 +114,54 @@ object Etl {
        |  SELECT * FROM orders WHERE o_orderdate < TIMESTAMP '1999-01-01 00:00:00'),
        |hwm AS (SELECT max(o_orderdate) AS h FROM target0),
        |delta AS (SELECT o.* FROM orders o, hwm WHERE o.o_orderdate > hwm.h)
-       |SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
+       |SELECT o_orderkey, ${O.dateStr("o_orderdate")} AS o_date,
        |  o_orderstatus, o_totalprice FROM target0
        |UNION ALL
-       |SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
+       |SELECT o_orderkey, ${O.dateStr("o_orderdate")} AS o_date,
        |  o_orderstatus, o_totalprice FROM delta
        |${O.OrderAll}"""
 
   /** SCD Type 1: latest-wins overwrite. Staged extract = urgent buyers
     * re-segmented as 'VIP'; result = dim after in-place upsert. */
-  def scd1(spark: SparkSession, dir: String): DataFrame = {
-    val dim = t(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-    val staged = t(spark, dir, "customer")
-      .join(t(spark, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey")), col("c_custkey") === col("o_custkey"),
-        "left_semi")
-      .select(col("c_custkey"), col("c_name"), lit("VIP").as("c_mktsegment"))
+  def scd1(spark: SparkSession, dir: String): DataFrame =
     ordered(
-      Scd.scd1Apply(dim, staged, Seq("c_custkey"), Seq("c_name", "c_mktsegment")))
-  }
+      Scd.scd1Apply(customerDim(spark, dir), vipStaged(spark, dir), Key, Attrs))
 
   private val scd1Sql =
-    s"""SELECT c.c_custkey, c.c_name,
+    s"""WITH $urgentCte
+       |SELECT c.c_custkey, c.c_name,
        |  CASE WHEN u.c_custkey IS NOT NULL THEN 'VIP' ELSE c.c_mktsegment END AS c_mktsegment,
        |  u.c_custkey IS NOT NULL AND c.c_mktsegment <> 'VIP' AS changed
-       |FROM customer c
-       |LEFT JOIN (SELECT DISTINCT c_custkey FROM customer
-       |  WHERE EXISTS (SELECT 1 FROM orders o
-       |    WHERE o.o_custkey = c_custkey AND o.o_orderpriority = '1-URGENT')) u
-       |  ON c.c_custkey = u.c_custkey
+       |FROM customer c LEFT JOIN u ON c.c_custkey = u.c_custkey
        |${O.OrderAll}"""
+
+  /** The SCD2 keys' initial-load time T1 and merge time T2. */
+  private val Scd2T1 = "2020-01-01 00:00:00"
+  private val Scd2T2 = "2021-01-01 00:00:00"
+
+  /** `dim` with every key %3 == 0 re-segmented 'MOVED': the changed
+    * slice of the SCD2 fixture. */
+  private def moved(dim: DataFrame): DataFrame =
+    dim.withColumn("c_mktsegment",
+      when(col("c_custkey") % 3 === 0, "MOVED").otherwise(col("c_mktsegment")))
+
+  /** An SCD2 customer dim as output rows: key and attributes, the
+    * validity interval as dates, and the current flag. */
+  private def scd2Rows(merged: DataFrame): DataFrame =
+    ordered(
+      merged.select(dimCols ++ Seq(
+        dateStr(col(Scd.FromCol)).as("effective_from"),
+        dateStr(col(Scd.ToCol)).as("effective_to"),
+        col(Scd.CurrentCol).as("is_current")): _*))
 
   /** SCD Type 2: initial load at T1 of a partial dim (keys %10 != 0),
     * then a T2 merge of the full extract where every key %3 == 0 moved
     * segment. Exercises unchanged / changed-close+reopen / brand-new
     * paths of [[Scd.scd2Merge]] in one deterministic result. */
   def scd2(spark: SparkSession, dir: String): DataFrame = {
-    val t1 = "2020-01-01 00:00:00"
-    val t2 = "2021-01-01 00:00:00"
-    val base = t(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-    val batch1 = base.filter(col("c_custkey") % 10 =!= 0)
-    val batch2 = base.withColumn("c_mktsegment",
-      when(col("c_custkey") % 3 === 0, "MOVED").otherwise(col("c_mktsegment")))
-    val dim = Scd.initialLoad(batch1, t1)
-    val merged = Scd.scd2Merge(dim, batch2,
-      Seq("c_custkey"), Seq("c_name", "c_mktsegment"), t2)
-    ordered(
-      merged.select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
-        dateStr(col(Scd.FromCol)).as("effective_from"),
-        dateStr(col(Scd.ToCol)).as("effective_to"),
-        col(Scd.CurrentCol).as("is_current")))
+    val base = customerDim(spark, dir)
+    val dim = Scd.initialLoad(base.filter(col("c_custkey") % 10 =!= 0), Scd2T1)
+    scd2Rows(Scd.scd2Merge(dim, moved(base), Key, Attrs, Scd2T2))
   }
 
   private val scd2Sql =
@@ -155,20 +191,10 @@ object Etl {
     * (used by `etl_scd2`) still never deletes, which is the right
     * semantics for incremental extracts where absence ≠ departure. */
   def scd2Delete(spark: SparkSession, dir: String): DataFrame = {
-    val t1 = "2020-01-01 00:00:00"
-    val t2 = "2021-01-01 00:00:00"
-    val base = t(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-    val batch2 = base.filter(col("c_custkey") % 7 =!= 0)
-      .withColumn("c_mktsegment",
-        when(col("c_custkey") % 3 === 0, "MOVED").otherwise(col("c_mktsegment")))
-    val merged = Scd.scd2Merge(Scd.initialLoad(base, t1), batch2,
-      Seq("c_custkey"), Seq("c_name", "c_mktsegment"), t2, closeDeparted = true)
-    ordered(
-      merged.select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
-        dateStr(col(Scd.FromCol)).as("effective_from"),
-        dateStr(col(Scd.ToCol)).as("effective_to"),
-        col(Scd.CurrentCol).as("is_current")))
+    val base = customerDim(spark, dir)
+    val batch2 = moved(base.filter(col("c_custkey") % 7 =!= 0))
+    scd2Rows(Scd.scd2Merge(Scd.initialLoad(base, Scd2T1), batch2,
+      Key, Attrs, Scd2T2, closeDeparted = true))
   }
 
   private val scd2DeleteSql =
@@ -187,7 +213,7 @@ object Etl {
 
   /** Point-in-time (as-of) lookup against the SCD2 dimension — the
     * "historical analysis" the reference names as SCD2's purpose
-    * (/root/reference/README.md:6). The dim is versioned at
+    * (the reference's README.md:6). The dim is versioned at
     * T1 = 1992-01-01 (initial load, keys %10 != 0), T2 = 1996-01-01
     * (merge where keys %3 == 0 moved segment) and T3 = 1998-01-01
     * (merge where keys %4 == 0 went PROMO), so orders genuinely split
@@ -207,17 +233,14 @@ object Etl {
     val t1 = "1992-01-01 00:00:00"
     val t2 = "1996-01-01 00:00:00"
     val t3 = "1998-01-01 00:00:00"
-    val base = t(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
+    val base = customerDim(spark, dir)
     val batch1 = base.filter(col("c_custkey") % 10 =!= 0)
-    val batch2 = base.withColumn("c_mktsegment",
-      when(col("c_custkey") % 3 === 0, "MOVED").otherwise(col("c_mktsegment")))
+    val batch2 = moved(base)
     val batch3 = batch2.withColumn("c_mktsegment",
       when(col("c_custkey") % 4 === 0, "PROMO").otherwise(col("c_mktsegment")))
-    val keys = Seq("c_custkey"); val attrs = Seq("c_name", "c_mktsegment")
     val dim = Scd.scd2Merge(
-      Scd.scd2Merge(Scd.initialLoad(batch1, t1), batch2, keys, attrs, t2),
-      batch3, keys, attrs, t3)
+      Scd.scd2Merge(Scd.initialLoad(batch1, t1), batch2, Key, Attrs, t2),
+      batch3, Key, Attrs, t3)
     val orders = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
     ordered(
@@ -255,13 +278,32 @@ object Etl {
        |  SELECT c_custkey, 'PROMO',
        |    TIMESTAMP '1998-01-01 00:00:00', TIMESTAMP '9999-12-31 00:00:00'
        |  FROM customer WHERE c_custkey % 4 = 0)
-       |SELECT o.o_orderkey, strftime(o.o_orderdate, '%Y-%m-%d') AS o_date,
+       |SELECT o.o_orderkey, ${O.dateStr("o.o_orderdate")} AS o_date,
        |  o.o_custkey, d.c_mktsegment AS segment_at_order,
-       |  strftime(d.ef, '%Y-%m-%d') AS valid_from
+       |  ${O.dateStr("d.ef")} AS valid_from
        |FROM orders o LEFT JOIN dim d
        |  ON d.c_custkey = o.o_custkey
        |  AND d.ef <= o.o_orderdate AND o.o_orderdate < d.et
        |${O.OrderAll}"""
+
+  /** DQ rule `orphan_order_custkey`: the orders whose customer is
+    * missing. The gate counts these rows and the quarantine routes them. */
+  private def orphanOrders(orders: DataFrame, customer: DataFrame): DataFrame =
+    orders.join(customer, col("o_custkey") === col("c_custkey"), "left_anti")
+
+  /** DQ rule `negative_acctbal`: the customers with a negative balance.
+    * The gate counts these rows and the quarantine routes them. */
+  private def negativeAcctbal(customer: DataFrame): DataFrame =
+    customer.filter(col("c_acctbal") < 0)
+
+  /** Oracle FROM clause: the rows of `fact` whose `fk` matches no `pk`
+    * of `dim`. `etl_fk_check` reports one per edge; the orphan DQ rule
+    * is the orders → customer edge. */
+  private def orphansSql(fact: String, fk: String, dim: String, pk: String): String =
+    s"$fact WHERE NOT EXISTS (SELECT 1 FROM $dim WHERE $pk = $fk)"
+
+  private val orphanOrdersSql = orphansSql("orders", "o_custkey", "customer", "c_custkey")
+  private val negativeAcctbalSql = "customer WHERE c_acctbal < 0"
 
   /** Data-quality gate: rule violations counted in one pass each; bad
     * rows would route to quarantine (README.md:12). Count may be zero —
@@ -270,19 +312,16 @@ object Etl {
     val orders = t(spark, dir, "orders")
     val customer = t(spark, dir, "customer")
     val lineitem = t(spark, dir, "lineitem")
+    def violations(rule: String, rows: DataFrame) =
+      rows.agg(count(lit(1)).as("n_violations"))
+        .select(lit(rule).as("rule"), col("n_violations"))
     val rules = Seq(
-      orders.join(customer, col("o_custkey") === col("c_custkey"), "left_anti")
-        .agg(count(lit(1)).as("n_violations"))
-        .select(lit("orphan_order_custkey").as("rule"), col("n_violations")),
-      customer.filter(col("c_acctbal") < 0)
-        .agg(count(lit(1)).as("n_violations"))
-        .select(lit("negative_acctbal").as("rule"), col("n_violations")),
-      lineitem.filter(col("l_quantity") <= 0 || col("l_quantity").isNull)
-        .agg(count(lit(1)).as("n_violations"))
-        .select(lit("nonpositive_quantity").as("rule"), col("n_violations")),
-      orders.filter(!col("o_orderstatus").isin("F", "P", "O"))
-        .agg(count(lit(1)).as("n_violations"))
-        .select(lit("bad_order_status").as("rule"), col("n_violations")))
+      violations("orphan_order_custkey", orphanOrders(orders, customer)),
+      violations("negative_acctbal", negativeAcctbal(customer)),
+      violations("nonpositive_quantity",
+        lineitem.filter(col("l_quantity") <= 0 || col("l_quantity").isNull)),
+      violations("bad_order_status",
+        orders.filter(!col("o_orderstatus").isin("F", "P", "O"))))
     ordered(
       rules.reduce(_ unionByName _)
         .withColumn("passed", col("n_violations") === 0))
@@ -291,11 +330,10 @@ object Etl {
   private val dqCheckSql =
     s"""SELECT rule, n_violations, n_violations = 0 AS passed FROM (
        |  SELECT 'orphan_order_custkey' AS rule,
-       |    (SELECT COUNT(*) FROM orders o WHERE NOT EXISTS
-       |      (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)) AS n_violations
+       |    (SELECT COUNT(*) FROM $orphanOrdersSql) AS n_violations
        |  UNION ALL
        |  SELECT 'negative_acctbal',
-       |    (SELECT COUNT(*) FROM customer WHERE c_acctbal < 0)
+       |    (SELECT COUNT(*) FROM $negativeAcctbalSql)
        |  UNION ALL
        |  SELECT 'nonpositive_quantity',
        |    (SELECT COUNT(*) FROM lineitem WHERE l_quantity <= 0 OR l_quantity IS NULL)
@@ -352,12 +390,11 @@ object Etl {
   def quarantine(spark: SparkSession, dir: String): DataFrame = {
     val orders = t(spark, dir, "orders")
     val customer = t(spark, dir, "customer")
-    val orphans = orders
-      .join(customer, col("o_custkey") === col("c_custkey"), "left_anti")
+    val orphans = orphanOrders(orders, customer)
       .select(lit("orphan_order_custkey").as("rule"),
         col("o_orderkey").as("row_key"),
         dateStr(col("o_orderdate")).as("detail"))
-    val negBal = customer.filter(col("c_acctbal") < 0)
+    val negBal = negativeAcctbal(customer)
       .select(lit("negative_acctbal").as("rule"),
         col("c_custkey").as("row_key"),
         col("c_mktsegment").as("detail"))
@@ -366,13 +403,12 @@ object Etl {
 
   private val quarantineSql =
     s"""SELECT 'orphan_order_custkey' AS rule, o_orderkey AS row_key,
-       |  strftime(o_orderdate, '%Y-%m-%d') AS detail
-       |FROM orders o
-       |WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
+       |  ${O.dateStr("o_orderdate")} AS detail
+       |FROM $orphanOrdersSql
        |UNION ALL
        |SELECT 'negative_acctbal' AS rule, c_custkey AS row_key,
        |  c_mktsegment AS detail
-       |FROM customer WHERE c_acctbal < 0
+       |FROM $negativeAcctbalSql
        |${O.OrderAll}"""
 
   /** Partition backfill via dynamic partition overwrite: rewrite ONLY
@@ -394,7 +430,7 @@ object Etl {
     // point: the restated batch derives from the SOURCE table, so
     // re-overwriting 1998 always lands identical content, and a crashed
     // partial overwrite is healed by the next run's overwrite.
-    val path = graft.core.Fixtures.once(dir, "etl_backfill", "lineitem") { tmp =>
+    val path = Fixtures.once(dir, "etl_backfill", "lineitem") { tmp =>
       fact.write.partitionBy("ship_year").parquet(tmp)
     }
     // backfill batch: only 1998, restated
@@ -425,27 +461,13 @@ object Etl {
        |GROUP BY 1
        |${O.OrderAll}"""
 
-  /** CDC apply: replay an ordered insert/update/delete change stream
-    * onto a snapshot — the log-shipping complement to SCD (a CDC feed
-    * is how README.md:4's incremental extract arrives in practice).
-    * Changes are deterministic slices: %5 keys update segment, %7 keys
-    * delete (so %35 keys update THEN delete — multi-change keys), %11
-    * keys arrive as brand-new inserts. Last-wins per key by change
-    * sequence, deletes drop the key.
-    *
-    * 100 TB: union + one window over (key, seq) — shuffle-partitioned
-    * by key, map-side nothing to combine but the window needs only a
-    * per-partition sort after the hash exchange. The same shape
-    * handles billions of change rows; the snapshot never rewrites
-    * more than once per batch. */
   /** The CDC change set `etl_cdc_apply` and `stream_cdc_apply` share —
     * ONE definition so the batch key, the streaming key, and the
     * common oracle can never drift: snapshot at _seq 0, updates +
     * out-of-range inserts at _seq 1, delete tombstones at _seq 2. */
   private[graft] def cdcChangeSet(spark: SparkSession, dir: String): DataFrame = {
     val snap = t(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
-        lit(0L).as("_seq"), lit("U").as("_op"))
+      .select(dimCols ++ Seq(lit(0L).as("_seq"), lit("U").as("_op")): _*)
     val base = t(spark, dir, "customer")
     val updates = base.filter(col("c_custkey") % 5 === 0)
       .select(col("c_custkey"), col("c_name"), lit("CDC-U").as("c_mktsegment"),
@@ -469,6 +491,19 @@ object Etl {
     snap.unionByName(updates).unionByName(deletes).unionByName(inserts)
   }
 
+  /** CDC apply: replay an ordered insert/update/delete change stream
+    * onto a snapshot — the log-shipping complement to SCD (a CDC feed
+    * is how README.md:4's incremental extract arrives in practice).
+    * Changes are deterministic slices: %5 keys update segment, %7 keys
+    * delete (so %35 keys update THEN delete — multi-change keys), %11
+    * keys arrive as brand-new inserts. Last-wins per key by change
+    * sequence, deletes drop the key.
+    *
+    * 100 TB: union + one window over (key, seq) — shuffle-partitioned
+    * by key, map-side nothing to combine but the window needs only a
+    * per-partition sort after the hash exchange. The same shape
+    * handles billions of change rows; the snapshot never rewrites
+    * more than once per batch. */
   def cdcApply(spark: SparkSession, dir: String): DataFrame = {
     val all = cdcChangeSet(spark, dir)
     val w = org.apache.spark.sql.expressions.Window
@@ -476,7 +511,7 @@ object Etl {
     ordered(
       all.withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1 && col("_op") =!= "D")
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment")))
+        .select(dimCols: _*))
   }
 
   private[graft] val cdcApplySql =
@@ -506,7 +541,7 @@ object Etl {
     * `spark.sql.files.maxPartitionBytes`-sized files per partition
     * and runs partition-by-partition behind the table's write lock. */
   def compaction(spark: SparkSession, dir: String): DataFrame = {
-    val comp = graft.core.Fixtures.path(dir, "etl_compaction_out")
+    val comp = Fixtures.path(dir, "etl_compaction_out")
     val orders = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     // fragmented INPUT layout: build-once fixture — the 64-file
@@ -514,7 +549,7 @@ object Etl {
     // its work; rebuilding it per run measured ~half the key. Keyed by
     // the orders fingerprint, so a rewritten orders rebuilds it. The
     // compaction rewrite below runs every time.
-    val frag = graft.core.Fixtures.once(dir, "etl_compaction_frag", "orders") { tmp =>
+    val frag = Fixtures.once(dir, "etl_compaction_frag", "orders") { tmp =>
       orders.repartition(64).write.parquet(tmp)
     }
     val fragged = spark.read.parquet(frag)
@@ -540,6 +575,22 @@ object Etl {
        |  ${O.dsum("o_totalprice")} FROM orders
        |${O.OrderAll}"""
 
+  /** The two-version layout of the schema keys: writes the orders
+    * before 1998-01-01 as `batch=1` with columns `before` and the rest as
+    * `batch=2` with columns `after`, under fixture dir `name`, and
+    * returns that dir. */
+  private def twoBatches(spark: SparkSession, dir: String, name: String,
+      before: Seq[Column], after: Seq[Column]): String = {
+    val path = Fixtures.path(dir, name)
+    val orders = t(spark, dir, "orders")
+    val cut = col("o_orderdate") >= lit("1998-01-01").cast("timestamp")
+    orders.filter(!cut).select(before: _*)
+      .write.mode("overwrite").parquet(s"$path/batch=1")
+    orders.filter(cut).select(after: _*)
+      .write.mode("overwrite").parquet(s"$path/batch=2")
+    path
+  }
+
   /** Schema evolution across layout versions — the ingest reality a
     * long-lived lake table faces: an upstream adds a column mid-stream.
     * Batch 1 (orders before 1998) lands WITHOUT o_orderpriority; batch
@@ -550,16 +601,9 @@ object Etl {
     * (Type CHANGE across versions is the riskier migration —
     * `etl_schema_drift` below covers that negative path.) */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.core.Fixtures.path(dir, "etl_schema_evo")
-    val orders = Tables.load(spark, dir, "orders")
-    val cut = col("o_orderdate") >= lit("1998-01-01").cast("timestamp")
-    orders.filter(!cut)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .write.mode("overwrite").parquet(s"$path/batch=1")
-    orders.filter(cut)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderpriority"))
-      .write.mode("overwrite").parquet(s"$path/batch=2")
+    val kept = Seq(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+    val path = twoBatches(spark, dir, "etl_schema_evo",
+      kept, kept :+ col("o_orderpriority"))
     ordered(
       spark.read.option("mergeSchema", "true").parquet(path)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -588,19 +632,13 @@ object Etl {
     * metadata-only, but type changes demand a declared cast (or a
     * rewrite) — and the engine must make the unsafe path loud. */
   def schemaDrift(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.core.Fixtures.path(dir, "etl_schema_drift")
-    val orders = Tables.load(spark, dir, "orders")
-    val cut = col("o_orderdate") >= lit("1998-01-01").cast("timestamp")
-    orders.filter(!cut)
-      .select(col("o_orderkey"), col("o_totalprice"))
-      .write.mode("overwrite").parquet(s"$path/batch=1")
-    orders.filter(cut)
-      .select(col("o_orderkey"),
-        col("o_totalprice").cast("decimal(12,2)").as("o_totalprice"))
-      .write.mode("overwrite").parquet(s"$path/batch=2")
+    val path = twoBatches(spark, dir, "etl_schema_drift",
+      Seq(col("o_orderkey"), col("o_totalprice")),
+      Seq(col("o_orderkey"),
+        col("o_totalprice").cast("decimal(12,2)").as("o_totalprice")))
     // Only a SCHEMA-MERGE failure counts as the desired fail-fast; an
     // unrelated error (missing path, IO) must propagate, not quietly
-    // satisfy the oracle's pinned TRUE (round-4 advice). The merge
+    // satisfy the oracle's pinned TRUE. The merge
     // error may be wrapped, so the whole cause chain is searched.
     val mergeFailedFast =
       try {
@@ -642,17 +680,11 @@ object Etl {
   def scd3(spark: SparkSession, dir: String): DataFrame = {
     val batchTs = "2021-06-01 00:00:00"
     val dim = t(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
+      .select(dimCols ++ Seq(
         lit(null).cast("string").as("c_mktsegment_prev"),
-        lit(null).cast("timestamp").as("changed_at"))
-    val staged = t(spark, dir, "customer")
-      .join(t(spark, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey")), col("c_custkey") === col("o_custkey"),
-        "left_semi")
-      .select(col("c_custkey"), col("c_name"), lit("VIP").as("c_mktsegment"))
-    val merged = Scd.scd3Apply(dim.drop("c_name"), staged.drop("c_name"),
-      Seq("c_custkey"), "c_mktsegment", batchTs)
+        lit(null).cast("timestamp").as("changed_at")): _*)
+    val merged = Scd.scd3Apply(dim.drop("c_name"),
+      vipStaged(spark, dir).drop("c_name"), Key, "c_mktsegment", batchTs)
     ordered(
       merged.select(col("c_custkey"), col("c_mktsegment"),
         col("c_mktsegment_prev"),
@@ -660,18 +692,15 @@ object Etl {
   }
 
   private val scd3Sql =
-    s"""SELECT c.c_custkey,
+    s"""WITH $urgentCte
+       |SELECT c.c_custkey,
        |  CASE WHEN u.c_custkey IS NOT NULL THEN 'VIP' ELSE c.c_mktsegment END
        |    AS c_mktsegment,
        |  CASE WHEN u.c_custkey IS NOT NULL AND c.c_mktsegment <> 'VIP'
        |    THEN c.c_mktsegment END AS c_mktsegment_prev,
        |  CASE WHEN u.c_custkey IS NOT NULL AND c.c_mktsegment <> 'VIP'
        |    THEN '2021-06-01 00:00:00' END AS changed_at
-       |FROM customer c
-       |LEFT JOIN (SELECT DISTINCT c_custkey FROM customer
-       |  WHERE EXISTS (SELECT 1 FROM orders o
-       |    WHERE o.o_custkey = c_custkey AND o.o_orderpriority = '1-URGENT')) u
-       |  ON c.c_custkey = u.c_custkey
+       |FROM customer c LEFT JOIN u ON c.c_custkey = u.c_custkey
        |${O.OrderAll}"""
 
   /** Snapshot diff — the reconciliation report behind README.md:12's
@@ -746,7 +775,7 @@ object Etl {
     * keep working during migration because both layouts carry the data
     * columns; cutover is a path swap. */
   def partitionEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.core.Fixtures.path(dir, "etl_partition_evolution")
+    val path = Fixtures.path(dir, "etl_partition_evolution")
     val src = t(spark, dir, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
     // coarse base layout: build-once fixture — the pre-migration
@@ -754,7 +783,7 @@ object Etl {
     // starts from a table that exists), keyed by the orders fingerprint
     // so a rewritten orders rebuilds it. The migration rewrite below
     // runs every time.
-    val byYear = graft.core.Fixtures.once(dir, "etl_partition_evolution_src", "orders") { tmp =>
+    val byYear = Fixtures.once(dir, "etl_partition_evolution_src", "orders") { tmp =>
       src.write.partitionBy("o_year").parquet(tmp)
     }
     // migration: same rows, finer (year, month) scheme
@@ -784,6 +813,52 @@ object Etl {
        |GROUP BY 1, 2
        |${O.OrderAll}"""
 
+  /** The order columns both profiles report, each flagged numeric. */
+  private val ProfileCols = Seq[(String, Boolean)](
+    ("o_orderkey", true), ("o_custkey", true), ("o_orderstatus", false),
+    ("o_totalprice", true), ("o_orderpriority", false))
+
+  /** Null count of profiled column `c`. */
+  private def profileNulls(c: String): Column =
+    (count(lit(1)) - count(col(c))).as(s"${c}__nulls")
+
+  /** Min and max of profiled column `c` as strings. A numeric column is
+    * compared as DECIMAL(18,2), so the order is numeric and the string
+    * plain (see [[dqProfile]]). */
+  private def profileMinMax(c: String, numeric: Boolean): Seq[Column] = {
+    val v = if (numeric) col(c).cast(DecimalType(18, 2)) else col(c).cast("string")
+    Seq(min(v).cast("string").as(s"${c}__min"),
+      max(v).cast("string").as(s"${c}__max"))
+  }
+
+  /** One row per profiled column from the 1-row aggregate `one`, by a
+    * driver-free `stack` unpivot: (col_name, n_nulls, n_distinct,
+    * min_val, max_val), with n_distinct read from `${c}__$distinct`,
+    * then the `extra` column if given (its name, and its expression for
+    * column `c`). */
+  private def profileRows(one: DataFrame, distinct: String,
+      extra: Option[(String, String => String)] = None): DataFrame = {
+    val stackExpr = ProfileCols.map { case (c, _) =>
+      (Seq(s"'$c'", s"${c}__nulls", s"${c}__$distinct", s"${c}__min", s"${c}__max") ++
+        extra.map(_._2(c))).mkString(", ")
+    }.mkString(s"stack(${ProfileCols.size}, ", ", ", ")")
+    val names = Seq("col_name", "n_nulls", "n_distinct", "min_val", "max_val") ++
+      extra.map(_._1)
+    ordered(one.select(expr(s"$stackExpr AS (${names.mkString(", ")})")))
+  }
+
+  /** Oracle of both profiles: one SELECT per profiled column over
+    * orders, with `extra` appended to its select list, unioned. */
+  private def profileSql(extra: String): String =
+    ProfileCols.map { case (c, numeric) =>
+      def mm(f: String) =
+        if (numeric) s"CAST($f(CAST($c AS DECIMAL(18,2))) AS VARCHAR)"
+        else s"$f(CAST($c AS VARCHAR))"
+      s"""SELECT '$c' AS col_name, COUNT(*) - COUNT($c) AS n_nulls,
+         |  COUNT(DISTINCT $c) AS n_distinct,
+         |  ${mm("MIN")} AS min_val, ${mm("MAX")} AS max_val$extra FROM orders"""
+    }.mkString("", "\nUNION ALL ", s"\n${O.OrderAll}")
+
   /** Whole-table column profile — the first thing a data engineer runs
     * on an unknown extract (and the input to `etl_dq_check` thresholds):
     * per column, null count, exact distinct count, min/max. The scale
@@ -807,10 +882,7 @@ object Etl {
     * `etl_dq_profile_approx` ([[dqProfileApprox]] — mergeable HLL per
     * column, no Expand, no value-keyed shuffle). */
   def dqProfile(spark: SparkSession, dir: String): DataFrame = {
-    val cols = Seq[(String, Boolean)](
-      ("o_orderkey", true), ("o_custkey", true), ("o_orderstatus", false),
-      ("o_totalprice", true), ("o_orderpriority", false))
-    // r15 (guide §1/§2): mixing the k exact count_distincts with the
+    // Mixing the k exact count_distincts with the
     // string min/maxes in ONE aggregate forced the whole Expand×6
     // pipeline into SortAggregate — min(string)'s agg buffer is not
     // fixed-width, so HashAggregate is off the table and every
@@ -824,46 +896,19 @@ object Etl {
     // same file replace one sort of k×(rows) expanded rows — at any
     // scale the second scan is cheaper than that sort, and the
     // audit-grade exactness is unchanged (measured 3.6 s → 1.5 s).
-    val dAggs = cols.map { case (c, _) =>
+    val dAggs = ProfileCols.map { case (c, _) =>
       count_distinct(col(c)).as(s"${c}__distinct") }
-    val rAggs = cols.flatMap { case (c, numeric) =>
-      val v = if (numeric)
-        col(c).cast(org.apache.spark.sql.types.DecimalType(18, 2))
-      else col(c).cast("string")
-      Seq(
-        (count(lit(1)) - count(col(c))).as(s"${c}__nulls"),
-        min(v).cast("string").as(s"${c}__min"),
-        max(v).cast("string").as(s"${c}__max"))
-    }
+    val rAggs = ProfileCols.flatMap { case (c, numeric) =>
+      profileNulls(c) +: profileMinMax(c, numeric) }
     val one = t(spark, dir, "orders").agg(dAggs.head, dAggs.tail: _*)
       .crossJoin(t(spark, dir, "orders").agg(rAggs.head, rAggs.tail: _*))
-    val stackExpr = cols.map { case (c, _) =>
-      s"'$c', ${c}__nulls, ${c}__distinct, ${c}__min, ${c}__max"
-    }.mkString(s"stack(${cols.size}, ", ", ", ")")
-    ordered(
-      one.select(expr(
-        s"$stackExpr AS (col_name, n_nulls, n_distinct, min_val, max_val)")))
+    profileRows(one, "distinct")
   }
 
-  private val dqProfileSql = {
-    def row(c: String, numeric: Boolean) = {
-      def mm(f: String) =
-        if (numeric) s"CAST($f(CAST($c AS DECIMAL(18,2))) AS VARCHAR)"
-        else s"$f(CAST($c AS VARCHAR))"
-      s"""SELECT '$c' AS col_name, COUNT(*) - COUNT($c) AS n_nulls,
-         |  COUNT(DISTINCT $c) AS n_distinct,
-         |  ${mm("MIN")} AS min_val, ${mm("MAX")} AS max_val FROM orders"""
-    }
-    s"""${row("o_orderkey", true)}
-       |UNION ALL ${row("o_custkey", true)}
-       |UNION ALL ${row("o_orderstatus", false)}
-       |UNION ALL ${row("o_totalprice", true)}
-       |UNION ALL ${row("o_orderpriority", false)}
-       |${O.OrderAll}"""
-  }
+  private val dqProfileSql = profileSql("")
 
-  /** The 100 TB spelling of the whole-table profile (r7 verdict task:
-    * `etl_dq_profile`'s k exact count_distincts plan an Expand — input
+  /** The 100 TB spelling of the whole-table profile (`etl_dq_profile`'s
+    * k exact count_distincts plan an Expand — input
     * ×(k+1) before the exchange, 16.7 s at sf1 — which is the
     * audit-grade reconciliation form, not the daily profiler): null
     * counts, min/max, and PER-COLUMN HLL SKETCHES all ride ONE scan
@@ -884,52 +929,22 @@ object Etl {
     * that). At 100 TB you ship only the sketch pass; the twins are
     * what lets the driver gate the estimate today. */
   def dqProfileApprox(spark: SparkSession, dir: String): DataFrame = {
-    val cols = Seq[(String, Boolean)](
-      ("o_orderkey", true), ("o_custkey", true), ("o_orderstatus", false),
-      ("o_totalprice", true), ("o_orderpriority", false))
     val o = t(spark, dir, "orders")
-    val aggs = cols.flatMap { case (c, numeric) =>
-      val v = if (numeric)
-        col(c).cast(org.apache.spark.sql.types.DecimalType(18, 2))
-      else col(c).cast("string")
-      Seq(
-        (count(lit(1)) - count(col(c))).as(s"${c}__nulls"),
+    val aggs = ProfileCols.flatMap { case (c, numeric) =>
+      Seq(profileNulls(c),
         hll_sketch_estimate(hll_sketch_agg(col(c).cast("string")))
-          .as(s"${c}__approx"),
-        min(v).cast("string").as(s"${c}__min"),
-        max(v).cast("string").as(s"${c}__max"))
+          .as(s"${c}__approx")) ++
+        profileMinMax(c, numeric)
     }
     val one = o.agg(aggs.head, aggs.tail: _*)
-    val exacts = cols.map { case (c, _) =>
+    val exacts = ProfileCols.map { case (c, _) =>
       o.select(col(c)).agg(count_distinct(col(c)).as(s"${c}__exact"))
     }.reduce(_.crossJoin(_))
-    val stackExpr = cols.map { case (c, _) =>
-      s"'$c', ${c}__nulls, ${c}__exact, ${c}__min, ${c}__max, " +
-        s"abs(${c}__approx - ${c}__exact) <= 0.08 * ${c}__exact"
-    }.mkString(s"stack(${cols.size}, ", ", ", ")")
-    ordered(
-      one.crossJoin(exacts).select(expr(
-        s"$stackExpr AS (col_name, n_nulls, n_distinct, min_val, " +
-          "max_val, approx_in_bound)")))
+    profileRows(one.crossJoin(exacts), "exact", Some("approx_in_bound" ->
+      (c => s"abs(${c}__approx - ${c}__exact) <= 0.08 * ${c}__exact")))
   }
 
-  private val dqProfileApproxSql = {
-    def row(c: String, numeric: Boolean) = {
-      def mm(f: String) =
-        if (numeric) s"CAST($f(CAST($c AS DECIMAL(18,2))) AS VARCHAR)"
-        else s"$f(CAST($c AS VARCHAR))"
-      s"""SELECT '$c' AS col_name, COUNT(*) - COUNT($c) AS n_nulls,
-         |  COUNT(DISTINCT $c) AS n_distinct,
-         |  ${mm("MIN")} AS min_val, ${mm("MAX")} AS max_val,
-         |  TRUE AS approx_in_bound FROM orders"""
-    }
-    s"""${row("o_orderkey", true)}
-       |UNION ALL ${row("o_custkey", true)}
-       |UNION ALL ${row("o_orderstatus", false)}
-       |UNION ALL ${row("o_totalprice", true)}
-       |UNION ALL ${row("o_orderpriority", false)}
-       |${O.OrderAll}"""
-  }
+  private val dqProfileApproxSql = profileSql(", TRUE AS approx_in_bound")
 
   /** SCD Type 4 — history TABLE (vs SCD2's history rows): the current
     * dimension stays SCD1-thin (one row per key, always the latest —
@@ -950,34 +965,22 @@ object Etl {
     * each scan until partition-pruned. */
   def scd4(spark: SparkSession, dir: String): DataFrame = {
     val batchTs = "2021-06-01 00:00:00"
-    val dim = t(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-    val staged = t(spark, dir, "customer")
-      .join(t(spark, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey")), col("c_custkey") === col("o_custkey"),
-        "left_semi")
-      .select(col("c_custkey"), col("c_name"), lit("VIP").as("c_mktsegment"))
-    val applied = Scd.scd1Apply(dim, staged, Seq("c_custkey"),
-      Seq("c_name", "c_mktsegment"))
-    val current = applied.select(
-      col("c_custkey"), col("c_name"), col("c_mktsegment"),
+    val dim = customerDim(spark, dir)
+    val applied = Scd.scd1Apply(dim, vipStaged(spark, dir), Key, Attrs)
+    val current = applied.select(dimCols ++ Seq(
       lit("current").as("table_role"),
-      lit(null).cast("string").as("superseded_at"))
+      lit(null).cast("string").as("superseded_at")): _*)
     val history = dim
       .join(applied.filter(col("changed")).select(col("c_custkey")),
-        Seq("c_custkey"), "left_semi")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
+        Key, "left_semi")
+      .select(dimCols ++ Seq(
         lit("history").as("table_role"),
-        lit(batchTs).as("superseded_at"))
+        lit(batchTs).as("superseded_at")): _*)
     ordered(current.unionByName(history))
   }
 
   private val scd4Sql =
-    s"""WITH u AS (
-       |  SELECT DISTINCT c_custkey FROM customer
-       |  WHERE EXISTS (SELECT 1 FROM orders o
-       |    WHERE o.o_custkey = c_custkey AND o.o_orderpriority = '1-URGENT'))
+    s"""WITH $urgentCte
        |SELECT c.c_custkey, c.c_name,
        |  CASE WHEN u.c_custkey IS NOT NULL THEN 'VIP' ELSE c.c_mktsegment END
        |    AS c_mktsegment,
@@ -1072,8 +1075,7 @@ object Etl {
   private val fkCheckSql = {
     def edge(fact: String, fk: String, dim: String, pk: String) =
       s"""SELECT '$fact.$fk -> $dim' AS fk_edge, COUNT(*) AS n_orphans
-         |FROM $fact WHERE NOT EXISTS (
-         |  SELECT 1 FROM $dim WHERE $pk = $fk)"""
+         |FROM ${orphansSql(fact, fk, dim, pk)}"""
     s"""${edge("orders", "o_custkey", "customer", "c_custkey")}
        |UNION ALL ${edge("lineitem", "l_orderkey", "orders", "o_orderkey")}
        |UNION ALL ${edge("lineitem", "l_partkey", "part", "p_partkey")}
@@ -1110,11 +1112,7 @@ object Etl {
     val v1 = "2021-01-01 00:00:00"
     val base = t(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val vip = base.join(t(spark, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey")), col("c_custkey") === col("o_custkey"),
-        "left_semi")
-      .select(col("c_custkey"))
+    val vip = urgentBuyers(spark, dir).select(col("c_custkey"))
     // tx T1 belief: segment valid [2020-01-01, ∞), believed [T1, ∞)...
     val load = base.select(col("c_custkey"), col("c_mktsegment").as("seg"),
       lit(t1).as("valid_from"), lit(Hi).as("valid_to"),
@@ -1145,15 +1143,12 @@ object Etl {
   }
 
   private val bitemporalSql =
-    s"""SELECT c.c_custkey,
+    s"""WITH $urgentCte
+       |SELECT c.c_custkey,
        |  c.c_mktsegment AS belief_before,
        |  CASE WHEN u.c_custkey IS NOT NULL THEN 'VIP'
        |    ELSE c.c_mktsegment END AS belief_after
-       |FROM customer c
-       |LEFT JOIN (SELECT DISTINCT c_custkey FROM customer
-       |  WHERE EXISTS (SELECT 1 FROM orders o
-       |    WHERE o.o_custkey = c_custkey AND o.o_orderpriority = '1-URGENT')) u
-       |  ON c.c_custkey = u.c_custkey
+       |FROM customer c LEFT JOIN u ON c.c_custkey = u.c_custkey
        |${O.OrderAll}"""
 
   /** Right-to-erasure purge (GDPR/CCPA delete): given a tombstone set
@@ -1168,7 +1163,7 @@ object Etl {
     * independently of the purge joins — kept rows re-tested against
     * the tombstone PREDICATE (orders directly, lineitem through its
     * parent order) — so the column measures the cascade, not the
-    * anti-join identity (r7 advice: `(X anti S) semi S` is zero by
+    * anti-join identity (`(X anti S) semi S` is zero by
     * construction and would certify nothing).
     *
     * 100 TB: the tombstone set is tiny → BROADCAST anti/semi joins on
@@ -1195,7 +1190,7 @@ object Etl {
       col("l_orderkey") === col("o_orderkey"), "left_anti")
     // cascade-completeness proof: kept children referencing a purged
     // parent (must be 0 per table for the purge to be lawful). Derived
-    // INDEPENDENTLY of the purge joins (r7 advice: `(X anti S) semi S`
+    // INDEPENDENTLY of the purge joins (`(X anti S) semi S`
     // is empty by the anti-join identity and certifies nothing): kept
     // orders re-test the tombstone PREDICATE on their own column —
     // catching a wrong tomb derivation or broken anti join — and kept
@@ -1329,7 +1324,6 @@ object Etl {
     * commit), never a data copy — here it is a rewrite because the
     * sandbox has no table format, the gate logic is identical. */
   def wap(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Fixtures
     val stageA = Fixtures.path(dir, "etl_wap_stage_a")
     val stageB = Fixtures.path(dir, "etl_wap_stage_b")
     val pub = Fixtures.path(dir, "etl_wap_published")
@@ -1369,7 +1363,7 @@ object Etl {
     val tmpPath = new org.apache.hadoop.fs.Path(
       pub + ".publish." + ProcessHandle.current().pid())
     val oldPath = new org.apache.hadoop.fs.Path(pub + ".old")
-    // Crash restore BEFORE the sweep (r12, per advisor): a crash
+    // Crash restore BEFORE the sweep: a crash
     // between the swap's two renames leaves the table absent with the
     // previous publish parked at <pub>.old — the sweep alone would
     // delete the only existing copy without restoring it. Put it back
@@ -1379,7 +1373,7 @@ object Etl {
     if (!fs.exists(pubPath) && fs.exists(oldPath))
       require(fs.rename(oldPath, pubPath),
         s"WAP crash restore failed: $oldPath -> $pubPath")
-    // Debris sweep (r11, per advisor): a publish that crashed in a
+    // Debris sweep: a publish that crashed in a
     // DIFFERENT JVM left a <pub>.publish.<otherpid> (or a .old from a
     // crashed swap whose <pub> survived) that a PID-keyed delete never
     // touches. Concurrent publishes to one table are unsupported, so
@@ -1397,8 +1391,8 @@ object Etl {
       spark.read.schema(schema).parquet(stageB)
         .write.mode("append").parquet(tmpPath.toString)
     if (fs.exists(tmpPath)) {
-      // Two-rename swap (r11, per advisor): the r10 delete→rename left
-      // a window where a crash lost the ONLY copy of the table. Now
+      // Two-rename swap: a delete→rename would leave
+      // a window where a crash lost the ONLY copy of the table. Instead
       // the published data is renamed ASIDE first — a crash between
       // the renames leaves the table absent with the previous publish
       // at <pub>.old, and the next run RESTORES it (the crash-restore
@@ -1463,7 +1457,6 @@ object Etl {
     * count+sum (oracle recomputes from source: vacuum must delete
     * debris, never data) and the deterministic orphan count. */
   def vacuum(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Fixtures
     val path = Fixtures.path(dir, "etl_vacuum_data")
     val o = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))

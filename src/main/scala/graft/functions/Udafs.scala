@@ -96,6 +96,24 @@ object Udafs {
       ExpressionEncoder[Seq[Long]]()
   }
 
+  /** The ONE definition of the skewed probe key both heavy-hitters
+    * twins measure (batch `agg_heavy_hitters`, streaming
+    * `stream_heavy_hitters`): every 4th event keeps its event_type
+    * (5 heavy keys ~25% of mass), the rest become a per-event unique
+    * tail that churns the MG counters. Scala column and oracle-SQL
+    * spelling live together so the sketch, its exact in-query twin,
+    * and both DuckDB oracles can never drift onto different streams. */
+  object HeavyKey {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    def column: Column =
+      when(col("event_id") % 4 === 0, col("event_type"))
+        .otherwise(concat(lit("t"), col("event_id").cast("string")))
+    val sql: String =
+      "CASE WHEN event_id % 4 = 0 THEN event_type " +
+        "ELSE 't' || CAST(event_id AS VARCHAR) END"
+  }
+
   /** Misra–Gries heavy-hitters summary (Misra & Gries 1982; merge rule
     * from Agarwal et al. 2013 "Mergeable Summaries") — the approximate
     * TOP-K sketch completing the family (HLL = cardinality, KLL =
@@ -120,24 +138,6 @@ object Udafs {
     * mapper over the exchange — never raw keys. The 2013 merge theorem
     * is the load-bearing part: partials combine associatively at any
     * fan-in. */
-  /** The ONE definition of the skewed probe key both heavy-hitters
-    * twins measure (batch `agg_heavy_hitters`, streaming
-    * `stream_heavy_hitters`): every 4th event keeps its event_type
-    * (5 heavy keys ~25% of mass), the rest become a per-event unique
-    * tail that churns the MG counters. Scala column and oracle-SQL
-    * spelling live together so the sketch, its exact in-query twin,
-    * and both DuckDB oracles can never drift onto different streams. */
-  object HeavyKey {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions._
-    def column: Column =
-      when(col("event_id") % 4 === 0, col("event_type"))
-        .otherwise(concat(lit("t"), col("event_id").cast("string")))
-    val sql: String =
-      "CASE WHEN event_id % 4 = 0 THEN event_type " +
-        "ELSE 't' || CAST(event_id AS VARCHAR) END"
-  }
-
   class MisraGries(k: Int)
       extends Aggregator[String, Map[String, Long], Map[String, Long]] {
     override def zero: Map[String, Long] = Map.empty

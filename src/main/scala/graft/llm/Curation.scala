@@ -159,12 +159,6 @@ object Curation {
     * expression, zero shuffles. */
   private val MixK = 2654435761L
 
-  /** Deterministic train/validation/test assignment (80/10/10): split
-    * membership is a pure function of the business key — stable across
-    * re-runs, engines, repartitioning, and corpus growth (a doc never
-    * changes split when new docs arrive), which is exactly why
-    * production pipelines hash-split rather than sample-split. No
-    * sampling state, no shuffle: one map-side expression per row. */
   /** The deterministic 80/10/10 assignment — one definition (column +
     * SQL spelling), shared by `llm_split` and `llm_curation_e2e`. */
   private[llm] def bucketCol = (col("doc_id") * lit(MixK)) % 1000
@@ -177,6 +171,12 @@ object Curation {
        |       WHEN (doc_id * $MixK) % 1000 < 900 THEN 'validation'
        |       ELSE 'test' END""".stripMargin
 
+  /** Deterministic train/validation/test assignment (80/10/10): split
+    * membership is a pure function of the business key — stable across
+    * re-runs, engines, repartitioning, and corpus growth (a doc never
+    * changes split when new docs arrive), which is exactly why
+    * production pipelines hash-split rather than sample-split. No
+    * sampling state, no shuffle: one map-side expression per row. */
   def trainSplit(spark: SparkSession, dir: String): DataFrame =
     ordered(
       docs(spark, dir).select(
@@ -241,15 +241,6 @@ object Curation {
     "the", "a", "of", "and", "el", "la", "de", "y",
     "der", "die", "das", "und")
 
-  /** Gopher-style heuristic quality rules (Rae et al. 2021, table A1 —
-    * public paper), each surfaced as its own flag so a pipeline can
-    * tune/ablate rules independently; `keep` is their conjunction:
-    * word count in [15, 90], mean word length in [3, 6], symbol
-    * ratio ≤ 0.1, ≥ 90% alphabetic words, ≥ 1 stopword. Complements
-    * `llm_quality` (a composed [0,1] score) with hard accept/reject
-    * gates. All exact rational arithmetic — no rounding (Determinism
-    * rules). Embarrassingly parallel: one columnar pass, no shuffle
-    * except the presentation sort. */
   /** The Gopher metric/flag derivation over any documents-shaped input
     * — the ONE definition of the keep rule, shared by the keyed query
     * and the end-to-end cascade (`llm_curation_e2e`) so the two can
@@ -284,6 +275,15 @@ object Curation {
       .withColumn("keep", rWords && rMean && rSym && rAlpha && rStop)
   }
 
+  /** Gopher-style heuristic quality rules (Rae et al. 2021, table A1 —
+    * public paper), each surfaced as its own flag so a pipeline can
+    * tune/ablate rules independently; `keep` is their conjunction:
+    * word count in [15, 90], mean word length in [3, 6], symbol
+    * ratio ≤ 0.1, ≥ 90% alphabetic words, ≥ 1 stopword. Complements
+    * `llm_quality` (a composed [0,1] score) with hard accept/reject
+    * gates. All exact rational arithmetic — no rounding (Determinism
+    * rules). Embarrassingly parallel: one columnar pass, no shuffle
+    * except the presentation sort. */
   def heuristicFilter(spark: SparkSession, dir: String): DataFrame =
     ordered(
       gopherFlagsOf(docs(spark, dir)).select(

@@ -856,27 +856,6 @@ object Similarity {
        |      x -> CAST(CAST(x AS DOUBLE) + 0.05 * abs(CAST(x AS DOUBLE)) AS FLOAT))
        |  FROM embeddings WHERE vec_id < 25)"""
 
-  /** SCALE PATH for embedding near-dup: banded sign-random-projection
-    * LSH, mirroring the MinHash-LSH shape of `llm_near_dedup`.
-    * Candidates come from band-bucket equality joins — shuffle
-    * O(n·bands) plus Σ bucket-pair counts, never the O(n²) cross
-    * product — and only candidates pay the exact-cosine verification.
-    *
-    * Parameter choice is threshold-driven, and the keyed query ships
-    * the PRODUCTION regime: threshold 0.9 (θ ≤ 26°,
-    * per-plane collision p₁ = 1 − θ/π ≥ 0.86, ρ ≈ 0.2) with deep
-    * bands (8 bits × 8 bands), over [[plantedEmbeddings]] so the
-    * threshold is non-vacuous. In this regime banding genuinely earns
-    * its keep: >95 % of all pairs never become candidates (the
-    * `cand_frac_lt_20pct` column pins that at the driver gate — the
-    * query demonstrates LSH benefit, not just LSH overhead), while
-    * recall stays exact on the planted families (a 2.9°-apart pair
-    * flips any single plane with p ≤ 0.016, so P[all 8 bands broken]
-    * ≈ 5·10⁻⁸ — and the planes are deterministic, so the empirical
-    * 100 % recall here is reproducible, pinned by the oracle
-    * hash-match vs the brute SQL over the same planted corpus).
-    * The loose-threshold shallow-band regime (0.5, 2×16) remains
-    * exercised by LlmSpec against the brute twin. */
   /** Lowest planted-family id — both derived families sit at or above
     * this offset, and no real/amplified vec_id ever reaches it
     * (ScaleUp shifts vec_id by the document stride: ≤ 5M at sf100). */
@@ -902,6 +881,27 @@ object Similarity {
   private def inLshOracleSlice(id: Column): Column =
     id < BruteSliceRows.toLong || id >= PlantedIdFloor
 
+  /** SCALE PATH for embedding near-dup: banded sign-random-projection
+    * LSH, mirroring the MinHash-LSH shape of `llm_near_dedup`.
+    * Candidates come from band-bucket equality joins — shuffle
+    * O(n·bands) plus Σ bucket-pair counts, never the O(n²) cross
+    * product — and only candidates pay the exact-cosine verification.
+    *
+    * Parameter choice is threshold-driven, and the keyed query ships
+    * the PRODUCTION regime: threshold 0.9 (θ ≤ 26°,
+    * per-plane collision p₁ = 1 − θ/π ≥ 0.86, ρ ≈ 0.2) with deep
+    * bands (8 bits × 8 bands), over [[plantedEmbeddings]] so the
+    * threshold is non-vacuous. In this regime banding genuinely earns
+    * its keep: >95 % of all pairs never become candidates (the
+    * `cand_frac_lt_20pct` column pins that at the driver gate — the
+    * query demonstrates LSH benefit, not just LSH overhead), while
+    * recall stays exact on the planted families (a 2.9°-apart pair
+    * flips any single plane with p ≤ 0.016, so P[all 8 bands broken]
+    * ≈ 5·10⁻⁸ — and the planes are deterministic, so the empirical
+    * 100 % recall here is reproducible, pinned by the oracle
+    * hash-match vs the brute SQL over the same planted corpus).
+    * The loose-threshold shallow-band regime (0.5, 2×16) remains
+    * exercised by LlmSpec against the brute twin. */
   def cosineDedupLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = plantedEmbeddings(emb(spark, dir))
     val nRows = e.count()
@@ -1122,11 +1122,6 @@ object Similarity {
   private[graft] val SemTargetCell = 32L
   private[graft] val SemMaxPlanes = 16
 
-  /** The adaptive sign-plane cell id as ONE engine-neutral SQL string:
-    * `elem(i)` renders coordinate access (`element_at(embedding, i)`
-    * on Spark, `embedding[i]` in DuckDB), `nExpr` the corpus-count
-    * column. Divisor ladder = 2^(16−bits); FLOOR of a double division
-    * is exact here (both operands < 2^53, divisor a power of two). */
   /** The depth ladder alone (divisor = 2^(16−bits)), and its Scala
     * twin — the PropertySpec law runs the twin over the full long
     * range, and a one-job boundary sweep pins string ≡ twin at every
@@ -1141,6 +1136,11 @@ object Similarity {
       case b if n <= (SemTargetCell << b) => 1L << (SemMaxPlanes - b)
     }.getOrElse(1L)
 
+  /** The adaptive sign-plane cell id as ONE engine-neutral SQL string:
+    * `elem(i)` renders coordinate access (`element_at(embedding, i)`
+    * on Spark, `embedding[i]` in DuckDB), `nExpr` the corpus-count
+    * column. Divisor ladder = 2^(16−bits); FLOOR of a double division
+    * is exact here (both operands < 2^53, divisor a power of two). */
   private[graft] def semCidSql(elem: Int => String, nExpr: String): String = {
     val code = (1 to SemMaxPlanes).map(i =>
       s"CASE WHEN ${elem(i)} > 0 THEN ${1L << (SemMaxPlanes - i)} ELSE 0 END")

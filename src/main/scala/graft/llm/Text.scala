@@ -260,12 +260,6 @@ object Text {
        |FROM documents
        |${O.OrderAll}"""
 
-  /** Bigram-LM quality scoring: train corpus bigram/unigram counts,
-    * score each doc by its average negative log bigram probability
-    * −ln(c(w₁w₂)/c(w₁)) — the cheap perplexity-style signal real
-    * pipelines use to flag low-likelihood (garbled/boilerplate) text.
-    * 100 TB: the LM tables are two groupBys; scoring is a broadcast
-    * join of the (small) LM against the token stream. */
   /** Shared per-doc bigram-LM scores (doc_id, avg_nll round6,
     * n_bigrams) — the keyed `llm_lm_score` output and the input to
     * [[pplBuckets]]' CCNet-style split. */
@@ -291,6 +285,12 @@ object Text {
         count(lit(1)).as("n_bigrams"))
   }
 
+  /** Bigram-LM quality scoring: train corpus bigram/unigram counts,
+    * score each doc by its average negative log bigram probability
+    * −ln(c(w₁w₂)/c(w₁)) — the cheap perplexity-style signal real
+    * pipelines use to flag low-likelihood (garbled/boilerplate) text.
+    * 100 TB: the LM tables are two groupBys; scoring is a broadcast
+    * join of the (small) LM against the token stream. */
   def lmScore(spark: SparkSession, dir: String): DataFrame =
     ordered(lmScores(spark, dir))
 

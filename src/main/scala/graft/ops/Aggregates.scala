@@ -455,7 +455,7 @@ object Aggregates {
   }
 
   private val aggMinBySql = {
-    val key = "strftime(o_orderdate, '%Y-%m-%d') || " +
+    val key = O.dateStr("o_orderdate") + " || " +
       "lpad(CAST(o_orderkey AS VARCHAR), 12, '0')"
     s"""SELECT o_custkey,
        |  arg_min(o_orderkey, $key) AS first_orderkey,
@@ -616,7 +616,7 @@ object Aggregates {
     s"""WITH first AS (
        |  SELECT user_id, CAST(date_trunc('day', min(ts)) AS DATE) AS cohort
        |  FROM events WHERE event_type = 'signup' GROUP BY 1)
-       |SELECT strftime(f.cohort, '%Y-%m-%d') AS cohort,
+       |SELECT ${O.dateStr("f.cohort")} AS cohort,
        |  datediff('day', f.cohort, CAST(e.ts AS DATE)) AS day_off,
        |  COUNT(DISTINCT e.user_id) AS n_active
        |FROM events e JOIN first f ON f.user_id = e.user_id

@@ -264,11 +264,6 @@ object Relational {
        |GROUP BY e1.user_id
        |${O.OrderAll}"""
 
-  /** As-of (point-in-time) join: for each purchase event, the latest
-    * 'view' of the same user at-or-before it. Implemented the scalable
-    * way — one shuffle on user_id, a single ordered window pass with a
-    * running max — instead of a per-row range join. Views sort before
-    * purchases at equal ts so ties are included (v.ts <= p.ts). */
   /** Backward as-of core over any (user_id, ts, event_type, event_id)
     * frame — also exercised by PropertySpec on generated streams. */
   private[graft] def asofBackwardFrom(ev0: DataFrame): DataFrame = {
@@ -286,6 +281,11 @@ object Relational {
         epochUs(col("ts")).as("ts_us"), col("last_view_us"))
   }
 
+  /** As-of (point-in-time) join: for each purchase event, the latest
+    * 'view' of the same user at-or-before it. Implemented the scalable
+    * way — one shuffle on user_id, a single ordered window pass with a
+    * running max — instead of a per-row range join. Views sort before
+    * purchases at equal ts so ties are included (v.ts <= p.ts). */
   def joinAsof(spark: SparkSession, dir: String): DataFrame =
     ordered(asofBackwardFrom(t(spark, dir, "events")))
 
@@ -558,11 +558,11 @@ object Relational {
   }
 
   private val setUnionSql =
-    s"""SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date, o_orderstatus
-       |FROM orders WHERE strftime(o_orderdate, '%Y-%m-%d') < '1999-01-01'
+    s"""SELECT o_orderkey, ${O.dateStr("o_orderdate")} AS o_date, o_orderstatus
+       |FROM orders WHERE ${O.dateStr("o_orderdate")} < '1999-01-01'
        |UNION
-       |SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date, o_orderstatus
-       |FROM orders WHERE strftime(o_orderdate, '%Y-%m-%d') >= '1998-01-01'
+       |SELECT o_orderkey, ${O.dateStr("o_orderdate")} AS o_date, o_orderstatus
+       |FROM orders WHERE ${O.dateStr("o_orderdate")} >= '1998-01-01'
        |${O.OrderAll}"""
 
   /** Intersect: customers appearing in two independent extracts. */
@@ -703,6 +703,13 @@ object Relational {
        |WHERE rk <= 10
        |${O.OrderAll}"""
 
+  /** The ranked bottom-k subplan, pre-checkpoint — exposed so PlanSpec
+    * can pin the TakeOrderedAndProject shape. */
+  private[graft] def bottomKRanked(o: DataFrame, k: Int): DataFrame =
+    o.select(col("o_orderkey"),
+        md5(concat(lit("g6"), col("o_orderkey").cast("string"))).as("h"))
+      .orderBy(col("h"), col("o_orderkey")).limit(k)
+
   /** Bottom-k (min-wise) UNIFORM sample — the mergeable sampling
     * sketch next to [[sampleStratified]]'s per-stratum quota: the k
     * rows whose seeded hash `md5('g6' ∥ key)` ranks smallest. Three
@@ -723,13 +730,6 @@ object Relational {
     * hash family fixed ⇒ deterministic on fixed corpora, verified at
     * all three SFs — the LSH-recall pinning pattern).
     * The one driver-side head() pulls a single k-th-hash row. */
-  /** The ranked bottom-k subplan, pre-checkpoint — exposed so PlanSpec
-    * can pin the TakeOrderedAndProject shape. */
-  private[graft] def bottomKRanked(o: DataFrame, k: Int): DataFrame =
-    o.select(col("o_orderkey"),
-        md5(concat(lit("g6"), col("o_orderkey").cast("string"))).as("h"))
-      .orderBy(col("h"), col("o_orderkey")).limit(k)
-
   def sampleBottomK(spark: SparkSession, dir: String): DataFrame = {
     val k = 100
     val o = t(spark, dir, "orders")

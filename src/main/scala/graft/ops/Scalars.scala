@@ -88,10 +88,10 @@ object Scalars {
        |  quarter(o_orderdate) AS qtr,
        |  month(o_orderdate) AS mon,
        |  day(o_orderdate) AS dom,
-       |  strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS month_start,
+       |  ${O.dateStr("date_trunc('month', o_orderdate)")} AS month_start,
        |  CAST(date_diff('day', o_orderdate, DATE '2000-01-01') AS INTEGER) AS days_to_y2k,
-       |  strftime(o_orderdate + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus_3m,
-       |  strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS month_end
+       |  ${O.dateStr("o_orderdate + INTERVAL 3 MONTH")} AS plus_3m,
+       |  ${O.dateStr("last_day(CAST(o_orderdate AS DATE))")} AS month_end
        |FROM orders
        |${O.OrderAll}"""
 

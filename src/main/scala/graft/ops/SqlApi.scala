@@ -36,7 +36,7 @@ object SqlApi {
   private val sqlTpchQ3Sql =
     s"""SELECT l_orderkey,
        |  ${O.dsumExpr(O.revenue)} AS revenue,
-       |  strftime(o_orderdate, '%Y-%m-%d') AS o_date,
+       |  ${O.dateStr("o_orderdate")} AS o_date,
        |  o_orderpriority
        |FROM customer
        |JOIN orders ON c_custkey = o_custkey
@@ -174,7 +174,7 @@ object SqlApi {
 
   private val sqlTpchQ18Sql =
     s"""SELECT c_name, c_custkey, o_orderkey,
-       |  strftime(o_orderdate, '%Y-%m-%d') AS o_date,
+       |  ${O.dateStr("o_orderdate")} AS o_date,
        |  ${O.dsum("l_quantity")} AS total_qty
        |FROM customer
        |JOIN orders ON c_custkey = o_custkey

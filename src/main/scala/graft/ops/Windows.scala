@@ -69,7 +69,7 @@ object Windows {
 
   private val winLagLeadSql =
     s"""SELECT l_partkey, l_orderkey, l_linenumber,
-       |  strftime(l_shipdate, '%Y-%m-%d') AS ship_date, l_extendedprice,
+       |  ${O.dateStr("l_shipdate")} AS ship_date, l_extendedprice,
        |  LAG(l_extendedprice, 1) OVER w AS prev_price,
        |  LEAD(l_extendedprice, 1) OVER w AS next_price,
        |  l_extendedprice - LAG(l_extendedprice, 1) OVER w AS delta
@@ -260,7 +260,7 @@ object Windows {
        |      THEN 1 ELSE 0 END AS fst
        |  FROM lineitem)
        |SELECT l_partkey, l_orderkey, l_linenumber,
-       |  strftime(l_shipdate, '%Y-%m-%d') AS ship_date,
+       |  ${O.dateStr("l_shipdate")} AS ship_date,
        |  CAST(SUM(fst) OVER (
        |    PARTITION BY l_partkey
        |    ORDER BY l_shipdate ASC, l_orderkey ASC, l_linenumber ASC)
@@ -387,21 +387,6 @@ object Windows {
        |FROM seqs
        |${O.OrderAll}"""
 
-  /** Calendar gap-fill + forward fill (time-series resample): per-user
-    * daily value series where missing days become explicit rows carrying
-    * the last observed value — the transform every downstream
-    * daily-grain model/report needs, and the one naive SQL silently
-    * skips (absent rows are invisible to GROUP BY). Spine = per-user
-    * `sequence(first_day, last_day)` exploded — generated, never read;
-    * forward fill = running `last(value, ignoreNulls)` window, which
-    * needs ONE pass per user partition.
-    *
-    * 100 TB: the spine explode multiplies per-user day-span rows, not
-    * data rows — bounded by calendar days, not events; the left join is
-    * user+day keyed (equi), and the fill window rides the same user_id
-    * partitioning as the join output, so AQE coalesces without a second
-    * exchange. Never gap-fill on a global calendar join (cross join
-    * with a date dim explodes before filtering). */
   /** The spine+fill core over any (user_id, day, day_value) frame —
     * also exercised by PropertySpec on generated series. */
   private[graft] def gapfillDaily(daily: DataFrame): DataFrame = {
@@ -419,6 +404,21 @@ object Windows {
         col("day_value").isNull.as("is_gap"))
   }
 
+  /** Calendar gap-fill + forward fill (time-series resample): per-user
+    * daily value series where missing days become explicit rows carrying
+    * the last observed value — the transform every downstream
+    * daily-grain model/report needs, and the one naive SQL silently
+    * skips (absent rows are invisible to GROUP BY). Spine = per-user
+    * `sequence(first_day, last_day)` exploded — generated, never read;
+    * forward fill = running `last(value, ignoreNulls)` window, which
+    * needs ONE pass per user partition.
+    *
+    * 100 TB: the spine explode multiplies per-user day-span rows, not
+    * data rows — bounded by calendar days, not events; the left join is
+    * user+day keyed (equi), and the fill window rides the same user_id
+    * partitioning as the join output, so AQE coalesces without a second
+    * exchange. Never gap-fill on a global calendar join (cross join
+    * with a date dim explodes before filtering). */
   def tsGapfill(spark: SparkSession, dir: String): DataFrame = {
     val daily = t(spark, dir, "events")
       .filter(col("user_id") % 25 === 0)
@@ -438,7 +438,7 @@ object Windows {
        |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
        |  FROM (SELECT user_id, min(day) AS d0, max(day) AS d1
        |        FROM daily GROUP BY user_id))
-       |SELECT s.user_id, strftime(s.day, '%Y-%m-%d') AS day,
+       |SELECT s.user_id, ${O.dateStr("s.day")} AS day,
        |  last_value(d.day_value IGNORE NULLS) OVER (
        |    PARTITION BY s.user_id ORDER BY s.day
        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled,
@@ -527,7 +527,7 @@ object Windows {
        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
        |  FROM spine s LEFT JOIN daily d
        |    ON s.user_id = d.user_id AND s.day = d.day)
-       |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
+       |SELECT user_id, ${O.dateStr("day")} AS day,
        |  round(CASE
        |    WHEN day_value IS NOT NULL THEN day_value
        |    WHEN pv IS NULL THEN nv
@@ -633,8 +633,8 @@ object Windows {
        |  FROM days),
        |streaks AS (
        |  SELECT user_id, COUNT(*) AS streak_len,
-       |    strftime(min(day), '%Y-%m-%d') AS streak_start,
-       |    strftime(max(day), '%Y-%m-%d') AS streak_end
+       |    ${O.dateStr("min(day)")} AS streak_start,
+       |    ${O.dateStr("max(day)")} AS streak_end
        |  FROM islands GROUP BY user_id, grp)
        |SELECT user_id, streak_len, streak_start, streak_end FROM (
        |  SELECT *, row_number() OVER (PARTITION BY user_id
@@ -741,7 +741,7 @@ object Windows {
   private val tsDownsampleSql = {
     val ordKey =
       "lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') || lpad(CAST(event_id AS VARCHAR), 10, '0')"
-    s"""SELECT user_id, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
+    s"""SELECT user_id, ${O.dateStr("CAST(ts AS DATE)")} AS day,
        |  min_by("value", $ordKey) AS open,
        |  max("value") AS high,
        |  min("value") AS low,

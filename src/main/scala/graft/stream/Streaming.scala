@@ -7,22 +7,6 @@ import graft.core.{Fixtures, Q, Sessions, Tables}
 import graft.core.Determinism._
 import graft.core.{OracleDsl => O}
 
-/** SURVEY.md §2.10 — Structured Streaming over the `events` table.
-  *
-  * The reference is batch-only; these generalize its incremental-load
-  * claim (/root/reference/README.md:4) to continuous ingest. Inside the
-  * driver contract each query runs the stream bounded: file-stream
-  * source over the test parquet → Trigger.AvailableNow → memory sink →
-  * return the sink table. Deterministic because input is bounded and
-  * every aggregate follows the Determinism rules.
-  *
-  * 100 TB notes: watermarks bound state (late rows beyond 30 min are
-  * dropped, state for closed windows is evicted); `session_window` and
-  * `flatMapGroupsWithState` state lives in the state store keyed by
-  * user — shuffle-partitioned, so state scales horizontally with
-  * executors. The same code runs unbounded by swapping the source for
-  * kafka/files-on-arrival and the sink for a real one.
-  */
 /** Typed per-key running aggregate for [[Streaming.tws]]: ValueState
   * holds (count, max); reducers are commutative so batch iterator order
   * is irrelevant. */
@@ -49,6 +33,22 @@ class UserRunningAgg
   }
 }
 
+/** SURVEY.md §2.10 — Structured Streaming over the `events` table.
+  *
+  * The reference is batch-only; these generalize its incremental-load
+  * claim (the reference's README.md:4) to continuous ingest. Inside the
+  * driver contract each query runs the stream bounded: file-stream
+  * source over the test parquet → Trigger.AvailableNow → memory sink →
+  * return the sink table. Deterministic because input is bounded and
+  * every aggregate follows the Determinism rules.
+  *
+  * 100 TB notes: watermarks bound state (late rows beyond 30 min are
+  * dropped, state for closed windows is evicted); `session_window` and
+  * `flatMapGroupsWithState` state lives in the state store keyed by
+  * user — shuffle-partitioned, so state scales horizontally with
+  * executors. The same code runs unbounded by swapping the source for
+  * kafka/files-on-arrival and the sink for a real one.
+  */
 object Streaming {
 
   /** Spark's conf naming the state-store provider of every query a
@@ -429,10 +429,6 @@ object Streaming {
     s"""SELECT DISTINCT event_id, event_type, value FROM events
        |${O.OrderAll}"""
 
-  /** Arbitrary stateful processing (flatMapGroupsWithState): running
-    * per-user event count + last event type, state maintained per key in
-    * the state store. Deterministic last-event pick by (ts, event_id)
-    * regardless of iterator order. */
   /** Streaming untruncated EWMA (α = 1/2) — the infinite-memory twin
     * `win_ewma`'s doc points here for: the recursive smoother
     * ewma_t = ½·v + ½·ewma_{t−1} needs exactly ONE double of per-key
@@ -498,6 +494,10 @@ object Streaming {
        |SELECT user_id, event_id, ts_us, ewma FROM r
        |${O.OrderAll}"""
 
+  /** Arbitrary stateful processing (flatMapGroupsWithState): running
+    * per-user event count + last event type, state maintained per key in
+    * the state store. Deterministic last-event pick by (ts, event_id)
+    * regardless of iterator order. */
   def stateful(spark: SparkSession, dir: String): DataFrame =
     statefulFrom(spark, eventsStream(spark, dir))
 
@@ -794,21 +794,6 @@ object Streaming {
        |WHERE v.event_id IS NOT NULL OR p.ts < (SELECT w FROM wm)
        |${O.OrderAll}"""
 
-  /** Stream-STATIC enrichment join — the missing third member of the
-    * streaming-join family (inner and outer stream-stream above): the
-    * events stream joined to the static `customer` dimension. Unlike a
-    * stream-stream join this is STATELESS — no watermark, no state
-    * store, nothing to evict: each micro-batch independently joins its
-    * rows against the dim table, so every stream row emits exactly
-    * once and none is held back by a watermark gate (the batch oracle
-    * is the plain join, no watermark clause — compare
-    * [[streamJoinOuter]]'s gated oracle).
-    *
-    * 100 TB: this is the dominant enrich shape — fact stream ⋈ dim.
-    * The dim side is broadcast, so the unbounded side never shuffles;
-    * and because the static side is re-planned per micro-batch, a dim
-    * table updated in place (SCD1 upsert, [[graft.etl.Etl]]) is
-    * picked up on the next batch without restarting the query. */
   /** The enrich pipeline over any events stream source — split out so
     * StreamingSpec can drive it with the multi-batch source and prove
     * the output is micro-batch-split invariant (the statelessness
@@ -824,6 +809,21 @@ object Streaming {
     ordered(runToTable(spark, joined, "append"))
   }
 
+  /** Stream-STATIC enrichment join — the missing third member of the
+    * streaming-join family (inner and outer stream-stream above): the
+    * events stream joined to the static `customer` dimension. Unlike a
+    * stream-stream join this is STATELESS — no watermark, no state
+    * store, nothing to evict: each micro-batch independently joins its
+    * rows against the dim table, so every stream row emits exactly
+    * once and none is held back by a watermark gate (the batch oracle
+    * is the plain join, no watermark clause — compare
+    * [[streamJoinOuter]]'s gated oracle).
+    *
+    * 100 TB: this is the dominant enrich shape — fact stream ⋈ dim.
+    * The dim side is broadcast, so the unbounded side never shuffles;
+    * and because the static side is re-planned per micro-batch, a dim
+    * table updated in place (SCD1 upsert, [[graft.etl.Etl]]) is
+    * picked up on the next batch without restarting the query. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame =
     staticEnrich(spark, dir, eventsStream(spark, dir))
 
@@ -833,6 +833,12 @@ object Streaming {
        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
        |WHERE e.event_type = 'purchase'
        |${O.OrderAll}"""
+
+  /** Heavy-hitter sharding constants — shared with the StreamingSpec
+    * state-size pin (single-definition rule): state is keyed by shard,
+    * so the store holds exactly ≤ [[HhShards]] rows forever. */
+  private[graft] val HhShards = 8
+  private[graft] val HhK = 32
 
   /** Misra–Gries heavy hitters AS STREAMING STATE — the top-k-over-an-
     * unbounded-stream primitive (the sketch is one-pass by nature, so
@@ -858,12 +864,6 @@ object Streaming {
     * Final summaries are EXPLODED and probe-joined relationally — no
     * driver collect anywhere. Probes + invariants mirror the batch
     * twin; same oracle shape. */
-  /** Heavy-hitter sharding constants — shared with the StreamingSpec
-    * state-size pin (single-definition rule): state is keyed by shard,
-    * so the store holds exactly ≤ [[HhShards]] rows forever. */
-  private[graft] val HhShards = 8
-  private[graft] val HhK = 32
-
   def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window

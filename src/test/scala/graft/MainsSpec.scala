@@ -58,16 +58,29 @@ class MainsSpec extends AnyFunSuite {
     assert(undocumented.isEmpty, s"README does not document $undocumented")
   }
 
-  test("no file under src/main/scala/graft/llm holds a round-history tag") {
+  test("no file under src/main/scala/graft/llm or graft/etl holds a round-history tag") {
     // a comment keeps its reason and measurement; which round of work
     // wrote it is the commit history's record, not the code's
-    val llmDir = Paths.get("src/main/scala/graft/llm")
-    val llm = sourceFiles.filter(_._1.startsWith(llmDir))
-    assert(llm.nonEmpty)
+    val dirs = Seq("llm", "etl").map(d => Paths.get(s"src/main/scala/graft/$d"))
+    val pinned = sourceFiles.filter { case (p, _) => dirs.exists(p.startsWith) }
+    assert(dirs.forall(d => pinned.exists(_._1.startsWith(d))))
     val tag = raw"\br[0-9]+\b".r
-    val tagged = llm.flatMap { case (p, src) =>
+    val tagged = pinned.flatMap { case (p, src) =>
       tag.findAllIn(src).map(t => s"${p.getFileName}: $t") }
     assert(tagged.isEmpty, s"round-history tags: ${tagged.mkString(", ")}")
+  }
+
+  test("no scaladoc in src/main directly follows another") {
+    // a doc stacked on the next one documents nothing: the definition
+    // it was written for has no scaladoc of its own
+    val stacked = sourceFiles.flatMap { case (p, src) =>
+      src.split("\n").toSeq.zipWithIndex.sliding(2).collect {
+        case Seq((a, i), (b, _)) if a.trim.endsWith("*/") && b.trim.startsWith("/**") =>
+          s"${p.getFileName}:${i + 2}"
+      }
+    }
+    assert(sourceFiles.nonEmpty)
+    assert(stacked.isEmpty, s"stacked scaladocs: ${stacked.mkString(", ")}")
   }
 
   test("the program has exactly the four mains that README's Run section lists") {

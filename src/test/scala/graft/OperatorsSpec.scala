@@ -610,6 +610,31 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("etl_dq_profile and etl_dq_profile_approx agree on every exact field; every sketch is in bound") {
+    val fields = Seq("col_name", "n_nulls", "n_distinct", "min_val", "max_val").map(col)
+    val exact = etl.Etl.dqProfile(spark, Sf).select(fields: _*).collect().toSeq
+    val approx = etl.Etl.dqProfileApprox(spark, Sf)
+    assert(exact.length == 5)
+    assert(approx.select(fields: _*).collect().toSeq === exact)
+    assert(approx.filter(!col("approx_in_bound")).count() === 0)
+  }
+
+  test("etl_quarantine routes exactly the rows etl_dq_check counts, rule by rule") {
+    val sf01 = s"${new java.io.File(Sf).getParent}/sf0.01"
+    val counted = etl.Etl.dqCheck(spark, sf01).select("rule", "n_violations")
+      .as[(String, Long)].collect().toMap
+    val routed = etl.Etl.quarantine(spark, sf01).groupBy("rule").count()
+      .as[(String, Long)].collect().toMap
+    // the two rules the quarantine routes; a rule with no bad rows
+    // routes none, so it is absent from `routed`
+    val shared = Seq("orphan_order_custkey", "negative_acctbal")
+    assert(routed.keySet.subsetOf(shared.toSet))
+    shared.foreach { rule =>
+      assert(routed.getOrElse(rule, 0L) === counted(rule), rule)
+    }
+    assert(shared.exists(counted(_) > 0), "no shared rule has a violation to compare")
+  }
+
   test("win_regression: every slope matches a sequential trailing-20 OLS reference") {
     val events = graft.core.Tables.load(spark, Sf, "events")
       .select(col("user_id"), col("event_id"), expr("unix_micros(ts)").as("us"),
